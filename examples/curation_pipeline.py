@@ -61,7 +61,6 @@ def curate(
     spark,
     sf_dir: str,
     seed: int = 7,
-    reliable: bool = False,
     export_path: str | None = None,
     export_shards: int = 16,
     token_budget: int | None = None,
@@ -73,10 +72,10 @@ def curate(
     picks the unit — ``'ws'`` whitespace words, ``'bpe'`` the BPE-ish
     pre-split count (approximate real-tokenizer units).
 
-    ``reliable=True`` makes every corpus-scale pinned intermediate
-    persist(DISK_ONLY) with lineage kept instead of localCheckpoint —
-    flip it when the job runs long enough that losing an executor
-    mid-funnel is a real possibility (see SCALE.md §Durability)."""
+    Pinned intermediates are durable when the session has a checkpoint
+    directory (``spark.sparkContext.setCheckpointDir``) — set one when
+    the job runs long enough that losing an executor mid-funnel is a
+    real possibility (see SCALE.md §Durability)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     funnel = {"input": docs.count()}
 
@@ -86,7 +85,7 @@ def curate(
     funnel["exact_dedup"] = docs.count()
 
     # 2. near-dup clusters: keep the cluster representative (min doc_id)
-    clusters = dedup_clusters(docs, reliable=reliable)
+    clusters = dedup_clusters(docs)
     docs = docs.join(
         clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
             "doc_id"
@@ -99,7 +98,7 @@ def curate(
     # 3. substring-duplication filter: drop docs whose 13-token windows
     #    are mostly copies of other docs (cross-doc verbatim spans that
     #    survive document-level dedup — boilerplate, quoted chains)
-    spans = dup_span_stats(docs, window=13, min_docs=2, reliable=reliable)
+    spans = dup_span_stats(docs, window=13, min_docs=2)
     docs = docs.join(
         spans.filter(F.col("dup_fraction") >= 0.8).select("doc_id"),
         "doc_id",
@@ -114,9 +113,7 @@ def curate(
     #     deduplicated text. Rewrites text, drops no documents.
     from php_ec_spark.operators.dedup import remove_dup_spans
 
-    rewritten = remove_dup_spans(
-        docs, window=13, reliable=reliable
-    ).select("doc_id", F.col("text").alias("__excised"))
+    rewritten = remove_dup_spans(docs, window=13).select("doc_id", F.col("text").alias("__excised"))
     docs = (
         docs.drop("text")
         .join(rewritten, "doc_id")
@@ -157,7 +154,7 @@ def curate(
     # Self-trained on the post-dedup survivors (training on the raw
     # corpus would let boilerplate that dedup just removed define
     # "typical"); the cutoff keeps everything within 2× the corpus mean.
-    lm = with_lm_bits(docs, reliable=reliable)
+    lm = with_lm_bits(docs)
     mean_bits = (
         lm.agg(F.avg("lm_bits")).collect()[0][0]  # one bounded scalar
     )
@@ -181,13 +178,12 @@ def curate(
         from php_ec_spark.operators.sampling import sample_to_token_budget
 
         docs = sample_to_token_budget(
-            docs, token_budget, seed=seed, reliable=reliable,
-            tokenizer=budget_tokenizer,
+            docs, token_budget, seed=seed, tokenizer=budget_tokenizer,
         ).select("doc_id", "text")
     funnel["sampled"] = docs.count()
 
     # 7+8. token counts -> packed training sequences (512-token budget)
-    packed = pack_sequences(docs, budget=512, reliable=reliable)
+    packed = pack_sequences(docs, budget=512)
     funnel["packed_docs"] = packed.count()
 
     # 9. (optional) terminal write: globally shuffled, reproducible

@@ -27,7 +27,7 @@ run in the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Modulus for MinHash permutations (Mersenne prime 2^31−1): keeps a*h+b in
@@ -46,27 +46,21 @@ MH_MOD = 2_147_483_647
 _PREFIX_EXT = 2
 
 
-def pin_intermediate(df: DataFrame, reliable: bool = False, eager: bool = False) -> DataFrame:
-    """Pin a multiply-consumed corpus-scale intermediate.
+def pin_intermediate(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Pin a multiply-consumed corpus-scale intermediate, truncating its
+    lineage — the one pin policy of every operator in the package.
 
-    ``reliable=False`` (default): ``localCheckpoint`` — fastest, but the
-    blocks live non-replicated on executor local storage with lineage
-    TRUNCATED, so at cluster scale losing one executor mid-query kills the
-    job. Right for local / single-executor / short-job runs.
-
-    ``reliable=True``: ``persist(StorageLevel.DISK_ONLY)`` with lineage
-    KEPT — a lost executor's blocks are recomputed from the parquet scan
-    instead of failing the job. Flip this for multi-hour cluster runs
-    (see SCALE.md "Durability of pinned intermediates"). Both variants are
-    released by ``session.release_checkpoint_caches``.
+    With a checkpoint directory configured (``sc.setCheckpointDir`` —
+    standard on any cluster run) the pin is a reliable ``checkpoint()``:
+    replicated fault-tolerant files, so losing an executor mid-query
+    does not kill the job. Without one it is ``localCheckpoint()`` —
+    fastest, but the blocks live non-replicated on executor local
+    storage (right for local / single-executor / short-job runs; sweep
+    them with ``session.release_checkpoint_caches``). See SCALE.md
+    "Durability of pinned intermediates".
     """
-    if reliable:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.DISK_ONLY)
-        if eager:
-            df.count()
-        return df
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
 
@@ -377,7 +371,6 @@ def jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_df: "int | DataFrame | None" = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similar pairs via a PREFIX-FILTERED inverted
     shingle index (Chaudhuri et al. 2006; Bayardo et al. WWW'07).
@@ -432,9 +425,8 @@ def jaccard_pairs(
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard ≥
     threshold after rounding.
 
-    Session note: the exploded index is pinned (``pin_intermediate`` —
-    ``reliable=True`` for cluster-durable persist-with-lineage) so its
-    one compute feeds every downstream branch. Long-lived sessions
+    Session note: the exploded index is pinned (``pin_intermediate``)
+    so its one compute feeds every downstream branch. Long-lived sessions
     should sweep with ``session.release_checkpoint_caches`` between
     queries (the bench harness does).
     """
@@ -445,7 +437,6 @@ def jaccard_pairs(
         text_col=text_col,
         id_col=id_col,
         max_df=max_df,
-        reliable=reliable,
     )
     # cand has exactly ONE consumer (the verify join chain below), so it
     # is NOT pinned: pinning would force an extra materialization job for
@@ -486,7 +477,6 @@ def prefix_candidates(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_df: "int | DataFrame | None" = None,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """The prefix-filtered candidate machinery behind :func:`jaccard_pairs`,
     exposed so the scale soak / growth tests can measure the DETERMINISTIC
@@ -549,7 +539,7 @@ def prefix_candidates(
     )
     # The raw index feeds the frequency table AND the per-doc re-group;
     # pin so shingle generation runs once per action (lazy).
-    inv = pin_intermediate(inv, reliable=reliable)
+    inv = pin_intermediate(inv)
     # Document frequency per shingle: shingles are distinct per doc, so
     # row count == doc count. Doubles as the max_df cut and the global
     # prefix order.
@@ -613,7 +603,7 @@ def prefix_candidates(
         .agg(F.expr("array_sort(collect_list(p))").alias("items"))
         .withColumn("n_sh", F.expr("size(items)"))
     )
-    docsets = pin_intermediate(docsets, reliable=reliable)
+    docsets = pin_intermediate(docsets)
 
     tau = max(threshold - 1e-6, 0.0)  # rounding slack, see docstring
     ell = _PREFIX_EXT
@@ -811,7 +801,6 @@ def dup_span_stats(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Exact substring-duplication signal per document: the fraction of a
     doc's ``window``-token windows (stride 1, ALL positions — not
@@ -855,7 +844,7 @@ def dup_span_stats(
     # size()>0 filter. The window array is never empty (greatest(…,1)).
     w = d.select(F.col(id_col), F.explode_outer(wins).alias("wh"))
     # one compute feeds both the frequency table and the join probe side
-    w = pin_intermediate(w, reliable=reliable)
+    w = pin_intermediate(w)
     if min_docs <= 1:
         dup = F.first(F.lit(True)).alias("__dup")  # every window qualifies
     elif min_docs == 2:
@@ -1089,7 +1078,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs: banded-LSH candidates → exact-Jaccard verification.
 
@@ -1108,7 +1096,6 @@ def minhash_lsh_pairs(
             df, num_hashes=num_hashes, bands=bands, n=n,
             text_col=text_col, id_col=id_col,
         ),
-        reliable=reliable,
         eager=True,
     )
     cand = (
@@ -1124,7 +1111,7 @@ def minhash_lsh_pairs(
     # probe stage can reference cand again), so the checkpoint
     # materializes exactly once there and the standalone eager
     # materialization job bought nothing.
-    cand = pin_intermediate(cand, reliable=reliable)
+    cand = pin_intermediate(cand)
     return exact_jaccard_verify(
         df, cand, threshold=threshold, n=n, text_col=text_col, id_col=id_col
     )
@@ -1181,7 +1168,6 @@ def dedup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_iters: int = 20,
-    reliable: bool = False,
     stats: "dict | None" = None,
     driver_fastpath_max_edges: int = 100_000,
 ) -> DataFrame:
@@ -1216,18 +1202,14 @@ def dedup_clusters(
     """
     pairs = minhash_lsh_pairs(
         df, threshold=threshold, n=n, text_col=text_col, id_col=id_col,
-        reliable=reliable,
     ).select("doc_a", "doc_b")
     labels = connected_components(
-        pairs, max_iters=max_iters, reliable=reliable, stats=stats,
+        pairs, max_iters=max_iters, stats=stats,
         driver_fastpath_max_edges=driver_fastpath_max_edges,
-        # the left-join + coalesce below restores self labels, so the
-        # node-frame derivation (union+distinct over the pinned pairs +
-        # a broadcast join — 2-3 scheduler jobs) is skipped entirely
-        emit_self_labels=False,
     )
-    # singletons (the vast majority at scale) never entered the loop:
-    # join the converged component labels back over the full corpus
+    # labels holds non-center rows only; component centers and the
+    # singletons (the vast majority at scale) never entered it: join the
+    # labels back over the full corpus, every other doc labels itself
     return (
         df.select(F.col(id_col))
         .join(
@@ -1300,11 +1282,8 @@ def _log_cc_stats(logger, door: str, batch_id, cc_stats: dict) -> None:
 def connected_components(
     pairs: DataFrame,
     max_iters: int = 20,
-    reliable: bool = False,
     stats: "dict | None" = None,
-    pin_input: bool = True,
     driver_fastpath_max_edges: int = 100_000,
-    emit_self_labels: bool = True,
 ) -> DataFrame:
     """Connected components over an undirected pair graph — alternating
     LARGE-STAR / SMALL-STAR edge contraction (Kiveris, Lattanzi, Mirrokni,
@@ -1347,182 +1326,75 @@ def connected_components(
     no such degeneracy: the round count is topology-independent up to
     the proven bound.
 
-    Per round: one neighborhood-min per star pass (a partial-aggregated
-    groupBy + broadcastable join-back on the lineage-truncating paths;
-    a single-reference window on the kept-lineage persist fallback —
-    see the in-loop comment for the skew trade) plus the exact fixpoint
-    check, all O(|edges|); nodes not in any pair never enter the loop.
-    Rounds are pinned and lineage-truncated (localCheckpoint); sweep
-    with ``session.release_checkpoint_caches`` between queries in
-    long-lived sessions.
+    Per round: one neighborhood-min per star pass — a partial-aggregated
+    groupBy + broadcastable join-back, so a giant star (every component
+    contracts toward one center whose degree is the component size)
+    never funnels its whole edge list through a single task — plus the
+    exact fixpoint check, all O(|edges|); nodes not in any pair never
+    enter the loop. Every round is pinned with :func:`pin_intermediate`:
+    each round's plan references the previous round's edge frame ~a
+    dozen times (two star passes + the convergence check), so kept
+    lineage would grow the logical plan multiplicatively per round;
+    truncated, plans stay round-sized. With a checkpoint directory
+    configured the pins are reliable checkpoint files (the GraphX/ALS
+    pattern); without one they are ``localCheckpoint`` blocks that
+    accumulate until ``session.release_checkpoint_caches`` sweeps them.
 
-    ``reliable=True`` — durability in an ITERATIVE loop needs lineage
-    truncation too, not just durable blocks: each round's plan references
-    the previous round's edge frame ~a dozen times (two star passes +
-    the convergence check), so kept lineage grows the logical plan
-    multiplicatively per round and Catalyst's rule application blows up
-    long before ``max_iters``. Therefore with a checkpoint directory
-    configured (``sc.setCheckpointDir`` — standard on any cluster run)
-    every pin is a RELIABLE ``checkpoint(eager=True)``: replicated
-    fault-tolerant files, lineage truncated, plans stay round-sized —
-    the GraphX/ALS pattern. Without a checkpoint dir it falls back to
-    persist(DISK_ONLY) with lineage kept, which is fine for the shallow
-    graphs real near-dup corpora produce (2-3 rounds) but grows the
-    plan ~12× per round past that — set a checkpoint dir for deep
-    chains.
-
-    Superseded rounds are released as they go, with one caveat: the
-    eager ``unpersist`` calls only actually free the persist(DISK_ONLY)
-    fallback path — on the default localCheckpoint path and the reliable
-    ``checkpoint()`` path the RDD-level blocks / checkpoint files are not
-    in the CacheManager, so ``DataFrame.unpersist`` is a no-op there and
-    per-round blocks accumulate until ``session.release_checkpoint_caches``
-    (or context cleanup) sweeps them. On the persist path, peak pinned
-    storage is THREE edge-scale tables briefly coexisting mid-round
-    (previous edges + large + new_edges, plus the node list), not
-    ``max_iters`` of them accumulating until the session sweep.
+    The canonical edge frame is the pair frame's ONLY consumer, so it is
+    the one input pin: the upstream lineage (typically an LSH candidate +
+    verification join) executes exactly once, fused with the
+    canonicalize + distinct into one eager materialization job shared by
+    the fastpath gate and the star loop's round 0.
 
     ``stats`` (optional dict) is populated in place with round telemetry:
     ``rounds`` (rounds executed), ``max_iters``, ``converged`` — so
     operators sizing ``max_iters`` on real corpora can read how much
     headroom a run had instead of discovering the bound by crashing.
-    Populated on every exit, including both raise paths.
-
-    ``pin_input=False`` skips the input pre-pin below: pass it when the
-    pair frame is ALREADY pinned/checkpointed (the streaming ingest
-    doors localCheckpoint their per-batch pairs before calling in) — the
-    default pre-pin would then materialize a duplicate block copy per
-    micro-batch that ``unpersist`` cannot free on the localCheckpoint
-    path, accumulating until the context dies.
+    Populated on every exit, including the non-convergence raise.
 
     ``driver_fastpath_max_edges`` (round-15 verdict #3): when the
-    canonical edge set is provably tiny — one ``count()`` on the pinned
-    round-0 frame, cheap next to even one star round — the edges are
-    collected and labeled by exact union-find on the driver
+    canonical edge set is provably tiny, the edges are collected and
+    labeled by exact union-find on the driver
     (:func:`_union_find_min_labels`), skipping the distributed loop
-    entirely; the tiny (doc, label) map broadcasts back over the
-    distributed node frame, so the NODE side never leaves the cluster
-    (self-loop-only nodes can vastly outnumber edges). Real near-dup
-    graphs are a sliver of the corpus — at gate/bench scale the whole
-    graph is a few hundred pairs and the star loop's cost was pure fixed
-    per-job overhead (~0.4 s/run, SCALE.md). The 100 TB story is
-    untouched: past the budget the star loop is the only path, and the
-    budget itself (100k edges ≈ ~13 MB collected) is far below driver
-    heap. ``0`` disables (the loop-behavior tests pin rounds/raises and
-    must not be short-circuited); ``stats`` records ``fastpath_edges``
-    and ``rounds=0`` when taken.
+    entirely. Real near-dup graphs are a sliver of the corpus — at
+    gate/bench scale the whole graph is a few hundred pairs and the star
+    loop's cost was pure fixed per-job overhead (~0.4 s/run, SCALE.md).
+    The 100 TB story is untouched: past the budget the star loop is the
+    only path, and the budget itself (100k edges ≈ ~13 MB collected) is
+    far below driver heap. The mapping comes back with a BROADCAST hint
+    — it is ≤ budget rows by construction, but RDD-backed with unknown
+    stats, so a consumer's corpus-scale join against it would otherwise
+    plan SortMergeJoin and shuffle the corpus side; the unbounded
+    star-loop output stays unhinted. ``0`` disables (the loop-behavior
+    tests pin rounds/raises and must not be short-circuited); ``stats``
+    records ``fastpath_edges`` and ``rounds=0`` when taken.
 
-    ``emit_self_labels=False`` (round 17) drops the self-labeled rows
-    (doc == label: component centers and self-loop-only nodes) from the
-    output, returning ONLY nodes whose label differs from their id. For
-    a consumer that left-joins the labels over a corpus and coalesces
-    missing labels to the id — :func:`dedup_clusters` — the joined
-    result is IDENTICAL row-for-row, and the node frame (a
-    union+distinct over the pinned pairs plus a broadcast join, 2-3
-    scheduler jobs per run) is never computed: the fastpath returns the
-    driver-built mapping frame directly, and the star loop returns the
-    converged edge rows, which at the fixpoint are exactly the
-    non-center labels. Default True preserves the documented
-    every-paired-node contract. Round 18: on this path the canonical
-    edge frame is the pair frame's ONLY consumer, so the input pre-pin
-    pins the edge frame directly (upstream + canonicalize + distinct
-    fused into one materialization job, shared by the fastpath gate and
-    the star loop's round 0), and the fastpath mapping comes back with a
-    BROADCAST hint — it is ≤ ``driver_fastpath_max_edges`` rows by
-    construction, but RDD-backed with unknown stats, so an unhinted
-    corpus-scale join against it would plan SortMergeJoin and shuffle
-    the corpus side.
-
-    Input: (doc_a, doc_b) pairs. Output: (doc, label) for every node that
-    appears in some pair (non-center nodes only when
-    ``emit_self_labels=False``), label = min node id of its component.
+    Input: (doc_a, doc_b) pairs. Output: (doc, label) for every
+    NON-CENTER node — a node in some pair whose label, the min node id
+    of its component, differs from its id. Component centers and
+    self-loop-only nodes are absent: a consumer left-joins the labels
+    over its node set and coalesces a missing label to the id
+    (:func:`dedup_clusters`), or rebuilds the members as
+    ``labels ∪ {(label, label)}`` (every center of a size ≥ 2 component
+    is some non-center's label).
     """
-    use_ckpt = (
-        reliable and pairs.sparkSession.sparkContext.getCheckpointDir() is not None
+    edges = pin_intermediate(
+        pairs.filter(F.col("doc_a") != F.col("doc_b"))
+        .select(
+            F.greatest("doc_a", "doc_b").alias("u"),
+            F.least("doc_a", "doc_b").alias("v"),
+        )
+        .distinct(),
+        eager=True,
     )
-
-    def round_pin(df: DataFrame) -> DataFrame:
-        if use_ckpt:
-            return df.checkpoint(eager=True)
-        return pin_intermediate(df, reliable=reliable, eager=True)
-
-    # Pin the RAW pair frame once before deriving anything: the caller's
-    # lineage is typically expensive (cluster_documents hands over the
-    # LSH candidate + verification join), and nodes/edges each force a
-    # full materialization of their input — unpinned, the upstream
-    # pipeline executed TWICE before round 0 even started. One pin job +
-    # two cheap derived jobs beats two upstream executions whenever the
-    # upstream costs more than one task wave; released right after both
-    # derivations (a real free only on the persist path — see docstring).
-    # (Lazier variants — node list unpinned, round-0 edges as a filter
-    # over the pinned pairs — measured SLOWER at sf0.1: every lazy
-    # reference re-runs its reduce side as extra AQE stages, and the
-    # pinned forms keep the loop's per-round reference fan-out reading
-    # materialized blocks instead.)
-    #
-    # With ``emit_self_labels=False`` the pair frame has exactly ONE
-    # consumer — the canonical edge frame (the node frame, the only
-    # other reader, is never built on that path) — so the raw-pair pin
-    # is pure waste there (round 18): pin the canonical EDGE frame
-    # directly instead. The upstream lineage still executes exactly once
-    # (inside the edge pin job, fused with the canonicalize+distinct),
-    # the fastpath gate take() reads the pinned edge blocks instead of
-    # re-aggregating the raw pairs, and the star loop's round 0 IS the
-    # pinned frame — one materialization job replaces the former
-    # pairs-pin + gate-distinct (+ round-0 edge pin on the miss path).
-    fuse_edges = pin_input and not emit_self_labels
-    pairs_p = pairs.select("doc_a", "doc_b")
-    if pin_input and not fuse_edges:
-        pairs_p = round_pin(pairs_p)
-
-    def node_frame() -> DataFrame:
-        # every paired node, self-loop-only nodes included — they
-        # re-enter as self-labeled rows after the loop (the edge frame
-        # drops self-loops)
-        return (
-            pairs_p.select(F.col("doc_a").alias("doc"))
-            .unionByName(pairs_p.select(F.col("doc_b").alias("doc")))
-            .distinct()
-        )
-
-    def edge_frame() -> DataFrame:
-        return (
-            pairs_p.filter(F.col("doc_a") != F.col("doc_b"))
-            .select(
-                F.greatest("doc_a", "doc_b").alias("u"),
-                F.least("doc_a", "doc_b").alias("v"),
-            )
-            .distinct()
-        )
-
-    # Fused-edge pin (round 18, emit_self_labels=False only): one eager
-    # materialization shared by the fastpath gate and the star loop.
-    edges_pinned = round_pin(edge_frame()) if fuse_edges else None
     if driver_fastpath_max_edges > 0:
-        # LAZY canonical edge frame over the pinned pairs (round 17):
-        # the fastpath only ever COUNTS and COLLECTS the edges and only
-        # READS the node list once in its output join, so the eager
-        # nodes/edges round-pins (two materialization jobs, each a full
-        # task wave) are deferred until the star loop is actually taken.
-        # Both derivations recompute from the pinned pairs blocks —
-        # aggregate-over-block-scan jobs, cheap at the ≤ budget scale
-        # this branch admits. The budget gate is unchanged: distinct
-        # canonical non-self edge count. On the miss path the count here
-        # duplicates the distinct the loop's eager pin then re-runs —
-        # one extra O(|pairs|) aggregation, noise next to even a single
-        # star round on a graph that size (both costs zero on the fused
-        # path above, where the take() reads pinned edge blocks).
-        edges_lazy = edges_pinned if edges_pinned is not None else edge_frame()
         # ONE action gates AND fetches (round 17): take(budget+1) both
         # answers "is the graph within budget" and, when it is, returns
-        # the complete edge list — the former count()-then-collect()
-        # pair cost two driver-blocking actions (five scheduler jobs
-        # with the take escalation) over the same tiny frame. A result
-        # of exactly budget+1 rows means over budget (an arbitrary
-        # subset — discarded, the star loop recomputes from the pinned
-        # pairs); ≤ budget rows IS the full canonical edge set, and its
-        # length is the exact count the old gate used.
-        edge_rows = edges_lazy.take(driver_fastpath_max_edges + 1)
+        # the complete edge list. A result of exactly budget+1 rows means
+        # over budget (an arbitrary subset — discarded, the star loop
+        # starts from the pinned edges); ≤ budget rows IS the full
+        # canonical edge set.
+        edge_rows = edges.take(driver_fastpath_max_edges + 1)
         n_edges = len(edge_rows)
         if n_edges <= driver_fastpath_max_edges:
             # NULL endpoints cannot reach this frame (the canonical
@@ -1547,9 +1419,8 @@ def connected_components(
 
             spark = pairs.sparkSession
             mapping = spark.createDataFrame(
-                # non-centers only: centers and self-loop-only nodes
-                # self-label through the coalesce, same as the star
-                # loop's converged edge rows (u > v, centers absent).
+                # non-centers only, same as the star loop's converged
+                # edge rows (u > v, centers absent).
                 # ONE slice explicitly: PySpark's default parallelize
                 # cuts the local list into defaultParallelism Python-RDD
                 # slices, and every consumption pays one Python-runner
@@ -1562,96 +1433,21 @@ def connected_components(
                     [(d, lab) for d, lab in labels.items() if d != lab], 1
                 ),
                 StructType([
-                    StructField("doc", edges_lazy.schema["u"].dataType),
-                    StructField("label", edges_lazy.schema["v"].dataType),
+                    StructField("doc", edges.schema["u"].dataType),
+                    StructField("label", edges.schema["v"].dataType),
                 ]),
             )
-            if not emit_self_labels:
-                # the mapping IS the non-center label set — no node
-                # frame, no broadcast join, no distinct (the caller's
-                # left-join + coalesce restores self labels). Nothing
-                # downstream reads the pinned edge frame on this path —
-                # release it (a real free only on the persist fallback;
-                # round-17 ADVICE flagged the fastpath leaving its pin
-                # cached with no remaining consumer). The mapping
-                # carries a BROADCAST hint: it is ≤ budget (~13 MB)
-                # edges by construction but RDD-backed with unknown
-                # stats, so a consumer's corpus-scale join would
-                # otherwise plan SortMergeJoin and shuffle the corpus
-                # side (round-17 ADVICE; dedup_clusters' left join is
-                # the measured case). The unbounded star-loop output
-                # below stays unhinted.
-                if edges_pinned is not None:
-                    edges_pinned.unpersist(False)
-                return F.broadcast(mapping)
-            return node_frame().join(
-                F.broadcast(mapping), "doc", "left"
-            ).select(
-                "doc", F.coalesce("label", F.col("doc")).alias("label")
-            )
-    nodes = round_pin(node_frame()) if emit_self_labels else None
-    edges = edges_pinned if edges_pinned is not None else round_pin(edge_frame())
-    if pin_input and not fuse_edges:
-        pairs_p.unpersist(False)
+            return F.broadcast(mapping)
+
+    def nbr_min(df: DataFrame, include_self: bool) -> DataFrame:
+        """df(u, v, …) + column m = min(v [∪ {u}]) per u."""
+        m = F.least(F.col("__mn"), F.col("u")) if include_self else F.col("__mn")
+        mins = df.groupBy("u").agg(F.min("v").alias("__mn"))
+        return df.join(mins, "u").withColumn("m", m).drop("__mn")
+
     converged = False
     rounds_used = 0
     for round_no in range(max_iters):
-        if reliable and not use_ckpt and round_no >= 5:
-            # persist(DISK_ONLY) keeps lineage: each round's plan embeds
-            # the previous round's multiple times (the symmetrize union
-            # references it twice, plus one window reference per star
-            # pass), so the analyzed tree grows multiplicatively per
-            # round and Catalyst chokes in analysis well
-            # before max_iters. Fail actionably before that instead —
-            # filling stats first (the telemetry contract: populated on
-            # every exit, raise paths included).
-            # Five rounds admit paths to ~16 nodes and every
-            # star/clique/near-clique component real near-dup corpora
-            # produce (2-3 rounds); deeper chains get the actionable
-            # message below.
-            if stats is not None:
-                stats.update(
-                    rounds=rounds_used, max_iters=max_iters, converged=False
-                )
-            raise RuntimeError(
-                "connected_components(reliable=True) without a checkpoint "
-                f"directory reached round {round_no}: kept lineage grows "
-                "the logical plan multiplicatively per round and the "
-                "driver would choke before max_iters. Set a "
-                "fault-tolerant checkpoint dir (sc.setCheckpointDir) so "
-                "rounds truncate via reliable checkpoint(), or use "
-                "reliable=False (localCheckpoint) for single-job runs."
-            )
-        # Two formulations of the per-node neighborhood minimum, chosen
-        # by whether lineage truncates between rounds:
-        #
-        # - SKEW-SAFE (default localCheckpoint path + reliable-checkpoint
-        #   path, where each round's pin truncates the plan so per-round
-        #   reference multiplicity is moot): groupBy().agg(min) has
-        #   map-side partial aggregation, and joining the node-scale min
-        #   table back is broadcast/AQE-skew-splittable — so a giant star
-        #   (every component contracts toward one center whose degree is
-        #   the component size) never funnels its whole edge list through
-        #   a single task.
-        # - SINGLE-REFERENCE (kept-lineage persist fallback only):
-        #   Window.partitionBy(node) references its input once, keeping
-        #   the retained logical plan at ~3× per round instead of ~12×
-        #   (the groupBy+join form embeds the frame 3-4× per pass and
-        #   OOM'd the driver in analysis at round 4, reproduced on a
-        #   16-node path). A window has no partial aggregation, so the
-        #   star center's partition is a hot task — acceptable ONLY here
-        #   because this path is guarded to ≤5 shallow rounds anyway.
-        skew_safe = use_ckpt or not reliable
-
-        def nbr_min(df: DataFrame, include_self: bool) -> DataFrame:
-            """df(u, v, …) + column m = min(v [∪ {u}]) per u."""
-            m = F.least(F.col("__mn"), F.col("u")) if include_self else F.col("__mn")
-            if skew_safe:
-                mins = df.groupBy("u").agg(F.min("v").alias("__mn"))
-                return df.join(mins, "u").withColumn("m", m).drop("__mn")
-            w = F.min("v").over(Window.partitionBy("u"))
-            return df.withColumn("__mn", w).withColumn("m", m).drop("__mn")
-
         # -- large-star: symmetrize; per node x, m = min(Γ(x) ∪ {x});
         # attach every strictly-larger neighbor to m. Emitted rows are
         # canonical by construction (nbr > x ≥ m). NOT deduped here: the
@@ -1661,16 +1457,17 @@ def connected_components(
         sym = edges.select("u", "v").unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        large = round_pin(
+        large = pin_intermediate(
             nbr_min(sym, include_self=True)
             .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v")),
+            eager=True,
         )
         # -- small-star: rows are already directed larger→smaller; per
         # node u, m = min of its smaller neighbors; attach u and every
         # smaller neighbor to m. BOTH emissions ((u,m) per group —
         # deduped below — and (v,m) per row) explode out of one pass.
-        new_edges = round_pin(
+        edges = pin_intermediate(
             nbr_min(large, include_self=False)
             .select(
                 F.explode(
@@ -1687,13 +1484,11 @@ def connected_components(
             )
             .select(F.col("e.a").alias("u"), F.col("e.b").alias("v"))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
+            .distinct(),
+            eager=True,
         )
-        large.unpersist(False)
-        edges.unpersist(False)
-        edges = new_edges
         rounds_used = round_no + 1
-        # exact fixpoint test — star-forest check on new_edges ALONE
+        # exact fixpoint test — star-forest check on the new edges ALONE
         # (see docstring proof): a violation is a node with >1 parent or
         # one playing both leaf and center. One narrow shuffle on node
         # ids with map-side partial aggregation (a giant star's center
@@ -1734,18 +1529,8 @@ def connected_components(
             "raise max_iters"
         )
     # fixed point = star forest: every non-center node appears exactly
-    # once as the larger endpoint, pointing at its component minimum;
-    # centers (and self-loop-only nodes) label themselves
-    labeled = edges.select(
-        F.col("u").alias("doc"), F.col("v").alias("label")
-    )
-    if not emit_self_labels:
-        # converged edge rows are exactly the non-center labels
-        return labeled
-    return (
-        nodes.join(labeled, "doc", "left")
-        .select("doc", F.coalesce("label", F.col("doc")).alias("label"))
-    )
+    # once as the larger endpoint, pointing at its component minimum
+    return edges.select(F.col("u").alias("doc"), F.col("v").alias("label"))
 
 
 #: SimHash width. 60 bits = 15 hex chars of md5: the token hash
@@ -1831,7 +1616,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: chunk-banded candidates, Hamming verify.
 
@@ -1844,9 +1628,7 @@ def simhash_pairs(
     and Spark plans them as two independent scans (no ReusedExchange
     across the mapInPandas boundary) — unpinned, the WHOLE corpus text
     would be read and fingerprinted twice. Same rationale as the banded
-    MinHash table in :func:`minhash_lsh_pairs`; ``reliable=True`` swaps
-    the pin for persist(DISK_ONLY) with lineage kept (see
-    :func:`pin_intermediate`).
+    MinHash table in :func:`minhash_lsh_pairs`.
     """
     assert max_hamming <= 3  # pigeonhole bound for 4 chunks
     # project BEFORE the Arrow kernel: with_simhash's mapInPandas schema
@@ -1857,7 +1639,6 @@ def simhash_pairs(
         with_simhash(
             df.select(id_col, text_col), text_col=text_col
         ).select(F.col(id_col).alias("doc"), "simhash"),
-        reliable=reliable,
         eager=True,
     )
     chunk_bits = SIMHASH_BITS // 4
@@ -1890,7 +1671,6 @@ def remove_dup_lines(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Line-level boilerplate removal (the RefinedWeb/Dolma recipe):
     drop every LINE whose normalized form occurs ``min_count`` or more
@@ -1926,7 +1706,6 @@ def remove_dup_lines(
             F.col(id_col),
             F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
         ).withColumn("lkey", F.md5(normalize_text(F.col("line")))),
-        reliable=reliable,
         eager=True,
     )
     common = (
@@ -1982,7 +1761,6 @@ def remove_dup_spans(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Exact-substring dedup REMOVAL — the excision counterpart of
     :func:`dup_span_stats`'s signal (the Lee et al. 2022 "Deduplicating
@@ -2051,7 +1829,7 @@ def remove_dup_spans(
     )
     # two consumers (the frequency aggregate and the flag join) would
     # each re-run the corpus-wide window explode without a pin
-    w = pin_intermediate(w, reliable=reliable)
+    w = pin_intermediate(w)
     freq = (
         w.groupBy("wh")
         .agg(
@@ -2081,7 +1859,6 @@ def remove_dup_spans(
                 F.sequence(F.col("start"), F.col("start") + (window - 1))
             ).alias("pos"),
         ).distinct(),
-        reliable=reliable,
     )
     affected = cov.select("doc").distinct()
     toks_rows = (

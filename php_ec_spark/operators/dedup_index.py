@@ -448,7 +448,6 @@ def dedup_index_probe(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
     matches: str = "best",
     near_layer: bool = True,
 ) -> DataFrame:
@@ -496,8 +495,6 @@ def dedup_index_probe(
     ``key_cols`` (from the build) scopes the EXACT layer's identity; the
     near layer is always text-based — two docs with different urls but
     nearly identical text are exactly what it exists to flag.
-    ``reliable=True`` swaps the candidate pin for a cluster-durable one
-    (same knob as the batch dedup operators).
     """
     if matches not in ("best", "all"):
         raise ValueError(
@@ -537,7 +534,6 @@ def dedup_index_probe(
         inc_bands.join(stored_bands, ["band", "bh"])
         .select("inc_doc", "idx_doc")
         .distinct(),
-        reliable=reliable,
         eager=True,
     )
     # Fetch candidate texts: BOTH sides by broadcast-semi prune —
@@ -617,7 +613,6 @@ def dedup_index_add(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> None:
     """Append ``increment`` to the index — the daily-crawl shape: signature
     parameters stay pinned (read from the meta table, same kernels as
@@ -635,12 +630,7 @@ def dedup_index_add(
     them) — the idempotence guard is id-level against the STORE, it does
     not collapse an increment that reuses an id internally. Appends are
     single-writer: run one add at a time per index (the anti-join reads
-    the store the append then extends). ``reliable=True`` pins the
-    filtered increment with a replicated ``checkpoint()`` (requires
-    ``sc.setCheckpointDir``; raises without one) — unlike the batch
-    operators' persist knob, KEPT lineage is semantically wrong here: a
-    lost block recomputed against the half-appended store would drop
-    rows.
+    the store the append then extends).
     """
     meta = _read_meta(spark, name)
     if meta["near"]:
@@ -653,21 +643,9 @@ def dedup_index_add(
         # Materialize once with TRUNCATED lineage: the three appends below
         # would otherwise re-run the anti-join, and a mid-sequence
         # recompute would read a store that already contains this add's
-        # earlier appends — silently dropping rows. A kept-lineage persist
-        # is therefore semantically wrong here, not just slow: reliable
-        # durability must come from a replicated checkpoint instead.
-        if reliable:
-            if spark.sparkContext.getCheckpointDir() is None:
-                raise RuntimeError(
-                    "dedup_index_add(reliable=True) needs a fault-tolerant "
-                    "checkpoint directory (sc.setCheckpointDir): the "
-                    "filtered increment must pin with truncated lineage — "
-                    "a lost block recomputed against the half-appended "
-                    "store would drop rows."
-                )
-            fresh = fresh.checkpoint(eager=True)
-        else:
-            fresh = fresh.localCheckpoint(eager=True)
+        # earlier appends — silently dropping rows. Every pin_intermediate
+        # pin truncates lineage (durably, under a checkpoint dir).
+        fresh = pin_intermediate(fresh, eager=True)
         band = with_band_keys(
             fresh,
             num_hashes=meta["num_hashes"], bands=meta["bands"], n=meta["n"],
@@ -948,43 +926,28 @@ def streaming_index_ingest(
             )
 
             survivors = survivors.localCheckpoint(eager=True)
-            pairs = (
-                minhash_lsh_pairs(
-                    survivors,
-                    threshold=threshold,
-                    num_hashes=meta["num_hashes"],
-                    bands=meta["bands"],
-                    n=meta["n"],
-                    text_col=text_col,
-                    id_col=id_col,
-                )
-                .select("doc_a", "doc_b")
-                .localCheckpoint(eager=True)
+            pairs = minhash_lsh_pairs(
+                survivors,
+                threshold=threshold,
+                num_hashes=meta["num_hashes"],
+                bands=meta["bands"],
+                n=meta["n"],
+                text_col=text_col,
+                id_col=id_col,
+            ).select("doc_a", "doc_b")
+            # CC's edge pin is the pairs' one materialization; a batch
+            # with no intra-batch near-dups exits through its fastpath
+            # with an empty mapping
+            cc_stats: dict = {}
+            comp = connected_components(pairs, stats=cc_stats)
+            # round telemetry (round-14 verdict #7): a production stream
+            # creeping toward max_iters must be visible in the driver log
+            # BEFORE a later batch raises on the bound
+            _log_cc_stats(_LOG, "streaming_index_ingest", batch_id, cc_stats)
+            losers = comp.select(F.col("doc").alias("__drop"))
+            survivors = survivors.join(
+                losers, survivors[id_col] == F.col("__drop"), "left_anti"
             )
-            # common case — no intra-batch near-dups: skip the component
-            # rounds entirely
-            if pairs.head(1):
-                # pairs is already localCheckpoint'd above — the default
-                # input pre-pin would stack an unreleasable duplicate
-                # block copy per micro-batch
-                cc_stats: dict = {}
-                comp = connected_components(
-                    pairs, pin_input=False, stats=cc_stats,
-                    # only non-self labels are consumed (the drop list
-                    # below) — the slim form skips the per-batch
-                    # node-frame derivation entirely (round 18)
-                    emit_self_labels=False,
-                )
-                # round telemetry (round-14 verdict #7): a production
-                # stream creeping toward max_iters must be visible in the
-                # driver log BEFORE a later batch raises on the bound
-                _log_cc_stats(
-                    _LOG, "streaming_index_ingest", batch_id, cc_stats
-                )
-                losers = comp.select(F.col("doc").alias("__drop"))
-                survivors = survivors.join(
-                    losers, survivors[id_col] == F.col("__drop"), "left_anti"
-                )
         survivors = survivors.localCheckpoint(
             eager=True
         )  # landed write + add both consume

@@ -80,7 +80,6 @@ def with_lm_bits(
     train_df: Optional[DataFrame] = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Per-document bigram-LM bits-per-token over ``df``, trained on
     ``train_df`` (default: ``df`` itself — the self-scoring CCNet setup
@@ -102,11 +101,7 @@ def with_lm_bits(
         # self-training: the exploded transition stream feeds BOTH the
         # count tables and the scoring join — pin it (the repo-wide
         # ≥2-consumers rule) so the corpus-linear explode runs once.
-        # reliable=True swaps localCheckpoint for persist+lineage on
-        # cluster runs (see pin_intermediate).
-        score_trans = pin_intermediate(
-            _transitions(df, text_col, id_col), reliable=reliable
-        )
+        score_trans = pin_intermediate(_transitions(df, text_col, id_col))
         tr_trans = score_trans.filter(F.col("w1").isNotNull())
         train = df
     else:

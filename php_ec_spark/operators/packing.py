@@ -39,7 +39,6 @@ def running_prefix_sum(
     order_cols: "list[str]",
     value_col: str,
     num_partitions: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """Distributed INCLUSIVE prefix sum of ``value_col`` over rows in
     ``order_cols`` order — the two-pass parallel scan shared by
@@ -70,17 +69,13 @@ def running_prefix_sum(
     # stamped frame so the scan + range exchange run once and the
     # branches read its blocks, instead of re-running two independent
     # range exchanges and trusting their sampled boundaries to agree.
-    # reliable=True swaps the local checkpoint for persist(DISK_ONLY)
-    # with lineage kept (cluster-durable; block recompute re-pulls the
-    # SAME range-exchange shuffle output, so pid stamping stays
-    # consistent). Sweep with session.release_checkpoint_caches between
-    # queries.
+    # Sweep with session.release_checkpoint_caches between queries.
     d = df.repartitionByRange(num_partitions, *order_cols).withColumn(
         "__pid", F.spark_partition_id()
     )
     from .dedup import pin_intermediate
 
-    d = pin_intermediate(d, reliable=reliable)
+    d = pin_intermediate(d)
     local_w = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
@@ -115,7 +110,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_partitions: int | None = None,
-    reliable: bool = False,
     token_col: "str | None" = None,
 ) -> DataFrame:
     """Assign each document its offset + sequence span in the packed stream.
@@ -166,8 +160,7 @@ def pack_sequences(
         )
     d = df.select(F.col(id_col), n_tokens.alias("n_tokens"))
     out = running_prefix_sum(
-        d, [id_col], "n_tokens",
-        num_partitions=num_partitions, reliable=reliable,
+        d, [id_col], "n_tokens", num_partitions=num_partitions
     ).select(
         F.col(id_col),
         F.col("n_tokens"),

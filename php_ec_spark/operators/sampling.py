@@ -130,7 +130,6 @@ def sample_to_token_budget(
     seed: int = 0,
     hash: str = "xxhash64",
     num_partitions: int | None = None,
-    reliable: bool = False,
     tokenizer: str = "ws",
 ) -> DataFrame:
     """Take an (approximately ``budget``-token) uniform sample of the
@@ -227,8 +226,7 @@ def sample_to_token_budget(
     )
     kept = (
         running_prefix_sum(
-            slim, ["__u", id_col], "n_tokens",
-            num_partitions=num_partitions, reliable=reliable,
+            slim, ["__u", id_col], "n_tokens", num_partitions=num_partitions
         )
         .filter(F.col("__cum_end") <= budget)
         .select(

@@ -192,13 +192,13 @@ def release_checkpoint_caches(spark: SparkSession) -> int:
     on those checkpoints have been fully consumed — a localCheckpoint
     cannot be recomputed once its blocks are gone.
 
-    ``df.persist()`` pins (the operators' ``reliable=True`` path) are
-    registered in Spark SQL's CacheManager, not just the block manager:
-    unpersisting their RDDs alone would free the blocks but leave the
-    CacheManager entry behind, and any later plan matching the cached
-    fragment would silently re-materialize it. ``catalog.clearCache()``
-    releases those through the front door first; the RDD sweep then picks
-    up what CacheManager does not track (localCheckpoint lineages)."""
+    A user's ``df.cache()`` / ``df.persist()`` frames are registered in
+    Spark SQL's CacheManager, not just the block manager: unpersisting
+    their RDDs alone would free the blocks but leave the CacheManager
+    entry behind, and any later plan matching the cached fragment would
+    silently re-materialize it. ``catalog.clearCache()`` releases those
+    through the front door first; the RDD sweep then picks up what
+    CacheManager does not track (localCheckpoint lineages)."""
     released = len(spark.sparkContext._jsc.getPersistentRDDs())
     spark.catalog.clearCache()
     for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():

@@ -35,3 +35,30 @@ def events(spark, sf_dir):
     from php_ec_spark.model import load_events
 
     return load_events(spark, sf_dir)
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """Context-manager factory: ``with checkpoint_dir() as path:`` sets a
+    session checkpoint directory — the switch that turns every
+    ``pin_intermediate`` pin into a reliable ``checkpoint()`` — and
+    clears it on exit. A None checkpoint dir isn't settable back through
+    the public API, so the scala option is cleared directly and later
+    tests see the session state they started with."""
+    import contextlib
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def use():
+        assert sc.getCheckpointDir() is None
+        path = tmp_path / "ckpt"
+        sc.setCheckpointDir(str(path))
+        try:
+            yield path
+        finally:
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+                sc._jvm.scala.Option.apply(None)
+            )
+
+    return use

@@ -276,35 +276,47 @@ class TestPlanShape:
 
 
 class TestReliableAdd:
-    def test_reliable_add_needs_then_uses_checkpoint_dir(
-        self, spark, docs, tmp_path
+    def test_add_under_checkpoint_dir_matches_local(
+        self, spark, docs, checkpoint_dir
     ):
-        """reliable=True must refuse to run on kept lineage (a lost block
-        recomputed against the half-appended store would drop rows) and
-        switch to replicated checkpoint() when a dir is configured."""
-        sc = spark.sparkContext
-
-        def _clear_dir():
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                sc._jvm.scala.Option.apply(None)
-            )
-
+        """dedup_index_add pins the filtered increment with truncated
+        lineage either way (a lost block recomputed against the
+        half-appended store would drop rows); under a checkpoint dir the
+        pin is a replicated checkpoint() and the appended index is
+        identical to the localCheckpoint one."""
         base = docs.filter(F.col("doc_id") < 100)
         inc = spark.createDataFrame(
-            [(60001, "reliably appended fresh text aa bb cc dd")],
+            [(60001, "reliably appended fresh text aa bb cc dd"),
+             (60002, "a second fresh text ee ff gg hh ii")],
             "doc_id long, text string",
+        ).unionByName(
+            # an already-stored id: the add's id-level anti-join skips it
+            base.filter(F.col("doc_id") == 1).select("doc_id", "text")
         )
-        dedup_index_build(base, "drx", **PARAMS)
-        _clear_dir()
+
+        def index_rows(name):
+            return {
+                part: sorted(
+                    (tuple(r) for r in spark.table(f"{name}_{part}").collect()),
+                    key=repr,
+                )
+                for part in ("digests", "bands", "docs")
+            }
+
         try:
-            with pytest.raises(RuntimeError, match="setCheckpointDir"):
-                dedup_index_add(spark, "drx", inc, reliable=True)
-            sc.setCheckpointDir(str(tmp_path / "ckpt"))
-            dedup_index_add(spark, "drx", inc, reliable=True)
-            got = dedup_index_probe(spark, "drx", inc).head()
+            dedup_index_build(base, "drl", **PARAMS)
+            dedup_index_add(spark, "drl", inc)
+            dedup_index_build(base, "drx", **PARAMS)
+            with checkpoint_dir() as ckpt:
+                dedup_index_add(spark, "drx", inc)
+                assert any(p.is_file() for p in ckpt.rglob("*"))
+            assert index_rows("drx") == index_rows("drl")
+            got = dedup_index_probe(
+                spark, "drx", inc.filter(F.col("doc_id") == 60001)
+            ).head()
             assert got.exact_dup_of == 60001
         finally:
-            _clear_dir()
+            dedup_index_drop(spark, "drl")
             dedup_index_drop(spark, "drx")
 
 

@@ -236,10 +236,12 @@ class TestDedup:
             assert got == want, f"threshold {tau}"
 
     @pytest.mark.slow
-    def test_reliable_pin_matches_local_checkpoint_results(self, spark, docs):
-        """reliable=True (persist DISK_ONLY, lineage kept) is a pure
-        durability knob — results identical to the localCheckpoint
-        default on every operator that exposes it."""
+    def test_checkpoint_dir_pin_matches_local_checkpoint_results(
+        self, spark, docs, checkpoint_dir
+    ):
+        """A checkpoint dir (every pin a reliable checkpoint()) is a pure
+        durability switch — results identical to the localCheckpoint
+        run on every multi-branch operator."""
         from php_ec_spark.operators.dedup import dedup_clusters, dup_span_stats
         from php_ec_spark.operators.packing import pack_sequences
         from php_ec_spark.session import release_checkpoint_caches
@@ -247,147 +249,136 @@ class TestDedup:
         small = docs.limit(120)
         from php_ec_spark.operators.lm import with_lm_bits
 
-        for op in (
-            lambda d, **kw: jaccard_pairs(d, threshold=0.8, **kw),
-            lambda d, **kw: dup_span_stats(d, window=13, **kw),
-            lambda d, **kw: pack_sequences(d, budget=512, **kw),
-            lambda d, **kw: dedup_clusters(d, threshold=0.8, **kw),
-            lambda d, **kw: with_lm_bits(d, **kw),
-            lambda d, **kw: simhash_pairs(d, max_hamming=3, **kw),
-        ):
-            fast = {tuple(r) for r in op(small).collect()}
-            durable = {tuple(r) for r in op(small, reliable=True).collect()}
-            assert durable == fast
+        ops = (
+            lambda d: jaccard_pairs(d, threshold=0.8),
+            lambda d: dup_span_stats(d, window=13),
+            lambda d: pack_sequences(d, budget=512),
+            lambda d: dedup_clusters(d, threshold=0.8),
+            lambda d: with_lm_bits(d),
+            lambda d: simhash_pairs(d, max_hamming=3),
+        )
+        fast = []
+        for op in ops:
+            fast.append({tuple(r) for r in op(small).collect()})
             release_checkpoint_caches(spark)
+        with checkpoint_dir() as ckpt:
+            for op, want in zip(ops, fast):
+                durable = {tuple(r) for r in op(small).collect()}
+                assert durable == want
+            # the pins really went to the checkpoint dir
+            assert any(p.is_file() for p in ckpt.rglob("*"))
 
-    def test_pin_intermediate_reliable_keeps_lineage(self, spark):
-        """reliable=True must persist DISK_ONLY with lineage KEPT (the
-        whole point: a lost executor recomputes instead of failing),
-        while the default truncates lineage via localCheckpoint."""
-        from pyspark import StorageLevel
-
+    def test_pin_intermediate_checkpoint_dir_writes_files(
+        self, spark, checkpoint_dir
+    ):
+        """With a checkpoint dir set the pin is a reliable checkpoint():
+        files under the dir, lineage truncated (the whole point: a lost
+        executor re-reads replicated files instead of failing). Without
+        one it is localCheckpoint — lineage truncated, blocks local."""
         from php_ec_spark.operators.dedup import pin_intermediate
         from php_ec_spark.session import release_checkpoint_caches
 
         df = spark.range(100).selectExpr("id", "id * 2 AS v")
-        rel = pin_intermediate(df, reliable=True, eager=True)
-        assert rel.storageLevel == StorageLevel.DISK_ONLY
-        assert rel.count() == 100
-        # lineage kept: unpersisting and recounting recomputes fine
-        rel.unpersist()
-        assert rel.count() == 100
+
+        def truncated(pinned):
+            # the plan scans the materialized RDD (ExistingRDD), no Range
+            plan = pinned._jdf.queryExecution().executedPlan().toString()
+            return "Range" not in plan
+
+        release_checkpoint_caches(spark)
+        with checkpoint_dir() as ckpt:
+            rel = pin_intermediate(df, eager=True)
+            assert any(p.is_file() for p in ckpt.rglob("*"))
+            assert truncated(rel)
+            assert rel.count() == 100
+            # reliable checkpoints are files, not pinned block-manager RDDs
+            assert not spark.sparkContext._jsc.getPersistentRDDs()
 
         loc = pin_intermediate(df, eager=True)
-        # localCheckpoint swaps the plan for the materialized blocks
-        # (lineage truncated — the plan scans an ExistingRDD, no Range)
-        assert "Range" not in loc._jdf.queryExecution().executedPlan().toString()
+        assert truncated(loc)
         assert loc.count() == 100
+        assert spark.sparkContext._jsc.getPersistentRDDs()
         release_checkpoint_caches(spark)
 
     def test_release_clears_sql_cache_manager_entries(self, spark):
-        """release_checkpoint_caches must release reliable=True pins via
-        the SQL CacheManager, not just the block manager: an RDD-level
-        unpersist alone leaves the CacheManager entry behind, and a later
-        plan matching the cached fragment silently re-materializes it."""
-        from php_ec_spark.operators.dedup import pin_intermediate
+        """release_checkpoint_caches must release a user's persist()
+        frames via the SQL CacheManager, not just the block manager: an
+        RDD-level unpersist alone leaves the CacheManager entry behind,
+        and a later plan matching the cached fragment silently
+        re-materializes it."""
         from php_ec_spark.session import release_checkpoint_caches
 
-        df = spark.range(50).selectExpr("id", "id * 3 AS v")
-        pin_intermediate(df, reliable=True, eager=True)
+        df = spark.range(50).selectExpr("id", "id * 3 AS v").persist()
+        df.count()
         cm = spark._jsparkSession.sharedState().cacheManager()
         assert not cm.isEmpty()
         assert release_checkpoint_caches(spark) >= 1
         assert cm.isEmpty()
         assert not spark.sparkContext._jsc.getPersistentRDDs()
 
-    def test_connected_components_releases_superseded_rounds(self, spark):
-        """reliable=True used to leave every round's DISK_ONLY label table
-        pinned until the session sweep — up to max_iters edge-scale tables.
-        Superseded pins must release as soon as the next round
-        materializes: after convergence only ~2 reliable pins (the final
-        labels + at most one in-flight) may remain. Shallow graph (one
-        jump round) — the no-checkpoint-dir persist path, where kept
-        lineage is still plan-safe."""
+    def test_connected_components_releases_superseded_rounds(
+        self, spark, checkpoint_dir
+    ):
+        """Under a checkpoint dir every round pins with a reliable
+        checkpoint(), so superseded rounds never accumulate as pinned
+        block-manager tables: after convergence at most ~2 pinned tables
+        (the final labels + at most one in-flight) may remain."""
         from php_ec_spark.operators.dedup import connected_components
         from php_ec_spark.session import release_checkpoint_caches
 
         release_checkpoint_caches(spark)
-        # an 8-node path: needs 4 star rounds (within the persist path's
-        # plan-growth guard), so both release sites (previous round + the
-        # intra-round large-star pin) execute several times
+        # an 8-node path: needs 4 star rounds, so every round pin
+        # (previous round + the intra-round large-star pin) executes
+        # several times
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(7)], "doc_a long, doc_b long"
         )
-        labels = connected_components(
-            pairs, max_iters=20, reliable=True,
-            driver_fastpath_max_edges=0,  # the loop IS the subject here
-        )
-        got = {r.doc for r in labels.filter(F.col("label") == 0).collect()}
-        assert got == set(range(8))
+        with checkpoint_dir():
+            labels = connected_components(
+                pairs, max_iters=20,
+                driver_fastpath_max_edges=0,  # the loop IS the subject here
+            )
+            got = {
+                r.doc for r in labels.filter(F.col("label") == 0).collect()
+            }
+        # non-center rows: every node but the center 0
+        assert got == set(range(1, 8))
         live = len(spark.sparkContext._jsc.getPersistentRDDs())
         assert live <= 2, f"{live} pinned tables survived the loop"
         release_checkpoint_caches(spark)
 
-    @pytest.mark.slow
-    def test_connected_components_reliable_deep_chain_needs_ckpt_dir(
-        self, spark
-    ):
-        """The persist fallback's plan grows multiplicatively per round
-        (lineage kept): past 5 rounds it must fail ACTIONABLY (naming
-        sc.setCheckpointDir) instead of OOMing the driver mid-analysis.
-        A 64-node path needs 7 star rounds, comfortably past the guard."""
-        import pytest
-
-        from php_ec_spark.operators.dedup import connected_components
-        from php_ec_spark.session import release_checkpoint_caches
-
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
-        )
-        with pytest.raises(RuntimeError, match="setCheckpointDir"):
-            connected_components(
-                pairs, max_iters=20, reliable=True,
-                driver_fastpath_max_edges=0,  # guard fires inside the loop
-            )
-        release_checkpoint_caches(spark)
-
     def test_connected_components_deep_chain_reliable_checkpoints(
-        self, spark, tmp_path
+        self, spark, checkpoint_dir
     ):
-        """Durability for a DEEP component: with kept lineage each star
-        round embeds the previous round's plan ~a dozen times, so
-        persist(DISK_ONLY) alone chokes Catalyst long before max_iters.
-        With a checkpoint dir configured — the standard cluster setup —
-        reliable=True must switch to reliable checkpoint() (replicated
-        files, truncated lineage): bounded plans, correct labels, and no
-        pinned-table accumulation."""
+        """Durability for a DEEP component: each star round embeds the
+        previous round's plan ~a dozen times, so only truncated lineage
+        keeps plans bounded. With a checkpoint dir configured — the
+        standard cluster setup — every round is a reliable checkpoint()
+        (replicated files, truncated lineage): bounded plans, correct
+        labels, and no pinned-table accumulation."""
         from php_ec_spark.operators.dedup import connected_components
         from php_ec_spark.session import release_checkpoint_caches
 
         release_checkpoint_caches(spark)
-        sc = spark.sparkContext
-        assert sc.getCheckpointDir() is None
-        sc.setCheckpointDir(str(tmp_path / "ckpt"))
         try:
-            pairs = spark.createDataFrame(
-                [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
-            )
-            labels = connected_components(
-                pairs, max_iters=20, reliable=True,
-                driver_fastpath_max_edges=0,  # checkpoint loop is the subject
-            )
-            got = {r.doc for r in labels.filter(F.col("label") == 0).collect()}
-            assert got == set(range(64))
+            with checkpoint_dir() as ckpt:
+                pairs = spark.createDataFrame(
+                    [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
+                )
+                labels = connected_components(
+                    pairs, max_iters=20,
+                    driver_fastpath_max_edges=0,  # checkpoint loop is the subject
+                )
+                got = {
+                    r.doc
+                    for r in labels.filter(F.col("label") == 0).collect()
+                }
+                assert any(p.is_file() for p in ckpt.rglob("*"))
+            assert got == set(range(1, 64))
             # reliable checkpoints are files, not persisted RDDs
             live = len(spark.sparkContext._jsc.getPersistentRDDs())
             assert live == 0, f"{live} pinned tables survived the loop"
         finally:
-            # a None checkpoint dir isn't settable back through the public
-            # API — clear the scala option directly so later tests see the
-            # same session state they started with
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                sc._jvm.scala.Option.apply(None)
-            )
             release_checkpoint_caches(spark)
 
     def test_minhash_similarity_estimate(self, spark):
@@ -2026,7 +2017,8 @@ class TestConnectedComponents:
         """A 100-node path graph has diameter 99: one-hop label
         propagation would need ~99 rounds, star contraction must close
         it within 9 (ceil(log2(99)) + margin; measured 7 + the
-        fixpoint-detection round)."""
+        fixpoint-detection round). Output is the non-center rows: every
+        node but the center 0, each labeled 0."""
         from php_ec_spark.operators.dedup import connected_components
 
         pairs = spark.createDataFrame(
@@ -2035,7 +2027,7 @@ class TestConnectedComponents:
         labels = connected_components(
             pairs, max_iters=9, driver_fastpath_max_edges=0,
         ).collect()
-        assert len(labels) == 100
+        assert sorted(r.doc for r in labels) == list(range(1, 100))
         assert all(r.label == 0 for r in labels)
 
     def test_multiple_components_and_nonconvergence_raises(self, spark):
@@ -2049,8 +2041,9 @@ class TestConnectedComponents:
             r.doc: r.label
             for r in connected_components(pairs).collect()
         }
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
-                       20: 10, 21: 10, 22: 10}
+        # non-center rows of the reference labeling
+        want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 10, 21: 10, 22: 10}
+        assert got == {d: lab for d, lab in want.items() if d != lab}
         with pytest.raises(RuntimeError, match="did not converge"):
             # a 40-chain needs ~6 star rounds — 2 cannot close it
             long_chain = spark.createDataFrame(
@@ -2066,8 +2059,9 @@ class TestConnectedComponents:
         the distributed star loop, ``rounds=0`` + ``fastpath_edges``
         telemetry, and the threshold is an EDGE-count gate: one edge past
         the budget and the star loop runs (its telemetry shape returns).
-        Self-loop-only nodes stay distributed either way and self-label
-        through the same coalesce tail."""
+        Both paths return exactly the reference's non-center rows:
+        component centers and the self-loop-only node are absent and no
+        row self-labels."""
         from php_ec_spark.operators.dedup import connected_components
         from php_ec_spark.session import release_checkpoint_caches
 
@@ -2077,8 +2071,9 @@ class TestConnectedComponents:
             + [(20, 21), (21, 22), (20, 22), (30, 31), (40, 40)],
             "doc_a long, doc_b long",
         )
-        want = {i: 0 for i in range(7)}
-        want.update({20: 20, 21: 20, 22: 20, 30: 30, 31: 30, 40: 40})
+        ref = {i: 0 for i in range(7)}
+        ref.update({20: 20, 21: 20, 22: 20, 30: 30, 31: 30, 40: 40})
+        want = {d: lab for d, lab in ref.items() if d != lab}
         try:
             fast_stats: dict = {}
             got_fast = {
@@ -2108,6 +2103,8 @@ class TestConnectedComponents:
         assert got_fast == want
         assert got_slow == want
         assert got_edge == want
+        # non-center rows only: no row may self-label on either path
+        assert all(d != lab for d, lab in {**got_fast, **got_slow}.items())
         assert fast_stats == {
             "rounds": 0, "max_iters": 20, "converged": True,
             "fastpath_edges": 10,
@@ -2118,7 +2115,7 @@ class TestConnectedComponents:
         assert "fastpath_edges" not in edge_stats
 
         # degenerate fastpath shape: self-loop-only input -> zero
-        # canonical edges, empty driver mapping, every node self-labels
+        # canonical edges, empty driver mapping, no non-center rows
         only_self = spark.createDataFrame(
             [(5, 5), (9, 9)], "doc_a long, doc_b long"
         )
@@ -2127,46 +2124,8 @@ class TestConnectedComponents:
             r.doc: r.label
             for r in connected_components(only_self, stats=st).collect()
         }
-        assert got == {5: 5, 9: 9}
+        assert got == {}
         assert st["fastpath_edges"] == 0 and st["converged"]
-
-    def test_emit_self_labels_false_is_default_minus_self_rows(self, spark):
-        """Round-17 optimization pin: ``emit_self_labels=False`` (the
-        dedup_clusters contract — its corpus left-join + coalesce
-        restores self labels) must return EXACTLY the default output's
-        non-self rows, on BOTH the driver fastpath and the distributed
-        star loop, including the self-loop-only node the edge frame
-        drops."""
-        from php_ec_spark.operators.dedup import connected_components
-        from php_ec_spark.session import release_checkpoint_caches
-
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(6)]
-            + [(20, 21), (21, 22), (20, 22), (30, 31), (40, 40)],
-            "doc_a long, doc_b long",
-        )
-        try:
-            for budget in (100_000, 0):  # fastpath, then star loop
-                full = {
-                    r.doc: r.label
-                    for r in connected_components(
-                        pairs, driver_fastpath_max_edges=budget
-                    ).collect()
-                }
-                slim = {
-                    r.doc: r.label
-                    for r in connected_components(
-                        pairs, driver_fastpath_max_edges=budget,
-                        emit_self_labels=False,
-                    ).collect()
-                }
-                assert slim == {
-                    d: lab for d, lab in full.items() if d != lab
-                }, f"budget={budget}"
-                # non-center rows only: no row may self-label
-                assert all(d != lab for d, lab in slim.items())
-        finally:
-            release_checkpoint_caches(spark)
 
     def test_door_telemetry_log_levels(self, caplog):
         """The streaming doors' per-batch CC log helper (round-14 verdict
@@ -2246,34 +2205,17 @@ class TestConnectedComponents:
             )
         assert stats == {"rounds": 2, "max_iters": 2, "converged": False}
 
-        # ...and so does the reliable-without-checkpoint-dir guard raise
-        # (a caller reading stats in its error handler — the documented
-        # purpose — must not hit a KeyError on this exit either)
-        from php_ec_spark.session import release_checkpoint_caches
-
-        stats = {}
-        try:
-            with pytest.raises(RuntimeError, match="setCheckpointDir"):
-                connected_components(
-                    chain, reliable=True, stats=stats,
-                    driver_fastpath_max_edges=0,
-                )
-        finally:
-            release_checkpoint_caches(spark)
-        assert stats == {"rounds": 5, "max_iters": 20, "converged": False}
-
-        # pin_input=False (the pre-pinned streaming-door spelling)
-        # labels identically to the default
+        # an already-pinned input labels identically (the edge pin is
+        # the one materialization either way)
         stats = {}
         pinned = star.localCheckpoint(eager=True)
         got = {
             r.doc: r.label
             for r in connected_components(
-                pinned, stats=stats, pin_input=False,
-                driver_fastpath_max_edges=0,
+                pinned, stats=stats, driver_fastpath_max_edges=0,
             ).collect()
         }
-        assert got == {i: 0 for i in range(5)}
+        assert got == {i: 0 for i in range(1, 5)}
         assert stats["converged"] and stats["rounds"] == 1
 
         # dedup_clusters passes the dict through to the CC loop

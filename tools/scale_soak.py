@@ -316,20 +316,20 @@ def main() -> None:
         "",
         "## Durability of pinned intermediates",
         "",
-        "The multi-branch operators (`jaccard_pairs`, `dup_span_stats`, "
-        "`pack_sequences`, `dedup_clusters`, `with_lm_bits`, "
-        "`simhash_pairs`) pin their corpus-scale intermediates with "
-        "`localCheckpoint` by default: fastest locally, but the blocks "
-        "live non-replicated on executor local storage with lineage "
-        "truncated — on a real cluster, losing one executor mid-query "
-        "kills a multi-hour job. Pass `reliable=True` to swap the pin "
-        "for `persist(StorageLevel.DISK_ONLY)` with lineage KEPT: lost "
-        "blocks recompute from the parquet scan instead of failing the "
-        "job (~identical speed locally, verified result-identical in "
-        "tests/test_pipeline_ops.py::"
-        "test_reliable_pin_matches_local_checkpoint_results). Flip it "
-        "for any run whose wall-clock exceeds the cluster's expected "
-        "executor MTBF.",
+        "One rule, in one function "
+        "(`operators.dedup.pin_intermediate`): every pinned "
+        "intermediate truncates its lineage, and the session's "
+        "checkpoint directory decides how durably. With "
+        "`sc.setCheckpointDir` set (standard on cluster runs) the pin "
+        "is a reliable `checkpoint()` — replicated files, so losing an "
+        "executor mid-query does not kill a multi-hour job; set it for "
+        "any run whose wall-clock exceeds the cluster's expected "
+        "executor MTBF. Without one the pin is `localCheckpoint`: "
+        "fastest locally, but the blocks live non-replicated on "
+        "executor local storage, and `session.release_checkpoint_caches` "
+        "sweeps them between queries. Results are identical either way "
+        "(tests/test_pipeline_ops.py::"
+        "test_checkpoint_dir_pin_matches_local_checkpoint_results).",
         "",
         "```json",
         json.dumps(doc, indent=2),
