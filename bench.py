@@ -5,10 +5,16 @@ exec-metrics JSON line, also appended to BENCH_METRICS.jsonl).
 Usage: python bench.py
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_CPUS   (default all cores)
+       SPARK_GRAFT_BENCH_ITERS (default 5 interleaved rounds)
 
 Each headline query is materialized via a count-ish action (``collect`` on
 already-small results, ``count`` otherwise is avoided — collect forces full
 result production, which is what a user would pay for).
+
+The record is raw min-of-N wall time plus load-independent plan counters
+(per-query shuffle bytes and task counts, digested into ``plan_fp``). Wall
+time is only compared between runs at the same ``default_parallelism``;
+plan changes are read off the counters, which no box load can move.
 """
 
 from __future__ import annotations
@@ -63,72 +69,6 @@ def _measure_pure_eps(iters: int) -> float:
     return eps_pure
 
 
-def _settle() -> float:
-    """Cooldown gate before any measurement (round-9 verdict bench-hygiene
-    ask): a test suite or soak finishing just before bench leaves ~10 min
-    of residual host load that depresses the single-thread pure-eps number
-    ~35% and inflates query wall-times 15-45% UNIFORMLY — min-of-5 cannot
-    save a window where every iteration is loaded. Wait (bounded) for the
-    1-minute loadavg to drop below a quarter of the cores before starting;
-    SPARK_GRAFT_BENCH_SETTLE=0 disables. Returns the loadavg at exit so
-    the artifact records the measurement window's starting condition
-    (round-10 verdict: two consecutive noisy artifacts needed human
-    adjudication; a recorded loadavg makes a loaded window
-    machine-detectable in the JSON itself).
-
-    The cap default was raised 120 -> 300 s after round 12: the 120 s cap
-    expired mid-load and the artifact recorded a 2.64x-inflated total
-    (loadavg.start 5.15). Note loadavg only sees THIS host's runnable
-    queue — neighbor contention that inflates Spark wall-times with
-    loadavg ~0 is the calibration probe's job (see php_ec_spark/calib.py
-    and the ``calib``/``window`` fields in the output)."""
-    max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE", "300"))
-    if max_wait <= 0:
-        # explicitly disabled: no gate, no data-quality warning
-        return os.getloadavg()[0]
-    thresh = max((os.cpu_count() or 4) * 0.25, 2.0)
-    t0 = time.time()
-    while time.time() - t0 < max_wait:
-        load = os.getloadavg()[0]
-        if load < thresh:
-            if time.time() - t0 > 1:
-                print(f"# settle: waited {time.time() - t0:.0f}s "
-                      f"(load {load:.1f} < {thresh:.1f})", file=sys.stderr)
-            return load
-        time.sleep(5)
-    load = os.getloadavg()[0]
-    print(f"# settle: gave up after {max_wait:.0f}s (load "
-          f"{load:.1f} >= {thresh:.1f}) — numbers may read "
-          "uniformly high", file=sys.stderr)
-    return load
-
-
-def should_retry(
-    best_ratio: float, attempt: int, max_retries: int,
-    elapsed: float, cap: float, warm_ratio: float,
-    next_cooldown: float = 0.0, est_attempt: float = 0.0,
-) -> bool:
-    """Pure retry decision for the quiet-window hunt (unit-pinned so the
-    loop cannot regress into retrying forever or past its wall budget in
-    the driver's unattended run): retry only while the best window so
-    far is non-quiet, extra attempts remain, and the wall budget holds.
-    ``attempt`` counts COMPLETED attempts (1 = just the initial set).
-
-    The budget check PROJECTS the cost of saying yes — the upcoming
-    escalating cooldown plus an estimate of one measurement attempt —
-    instead of comparing bare elapsed (round-15 ADVICE: a decision made
-    just under the cap could overrun it by cooldown + a full interleaved
-    set). Callers pass the fastest completed attempt's duration as the
-    estimate: a retry cannot plausibly finish faster than the best
-    attempt so far, and min avoids a loaded first attempt talking the
-    hunt out of ever retrying."""
-    return (
-        best_ratio >= warm_ratio
-        and attempt - 1 < max_retries
-        and elapsed + next_cooldown + est_attempt < cap
-    )
-
-
 def plan_fingerprint(metrics: "dict | None") -> "str | None":
     """Load-independent plan fingerprint for the compact headline line
     (round-16 verdict #1): first 12 hex of md5 over the sorted per-query
@@ -150,9 +90,13 @@ def plan_fingerprint(metrics: "dict | None") -> "str | None":
     (lz4 framing is not byte-deterministic across task schedules), which
     flipped the raw-byte fp between two values and broke the
     "equal fp = zero drift" read. Sub-0.01%-relative codec noise now
-    never moves a bucket, while any real byte regression (an extra
-    exchange, a broadcast falling back — ≥ percents, usually ×s) always
-    does; task counts stay exact.
+    almost never moves a bucket, while any real byte regression (an
+    extra exchange, a broadcast falling back — ≥ percents, usually ×s)
+    always does; task counts stay exact. Residual: a byte count that
+    sits within its jitter of a bucket boundary can still round either
+    way, so two identical plans may rarely carry fps that differ by one
+    bucket in one field — confirm a changed fp against the per-query
+    bytes in the sidecar before calling it a plan change.
     """
     if not metrics:
         return None
@@ -183,65 +127,28 @@ def compute_deltas(
     timings: dict,
     eps: float,
     eps_pure: float,
-    calib_ratio: float,
     prev: "dict | None",
-) -> "tuple[dict, dict]":
-    """Per-query and eps deltas vs the previous round's parsed artifact,
-    as ``(deltas, delta_basis)`` — pure so the normalization policy is
-    unit-testable without running a bench.
-
-    When BOTH artifacts carry a calib ratio, query deltas compare
-    load-NORMALIZED values (t / ratio) and eps deltas compare
-    ratio-MULTIPLIED values (a loaded window inflates wall-times, so it
-    deflates throughput — the correction runs the other way); round 16's
-    committed warm artifact read eps_pure −33.1% purely from window,
-    exactly the false alarm the calib machinery exists to kill
-    (round-16 verdict #2). Ratios are CLAMPED at 1.0 on both sides
-    (round-17 verdict #3/#5, php_ec_spark.calib.norm_ratio): a window
-    at-or-below the quiet reference has no load to correct for, and
-    dividing by < 1 inflated r17's normalized times enough to flip two
-    raw improvements into "+14%/+25%" regressions. ``delta_basis``
-    records the basis per group; either side missing a ratio falls back
-    to raw for that group. The
-    32-core probe under-sees the contention a single-thread component
-    rides (documented ±8% residual even between same-day quiet
-    windows), so eps deltas under ~20% are window noise either way —
-    plan regressions are adjudicated off ``plan_fp`` / byte metrics,
-    never off eps."""
+) -> dict:
+    """Raw per-query and eps deltas vs the previous round's parsed
+    artifact (``new / old - 1``). Callers pass only a ``prev`` taken at
+    the same ``default_parallelism`` (see
+    :func:`newest_parseable_artifact`): wall time from a different core
+    count measures the box, not the code. Plan regressions are read off
+    ``plan_fp`` and the sidecar's byte metrics, never off these deltas."""
     deltas: dict = {}
-    delta_basis = {"queries": "raw", "eps": "raw"}
     if not prev:
-        return deltas, delta_basis
+        return deltas
     # `or {}`: a payload carrying "queries": null has the key, so a
     # .get default alone would hand the membership test a None
     prev_q = prev.get("queries") or {}
-    prev_ratio = (prev.get("calib") or {}).get("ratio") or 0
-    cur_scale, prev_scale = 1.0, 1.0
-    if prev_ratio and calib_ratio:
-        delta_basis["queries"] = "normalized"
-        delta_basis["eps"] = "normalized"
-        # clamp (see docstring): quiet-or-better windows compare raw
-        cur_scale = max(calib_ratio, 1.0)
-        prev_scale = max(prev_ratio, 1.0)
     for name, t in timings.items():
-        if name in prev_q and prev_q[name]:
-            deltas[name] = round(
-                (t / cur_scale) / (prev_q[name] / prev_scale) - 1.0, 3
-            )
-    if prev.get("state_machine_eps"):
-        deltas["state_machine_eps"] = round(
-            (eps * cur_scale) / (prev["state_machine_eps"] * prev_scale)
-            - 1.0,
-            3,
-        )
-    if prev.get("state_machine_eps_pure"):
-        deltas["state_machine_eps_pure"] = round(
-            (eps_pure * cur_scale)
-            / (prev["state_machine_eps_pure"] * prev_scale)
-            - 1.0,
-            3,
-        )
-    return deltas, delta_basis
+        if prev_q.get(name):
+            deltas[name] = round(t / prev_q[name] - 1.0, 3)
+    for field, cur in (("state_machine_eps", eps),
+                       ("state_machine_eps_pure", eps_pure)):
+        if prev.get(field):
+            deltas[field] = round(cur / prev[field] - 1.0, 3)
+    return deltas
 
 
 def split_output(out: dict) -> "tuple[dict, dict | None]":
@@ -250,21 +157,14 @@ def split_output(out: dict) -> "tuple[dict, dict | None]":
 
     The driver captures only the last 2000 chars of stdout and parses
     the final JSON line; round 15's inline ``metrics`` block pushed that
-    line to 3,973 chars and the committed artifact lost its totals /
-    window / attempts entirely (``parsed: null``). The headline record
-    must stay compact no matter how many queries carry metrics — the
+    line to 3,973 chars and the committed artifact lost its totals
+    entirely (``parsed: null``). The headline record must stay compact
+    no matter how many queries carry metrics — the
     metrics travel on their own EARLIER stdout line (truncation there
     costs nothing: the durable copy is the BENCH_METRICS.jsonl sidecar).
     tests/test_bench_metrics.py pins the final line ≤ 1800 chars on a
     synthetic full-size run."""
     compact = dict(out)
-    # queries_normalized is REDUNDANT on the wire: every reader
-    # (bench_trend, the delta machinery, the judge's normalization)
-    # derives it as queries[q] / calib.ratio, and at 13 queries it costs
-    # ~330 chars of the 2000-char tail budget — exactly the headroom the
-    # round-17 plan_fp / eps_normalized fields need. It rides the bulky
-    # metrics line instead (and the sidecar), never the final line.
-    qn = compact.pop("queries_normalized", None)
     metrics = compact.pop("metrics", None)
     if metrics is None:
         # the documented "metrics: null = status-store probe failed"
@@ -276,12 +176,11 @@ def split_output(out: dict) -> "tuple[dict, dict | None]":
     side = {
         "metric": "exec_metrics",
         "sf": out.get("sf"),
-        "window": out.get("window"),
-        "calib_ratio": (out.get("calib") or {}).get("ratio"),
+        # task counts and wall time are core-count-specific: readers
+        # compare sidecar rows only at equal (sf, default_parallelism)
+        "default_parallelism": out.get("default_parallelism"),
         "value": out.get("value"),
-        "value_normalized": out.get("value_normalized"),
         "plan_fp": out.get("plan_fp"),
-        "queries_normalized": qn,
         "metrics": metrics,
     }
     return compact, side
@@ -311,11 +210,16 @@ def append_metrics_sidecar(side: dict, path: str) -> None:
         fh.write(json.dumps(rec) + "\n")
 
 
-def newest_parseable_artifact(root: str) -> "tuple[str, dict] | None":
+def newest_parseable_artifact(
+    root: str, parallelism: int
+) -> "tuple[str, dict] | None":
     """Newest ``BENCH_r*.json`` whose driver-parsed payload is usable for
     deltas — SKIPPING crippled artifacts (BENCH_r15.json's truncated
     tail left ``parsed: null``; taking the lexically-last file blindly
-    silently killed ``delta_vs_prev`` for every later round). Numeric
+    silently killed ``delta_vs_prev`` for every later round) and
+    artifacts whose ``default_parallelism`` differs from ``parallelism``
+    or is missing (a ``local[4]`` run against a ``local[32]`` baseline
+    reads −60% to −75% on every query from core count alone). Numeric
     round sort, so r9 orders before r13 even unpadded."""
     import re
 
@@ -328,7 +232,11 @@ def newest_parseable_artifact(root: str) -> "tuple[str, dict] | None":
         try:
             with open(os.path.join(root, f)) as fh:
                 parsed = json.load(fh).get("parsed")
-            if parsed and (parsed.get("queries") or parsed.get("value")):
+            if (
+                parsed
+                and (parsed.get("queries") or parsed.get("value"))
+                and parsed.get("default_parallelism") == parallelism
+            ):
                 return f, parsed
         except (OSError, ValueError, AttributeError):
             # unreadable, non-JSON, or non-dict shapes all mean "not a
@@ -341,12 +249,11 @@ class _ExecMetrics:
     """Load-independent per-query execution metrics off the JVM
     AppStatusStore (round-14 verdict #1): wall-clock on this box is
     hostage to invisible neighbor contention (three consecutive rounds
-    committed non-quiet artifacts; the scalar calib normalization leaves
-    ±20% residual), but shuffle/input/spill BYTES and task counts are
-    properties of the plan, not the window — an extra exchange or a
-    broadcast falling back to shuffle shows as a byte jump no load can
-    fake or hide. ``mark()`` snapshots the max stage id, ``delta()``
-    sums v1.StageData metrics over the stages the measured query
+    committed non-quiet artifacts), but shuffle/input/spill BYTES and
+    task counts are properties of the plan, not the window — an extra
+    exchange or a broadcast falling back to shuffle shows as a byte jump
+    no load can fake or hide. ``mark()`` snapshots the max stage id,
+    ``delta()`` sums v1.StageData metrics over the stages the measured query
     submitted after it; both drain the listener bus first so a previous
     workload's in-flight stage events can't bleed across the boundary.
 
@@ -444,7 +351,9 @@ class _ExecMetrics:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
-    load_start = round(_settle(), 2)
+    # 1-min loadavg at start and end: a plain audit read, no gate and
+    # no wait — the plan counters, not wall time, adjudicate changes
+    load_start = round(os.getloadavg()[0], 2)
     eps_pure = _measure_pure_eps(iters)
 
     from php_ec_spark.catalog import all_queries
@@ -522,13 +431,6 @@ def main() -> None:
     # claims "10M+ events/day" ≈ 116 events/s sustained; tests_adhoc/
     # speed_test.php measures a 3-rule in-process loop). Same shape here:
     # three state-machine rules over the full events table.
-    from php_ec_spark.calib import (
-        CALIB_REF_SEC,
-        WARM_RATIO,
-        calib_probe,
-        norm_ratio,
-        window_stamp,
-    )
     from php_ec_spark.engine import correlate_state_machine
     from php_ec_spark.model import load_events
     from php_ec_spark.rules import match_single_continuously, sequence_rule
@@ -548,137 +450,60 @@ def main() -> None:
     # touch; with min-of-N a cold first run drags the reported eps ~25%
     # below steady state (the round-4 "regression" was exactly this —
     # measured: cold 1.9 s vs warm 0.45 s for the identical job).
-    # Same for the calibration probe's first compile.
     correlate_state_machine(events, sm_rules).count()
-    calib_probe(spark)
 
     # N measured iterations per query, INTERLEAVED (round-12 verdict #1):
-    # round r times the calibration probe, then every headline query, then
-    # the state-machine path, before round r+1 starts — so one query's N
-    # samples are spread minutes apart across the whole bench window and a
-    # transient load burst contaminates at most one sample of each instead
-    # of all N of whichever query it landed on (the sequential per-query
-    # loop let exactly that happen). Report the min: steady-state cost —
-    # noisy-neighbor CPU on this box swings single runs by 2-4× (the same
-    # jaccard job measured 9.7s cold-window vs 2.2s steady across minutes);
-    # the min is the reproducible number a tuned deployment would see.
-    # 5 rounds because 3 repeatedly let one bad host window inflate a
-    # query 50-80% in the recorded artifact.
-    #
-    # The calibration probe (php_ec_spark/calib.py — a never-changing
-    # synthetic 32-core job with a committed quiet reference time) makes a
-    # loaded window machine-readable: this box's documented failure mode is
-    # uniform +10-45% Spark inflation with loadavg ~0 (neighbor contention
-    # loadavg cannot see), so the probe's min-of-rounds over CALIB_REF_SEC
-    # is recorded as calib.ratio and the artifact stamps itself
-    # window=loaded past LOADED_RATIO — no human adjudication needed.
+    # round r times every headline query, then the state-machine path,
+    # before round r+1 starts — so one query's N samples are spread
+    # minutes apart across the whole bench window and a transient load
+    # burst contaminates at most one sample of each instead of all N of
+    # whichever query it landed on. Report the min: steady-state cost —
+    # noisy-neighbor CPU swings single runs by 2-4× (the same jaccard job
+    # measured 9.7s cold-window vs 2.2s steady across minutes); the min
+    # is the reproducible number a tuned deployment would see. 5 rounds
+    # because 3 repeatedly let one bad host window inflate a query 50-80%.
     order = sorted(headline)
     samples: dict[str, list[float]] = {name: [] for name in order}
     metric_samples: dict[str, list] = {name: [] for name in order}
     rows_of: dict[str, int] = {}
-    calib_rounds: list[float] = []
     sm_secs: list[float] = []
     sm_metrics: list = []
     em = _ExecMetrics(spark)
 
-    def measure_rounds(n_rounds: int, attempt: int) -> None:
-        for r in range(n_rounds):
-            # min of a back-to-back pair: the first probe absorbs GC/JIT
-            # debt left by the previous round's queries (observed: a lone
-            # probe right after heavy query work reads ~10-20% high even
-            # on a quiet box), the second measures the window.
-            calib_rounds.append(round(min(calib_probe(spark),
-                                          calib_probe(spark)), 3))
-            for name in order:
-                q = headline[name]
-                # stage-id mark/delta straddles the timed window (both
-                # outside it — the drain they do is not query cost);
-                # every stage the query submits, including eager
-                # checkpoint jobs inside operator construction, lands in
-                # its metrics
-                m0 = em.mark()
-                t0 = time.perf_counter()
-                df = q.spark(spark, sf_dir)
-                n_rows = df.count()
-                samples[name].append(time.perf_counter() - t0)
-                metric_samples[name].append(em.delta(m0))
-                # result determinism is part of the bench contract: a
-                # row count that drifts between rounds/attempts would
-                # otherwise be silently hidden (the artifact records one
-                # count next to a min taken across all samples). An
-                # explicit raise, not assert — `python -O` strips
-                # asserts, and this guard must hold in any interpreter
-                # the driver happens to use.
-                if rows_of.setdefault(name, n_rows) != n_rows:
-                    raise RuntimeError(
-                        f"{name}: row count drifted across rounds "
-                        f"({rows_of[name]} -> {n_rows}) — nondeterministic "
-                        "query result; bench mins are incomparable"
-                    )
-                clear_rdd_cache()
+    for r in range(iters):
+        for name in order:
+            q = headline[name]
+            # stage-id mark/delta straddles the timed window (both
+            # outside it — the drain they do is not query cost); every
+            # stage the query submits, including eager checkpoint jobs
+            # inside operator construction, lands in its metrics
             m0 = em.mark()
             t0 = time.perf_counter()
-            correlate_state_machine(events, sm_rules).count()
-            sm_secs.append(time.perf_counter() - t0)
-            sm_metrics.append(em.delta(m0))
-            print(f"# round {r + 1}/{n_rounds} (attempt {attempt}): "
-                  f"calib {calib_rounds[-1]:.3f}s, "
-                  f"queries {sum(s[-1] for s in samples.values()):.1f}s",
-                  file=sys.stderr)
-
-    t_measure0 = time.time()
-    measure_rounds(iters, attempt=1)
-    attempt_durations = [time.time() - t_measure0]
-
-    def best_ratio() -> float:
-        # same 3-decimal rounding as the final stamp, so a boundary
-        # window cannot stamp past a threshold without having retried
-        return round(min(calib_rounds) / CALIB_REF_SEC, 3)
-
-    def attempt_ratio(start: int) -> float:
-        return round(min(calib_rounds[start:]) / CALIB_REF_SEC, 3)
-
-    # quiet-window hunt (round-14 verdict #2, extending round-13's
-    # single retry-on-loaded): if even the min-of-rounds probe reads
-    # NON-QUIET (warm included — three consecutive rounds committed
-    # warm/loaded artifacts), every sample was taken in an inflated
-    # window and min-of-N cannot rescue it. Re-settle with an
-    # ESCALATING blind cooldown (the contention here is neighbor load
-    # that loadavg cannot see, so the settle gate alone returns
-    # immediately) and re-run the whole interleaved set, merging samples
-    # so mins come from whichever window was quietest. Bounded: at most
-    # SPARK_GRAFT_BENCH_RETRIES extra attempts (default 2) within a
-    # SPARK_GRAFT_BENCH_RETRY_CAP wall budget (default 1200 s measured
-    # from the first measured round), stopping early at the first quiet
-    # stamp; the artifact records every attempt's ratio either way.
-    attempt_ratios = [attempt_ratio(0)]
-    max_retries = int(os.environ.get("SPARK_GRAFT_BENCH_RETRIES", "2"))
-    retry_cap = float(os.environ.get("SPARK_GRAFT_BENCH_RETRY_CAP", "1200"))
-    attempt = 1
-    while should_retry(
-        best_ratio(), attempt, max_retries,
-        time.time() - t_measure0, retry_cap, WARM_RATIO,
-        # project the cost of saying yes: the upcoming escalating
-        # cooldown plus (at least) the fastest attempt's duration — a
-        # bare elapsed check could greenlight a retry that overruns the
-        # cap by cooldown + a full interleaved set (round-15 ADVICE)
-        next_cooldown=60 * attempt,
-        est_attempt=min(attempt_durations),
-    ):
-        attempt += 1
-        cooldown = 60 * (attempt - 1)
-        print(f"# window {window_stamp(best_ratio())} (ratio "
-              f"{best_ratio():.2f}) — cooling down {cooldown}s, settling, "
-              f"and retrying the interleaved set (attempt {attempt}, "
-              f"budget {max_retries + 1})", file=sys.stderr)
-        time.sleep(cooldown)
-        _settle()
-        n_before = len(calib_rounds)
-        t_att = time.time()
-        measure_rounds(iters, attempt=attempt)
-        attempt_durations.append(time.time() - t_att)
-        attempt_ratios.append(attempt_ratio(n_before))
-    retried = attempt > 1
+            df = q.spark(spark, sf_dir)
+            n_rows = df.count()
+            samples[name].append(time.perf_counter() - t0)
+            metric_samples[name].append(em.delta(m0))
+            # result determinism is part of the bench contract: a row
+            # count that drifts between rounds would otherwise be
+            # silently hidden (the artifact records one count next to a
+            # min taken across all samples). An explicit raise, not
+            # assert — `python -O` strips asserts, and this guard must
+            # hold in any interpreter that runs the bench.
+            if rows_of.setdefault(name, n_rows) != n_rows:
+                raise RuntimeError(
+                    f"{name}: row count drifted across rounds "
+                    f"({rows_of[name]} -> {n_rows}) — nondeterministic "
+                    "query result; bench mins are incomparable"
+                )
+            clear_rdd_cache()
+        m0 = em.mark()
+        t0 = time.perf_counter()
+        correlate_state_machine(events, sm_rules).count()
+        sm_secs.append(time.perf_counter() - t0)
+        sm_metrics.append(em.delta(m0))
+        print(f"# round {r + 1}/{iters}: "
+              f"queries {sum(s[-1] for s in samples.values()):.1f}s",
+              file=sys.stderr)
 
     timings = {name: round(min(samples[name]), 3) for name in order}
     total = sum(min(samples[name]) for name in order)
@@ -742,65 +567,23 @@ def main() -> None:
     print(f"# state-machine path: {eps:,.0f} events/s ({n_events} events)",
           file=sys.stderr)
 
-    calib_sec = min(calib_rounds)
-    calib_ratio = round(calib_sec / CALIB_REF_SEC, 3)
-    window = window_stamp(calib_ratio)
-    # normalization divisor: the ratio clamped at 1.0 (round-17 verdict
-    # #3/#5 — a quieter-than-reference window has no load to correct
-    # for; dividing by < 1 inflated r17's normalized times and flipped
-    # raw improvements into normalized regressions). The RAW ratio still
-    # rides calib.ratio below for window classification and audit.
-    nratio = norm_ratio(calib_ratio) if calib_ratio else 0.0
-    print(f"# calib: {calib_sec:.3f}s vs ref {CALIB_REF_SEC:.3f}s -> "
-          f"ratio {calib_ratio} ({window} window; per-round "
-          f"{calib_rounds})", file=sys.stderr)
-
-    # per-query delta vs the most recent BENCH_r{N}.json in the repo root,
-    # so ±15% box-noise drifts are visible in the artifact itself instead
-    # of needing a cross-round diff. Normalization policy (queries AND,
-    # since round 17, eps — round-16 verdict #2) lives in compute_deltas.
-    deltas: dict[str, float] = {}
-    delta_basis = {"queries": "raw", "eps": "raw"}
-    prev_path = None
+    # per-query delta vs the newest BENCH_r{N}.json in the repo root
+    # measured at THIS run's parallelism (a crippled artifact — r15's
+    # truncated tail, parsed null — or one from another core count is
+    # skipped), so same-box drifts are visible in the artifact itself
     here = os.path.dirname(os.path.abspath(__file__))
-    # basis = the newest PARSEABLE artifact — a crippled one (r15's
-    # truncated tail, parsed null) is skipped, not silently fatal
-    found = newest_parseable_artifact(here)
-    if found:
-        prev_path, prev = found
-        deltas, delta_basis = compute_deltas(
-            timings, eps, eps_pure, calib_ratio, prev
-        )
+    parallelism = spark.sparkContext.defaultParallelism
+    found = newest_parseable_artifact(here, parallelism)
+    deltas = compute_deltas(timings, eps, eps_pure, found and found[1])
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_total_runtime",
         "value": round(total, 3),
-        # load-normalized total (value / calib.ratio): the cross-round
-        # trend number — raw totals from differently-loaded windows are
-        # not comparable (round-13 verdict #2a). Read trend lines off
-        # this field; read absolute cost off `value` + `window`.
-        "value_normalized": round(total / nratio, 3) if nratio
-        else None,
         "unit": "sec",
         "queries": timings,
-        "queries_normalized": {
-            name: round(t / nratio, 3) for name, t in timings.items()
-        } if nratio else None,
         "state_machine_eps": round(eps),
         "state_machine_eps_pure": round(eps_pure),
-        # window-corrected throughput (eps × calib.ratio — a loaded
-        # window inflates wall-times, so it DEflates eps; the correction
-        # multiplies where value_normalized divides). Round-16 verdict
-        # #2: a warm committed artifact read raw eps 33% low and a trend
-        # reader needed the sidecar to dismiss it. Residual caveat: the
-        # 32-core probe under-sees what a single-thread component rides
-        # (±8% spread between same-day quiet windows) — adjudicate
-        # regressions off plan_fp/byte metrics, not eps.
-        "eps_normalized": round(eps * nratio) if nratio
-        else None,
-        "eps_pure_normalized": round(eps_pure * nratio) if nratio
-        else None,
         # 12-hex digest over sorted per-query (shuffle bytes, tasks) —
         # the load-INDEPENDENT plan identity, readable from the compact
         # artifact alone (round-16 verdict #1: the byte metrics lived
@@ -813,38 +596,16 @@ def main() -> None:
         # default_parallelism matches (round-17 verdict #2).
         "plan_fp": plan_fingerprint(metrics_out),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # effective core configuration (round-17 verdict #2): the driver
-        # re-runs the bench at a lower $SPARK_GRAFT_CPUS to measure
-        # scaling, and its heuristic flagged the flat sf0.1 ratios as
-        # "cpus ignored" — the artifact now PROVES which master /
-        # parallelism actually took effect, so a flat ratio reads as
-        # what it is (per-job overhead dominating at small SF), not as
-        # a dishonored knob.
+        # effective core configuration (round-17 verdict #2): the artifact
+        # PROVES which master / parallelism actually took effect, and
+        # every cross-run comparison (deltas, fp drift, sidecar columns)
+        # is scoped to one default_parallelism
         "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        # external-load audit trail: a loaded window is machine-detectable
-        # (load_start is the 1-min loadavg after the settle gate — the
-        # bench's own 32-thread work dominates load_end, so load_start is
-        # the clean-window signal; the documented noise band is ±15%)
+        "default_parallelism": parallelism,
+        # external-load audit trail: 1-min loadavg before the first
+        # measurement and after the last (the bench's own work dominates
+        # `end`, so `start` is the clean-window signal)
         "loadavg": {"start": load_start, "end": round(os.getloadavg()[0], 2)},
-        # self-adjudication (round-12 verdict #1): the fixed probe's
-        # min-of-rounds over its committed quiet reference. ratio < 1.15 =
-        # quiet (trustworthy record run); 1.15-1.3 = warm (mild upper
-        # bounds); >= LOADED_RATIO stamps window=loaded and the
-        # per-query numbers should be read as upper bounds. rounds shows
-        # WHICH rounds were contaminated (the min-of-N escape hatch only
-        # fails when every round was loaded — exactly when ratio is high).
-        "calib": {
-            "sec": round(calib_sec, 3),
-            "ref_sec": CALIB_REF_SEC,
-            "ratio": calib_ratio,
-            "rounds": calib_rounds,
-        },
-        "window": window,
-        "retried": retried,
-        # quiet-hunt audit: one min-ratio per interleaved attempt (first
-        # entry = attempt 1); len > 1 means the non-quiet retry fired
-        "attempts": attempt_ratios,
         # load-INDEPENDENT per-query execution metrics (round-14 verdict
         # #1): summed v1.StageData bytes/tasks over the stages each
         # query submitted, from the min-time sample. Cross-round trend
@@ -860,8 +621,7 @@ def main() -> None:
     }
     if deltas:
         out["delta_vs_prev"] = deltas
-        out["delta_basis"] = delta_basis
-        out["delta_baseline"] = os.path.basename(prev_path)
+        out["delta_baseline"] = found[0]
     compact, side = split_output(out)
     # flush=True per line: the capture combines stdout+stderr into one
     # stream (committed tails carry stage-progress stderr), and a single

@@ -6,13 +6,12 @@ from .relational import (
     compile_two_step_sequence,
     plan_report,
 )
-from .streaming_tws import correlate_stream_tws, snapshot_state
+from .streaming import snapshot_state
 
 __all__ = [
     "EMISSION_SCHEMA",
     "correlate",
     "correlate_state_machine",
-    "correlate_stream_tws",
     "chain_correlate",
     "emissions_to_events",
     "compile_gap_sessions",

@@ -65,10 +65,61 @@ from .core import EngineCore
 #: State persisted per correlation key: the serialized EngineCore.
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
 
+#: Schema of a warm-start snapshot row (what :func:`snapshot_state` emits
+#: and what ``initial_state`` expects).
+SNAPSHOT_SCHEMA = "__key STRING, blob STRING"
+
 # one source of truth with the batch engine (both must track
 # EMISSION_SCHEMA's field order)
 _OUT_COLS = tuple(_OUT_COLS_LIST)
 _DT64NS = np.dtype("datetime64[ns]")
+
+
+def _project(
+    events: DataFrame, rules: Sequence[Rule], prefilter_types: bool
+) -> Tuple[DataFrame, Optional[str]]:
+    """(events projected to ``__key, event_id, ts, event_type, value``,
+    the rules' key column or None) — shared by the live stream and the
+    snapshot builder so their keys always compare equal.
+
+    ``__key`` is the SPARK-cast string key (exactly what the batch engine
+    uses) so restore-blob lookup, emission keys, and payload callbacks
+    agree across engines for every key type — str(True) is "True" but
+    CAST(true AS STRING) is "true", and bool/decimal/timestamp keys would
+    otherwise skip their restore silently. Keyless rules group on the
+    literal "__all__". Aliasing also means a key that IS an engine column
+    (e.g. event_type) never selects twice."""
+    key_cols = {r.key for r in rules}
+    if len(key_cols) > 1:
+        # Spark allows only ONE applyInPandasWithState per streaming query
+        # (UnsupportedOperationChecker: "Multiple applyInPandasWithStates
+        # are not supported") — a union of stateful ops would fail at
+        # query.start(). Run one streaming query per key column instead.
+        raise ValueError(
+            "streaming rules must share one correlation key column per "
+            f"query (got {sorted(map(str, key_cols))}); start a separate "
+            "correlate_stream/start_correlation per key column"
+        )
+    (key_col,) = key_cols
+    needed_types: set[str] = set()
+    unrestricted = False
+    for r in rules:
+        for g in r.events:
+            if EVENT_MATCH_ANY in g:
+                unrestricted = True
+            needed_types.update(g)
+    if prefilter_types and not unrestricted:
+        events = events.filter(F.col("event_type").isin(sorted(needed_types)))
+    key_expr = (
+        F.col(key_col).cast("string") if key_col is not None
+        else F.lit("__all__")
+    )
+    return (
+        events.select(
+            key_expr.alias("__key"), "event_id", "ts", "event_type", "value"
+        ),
+        key_col,
+    )
 
 
 def _make_stateful_handler(
@@ -235,8 +286,8 @@ def correlate_stream(
     save-state file, done properly.
 
     ``initial_state`` warm-starts the state store from a batch snapshot
-    (``engine.streaming_tws.snapshot_state`` output: ``__key string, blob
-    string``): the reference's restore-savefile-then-go-live boot sequence
+    (:func:`snapshot_state` output: ``__key string, blob string``): the
+    reference's restore-savefile-then-go-live boot sequence
     (Scheduler.php:695-947). The snapshot is collected and broadcast —
     driver-sized, exactly like the reference's single gzip-JSON save file
     (FileAdapter.php:73-233); a restored key's instances resume on its
@@ -245,9 +296,7 @@ def correlate_stream(
     never fires its pending timeouts — touch every restored key by
     injecting one in-band ``CONTROL_MSG_RESTORED`` kick row per key into
     the source (the reference does the same at boot, Scheduler.php:730-737;
-    '*'-rules see it, other rules ignore it). The transformWithState
-    backend (engine.streaming_tws) arms restored timers natively where its
-    runtime is available.
+    '*'-rules see it, other rules ignore it).
 
     ``prefilter_types`` is OFF by default, deliberately: Catalyst pushes an
     event-type filter BELOW the EventTimeWatermark node, so events no rule
@@ -262,8 +311,7 @@ def correlate_stream(
     if not rules:
         raise ValueError("correlate_stream needs at least one rule")
     if clock not in ("event", "processing"):
-        # a typo here would otherwise pick event semantics on this
-        # backend but processing-time on the tws backend — fail loud
+        # a typo would otherwise silently pick event semantics — fail loud
         raise ValueError(
             f"clock must be 'event' or 'processing', got {clock!r}"
         )
@@ -293,19 +341,9 @@ def correlate_stream(
             UserWarning,
             stacklevel=2,
         )
-    by_key: dict[Optional[str], list[Rule]] = {}
-    for r in rules:
-        by_key.setdefault(r.key, []).append(r)
-    if len(by_key) > 1:
-        # Spark allows only ONE applyInPandasWithState per streaming query
-        # (UnsupportedOperationChecker: "Multiple applyInPandasWithStates
-        # are not supported") — a union of stateful ops would fail at
-        # query.start(). Run one streaming query per key column instead.
-        raise ValueError(
-            "streaming rules must share one correlation key column per "
-            f"query (got {sorted(map(str, by_key))}); start a separate "
-            "correlate_stream/start_correlation per key column"
-        )
+    part, key_col = _project(
+        events.withWatermark("ts", watermark_delay), rules, prefilter_types
+    )
 
     restore_bc = None
     if initial_state is not None:
@@ -316,36 +354,9 @@ def correlate_stream(
         }
         restore_bc = events.sparkSession.sparkContext.broadcast(snap)
 
-    # exactly one key group survives the guard above
-    (key_col, group_rules), = by_key.items()
-    src = events.withWatermark("ts", watermark_delay)
-    needed_types = set()
-    unrestricted = False
-    for r in group_rules:
-        for g in r.events:
-            if EVENT_MATCH_ANY in g:
-                unrestricted = True
-            needed_types.update(g)
-    part = src
-    if prefilter_types and not unrestricted:
-        part = part.filter(F.col("event_type").isin(sorted(needed_types)))
-    cols = ["event_id", "ts", "event_type", "value"]
-    # group on the SPARK-cast string key (exactly what the batch
-    # engine and snapshot_state's __key use) so restore-blob lookup,
-    # emission keys, and payload callbacks agree across engines for
-    # every key type — str(True) is "True" but CAST(true AS STRING)
-    # is "true", and bool/decimal/timestamp keys would otherwise skip
-    # their restore silently. Aliasing also means a key that IS an
-    # engine column (e.g. event_type) never selects twice.
-    if key_col is not None:
-        part = part.select(
-            F.col(key_col).cast("string").alias("__key"), *cols
-        )
-    else:
-        part = part.select(F.lit("__all__").alias("__key"), *cols)
     return part.groupBy("__key").applyInPandasWithState(
         _make_stateful_handler(
-            list(group_rules),
+            list(rules),
             historical,
             clock,
             keyless=key_col is None,
@@ -361,3 +372,76 @@ def correlate_stream(
             else GroupStateTimeout.EventTimeTimeout
         ),
     )
+
+
+def snapshot_state(
+    events: DataFrame, rules: Sequence[Rule], historical: bool = False
+) -> DataFrame:
+    """Batch-replay history and return per-key serialized engine state
+    (``__key string, blob string``) WITHOUT the end-of-stream drain.
+
+    This is the save file of the reference's SaveHandler (FileAdapter.php:
+    73-233) computed from history: every in-flight instance (chain, group
+    index, pending deadline) survives, so feeding the result to
+    :func:`correlate_stream` as ``initial_state`` continues matching
+    exactly where the replay stopped — sequences half-matched in history
+    complete on live events; deadlines armed in history still fire.
+
+    Same physical shape as the batch engine: one shuffle on the key,
+    per-partition consecutive-key iteration, Arrow-batched.
+
+    Replays with ``prefilter_types=False`` — the same default as
+    ``correlate_stream`` and for the same reason: the engine's clock
+    advances on EVERY event (CorrelationEngine.php:199). Dropping
+    unconsumed-type history would keep alive an instance whose deadline
+    expired after the key's last consumed-type event; the uninterrupted
+    engine fires-and-discards it during replay, so the snapshot must too —
+    otherwise the warm-started query re-emits a timeout history already
+    reported.
+    """
+    from ..session import shuffle_partitions
+
+    check_unique_rule_names(rules)
+    src, key_col = _project(events, rules, prefilter_types=False)
+    part = src.repartition(
+        shuffle_partitions(events.sparkSession), "__key"
+    ).sortWithinPartitions("__key", "ts", "event_id")
+    rules_list = list(rules)
+    keyless = key_col is None
+
+    def run(batches):
+        core: Optional[EngineCore] = None
+        cur_key = None
+        out_keys: list = []
+        out_blobs: list = []
+
+        def flush(c: EngineCore, k) -> None:
+            if c.has_live():
+                out_keys.append(k)
+                out_blobs.append(c.to_state())
+
+        for pdf in batches:
+            ts_ns = pdf["ts"].astype("int64").to_numpy()
+            eids = pdf["event_id"].to_numpy()
+            etypes = pdf["event_type"].to_numpy()
+            values = pdf["value"].to_numpy()
+            keys = pdf["__key"].to_numpy(dtype=object)
+            for i in range(len(pdf)):
+                k = keys[i]
+                if core is None or k != cur_key:
+                    if core is not None:
+                        flush(core, cur_key)
+                    core = EngineCore(
+                        rules_list, None if keyless else k, historical=historical
+                    )
+                    cur_key = k
+                v = values[i]
+                core.handle(
+                    (int(eids[i]), int(ts_ns[i]), etypes[i], None if v != v else v)
+                )
+                core.take_rows()  # snapshot wants state, not emissions
+        if core is not None:
+            flush(core, cur_key)
+        yield pd.DataFrame({"__key": out_keys, "blob": out_blobs})
+
+    return part.mapInPandas(run, schema=SNAPSHOT_SCHEMA)

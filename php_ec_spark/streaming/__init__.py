@@ -405,7 +405,7 @@ def start_correlations(
 
     from pyspark.sql import functions as F
 
-    from ..engine.streaming_tws import SNAPSHOT_SCHEMA, snapshot_state
+    from ..engine.streaming import SNAPSHOT_SCHEMA, snapshot_state
     from ..model import CONTROL_MSG_RESTORED
 
     if history is not None and initial_states is not None:

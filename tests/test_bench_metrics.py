@@ -1,8 +1,8 @@
 """Pins for bench.py's load-independent exec-metrics collector.
 
 Round-14 verdict #1: the cross-round performance trend must not lean on
-wall-clock alone (this box's neighbor contention leaves ±20% residual
-even after calib normalization), so bench.py records per-query shuffle /
+wall-clock alone (this box's neighbor contention swings single runs by
+±20% and more), so bench.py records per-query shuffle /
 input / spill bytes and task counts off the JVM AppStatusStore. That
 collector talks to Spark through a py4j signature
 (``AppStatusStore.stageList(List, boolean, boolean, double[], List)``)
@@ -70,40 +70,11 @@ class TestExecMetrics:
         assert em.delta(-1) is None
 
 
-class TestRetryDecision:
-    """Pins for the quiet-window hunt's pure retry gate — the piece that
-    runs unattended in the driver and must never retry forever or past
-    its wall budget."""
-
-    def test_gate_matrix(self):
-        WARM = 1.15
-        # quiet window: never retry, whatever the budgets say
-        assert not bench.should_retry(1.149, 1, 2, 0, 1200, WARM)
-        # non-quiet with retries and budget left: retry
-        assert bench.should_retry(1.15, 1, 2, 0, 1200, WARM)
-        assert bench.should_retry(2.5, 2, 2, 600, 1200, WARM)
-        # retry budget exhausted (attempt 3 completed, 2 retries max)
-        assert not bench.should_retry(2.5, 3, 2, 600, 1200, WARM)
-        # retries disabled entirely
-        assert not bench.should_retry(2.5, 1, 0, 0, 1200, WARM)
-        # wall budget exhausted
-        assert not bench.should_retry(2.5, 1, 2, 1200, 1200, WARM)
-
-    def test_worst_case_attempt_count_is_bounded(self):
-        # simulate a permanently-loaded box: the loop must stop after
-        # exactly 1 + max_retries attempts no matter what
-        attempts, max_retries = 1, 2
-        while bench.should_retry(9.9, attempts, max_retries, 0, 1e9, 1.15):
-            attempts += 1
-            assert attempts <= 10, "runaway retry loop"
-        assert attempts == 1 + max_retries
-
-
 class TestOutputSplit:
     """Round-15 postmortem: the inline ``metrics`` block grew the single
     stdout JSON line to 3,973 chars; the driver keeps only the LAST
     2000 chars of tail, so the committed BENCH_r15.json lost its totals
-    / window / attempts (``parsed: null``) and poisoned the delta chain.
+    (``parsed: null``) and poisoned the delta chain.
     These pins hold the new contract: bulky metrics ride a separate
     earlier line + committed sidecar, and the FINAL line stays compact
     enough to survive the tail capture with margin."""
@@ -111,8 +82,7 @@ class TestOutputSplit:
     @staticmethod
     def _full_size_out():
         """Synthetic result dict at REAL size: the actual 13 headline
-        query names + state_machine, every optional block populated the
-        way a 3-attempt retried run populates them."""
+        query names + state_machine, every optional block populated."""
         from php_ec_spark.catalog import all_queries
 
         names = sorted(n for n, q in all_queries().items() if q.headline)
@@ -129,33 +99,21 @@ class TestOutputSplit:
         out = {
             "metric": "headline_total_runtime",
             "value": 18.854,
-            "value_normalized": 14.707,
             "unit": "sec",
             "queries": {n: 2.123 for n in names},
-            "queries_normalized": {n: 1.656 for n in names},
             "state_machine_eps": 156829,
             "state_machine_eps_pure": 275123,
-            "eps_normalized": 177373,
-            "eps_pure_normalized": 311164,
             "plan_fp": "a1b2c3d4e5f6",
             "sf": 0.1,
             "master": "local[32]",
             "default_parallelism": 32,
             "loadavg": {"start": 0.52, "end": 14.37},
-            "calib": {
-                "sec": 0.554, "ref_sec": 0.49, "ratio": 1.131,
-                "rounds": [round(0.6 + 0.01 * i, 3) for i in range(15)],
-            },
-            "window": "quiet",
-            "retried": True,
-            "attempts": [1.531, 1.402, 1.131],
             "metrics": metrics,
             "delta_vs_prev": {
                 **{n: -0.123 for n in names},
                 "state_machine_eps": 0.163,
                 "state_machine_eps_pure": 0.042,
             },
-            "delta_basis": {"queries": "normalized", "eps": "raw"},
             "delta_baseline": "BENCH_r14.json",
         }
         return out
@@ -170,19 +128,16 @@ class TestOutputSplit:
             "keeps 2000; headroom gone, move something off the line"
         )
         # the record fields the trend/delta machinery needs all survived
-        for k in ("value", "value_normalized", "queries", "calib",
-                  "window", "attempts", "delta_vs_prev"):
+        for k in ("value", "queries", "plan_fp", "default_parallelism",
+                  "delta_vs_prev"):
             assert k in compact
         assert "metrics" not in compact
-        # queries_normalized is derivable (queries / calib.ratio) — it
-        # rides the bulky line, never the tail-budgeted final line
-        assert "queries_normalized" not in compact
-        # ...and the metrics line carries the block + its window context
+        # ...and the metrics line carries the block + the (sf,
+        # parallelism) scope every sidecar comparison filters on
         assert side["metric"] == "exec_metrics"
-        assert side["window"] == "quiet"
-        assert side["calib_ratio"] == 1.131
+        assert side["sf"] == 0.1
+        assert side["default_parallelism"] == 32
         assert len(side["metrics"]) == 14
-        assert len(side["queries_normalized"]) >= 13
 
     def test_split_without_metrics_keeps_the_failure_signal(self):
         """Round-16 ADVICE: popping a ``metrics: null`` silently turned
@@ -199,13 +154,10 @@ class TestOutputSplit:
         assert "metrics_probe_failed" not in compact2
 
     def test_new_compact_fields_survive_the_split(self):
-        """plan_fp and the normalized eps pair (round-16 verdict #1/#2)
-        are HEADLINE fields — they must ride the compact final line, not
-        the bulky metrics line."""
+        """plan_fp (round-16 verdict #1) is a HEADLINE field — it must
+        ride the compact final line, not the bulky metrics line."""
         compact, side = bench.split_output(self._full_size_out())
         assert compact["plan_fp"] == "a1b2c3d4e5f6"
-        assert compact["eps_normalized"] == 177373
-        assert compact["eps_pure_normalized"] == 311164
         # the effective core configuration must ride the compact line:
         # the driver's scaling lens needs proof of which core count took
         # effect, and plan_fp is core-count-specific (round-17 verdict #2)
@@ -227,7 +179,8 @@ class TestOutputSplit:
         rec = json.loads(lines[-1])
         assert rec["utc"].startswith("20")
         assert rec["metrics"]["state_machine"]["tasks"] == 1234
-        assert rec["value_normalized"] == 14.707
+        assert rec["value"] == 18.854
+        assert rec["default_parallelism"] == 32
 
 
 class TestPlanFingerprint:
@@ -304,118 +257,71 @@ class TestPlanFingerprint:
 
 
 class TestDeltaNormalization:
-    """Round-16 verdict #2: the committed warm artifact showed
-    eps_pure −33.1% that was pure window (delta_basis.eps was "raw") —
-    exactly the false-alarm shape the calib machinery exists to kill.
-    Eps deltas now normalize by the calib ratio like query deltas,
-    multiplying where times divide (a loaded window deflates
-    throughput)."""
-
-    def test_pure_window_eps_drop_reads_as_zero(self):
-        # previous round: quiet window (ratio 1.0), eps 200k; this
-        # round: loaded window (ratio 1.3) deflates raw eps to
-        # 200k/1.3 ≈ 153.8k — a raw −23% that is 100% window
-        prev = {
-            "queries": {"qa": 1.3},
-            "calib": {"ratio": 1.0},
-            "state_machine_eps": 200_000,
-            "state_machine_eps_pure": 300_000,
-        }
-        deltas, basis = bench.compute_deltas(
-            timings={"qa": 1.69},       # raw +30%: also pure window
-            eps=200_000 / 1.3,
-            eps_pure=300_000 / 1.3,
-            calib_ratio=1.3,
-            prev=prev,
-        )
-        assert basis == {"queries": "normalized", "eps": "normalized"}
-        assert abs(deltas["state_machine_eps"]) <= 0.001
-        assert abs(deltas["state_machine_eps_pure"]) <= 0.001
-        assert abs(deltas["qa"]) <= 0.001
+    """Deltas are raw (``new / old - 1``), with no load normalization:
+    a legacy artifact's load ratio is ignored, and the baseline is
+    always taken at the same parallelism (see TestDeltaBaseline)."""
 
     def test_real_regression_still_shows_through_the_window(self):
         prev = {
             "queries": {},
-            "calib": {"ratio": 1.0},
+            "calib": {"ratio": 1.3},   # legacy field, ignored
             "state_machine_eps": 200_000,
         }
-        # raw −30% under ratio 1.3: window explains −23.1% of it, the
-        # rest is real — normalized reads −9%, not −30% and not 0
-        deltas, _ = bench.compute_deltas(
-            {}, 140_000, 0.0, 1.3, prev
-        )
-        assert -0.11 < deltas["state_machine_eps"] < -0.07
+        deltas = bench.compute_deltas({}, 140_000, 0.0, prev)
+        assert deltas == {"state_machine_eps": -0.3}
 
     def test_quiet_window_raw_improvement_cannot_flip_sign(self):
-        """Round-17 verdict #3/#5: both r17 record runs measured ratio
-        0.863-0.865 (the box hour ran under the committed quiet
-        reference), and dividing by < 1 inflated normalized times enough
-        to flip two raw improvements (simhash −18%, top2 −10% raw) into
-        "+14%/+25%" normalized regressions. With the 1.0 clamp
-        (calib.norm_ratio), a raw improvement measured in a
-        quiet-or-better window (ratio ≤ 1) against a quiet-or-better
-        baseline compares raw-to-raw and can never read as a normalized
-        regression."""
+        """Round-17 verdict #3/#5: dividing by a sub-1 load ratio once
+        flipped two raw improvements (simhash −18%, top2 −10% raw) into
+        "+14%/+25%" regressions. Raw deltas keep the sign of the raw
+        change whatever ratio the baseline artifact recorded."""
         prev = {
             "queries": {"qa": 2.0},
             "calib": {"ratio": 0.9},
             "state_machine_eps": 100_000,
         }
-        deltas, basis = bench.compute_deltas(
+        deltas = bench.compute_deltas(
             timings={"qa": 1.8},        # raw −10%
             eps=110_000,                # raw +10%
             eps_pure=0.0,
-            calib_ratio=0.863,
             prev=prev,
         )
-        assert basis["queries"] == "normalized"
-        assert deltas["qa"] == -0.1     # clamped: compares raw-to-raw
-        assert deltas["state_machine_eps"] == 0.1
-        # ...and a genuinely loaded current window still corrects: the
-        # clamp only kills the sub-1 inflation, not the loaded deflation
-        deltas2, _ = bench.compute_deltas(
-            {"qa": 2.34}, 0.0, 0.0, 1.3, prev  # raw +17% at ratio 1.3
-        )
-        assert deltas2["qa"] == -0.1    # 2.34/1.3 = 1.8 vs prev raw 2.0
+        assert deltas == {"qa": -0.1, "state_machine_eps": 0.1}
 
     def test_missing_ratio_falls_back_to_raw(self):
         prev = {
             "queries": {"qa": 2.0},
             "state_machine_eps": 100_000,
         }
-        deltas, basis = bench.compute_deltas(
-            {"qa": 1.0}, 120_000, 0.0, 1.3, prev
-        )
-        assert basis == {"queries": "raw", "eps": "raw"}
+        deltas = bench.compute_deltas({"qa": 1.0}, 120_000, 0.0, prev)
         assert deltas["qa"] == -0.5
         assert deltas["state_machine_eps"] == 0.2
 
     def test_no_prev_artifact_yields_empty(self):
-        deltas, basis = bench.compute_deltas({"qa": 1.0}, 1.0, 1.0,
-                                             1.2, None)
-        assert deltas == {}
-        assert basis == {"queries": "raw", "eps": "raw"}
+        assert bench.compute_deltas({"qa": 1.0}, 1.0, 1.0, None) == {}
 
 
 class TestDeltaBaseline:
     """The prev-artifact lookup must skip crippled artifacts — the
     committed BENCH_r15.json (parsed: null) would otherwise suppress
-    delta_vs_prev for every future round."""
+    delta_vs_prev for every future round — and artifacts measured at
+    another parallelism."""
 
     @staticmethod
     def _write(root, n, parsed):
         import json
 
+        if parsed is not None:
+            parsed = {"default_parallelism": 4, **parsed}
         (root / f"BENCH_r{n:02d}.json").write_text(
             json.dumps({"n": n, "tail": "...", "parsed": parsed})
         )
 
     def test_skips_null_parsed_and_falls_back(self, tmp_path):
-        good = {"value": 18.8, "queries": {"q": 1.0},
-                "calib": {"ratio": 1.2}}
+        good = {"value": 18.8, "queries": {"q": 1.0}}
         self._write(tmp_path, 14, good)
         self._write(tmp_path, 15, None)
-        got = bench.newest_parseable_artifact(str(tmp_path))
+        got = bench.newest_parseable_artifact(str(tmp_path), 4)
         assert got is not None
         name, parsed = got
         assert name == "BENCH_r14.json"
@@ -424,41 +330,32 @@ class TestDeltaBaseline:
     def test_numeric_round_order(self, tmp_path):
         self._write(tmp_path, 9, {"value": 1.0, "queries": {"q": 1.0}})
         self._write(tmp_path, 15, {"value": 2.0, "queries": {"q": 2.0}})
-        name, parsed = bench.newest_parseable_artifact(str(tmp_path))
+        name, parsed = bench.newest_parseable_artifact(str(tmp_path), 4)
         assert name == "BENCH_r15.json"
 
     def test_empty_dir_yields_none(self, tmp_path):
-        assert bench.newest_parseable_artifact(str(tmp_path)) is None
+        assert bench.newest_parseable_artifact(str(tmp_path), 4) is None
 
     def test_unreadable_artifact_skipped(self, tmp_path):
         (tmp_path / "BENCH_r16.json").write_text("{not json")
         self._write(tmp_path, 15, {"value": 2.0, "queries": {"q": 2.0}})
-        name, _ = bench.newest_parseable_artifact(str(tmp_path))
+        name, _ = bench.newest_parseable_artifact(str(tmp_path), 4)
         assert name == "BENCH_r15.json"
 
-
-class TestRetryProjection:
-    """Round-15 ADVICE: the budget check must project the upcoming
-    cooldown (and one attempt's duration) — a yes decided just under
-    the cap used to overrun it by cooldown + a full interleaved set."""
-
-    def test_projection_blocks_an_overrunning_retry(self):
-        WARM = 1.15
-        # bare elapsed fits, but cooldown + one attempt would overrun
-        assert not bench.should_retry(
-            2.5, 1, 2, 1000, 1200, WARM,
-            next_cooldown=60, est_attempt=200,
-        )
-        # same elapsed, cheap attempt: projection fits, retry allowed
-        assert bench.should_retry(
-            2.5, 1, 2, 1000, 1200, WARM,
-            next_cooldown=60, est_attempt=100,
-        )
-
-    def test_defaults_preserve_legacy_semantics(self):
-        WARM = 1.15
-        assert bench.should_retry(2.5, 1, 2, 1199, 1200, WARM)
-        assert not bench.should_retry(2.5, 1, 2, 1200, 1200, WARM)
+    def test_skips_other_or_missing_parallelism(self, tmp_path):
+        """A local[4] run diffed against a local[32] baseline read
+        −60% to −75% on every query from core count alone; an artifact
+        that never recorded its parallelism is just as incomparable."""
+        self._write(tmp_path, 16, {"value": 3.0, "queries": {"q": 3.0}})
+        self._write(tmp_path, 17, {"value": 2.0, "queries": {"q": 2.0},
+                                   "default_parallelism": None})
+        self._write(tmp_path, 18, {"value": 1.0, "queries": {"q": 1.0},
+                                   "default_parallelism": 32})
+        name, _ = bench.newest_parseable_artifact(str(tmp_path), 4)
+        assert name == "BENCH_r16.json"
+        name, _ = bench.newest_parseable_artifact(str(tmp_path), 32)
+        assert name == "BENCH_r18.json"
+        assert bench.newest_parseable_artifact(str(tmp_path), 8) is None
 
 
 class TestTailCaptureRehearsal:
@@ -497,8 +394,8 @@ class TestTailCaptureRehearsal:
         assert parsed is not None, "no parseable JSON line in the tail"
         # the record the driver needs, intact after capture
         assert parsed["metric"] == "headline_total_runtime"
-        for k in ("value", "value_normalized", "queries", "calib",
-                  "window", "attempts", "delta_vs_prev"):
+        for k in ("value", "queries", "plan_fp", "default_parallelism",
+                  "delta_vs_prev"):
             assert k in parsed, f"capture lost {k}"
 
     def test_each_line_fits_one_atomic_pipe_write(self):

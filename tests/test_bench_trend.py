@@ -64,18 +64,19 @@ class TestBenchTrend:
         lines = _run(tmp_path).splitlines()
         rows = [ln for ln in lines if ln.strip() and ln.split()[0].isdigit()]
         assert len(rows) == 3  # r01 placeholder row included
-        assert rows[0].split() == ["1"] + ["-"] * 8
+        assert rows[0].split() == ["1"] + ["-"] * 5
         assert rows[1].startswith("    2") and "20.000" in rows[1]
-        assert "warm" in rows[2] and "12.0" in rows[2]
-        # norm eps derived for calib-era rows: 120000 * 1.25 = 150000
-        assert "150000" in rows[2]
+        # raw numbers only: a legacy artifact's ratio, window stamp and
+        # normalized total are not printed
+        assert rows[2].split()[:4] == ["3", "15.000", "120000", "250000"]
+        assert "warm" not in rows[2] and "12.0" not in rows[2]
 
-    def test_queries_table_normalizes_where_ratio_exists(self, tmp_path):
+    def test_queries_table_prints_raw_times(self, tmp_path):
         _fixture(tmp_path)
         out = _run(tmp_path, "--queries")
         qa = next(ln for ln in out.splitlines() if ln.startswith("qa"))
-        # r02 has no ratio (raw, starred); r03 normalizes 2.5/1.25 = 2.0
-        assert "2.00*" in qa and "2.00" in qa.replace("2.00*", "", 1)
+        # r03's legacy ratio (1.25) is ignored: 2.5 raw, not 2.0
+        assert qa.split()[1:] == ["-", "2.00", "2.50"]
 
     def test_metrics_table_and_spill_note(self, tmp_path):
         _fixture(tmp_path)
@@ -159,9 +160,11 @@ class TestBenchTrend:
         assert head.index("r02~") < head.index("r03")
 
     def test_sidecar_filters_to_newest_entrys_sf(self, tmp_path):
-        """Byte metrics from different scale factors are not comparable:
-        a stray sf0.01 smoke entry must neither print next to sf0.1
-        columns nor evict real entries from the last-4 window."""
+        """Byte metrics from different scale factors are not comparable,
+        and task counts from different core counts are not either: a
+        stray sf0.01 smoke entry or a local[32] entry must neither print
+        next to the newest entry's columns nor evict real entries from
+        the last-4 window."""
         _fixture(tmp_path)
         m = {"qa": {"shuffle_read": 1, "shuffle_write": 0, "spill_mem": 0,
                     "spill_disk": 0, "input_bytes": 0, "input_records": 0,
@@ -169,10 +172,13 @@ class TestBenchTrend:
         with open(os.path.join(tmp_path, "BENCH_METRICS.jsonl"), "w") as f:
             f.write(json.dumps(
                 {"utc": "2026-08-15T10:00:00+00:00", "sf": 0.01,
-                 "metrics": m}) + "\n")
+                 "default_parallelism": 4, "metrics": m}) + "\n")
+            f.write(json.dumps(
+                {"utc": "2026-08-15T12:00:00+00:00", "sf": 0.1,
+                 "default_parallelism": 32, "metrics": m}) + "\n")
             f.write(json.dumps(
                 {"utc": "2026-08-16T11:00:00+00:00", "sf": 0.1,
-                 "metrics": m}) + "\n")
+                 "default_parallelism": 4, "metrics": m}) + "\n")
         out = subprocess.run(
             [sys.executable, TOOL, "--metrics", str(tmp_path)],
             capture_output=True, text=True, timeout=60,
@@ -184,7 +190,8 @@ class TestBenchTrend:
         )
         assert "0816.1100" in head
         assert "0815.1000" not in head
-        assert "1 entries at other sf skipped" in out.stderr
+        assert "0815.1200" not in head
+        assert "2 entries at other sf/parallelism skipped" in out.stderr
 
     def test_null_metrics_entry_does_not_crash_spill_scan(self, tmp_path):
         """Round-15 ADVICE: a null per-query metrics entry (collector

@@ -197,7 +197,7 @@ class TestEngineGuards:
         while correlate raised; now every public entry rejects them."""
         import datetime as dtm
 
-        from php_ec_spark.engine.streaming_tws import snapshot_state
+        from php_ec_spark.engine import snapshot_state
 
         rules = [
             match_single_continuously("x", ["a"], key="user_id"),

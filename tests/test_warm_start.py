@@ -395,27 +395,3 @@ class TestWarmStartBoundaryFuzz:
             assert got == self._expected(rules, hist, live, kicks, sentinel_ns)
 
         run()
-
-
-class TestTwsGate:
-    def test_tws_raises_cleanly_without_protobuf(self, spark):
-        """transformWithState needs protobuf; without it the entry must
-        fail fast with a pointer to the applyInPandasWithState path (when
-        protobuf IS present this test just asserts construction works)."""
-        import pytest
-
-        df = _history_df(spark)
-        try:
-            import google.protobuf  # noqa: F401
-
-            have_protobuf = True
-        except ImportError:
-            have_protobuf = False
-
-        from php_ec_spark.engine import correlate_stream_tws
-
-        if have_protobuf:
-            pytest.skip("protobuf present — gate not exercised; TWS parity "
-                        "runs in test_streaming_tws-capable environments")
-        with pytest.raises(RuntimeError, match="protobuf"):
-            correlate_stream_tws(df, RULES())

@@ -1,13 +1,11 @@
 """Cross-round bench trend table from the committed BENCH_r*.json artifacts.
 
-Round-13 verdict #2 established that raw totals from differently-loaded
-windows are not comparable; since round 14 every artifact carries
-``calib.ratio`` and ``value_normalized``. This tool reads every
-``BENCH_r*.json`` in the repo root and prints one row per round with the
-raw total, the calib ratio and window stamp where present, and the
-NORMALIZED total (value / ratio; pre-calib artifacts print '-'), plus a
-per-query normalized table for the queries shared across rounds — so a
-regression hunt reads one table instead of normalizing by hand.
+This tool reads every ``BENCH_r*.json`` in the repo root and prints one
+row per round with the raw min-of-N total, the state-machine eps pair,
+the run's ``default_parallelism`` and its plan fingerprint; ``--queries``
+adds a per-query raw-seconds table. Wall time is only comparable between
+rounds at the same parallelism on a similarly loaded box; plan changes
+are read off the load-independent counters below.
 
 ``--metrics`` (r15+ artifacts) prints the load-INDEPENDENT per-query
 plan metrics — shuffle bytes and task counts — whose cross-round jumps
@@ -17,7 +15,8 @@ a ``plan fp`` column — bench.py's 12-hex fingerprint over the sorted
 per-query (shuffle bytes, tasks) — read from the artifact's ``plan_fp``
 field (r17+) or recomputed from legacy inline metrics, with a ``!``
 marking any round whose fingerprint differs from the previous
-fingerprinted round (a real plan change; drill in with ``--metrics``).
+fingerprinted round at the same (sf, default_parallelism) — a plan
+change; drill in with ``--metrics``.
 
 Sidecar hygiene: BENCH_METRICS.jsonl is append-on-run from every actor
 (builder, driver, judge), so it grows monotonically. Committed policy:
@@ -99,9 +98,8 @@ def main() -> None:
         print("no BENCH_r*.json artifacts found", file=sys.stderr)
         raise SystemExit(1)
 
-    print(f"{'round':>5}  {'raw s':>8}  {'ratio':>6}  {'window':>7}  "
-          f"{'norm s':>8}  {'eps':>8}  {'norm eps':>8}  {'pure eps':>8}  "
-          f"{'plan fp':>13}")
+    print(f"{'round':>5}  {'raw s':>8}  {'eps':>8}  {'pure eps':>8}  "
+          f"{'par':>4}  {'plan fp':>13}")
     fp_prev_by_sf: dict = {}
     fp_drifted = False
     for n, p, _ in rounds:
@@ -110,49 +108,34 @@ def main() -> None:
         # truncated tail kept 7 metrics blocks but no totals)
         fp = p.get("plan_fp") or plan_fingerprint(p.get("metrics"))
         fp_cell = fp or "-"
-        # drift compares PER SCALE FACTOR: byte metrics from different
-        # sf differ by data size alone (the --metrics path already
-        # skips cross-sf entries as incomparable), so a committed
-        # sf0.01 smoke round must not flag itself and its sf0.1
-        # successor as plan changes
-        sf = p.get("sf")
-        if fp and fp_prev_by_sf.get(sf) not in (None, fp):
+        # drift compares PER (sf, default_parallelism): byte metrics
+        # from different sf differ by data size alone, and task counts
+        # encode the core count, so a committed sf0.01 smoke round or a
+        # local[4] run must not flag itself and its successor as plan
+        # changes against a local[32] history
+        par = p.get("default_parallelism")
+        scope = (p.get("sf"), par)
+        if fp and fp_prev_by_sf.get(scope) not in (None, fp):
             fp_cell += "!"          # plan drift vs previous fp'd round
             fp_drifted = True
         if fp:
-            fp_prev_by_sf[sf] = fp
+            fp_prev_by_sf[scope] = fp
         if p.get("value") is None:
-            print(f"{n:>5}  {'-':>8}  {'-':>6}  {'-':>7}  {'-':>8}  "
-                  f"{'-':>8}  {'-':>8}  {'-':>8}  {fp_cell:>13}")
+            print(f"{n:>5}  {'-':>8}  {'-':>8}  {'-':>8}  {'-':>4}  "
+                  f"{fp_cell:>13}")
             continue
-        ratio = (p.get("calib") or {}).get("ratio")
-        window = p.get("window", "-")
-        norm = p.get("value_normalized")
-        if norm is None and ratio:
-            norm = round(p["value"] / ratio, 3)
-        # window-corrected throughput: eps × ratio (throughput deflates
-        # where time inflates) — r17+ artifacts carry it; derive it for
-        # the r13-r16 calib-era rows so the raw-eps whipsaw (the
-        # committed r16 read 33% low purely from window) reads
-        # correctly across the whole history
-        eps_norm = p.get("eps_normalized")
-        if eps_norm is None and ratio and p.get("state_machine_eps"):
-            eps_norm = round(p["state_machine_eps"] * ratio)
         print(f"{n:>5}  {p['value']:>8.3f}  "
-              f"{ratio if ratio is not None else '-':>6}  {window:>7}  "
-              f"{norm if norm is not None else '-':>8}  "
               f"{p.get('state_machine_eps', '-'):>8}  "
-              f"{eps_norm if eps_norm is not None else '-':>8}  "
               f"{p.get('state_machine_eps_pure', '-'):>8}  "
+              f"{par if par is not None else '-':>4}  "
               f"{fp_cell:>13}")
     if fp_drifted:
         print("(! = plan fingerprint changed vs the previous "
-              "fingerprinted round — a REAL plan change, load cannot "
-              "fake it; diff the bytes with --metrics)")
+              "fingerprinted round at the same sf and parallelism — load "
+              "cannot fake it; diff the bytes with --metrics)")
 
     if "--queries" in sys.argv:
-        # per-query normalized table over the rounds that carry a ratio
-        # (raw values where no ratio exists, marked with *)
+        # per-query raw min-of-N seconds, one column per round
         names = sorted(
             {q for _, p, _t in rounds for q in p.get("queries", {})}
         )
@@ -164,15 +147,8 @@ def main() -> None:
             row = q.ljust(28)
             for _, p, _t in rounds:
                 t = p.get("queries", {}).get(q)
-                ratio = (p.get("calib") or {}).get("ratio")
-                if t is None:
-                    row += "-".rjust(9)
-                elif ratio:
-                    row += f"{t / ratio:.2f}".rjust(9)
-                else:
-                    row += f"{t:.2f}*".rjust(9)
+                row += ("-" if t is None else f"{t:.2f}").rjust(9)
             print(row)
-        print("\n(* = raw, pre-calib artifact carries no ratio)")
 
     if "--metrics" in sys.argv:
         # load-INDEPENDENT plan metrics per query (total shuffle bytes
@@ -189,10 +165,12 @@ def main() -> None:
         #   3. the committed BENCH_METRICS.jsonl sidecar (r16+), labeled
         #      by UTC stamp (the driver round number isn't known at
         #      bench time); only the newest few shown to bound width,
-        #      and only entries at the newest entry's scale factor —
-        #      byte metrics from different sf are not comparable and a
-        #      stray local smoke run must not masquerade as a trend
-        #      column (or evict real ones from the window).
+        #      and only entries at the newest entry's scale factor AND
+        #      default_parallelism — byte metrics from different sf are
+        #      not comparable, task counts from different core counts
+        #      are not either, and a stray local smoke run must not
+        #      masquerade as a trend column (or evict real ones from
+        #      the window).
         # Inline and salvaged columns MERGE in round order (a salvaged
         # r03~ prints before an inline r05), so left-to-right really is
         # chronological.
@@ -204,11 +182,13 @@ def main() -> None:
         cols = [(lab, ms) for _, lab, ms in by_round]
         side = load_sidecar_metrics(root)
         if side:
-            sf_newest = side[-1][0]
-            same_sf = [(lab, ms) for sf, lab, ms in side if sf == sf_newest]
+            sf_newest, par_newest = side[-1][:2]
+            same_sf = [(lab, ms) for sf, par, lab, ms in side
+                       if (sf, par) == (sf_newest, par_newest)]
             if len(same_sf) < len(side):
                 print(f"(sidecar: {len(side) - len(same_sf)} entries at "
-                      f"other sf skipped; showing sf={sf_newest})",
+                      f"other sf/parallelism skipped; showing "
+                      f"sf={sf_newest}, parallelism={par_newest})",
                       file=sys.stderr)
             limit = _flag_val("sidecar-limit", 4)
             # explicit guard: same_sf[-0:] is the WHOLE list, the exact
@@ -291,9 +271,13 @@ def prune_sidecar(root: str, keep: int) -> None:
           + ")", file=sys.stderr)
 
 
-def load_sidecar_metrics(root: str) -> "list[tuple[object, str, dict]]":
-    """BENCH_METRICS.jsonl entries as (sf, label, metrics) columns,
-    oldest first; labels are the UTC stamp compressed to MMDD.HHMM."""
+def load_sidecar_metrics(
+    root: str,
+) -> "list[tuple[object, object, str, dict]]":
+    """BENCH_METRICS.jsonl entries as (sf, default_parallelism, label,
+    metrics) columns, oldest first; labels are the UTC stamp compressed
+    to MMDD.HHMM. Rows written before the sidecar recorded parallelism
+    carry None there."""
     cols = []
     path = os.path.join(root, "BENCH_METRICS.jsonl")
     try:
@@ -311,7 +295,8 @@ def load_sidecar_metrics(root: str) -> "list[tuple[object, str, dict]]":
                 # 2026-08-16T18:22:17+00:00 -> 0816.1822
                 lab = (utc[5:7] + utc[8:10] + "." + utc[11:13]
                        + utc[14:16]) if len(utc) >= 16 else "side"
-                cols.append((rec.get("sf"), lab, rec["metrics"]))
+                cols.append((rec.get("sf"), rec.get("default_parallelism"),
+                             lab, rec["metrics"]))
     except OSError:
         pass
     return cols
