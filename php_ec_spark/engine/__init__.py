@@ -3,7 +3,6 @@ from .chain import chain_correlate, emissions_to_events
 from .relational import (
     compile_gap_sessions,
     compile_sequence,
-    compile_two_step_sequence,
     plan_report,
 )
 from .streaming import snapshot_state
@@ -16,7 +15,6 @@ __all__ = [
     "emissions_to_events",
     "compile_gap_sessions",
     "compile_sequence",
-    "compile_two_step_sequence",
     "plan_report",
     "snapshot_state",
 ]

@@ -15,24 +15,34 @@ Faithful re-expression of the reference's event loop
   existing instance of rule R does not start a new R instance
   (CorrelationEngine.php:252-254).
 
-Two physical strategies:
+Seven physical strategies, one per rule shape; ``relational.strategies()``
+is the one table that maps each rule to its strategy (``plan_report`` prints
+it):
 
-1. ``compile_two_step_sequence`` (relational.py) — pure window-function plan
-   for the common 2-group sequence+timeout rule. No Python in the hot path;
-   one shuffle on the key; scales to arbitrary data.
-2. ``correlate_state_machine`` — general path: ``applyInPandas`` running the
-   state machine per key. Python, but Arrow-batched and embarrassingly
-   parallel across keys (key cardinality grows with data scale — see
-   TESTDATA: 150 users @ sf0.01 → 1 500 @ sf0.1). Skewed keys are handled
-   by AQE; a pathological single hot key degrades to one task, same as the
-   reference's single thread.
+- ``keyless-counter`` / ``keyed-counter`` (``relational.compile_counter``) —
+  continuous counters as one aggregate with map-side partial combine.
+- ``single-match`` / ``priority-suppress`` — stateless filter + project; a
+  suppressing set of single matches becomes per-event priority routing.
+- ``gap-sessions`` — lag-gap sessionization in window functions.
+- ``sequence-window`` (``relational.compile_sequence``) — N-step sequences
+  with distinct types as one window plan over one shuffle on the key.
+- ``state-machine`` (:func:`correlate_state_machine`) — everything else:
+  ``mapInPandas`` running the per-key state machine. Python, but
+  Arrow-batched and embarrassingly parallel across keys (key cardinality
+  grows with data scale — see TESTDATA: 150 users @ sf0.01 → 1 500 @
+  sf0.1). A pathological single hot key degrades to one task, same as the
+  reference's single thread.
 
-The engine picks strategy 1 automatically when semantics allow.
+The relational strategies run no Python in the hot path. The state
+machine's projection and key-replay loop (:func:`_project`,
+:func:`_replay`) are shared with the warm-start snapshot builder and, for
+the projection, the live query (engine/streaming.py).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from functools import reduce
+from typing import Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -87,12 +97,109 @@ def _rows_to_pdf(rows: list) -> pd.DataFrame:
     return out
 
 
-def _make_partition_runner(rules: Sequence[Rule], historical: bool):
-    """mapInPandas runner over a key-partitioned, (key, ts, event_id)-sorted
+#: Schema of a warm-start snapshot row (what ``snapshot_state`` emits and
+#: what ``correlate_stream(initial_state=...)`` expects).
+SNAPSHOT_SCHEMA = "__key STRING, blob STRING"
+
+
+def _project(
+    events: DataFrame,
+    rules: Sequence[Rule],
+    prefilter: bool,
+    skew_warn_ratio: Optional[float] = None,
+) -> Tuple[DataFrame, Optional[str]]:
+    """(events projected to ``__key, event_id, ts, event_type, value``,
+    the rules' key column or None) — the one projection of the batch
+    state machine, the snapshot builder and the live query, so their keys
+    always compare equal.
+
+    ``__key`` is the SPARK-cast string key so restore-blob lookup,
+    emission keys, and payload callbacks agree across engines for every
+    key type — str(True) is "True" but CAST(true AS STRING) is "true", and
+    bool/decimal/timestamp keys would otherwise skip their restore
+    silently. Keyless rules group on the literal "__all__". Aliasing also
+    means a key that IS an engine column (e.g. event_type) never selects
+    twice.
+
+    ``prefilter`` prunes the scan to the event types some rule can
+    consume. Only batch replay may: the engine's clock advances on EVERY
+    event (CorrelationEngine.php:199), so the live query and the snapshot
+    builder see the full stream. Catalyst would push a type filter below
+    the EventTimeWatermark node, so unconsumed events would never advance
+    the watermark and pending timeouts would stall; a snapshot of filtered
+    history would keep alive an instance the uninterrupted engine
+    fires-and-discards on a later unconsumed event.
+
+    ``skew_warn_ratio`` runs :func:`php_ec_spark.metrics.warn_if_skewed`
+    on the type-filtered stream, before the key cast."""
+    key_cols = {r.key for r in rules}
+    if len(key_cols) > 1:
+        # Spark allows only ONE applyInPandasWithState per streaming query
+        # (UnsupportedOperationChecker: "Multiple applyInPandasWithStates
+        # are not supported") — a union of stateful ops would fail at
+        # query.start(). Run one streaming query per key column instead.
+        raise ValueError(
+            "streaming rules must share one correlation key column per "
+            f"query (got {sorted(map(str, key_cols))}); start a separate "
+            "correlate_stream/start_correlation per key column"
+        )
+    (key_col,) = key_cols
+    needed_types: set[str] = set()
+    unrestricted = False
+    for r in rules:
+        for g in r.events:
+            if EVENT_MATCH_ANY in g:
+                unrestricted = True
+            needed_types.update(g)
+    if prefilter and not unrestricted:
+        events = events.filter(F.col("event_type").isin(sorted(needed_types)))
+    if skew_warn_ratio is not None and key_col is not None:
+        # measure the stream this path actually shuffles — the
+        # type-FILTERED rows; the raw table's hot key may be cold here
+        # (and vice versa)
+        from ..metrics import warn_if_skewed
+
+        warn_if_skewed(events, key_col, warn_ratio=skew_warn_ratio)
+    key_expr = (
+        F.col(key_col).cast("string") if key_col is not None
+        else F.lit("__all__")
+    )
+    return (
+        events.select(
+            key_expr.alias("__key"), "event_id", "ts", "event_type", "value"
+        ),
+        key_col,
+    )
+
+
+def _make_partition_runner(
+    rules: Sequence[Rule],
+    historical: bool,
+    keyless: bool = False,
+    snapshot: bool = False,
+):
+    """mapInPandas runner over a key-partitioned, (__key, ts, event_id)-sorted
     partition: consecutive rows of one key feed one EngineCore; a key
-    change finishes the previous core. ONE Python/Arrow boundary per
+    change closes the previous core. ONE Python/Arrow boundary per
     partition instead of one per correlation key — per-group pandas
-    overhead was the dominant cost of the stateful path (measured ~3×)."""
+    overhead was the dominant cost of the stateful path (measured ~3×).
+
+    Batch replay drains each key at its last event and yields its
+    emissions (key NULL for ``keyless`` rules, which group on "__all__").
+    ``snapshot`` skips the drain and yields one ``(__key, blob)`` row per
+    key with live instances instead. Either flushes once per input batch."""
+    if snapshot:
+        def close(core: EngineCore, key, last_ts: int) -> list:
+            return [(key, core.to_state())] if core.has_live() else []
+
+        def to_pdf(rows: list) -> pd.DataFrame:
+            return pd.DataFrame(rows, columns=["__key", "blob"])
+    else:
+        def close(core: EngineCore, key, last_ts: int) -> list:
+            core.finish(last_ts)
+            return core.take_rows()
+
+        to_pdf = _rows_to_pdf
 
     def run(batches):
         core: Optional[EngineCore] = None
@@ -110,9 +217,10 @@ def _make_partition_runner(rules: Sequence[Rule], historical: bool):
                 k = keys[i]
                 if core is None or k != cur_key:
                     if core is not None:
-                        core.finish(last_ts)
-                        pending.extend(core.take_rows())
-                    core = EngineCore(rules, k, historical=historical)
+                        pending.extend(close(core, cur_key, last_ts))
+                    core = EngineCore(
+                        rules, None if keyless else k, historical=historical
+                    )
                     cur_key = k
                 t = int(ts_ns[i])
                 last_ts = t
@@ -121,15 +229,39 @@ def _make_partition_runner(rules: Sequence[Rule], historical: bool):
                     (int(eids[i]), t, etypes[i], None if v != v else v)
                 )
             if pending:
-                yield _rows_to_pdf(pending)
+                yield to_pdf(pending)
                 pending = []
         if core is not None:
-            core.finish(last_ts)
-            pending.extend(core.take_rows())
+            pending.extend(close(core, cur_key, last_ts))
         if pending or core is None:
-            yield _rows_to_pdf(pending)
+            yield to_pdf(pending)
 
     return run
+
+
+def _replay(
+    src: DataFrame,
+    rules: Sequence[Rule],
+    historical: bool,
+    keyless: bool,
+    snapshot: bool = False,
+) -> DataFrame:
+    """Per-key replay of a :func:`_project`-ed frame. Physical shape:
+    ``repartition(__key) → sortWithinPartitions(__key, ts, event_id) →
+    mapInPandas`` — one shuffle (same as groupBy) but the Python boundary
+    is per PARTITION, not per key, so millions of small correlation keys
+    cost ~zero marginal overhead. Keys never span partitions (hash
+    partitioning), and consecutive-key iteration inside the runner
+    reproduces per-key serial, time-ordered processing exactly."""
+    from ..session import shuffle_partitions
+
+    part = src.repartition(
+        shuffle_partitions(src.sparkSession), "__key"
+    ).sortWithinPartitions("__key", "ts", "event_id")
+    runner = _make_partition_runner(list(rules), historical, keyless, snapshot)
+    return part.mapInPandas(
+        runner, schema=SNAPSHOT_SCHEMA if snapshot else EMISSION_SCHEMA
+    )
 
 
 def correlate_state_machine(
@@ -139,7 +271,7 @@ def correlate_state_machine(
     skew_warn_ratio: Optional[float] = None,
 ) -> DataFrame:
     """General path: partition by correlation key, run the state machine
-    over each key's time-ordered rows.
+    over each key's time-ordered rows (:func:`_replay`).
 
     ``skew_warn_ratio`` (opt-in; costs one extra aggregation job) runs
     :func:`php_ec_spark.metrics.warn_if_skewed` per key column before
@@ -147,13 +279,6 @@ def correlate_state_machine(
     toward one task (keys never split), and the warning names the
     mitigations (finer key; ``layout.with_salt``/``salted_agg`` for
     keyless commutative aggregates).
-
-    Physical shape: ``repartition(key) → sortWithinPartitions(key, ts,
-    event_id) → mapInPandas`` — one shuffle (same as groupBy) but the
-    Python boundary is per PARTITION, not per key, so millions of small
-    correlation keys cost ~zero marginal overhead. Keys never span
-    partitions (hash partitioning), and consecutive-key iteration inside
-    the runner reproduces per-key serial, time-ordered processing exactly.
 
     Rules sharing a key column run in ONE pass so suppression / rule-order
     semantics hold across them. Rules with different keys run in separate
@@ -168,101 +293,44 @@ def correlate_state_machine(
         by_key.setdefault(r.key, []).append(r)
     if len(by_key) > 1 and any(r.suppress for r in rules):
         raise ValueError("suppressing rules must share one correlation key column")
-
-    from ..session import shuffle_partitions
-
-    spark = events.sparkSession
-    n_parts = shuffle_partitions(spark)
-
     outs = []
     for key_col, group_rules in by_key.items():
-        needed_types = set()
-        unrestricted = False
-        for r in group_rules:
-            for g in r.events:
-                if EVENT_MATCH_ANY in g:
-                    unrestricted = True
-                needed_types.update(g)
-        src = events
-        if not unrestricted:
-            # prune the scan: only event types any rule can consume
-            src = src.filter(F.col("event_type").isin(sorted(needed_types)))
-        if skew_warn_ratio is not None and key_col is not None:
-            # measure the stream this path actually shuffles — the
-            # type-FILTERED rows; the raw table's hot key may be cold here
-            # (and vice versa)
-            from ..metrics import warn_if_skewed
-
-            warn_if_skewed(src, key_col, warn_ratio=skew_warn_ratio)
-        key_expr = (
-            F.col(key_col).cast("string") if key_col is not None else F.lit(None).cast("string")
-        )
-        src = src.select(
-            key_expr.alias("__key"), "event_id", "ts", "event_type", "value"
-        )
-        part = src.repartition(n_parts, "__key").sortWithinPartitions(
-            "__key", "ts", "event_id"
-        )
-        runner = _make_partition_runner(list(group_rules), historical)
-        outs.append(part.mapInPandas(runner, schema=EMISSION_SCHEMA))
-
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+        src, _ = _project(events, group_rules, True, skew_warn_ratio)
+        outs.append(_replay(src, group_rules, historical, key_col is None))
+    return reduce(DataFrame.unionByName, outs)
 
 
 def correlate(events: DataFrame, rules: Sequence[Rule], historical: bool = False) -> DataFrame:
-    """Run rules over a batch event stream, choosing the best physical plan
-    per rule: relational window plan for simple 2-step sequences, state
-    machine otherwise. Emissions share EMISSION_SCHEMA across strategies."""
+    """Run rules over a batch event stream, each rule on the physical plan
+    ``relational.strategies()`` picks for it. Relational branches union in
+    rule order; state-machine rules share one pass, unioned last.
+    Emissions share EMISSION_SCHEMA across strategies."""
     from .relational import (
+        compile_counter,
         compile_gap_sessions,
-        compile_keyed_counter,
-        compile_keyless_counter,
+        compile_priority_suppress,
         compile_sequence,
         compile_single_match,
-        is_gap_sessions,
-        is_keyed_counter,
-        is_keyless_counter,
-        is_relational_compilable,
-        is_single_match,
+        strategies,
     )
 
     if not rules:
         return events.sparkSession.createDataFrame([], EMISSION_SCHEMA)
-    check_unique_rule_names(rules)
-    if any(r.suppress for r in rules):
-        # suppression makes rule-list order semantic across ALL rules
-        # (CorrelationEngine.php:231-236). Stateless rule sets compile to
-        # priority routing; anything stateful needs one serial pass.
-        from .relational import compile_priority_suppress, is_priority_suppress_set
-
-        if is_priority_suppress_set(rules):
-            return compile_priority_suppress(events, rules)
-        return correlate_state_machine(events, rules, historical=historical)
-
-    def _fast(r: Rule) -> bool:
-        # historical replay with HISTORICAL_IGNORE_TIMEOUT keeps instances
-        # alive past their deadline (AEventProcessor.php:377-383) — the
-        # window plan can't express that, so route to the state machine.
-        if historical and r.historical_ignore_timeout and r.timeout_s is not None:
-            return False
-        return is_relational_compilable(r)
-
-    relational = [r for r in rules if _fast(r)]
-    general = [r for r in rules if not _fast(r)]
+    strat = strategies(rules, historical)
+    if "priority-suppress" in strat.values():
+        return compile_priority_suppress(events, rules)
+    compilers = {
+        "keyless-counter": compile_counter,
+        "keyed-counter": compile_counter,
+        "single-match": compile_single_match,
+        "gap-sessions": compile_gap_sessions,
+        "sequence-window": compile_sequence,
+    }
     outs = [
-        compile_keyless_counter(events, r) if is_keyless_counter(r)
-        else compile_keyed_counter(events, r) if is_keyed_counter(r)
-        else compile_single_match(events, r) if is_single_match(r)
-        else compile_gap_sessions(events, r) if is_gap_sessions(r)
-        else compile_sequence(events, r)
-        for r in relational
+        compilers[strat[r.name]](events, r)
+        for r in rules if strat[r.name] != "state-machine"
     ]
+    general = [r for r in rules if strat[r.name] == "state-machine"]
     if general:
         outs.append(correlate_state_machine(events, general, historical=historical))
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+    return reduce(DataFrame.unionByName, outs)

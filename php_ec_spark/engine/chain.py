@@ -21,7 +21,8 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..rules.base import Rule
+from ..rules.base import EVENT_MATCH_ANY, Rule
+from ..session import pin_intermediate
 from .batch import EMISSION_SCHEMA, correlate
 
 
@@ -112,11 +113,27 @@ def emissions_to_events(
     )
 
 
+def _derived_events_mapper(
+    events: DataFrame, rules: Sequence[Rule]
+) -> Callable[[DataFrame], DataFrame]:
+    """The emissions → derived events mapping of a chained rule set:
+    :func:`emissions_to_events` projecting the key back into every key
+    column the rules group on, typed like ``events`` (falls back to
+    bigint), with rule indices from the rule-list order."""
+    src_types = dict(events.dtypes)
+    key_cols = {
+        r.key: src_types.get(r.key, "bigint") for r in rules if r.key is not None
+    } or {"user_id": "bigint"}
+    rule_index = {r.name: i for i, r in enumerate(rules)}
+    return lambda em: emissions_to_events(  # noqa: E731
+        em, key_cols=key_cols, rule_index=rule_index
+    )
+
+
 def chain_correlate(
     events: DataFrame,
     rules: Sequence[Rule],
     max_depth: int = 5,
-    to_events: Optional[Callable[[DataFrame], DataFrame]] = None,
     historical: bool = False,
 ) -> DataFrame:
     """Correlate to fixpoint: emissions become events for the next round.
@@ -127,24 +144,12 @@ def chain_correlate(
     a derived event is a brand-new engine entry). Stops when a round emits
     nothing or after ``max_depth`` rounds. Returns all emissions unioned.
 
-    ``localCheckpoint`` truncates lineage between rounds — without it the
-    plan doubles per round and the driver, not the data, becomes the
-    bottleneck.
+    Each round is pinned (``session.pin_intermediate``) to truncate lineage
+    between rounds — without it the plan doubles per round and the driver,
+    not the data, becomes the bottleneck.
     """
     spark = events.sparkSession
-    default_mapping = to_events is None
-    if to_events is None:
-        # derived events must carry every key column the rule set groups on,
-        # typed like the source stream (falls back to bigint)
-        src_types = dict(events.dtypes)
-        key_cols = {
-            r.key: src_types.get(r.key, "bigint") for r in rules if r.key is not None
-        } or {"user_id": "bigint"}
-        rule_index = {r.name: i for i, r in enumerate(rules)}
-        to_events = lambda em: emissions_to_events(  # noqa: E731
-            em, key_cols=key_cols, rule_index=rule_index
-        )
-    from ..rules.base import EVENT_MATCH_ANY
+    to_events = _derived_events_mapper(events, rules)
 
     def _derivable_types(active_rules: Sequence[Rule]) -> set:
         # STATIC superset of the '<rule>:<outcome>' types this round can
@@ -177,7 +182,7 @@ def chain_correlate(
         # it goes (the RDD is marked for checkpointing before the
         # action), and the row count answers the emptiness test the
         # take used to re-ask of the already-pinned blocks.
-        emitted = emitted.localCheckpoint(eager=False)
+        emitted = pin_intermediate(emitted)
         if not emitted.count():
             break
         all_emissions = (
@@ -188,13 +193,7 @@ def chain_correlate(
         # so a rule with no possible type overlap cannot start, consume, or
         # suppress anything — drop it from the next pass (and stop outright
         # when no rule overlaps, saving the would-be-empty correlate round).
-        # A custom to_events can invent types the static set can't know, so
-        # it keeps the exact distinct job instead.
-        derived_types = (
-            _derivable_types(active)
-            if default_mapping
-            else {r[0] for r in current.select("event_type").distinct().collect()}
-        )
+        derived_types = _derivable_types(active)
         active = [
             r for r in rules
             if any(

@@ -32,26 +32,55 @@ from pyspark.sql import functions as F
 from ..rules.base import EVENT_MATCH_ANY, Rule
 
 
-def is_relational_compilable(rule: Rule) -> bool:
-    if is_keyless_counter(rule) or is_keyed_counter(rule):
-        return True
+def strategies(rules, historical: bool = False) -> dict[str, str]:
+    """Rule name → the physical strategy it compiles to: the one table
+    :func:`~php_ec_spark.engine.batch.correlate` dispatches on and
+    :func:`plan_report` prints. Values are ``priority-suppress |
+    keyless-counter | keyed-counter | single-match | gap-sessions |
+    sequence-window | state-machine``."""
+    from .batch import check_unique_rule_names
+
+    # a name-keyed table would otherwise silently collapse duplicates
+    # and hide one rule's strategy
+    check_unique_rule_names(rules)
+    if any(r.suppress for r in rules):
+        # suppression makes rule-list order semantic across ALL rules
+        # (CorrelationEngine.php:231-236). Stateless rule sets compile to
+        # priority routing; anything stateful needs one serial pass.
+        strat = (
+            "priority-suppress" if is_priority_suppress_set(rules) else "state-machine"
+        )
+        return {r.name: strat for r in rules}
+    return {r.name: _strategy(r, historical) for r in rules}
+
+
+def _strategy(rule: Rule, historical: bool) -> str:
+    # historical replay with HISTORICAL_IGNORE_TIMEOUT keeps instances
+    # alive past their deadline (AEventProcessor.php:377-383) — no
+    # relational plan can express that
+    if historical and rule.historical_ignore_timeout and rule.timeout_s is not None:
+        return "state-machine"
+    if is_keyless_counter(rule):
+        return "keyless-counter"
+    if is_keyed_counter(rule):
+        return "keyed-counter"
     if rule.emit_progress or rule.emit_final or rule.on_complete or rule.on_timeout:
-        return False
+        return "state-machine"
     if is_single_match(rule):
-        return True
+        return "single-match"
     if is_gap_sessions(rule):
-        return True
+        return "gap-sessions"
     # chain trimming (trimEventChain, AEventProcessor.php:321-332) changes
     # n_events/start/value_sum of emissions — state-machine only.
     if rule.chain_limit is not None:
-        return False
+        return "state-machine"
     if not rule.is_simple_sequence or len(rule.events) < 2:
-        return False
+        return "state-machine"
     # repeated types re-enter per-class dedup (CorrelationEngine.php:252-254):
     # an event consumed mid-chain must not seed a new instance — only the
     # state machine models that.
     types = [g[0] for g in rule.events]
-    return len(set(types)) == len(types)
+    return "sequence-window" if len(set(types)) == len(types) else "state-machine"
 
 
 def is_gap_sessions(rule: Rule) -> bool:
@@ -180,9 +209,11 @@ def compile_single_match(events: DataFrame, rule: Rule) -> DataFrame:
     )
 
 
-def _compile_counter(events: DataFrame, rule: Rule) -> DataFrame:
-    """Shared counter plan (keyed AND keyless — one implementation so the
-    emission semantics can never diverge between the two).
+def compile_counter(events: DataFrame, rule: Rule) -> DataFrame:
+    """Continuous counter plan, keyed AND keyless — one implementation so
+    the emission semantics can never diverge between the two. Keyless is
+    a global aggregate, keyed a two-stage hash aggregate (partial merge
+    map-side, one 'final' emission per key).
 
     Matches the state machine's final emission exactly: chain length /
     value sum / first & last consumed event in stream order (ts,
@@ -216,17 +247,6 @@ def _compile_counter(events: DataFrame, rule: Rule) -> DataFrame:
     )
 
 
-def compile_keyless_counter(events: DataFrame, rule: Rule) -> DataFrame:
-    """Keyless continuous counter → global aggregate with partial combine."""
-    return _compile_counter(events, rule)
-
-
-def compile_keyed_counter(events: DataFrame, rule: Rule) -> DataFrame:
-    """Keyed continuous counter → two-stage hash aggregate (partial merge
-    map-side). One 'final' emission per key."""
-    return _compile_counter(events, rule)
-
-
 def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     """Window plan for an N-step sequence A→B→…→Z with per-step timeout.
 
@@ -244,16 +264,11 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     step times the instance out at step_i.ts + timeout (fired there even
     past end-of-stream, matching the batch drain).
     """
-    # guard against MISUSE of this public export, not just the umbrella
-    # predicate: counter/single-match/gap shapes pass
-    # is_relational_compilable but compile to DIFFERENT plans — feeding
-    # one here would silently emit wrong results (e.g. a gap rule's n=1
-    # makes every event 'completed')
-    if not is_relational_compilable(rule) or any(
-        p(rule)
-        for p in (is_keyless_counter, is_keyed_counter, is_single_match,
-                  is_gap_sessions)
-    ):
+    # guard against MISUSE of this public export: counter/single-match/gap
+    # shapes compile to DIFFERENT plans — feeding one here would silently
+    # emit wrong results (e.g. a gap rule's n=1 makes every event
+    # 'completed')
+    if strategies([rule])[rule.name] != "sequence-window":
         raise ValueError(
             f"rule {rule.name!r} is not a sequence shape — use "
             "correlate(), which dispatches every rule to its strategy"
@@ -376,43 +391,10 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     return out
 
 
-def compile_two_step_sequence(events: DataFrame, rule: Rule) -> DataFrame:
-    """Backwards-compatible alias: 2-step is the N-step plan with no joins."""
-    return compile_sequence(events, rule)
-
-
 def plan_report(rules, historical: bool = False) -> dict[str, str]:
     """Which physical strategy each rule compiles to — the ``.explain()``
-    of the rule compiler. Keys are rule names; values are one of
-    ``priority-suppress | keyless-counter | keyed-counter | single-match |
-    gap-sessions | sequence-window | state-machine``."""
-    from .batch import check_unique_rule_names
-
-    # same rejection as correlate(): a name-keyed report would otherwise
-    # silently collapse duplicates and hide one rule's strategy
-    check_unique_rule_names(rules)
-    out: dict[str, str] = {}
-    if any(r.suppress for r in rules):
-        strat = (
-            "priority-suppress" if is_priority_suppress_set(rules) else "state-machine"
-        )
-        return {r.name: strat for r in rules}
-    for r in rules:
-        if historical and r.historical_ignore_timeout and r.timeout_s is not None:
-            out[r.name] = "state-machine"
-        elif is_keyless_counter(r):
-            out[r.name] = "keyless-counter"
-        elif is_keyed_counter(r):
-            out[r.name] = "keyed-counter"
-        elif not is_relational_compilable(r):
-            out[r.name] = "state-machine"
-        elif is_single_match(r):
-            out[r.name] = "single-match"
-        elif is_gap_sessions(r):
-            out[r.name] = "gap-sessions"
-        else:
-            out[r.name] = "sequence-window"
-    return out
+    of the rule compiler; see :func:`strategies`."""
+    return strategies(rules, historical)
 
 
 def is_priority_suppress_set(rules) -> bool:

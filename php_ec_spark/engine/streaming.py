@@ -19,8 +19,12 @@ Scale: state is partitioned by correlation key exactly like the batch
 path; a micro-batch shuffles only its own rows; state store IO is
 incremental (RocksDB provider recommended on a real cluster).
 
-Live-path cost model (re-profiled round 6, tools/live_profile*.py —
-this CORRECTS round 5's "~0.5 s per state partition per batch"):
+Live-path cost model (recorded round-6/7 profiles — this CORRECTS round
+5's "~0.5 s per state partition per batch"; ``perfbench/run.py
+--workload live_ingest --trace 1`` reports the same breakdown:
+``streaming.add_batch_ms_p50``, ``wal_commit_ms_p50``,
+``query_planning_ms_p50``, ``engine.streaming.state_commit_ms_p50`` and
+``state_update_ms_p50``):
 
 - the apparent 0.5 s/partition linear tax was NOT Spark-internal: it
   was ``ActionDispatcher`` consuming the emission batch with
@@ -53,21 +57,22 @@ from typing import Any, Iterator, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..rules.base import EVENT_MATCH_ANY, Rule
-from .batch import EMISSION_SCHEMA, check_unique_rule_names
+from ..rules.base import Rule
+from .batch import (
+    EMISSION_SCHEMA,
+    SNAPSHOT_SCHEMA,  # noqa: F401  (re-exported: warm-start callers' schema)
+    _project,
+    _replay,
+    check_unique_rule_names,
+)
 from .batch import _OUT_COLS as _OUT_COLS_LIST
 from .core import EngineCore
 
 #: State persisted per correlation key: the serialized EngineCore.
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
-
-#: Schema of a warm-start snapshot row (what :func:`snapshot_state` emits
-#: and what ``initial_state`` expects).
-SNAPSHOT_SCHEMA = "__key STRING, blob STRING"
 
 # one source of truth with the batch engine (both must track
 # EMISSION_SCHEMA's field order)
@@ -75,56 +80,8 @@ _OUT_COLS = tuple(_OUT_COLS_LIST)
 _DT64NS = np.dtype("datetime64[ns]")
 
 
-def _project(
-    events: DataFrame, rules: Sequence[Rule], prefilter_types: bool
-) -> Tuple[DataFrame, Optional[str]]:
-    """(events projected to ``__key, event_id, ts, event_type, value``,
-    the rules' key column or None) — shared by the live stream and the
-    snapshot builder so their keys always compare equal.
-
-    ``__key`` is the SPARK-cast string key (exactly what the batch engine
-    uses) so restore-blob lookup, emission keys, and payload callbacks
-    agree across engines for every key type — str(True) is "True" but
-    CAST(true AS STRING) is "true", and bool/decimal/timestamp keys would
-    otherwise skip their restore silently. Keyless rules group on the
-    literal "__all__". Aliasing also means a key that IS an engine column
-    (e.g. event_type) never selects twice."""
-    key_cols = {r.key for r in rules}
-    if len(key_cols) > 1:
-        # Spark allows only ONE applyInPandasWithState per streaming query
-        # (UnsupportedOperationChecker: "Multiple applyInPandasWithStates
-        # are not supported") — a union of stateful ops would fail at
-        # query.start(). Run one streaming query per key column instead.
-        raise ValueError(
-            "streaming rules must share one correlation key column per "
-            f"query (got {sorted(map(str, key_cols))}); start a separate "
-            "correlate_stream/start_correlation per key column"
-        )
-    (key_col,) = key_cols
-    needed_types: set[str] = set()
-    unrestricted = False
-    for r in rules:
-        for g in r.events:
-            if EVENT_MATCH_ANY in g:
-                unrestricted = True
-            needed_types.update(g)
-    if prefilter_types and not unrestricted:
-        events = events.filter(F.col("event_type").isin(sorted(needed_types)))
-    key_expr = (
-        F.col(key_col).cast("string") if key_col is not None
-        else F.lit("__all__")
-    )
-    return (
-        events.select(
-            key_expr.alias("__key"), "event_id", "ts", "event_type", "value"
-        ),
-        key_col,
-    )
-
-
 def _make_stateful_handler(
     rules: Sequence[Rule],
-    historical: bool,
     clock: str,
     keyless: bool = False,
     restore_bc=None,
@@ -170,9 +127,7 @@ def _make_stateful_handler(
             blob = restore_bc.value.get(restore_key) if in_restore else None
         # keyless rules group on a synthetic constant — their emissions must
         # carry key=NULL exactly like the batch engine, not the constant
-        core = EngineCore.from_state(
-            rules, None if keyless else key[0], blob, historical=historical
-        )
+        core = EngineCore.from_state(rules, None if keyless else key[0], blob)
 
         if state.hasTimedOut:
             # the clock passed this key's earliest deadline → alarm path
@@ -253,8 +208,6 @@ def correlate_stream(
     events: DataFrame,
     rules: Sequence[Rule],
     watermark_delay: str = "0 seconds",
-    historical: bool = False,
-    prefilter_types: bool = False,
     clock: str = "event",
     initial_state: Optional[DataFrame] = None,
     memory_path: Optional[str] = None,
@@ -298,15 +251,10 @@ def correlate_stream(
     the source (the reference does the same at boot, Scheduler.php:730-737;
     '*'-rules see it, other rules ignore it).
 
-    ``prefilter_types`` is OFF by default, deliberately: Catalyst pushes an
-    event-type filter BELOW the EventTimeWatermark node, so events no rule
-    consumes would never advance the watermark and pending timeouts would
-    stall — but php-ec's clock advances on EVERY event
-    (CorrelationEngine.php:199). The default routes the full stream through
-    the watermark + state op (each event also replays due timeouts at
-    t−1 ms, exactly the batch clock). Enable prefiltering only when rule
-    types cover most traffic or timer latency is driven by other means —
-    it cuts the shuffle to the matched subset.
+    The full stream, not just the rules' event types, feeds the
+    watermark and the state op: php-ec's clock advances on EVERY event
+    (CorrelationEngine.php:199), and each event also replays due timeouts
+    at t−1 ms, exactly the batch clock (see ``batch._project``).
     """
     if not rules:
         raise ValueError("correlate_stream needs at least one rule")
@@ -342,7 +290,7 @@ def correlate_stream(
             stacklevel=2,
         )
     part, key_col = _project(
-        events.withWatermark("ts", watermark_delay), rules, prefilter_types
+        events.withWatermark("ts", watermark_delay), rules, prefilter=False
     )
 
     restore_bc = None
@@ -357,7 +305,6 @@ def correlate_stream(
     return part.groupBy("__key").applyInPandasWithState(
         _make_stateful_handler(
             list(rules),
-            historical,
             clock,
             keyless=key_col is None,
             restore_bc=restore_bc,
@@ -374,9 +321,7 @@ def correlate_stream(
     )
 
 
-def snapshot_state(
-    events: DataFrame, rules: Sequence[Rule], historical: bool = False
-) -> DataFrame:
+def snapshot_state(events: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     """Batch-replay history and return per-key serialized engine state
     (``__key string, blob string``) WITHOUT the end-of-stream drain.
 
@@ -387,61 +332,12 @@ def snapshot_state(
     exactly where the replay stopped — sequences half-matched in history
     complete on live events; deadlines armed in history still fire.
 
-    Same physical shape as the batch engine: one shuffle on the key,
-    per-partition consecutive-key iteration, Arrow-batched.
-
-    Replays with ``prefilter_types=False`` — the same default as
-    ``correlate_stream`` and for the same reason: the engine's clock
-    advances on EVERY event (CorrelationEngine.php:199). Dropping
-    unconsumed-type history would keep alive an instance whose deadline
-    expired after the key's last consumed-type event; the uninterrupted
-    engine fires-and-discards it during replay, so the snapshot must too —
-    otherwise the warm-started query re-emits a timeout history already
-    reported.
+    Same projection and key-replay loop as the batch state machine
+    (``batch._project``/``batch._replay``), but over the unfiltered
+    stream: a snapshot of type-filtered history would keep alive an
+    instance the uninterrupted engine fires-and-discards, and the
+    warm-started query would re-emit a timeout history already reported.
     """
-    from ..session import shuffle_partitions
-
     check_unique_rule_names(rules)
-    src, key_col = _project(events, rules, prefilter_types=False)
-    part = src.repartition(
-        shuffle_partitions(events.sparkSession), "__key"
-    ).sortWithinPartitions("__key", "ts", "event_id")
-    rules_list = list(rules)
-    keyless = key_col is None
-
-    def run(batches):
-        core: Optional[EngineCore] = None
-        cur_key = None
-        out_keys: list = []
-        out_blobs: list = []
-
-        def flush(c: EngineCore, k) -> None:
-            if c.has_live():
-                out_keys.append(k)
-                out_blobs.append(c.to_state())
-
-        for pdf in batches:
-            ts_ns = pdf["ts"].astype("int64").to_numpy()
-            eids = pdf["event_id"].to_numpy()
-            etypes = pdf["event_type"].to_numpy()
-            values = pdf["value"].to_numpy()
-            keys = pdf["__key"].to_numpy(dtype=object)
-            for i in range(len(pdf)):
-                k = keys[i]
-                if core is None or k != cur_key:
-                    if core is not None:
-                        flush(core, cur_key)
-                    core = EngineCore(
-                        rules_list, None if keyless else k, historical=historical
-                    )
-                    cur_key = k
-                v = values[i]
-                core.handle(
-                    (int(eids[i]), int(ts_ns[i]), etypes[i], None if v != v else v)
-                )
-                core.take_rows()  # snapshot wants state, not emissions
-        if core is not None:
-            flush(core, cur_key)
-        yield pd.DataFrame({"__key": out_keys, "blob": out_blobs})
-
-    return part.mapInPandas(run, schema=SNAPSHOT_SCHEMA)
+    src, key_col = _project(events, rules, prefilter=False)
+    return _replay(src, rules, False, key_col is None, snapshot=True)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin_intermediate  # noqa: F401  (the operators' pin policy)
+
 #: Modulus for MinHash permutations (Mersenne prime 2^31−1): keeps a*h+b in
 #: exact int64 range (a,h < 2^31 ⇒ product < 2^62).
 MH_MOD = 2_147_483_647
@@ -44,24 +46,6 @@ MH_MOD = 2_147_483_647
 #: join's input shrinks by the junk-pair fraction. Internal constant,
 #: deliberately not a public knob (round-17 verdict #5).
 _PREFIX_EXT = 2
-
-
-def pin_intermediate(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Pin a multiply-consumed corpus-scale intermediate, truncating its
-    lineage — the one pin policy of every operator in the package.
-
-    With a checkpoint directory configured (``sc.setCheckpointDir`` —
-    standard on any cluster run) the pin is a reliable ``checkpoint()``:
-    replicated fault-tolerant files, so losing an executor mid-query
-    does not kill the job. Without one it is ``localCheckpoint()`` —
-    fastest, but the blocks live non-replicated on executor local
-    storage (right for local / single-executor / short-job runs; sweep
-    them with ``session.release_checkpoint_caches``). See SCALE.md
-    "Durability of pinned intermediates".
-    """
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 def normalize_text(text: Column) -> Column:

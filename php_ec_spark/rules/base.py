@@ -188,9 +188,8 @@ class Rule:
         NECESSARY but not sufficient for the relational fast path — it
         deliberately ignores callbacks (on_complete/on_timeout),
         emit_progress/emit_final, and chain_limit, all of which ALSO
-        force the state machine; use
-        ``engine.relational.is_relational_compilable`` for the full
-        routing decision."""
+        force the state machine; ``engine.relational.strategies()`` makes
+        the full routing decision."""
         return (
             not self.continuous
             and not self.suppress

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -178,6 +178,25 @@ def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions", str(default)))
     except ValueError:
         return spark.sparkContext.defaultParallelism
+
+
+def pin_intermediate(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Pin a multiply-consumed corpus-scale intermediate, truncating its
+    lineage — the one pin policy of the package's operators and of
+    ``chain_correlate``'s fixpoint rounds.
+
+    With a checkpoint directory configured (``sc.setCheckpointDir`` —
+    standard on any cluster run) the pin is a reliable ``checkpoint()``:
+    replicated fault-tolerant files, so losing an executor mid-query
+    does not kill the job. Without one it is ``localCheckpoint()`` —
+    fastest, but the blocks live non-replicated on executor local
+    storage (right for local / single-executor / short-job runs; sweep
+    them with ``session.release_checkpoint_caches``). See SCALE.md
+    "Durability of pinned intermediates".
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def release_checkpoint_caches(spark: SparkSession) -> int:

@@ -101,34 +101,69 @@ def start_correlation(
         initial_state=initial_state,
         memory_path=None if memory is None else memory.snapshot_path,
     )
-    dispatcher = dispatcher or ActionDispatcher()
-    if dispatcher.checkpoint_dir is None:
-        dispatcher.checkpoint_dir = checkpoint_dir
-    dispatcher.replay_errored()
-    if memory is None:
-        sink = dispatcher
-    else:
-        def sink(df: DataFrame, batch_id: int) -> None:
-            # ONE parallel materialization serves both consumers — the
-            # dispatcher is told the frame is already checkpointed so it
-            # doesn't cache a second copy of every emission batch
-            ckpt = df.localCheckpoint(eager=True)
-            try:
-                dispatcher(ckpt, batch_id, pre_materialized=True)
-                memory.absorb(ckpt)  # writes land before batch N+1 reads
-            finally:
-                ckpt.unpersist()
+    dispatcher = _anchored(dispatcher, checkpoint_dir)
+
+    def consume(ckpt: DataFrame, batch_id: int) -> None:
+        dispatcher(ckpt, batch_id, pre_materialized=True)
+        if memory is not None:
+            memory.absorb(ckpt)  # writes land before batch N+1 reads
+
     writer = (
         emissions.writeStream.queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .foreachBatch(sink)
+        .foreachBatch(_pinned_sink(consume))
     )
     if trigger_once:
         writer = writer.trigger(availableNow=True)
+    return _start(writer, events.sparkSession, state_partitions)
+
+
+def _anchored(
+    dispatcher: Optional[ActionDispatcher], checkpoint_dir: str
+) -> ActionDispatcher:
+    """The query's dispatcher (a fresh one by default), its cross-run batch
+    markers and errored-action journal anchored under the query's
+    checkpoint dir unless it was built with its own, and the errored
+    actions of an earlier run replayed."""
+    dispatcher = dispatcher or ActionDispatcher()
+    if dispatcher.checkpoint_dir is None:
+        dispatcher.checkpoint_dir = checkpoint_dir
+    dispatcher.replay_errored()
+    return dispatcher
+
+
+def _pinned_sink(
+    consume: Callable[[DataFrame, int], None]
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch sink that materializes each emission batch ONCE, in
+    parallel (eager ``localCheckpoint``), hands the pinned frame to
+    ``consume`` and releases it. Every consumer reads the same blocks, and
+    the dispatcher is told the frame is already pinned so it does not pin
+    a second copy. The pin stays a ``localCheckpoint``: a reliable
+    checkpoint would write every micro-batch into the checkpoint dir, and
+    ``unpersist`` would not remove those files."""
+
+    def sink(df: DataFrame, batch_id: int) -> None:
+        ckpt = df.localCheckpoint(eager=True)
+        try:
+            consume(ckpt, batch_id)
+        finally:
+            # explicit release: at a sub-second trigger, relying on GC/
+            # ContextCleaner lets checkpointed blocks pile up between
+            # cycles (and an exception mid-sink would leak the batch)
+            ckpt.unpersist()
+
+    return sink
+
+
+def _start(writer, spark, state_partitions: Optional[int]) -> StreamingQuery:
+    """``writer.start()``, with ``spark.sql.shuffle.partitions`` set to
+    ``state_partitions`` (when given) around the call. The streaming query
+    clones the session synchronously inside start(), so the restored conf
+    cannot race the first batch plan."""
     if state_partitions is None:
         return writer.start()
-    spark = events.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -154,7 +189,6 @@ def start_chained_correlation(
     clock: str = "processing",
     trigger_interval: str = "500 milliseconds",
     query_name: str = "php-ec-chained",
-    to_events: Optional[Callable[[DataFrame], DataFrame]] = None,
     state_partitions: Optional[int] = None,
 ) -> StreamingQuery:
     """LIVE rule chaining (J5): emissions become events the SAME query
@@ -193,7 +227,7 @@ def start_chained_correlation(
     exactly like the reference (no depth cap in live mode); batch
     ``chain_correlate`` is the capped variant.
     """
-    from ..engine.chain import emissions_to_events
+    from ..engine.chain import _derived_events_mapper
 
     os.makedirs(chain_dir, exist_ok=True)
     spark = events.sparkSession
@@ -203,33 +237,10 @@ def start_chained_correlation(
     emissions = correlate_stream(
         src, rules, watermark_delay=watermark_delay, clock=clock
     )
+    to_events = _derived_events_mapper(events, rules)
+    dispatcher = _anchored(dispatcher, checkpoint_dir)
 
-    if to_events is None:
-        src_types = dict(events.dtypes)
-        key_cols = {
-            r.key: src_types.get(r.key, "bigint") for r in rules if r.key is not None
-        } or {"user_id": "bigint"}
-        rule_index = {r.name: i for i, r in enumerate(rules)}
-        to_events = lambda em: emissions_to_events(  # noqa: E731
-            em, key_cols=key_cols, rule_index=rule_index
-        )
-
-    dispatcher = dispatcher or ActionDispatcher()
-    if dispatcher.checkpoint_dir is None:
-        dispatcher.checkpoint_dir = checkpoint_dir
-    dispatcher.replay_errored()
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df = df.localCheckpoint(eager=True)  # dispatch + re-render, one compute
-        try:
-            _sink_inner(df, batch_id)
-        finally:
-            # explicit release: at a 500 ms trigger, relying on GC/
-            # ContextCleaner lets checkpointed blocks pile up between
-            # cycles (and an exception mid-sink would leak the batch)
-            df.unpersist()
-
-    def _sink_inner(df: DataFrame, batch_id: int) -> None:
+    def consume(df: DataFrame, batch_id: int) -> None:
         dispatcher(df, batch_id, pre_materialized=True)
         if df.isEmpty():  # JVM-side limit-1 probe on the checkpointed batch
             return  # no derived file — quiet batches leave the chain dir alone
@@ -274,27 +285,10 @@ def start_chained_correlation(
         emissions.writeStream.queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .foreachBatch(sink)
+        .foreachBatch(_pinned_sink(consume))
         .trigger(processingTime=trigger_interval)
     )
-    if state_partitions is None:
-        return writer.start()
-    # same safe window as start_correlation: the streaming query clones
-    # the session synchronously inside start(), so the restored conf
-    # cannot race the first batch plan
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return writer.start()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            # RuntimeConfig.get(key, None) returns None when the conf was
-            # never EXPLICITLY set (the SQLConf default doesn't surface) —
-            # leaving our override in place would silently re-plan every
-            # later query in the session with state_partitions partitions
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    return _start(writer, spark, state_partitions)
 
 
 @dataclass

@@ -339,8 +339,8 @@ class ActionDispatcher:
         pre_materialized: bool = False,
     ) -> None:
         """``pre_materialized=True`` promises ``df`` is already an eager
-        localCheckpoint (the memory-wired sink shares one materialization
-        between dispatcher and hub) — skips the second cached copy."""
+        localCheckpoint (the correlation queries' sinks pin each batch once
+        for every consumer) — skips the second cached copy."""
         if batch_id >= 0 and self._batch_done(batch_id):
             # Replay dedup (W12) — but the replayed batch must still be
             # CONSUMED: for stateful queries Spark 4's state-store commit

@@ -12,7 +12,7 @@ import datetime as dt
 
 import pytest
 
-from php_ec_spark.engine import correlate, correlate_state_machine, compile_two_step_sequence
+from php_ec_spark.engine import compile_sequence, correlate, correlate_state_machine
 from php_ec_spark.rules import Rule, match_single_continuously, sequence_rule
 
 
@@ -43,19 +43,19 @@ class TestSequenceTimeout:
         }
         return got
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_paid_within_timeout(self, spark, runner):
         rows = [(1, 0, 10, "placed", 5.0), (2, 10, 10, "paid", 7.0)]
         got = self._run(spark, rows, runner)
         assert got == {("10", 1): ("completed", _ts(10))}
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_never_paid_times_out(self, spark, runner):
         rows = [(1, 0, 10, "placed", 5.0), (2, 100, 10, "other", 1.0)]
         got = self._run(spark, rows, runner)
         assert got == {("10", 1): ("timeout", _ts(20))}
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_late_payment_is_timeout(self, spark, runner):
         # paid arrives 360s later (> PT20S): timeout fires at placed+20s;
         # the late 'paid' does NOT start a new matcher (not an initial event)
@@ -63,7 +63,7 @@ class TestSequenceTimeout:
         got = self._run(spark, rows, runner)
         assert got == {("10", 1): ("timeout", _ts(20))}
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_keys_are_independent(self, spark, runner):
         rows = [
             (1, 0, 10, "placed", 1.0),
@@ -76,7 +76,7 @@ class TestSequenceTimeout:
             ("11", 2): ("completed", _ts(5)),
         }
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_one_paid_completes_all_waiting_instances(self, spark, runner):
         # two placed for same key -> two instances; the single paid completes both
         rows = [
@@ -90,7 +90,7 @@ class TestSequenceTimeout:
             ("10", 2): ("completed", _ts(10)),
         }
 
-    @pytest.mark.parametrize("runner", [correlate, compile_two_step_sequence])
+    @pytest.mark.parametrize("runner", [correlate, compile_sequence])
     def test_boundary_exact_deadline_completes(self, spark, runner):
         # f.ts == deadline: acceptEventTime uses <= (AEventProcessor.php:357-396)
         rows = [(1, 0, 10, "placed", 1.0), (2, 20, 10, "paid", 2.0)]
@@ -175,6 +175,37 @@ class TestStateMachineSpecifics:
         got = [(r.outcome, r.fire_ts) for r in df.collect()]
         assert got == [("timeout", _ts(20))]
 
+    def test_keyless_sequence_emits_null_key_like_core_replay(self, spark):
+        # keyless rules replay on one "__all__" group, but emissions carry
+        # key NULL — exactly what a single EngineCore(rules, None) emits
+        from php_ec_spark.engine.core import EngineCore
+
+        rule = sequence_rule("seq", ["a", "b"], key=None, timeout="PT10S")
+        rows = [
+            (1, 0, 10, "a", 1.0),
+            (2, 3, 11, "b", 2.0),  # another user's b completes: no key
+            (3, 5, 12, "a", 3.0),
+            (4, 20, 10, "x", 4.0),  # unconsumed type
+            (5, 30, 11, "a", 5.0),  # times out at end of stream
+        ]
+        df = correlate_state_machine(_mk_events(spark, rows), [rule])
+        got = sorted(
+            (r.rule, r.key, r.outcome, (r.fire_ts - _ts(0)) // dt.timedelta(microseconds=1),
+             r.start_event_id, r.last_event_id, r.n_events, r.value_sum)
+            for r in df.collect()
+        )
+        core = EngineCore([rule], None)
+        for eid, sec, _uid, et, val in rows:
+            core.handle((eid, sec * 1_000_000_000, et, val))
+        core.finish(rows[-1][1] * 1_000_000_000)
+        want = sorted(
+            (r[0], r[1], r[2], r[3] // 1000, r[4], r[5], r[6], r[7])
+            for r in core.take_rows()
+        )
+        assert got == want
+        assert [g[1] for g in got] == [None] * 3
+        assert sorted(g[2] for g in got) == ["completed", "timeout", "timeout"]
+
 
 class TestStrategyParity:
     """Relational fast path ≡ state machine on the driver's real events table."""
@@ -182,7 +213,7 @@ class TestStrategyParity:
     @pytest.mark.parametrize("timeout", ["PT30M", "PT6H", None])
     def test_paths_agree_on_real_data(self, spark, events, timeout):
         rule = sequence_rule("r", ["signup", "purchase"], key="user_id", timeout=timeout)
-        fast = compile_two_step_sequence(events, rule)
+        fast = compile_sequence(events, rule)
         slow = correlate_state_machine(events, [rule])
         cols = ["key", "start_event_id", "outcome", "fire_ts", "last_event_id", "n_events"]
         a = sorted(map(tuple, fast.select(cols).collect()))

@@ -288,7 +288,7 @@ class TestPrioritySuppressCompiler:
 
 
 class TestKeyedCounterParity:
-    """compile_keyed_counter (groupBy + two-stage agg) must emit exactly
+    """compile_counter (groupBy + two-stage agg) must emit exactly
     what the state machine would for the keyed continuous counter shape —
     per-key chain stats in stream order, fired at the key's last event."""
 
@@ -303,24 +303,24 @@ class TestKeyedCounterParity:
 
     @pytest.mark.parametrize("rows", CASES)
     def test_matches_state_machine(self, spark, rows):
-        from php_ec_spark.engine.relational import compile_keyed_counter
+        from php_ec_spark.engine.relational import compile_counter
 
         rule = match_single_continuously(
             "cnt", ["*"], key="user_id", emit_final=True
         )
         df = _mk(spark, rows)
-        assert _rows(compile_keyed_counter(df, rule)) == _rows(
+        assert _rows(compile_counter(df, rule)) == _rows(
             correlate_state_machine(df, [rule])
         )
 
     def test_type_filtered_counter(self, spark):
-        from php_ec_spark.engine.relational import compile_keyed_counter
+        from php_ec_spark.engine.relational import compile_counter
 
         rule = match_single_continuously(
             "cnt", ["a"], key="user_id", emit_final=True
         )
         df = _mk(spark, self.CASES[0])
-        assert _rows(compile_keyed_counter(df, rule)) == _rows(
+        assert _rows(compile_counter(df, rule)) == _rows(
             correlate_state_machine(df, [rule])
         )
 

@@ -32,7 +32,7 @@ def _events(spark):
     )
 
 
-def test_online_shop_chain(spark):
+def test_online_shop_chain(spark, checkpoint_dir):
     rules = [
         sequence_rule(
             "pay_check", ["shop:order:placed", "shop:order:paid"],
@@ -51,6 +51,12 @@ def test_online_shop_chain(spark):
     # reminder fire time = the pay deadline (placed + PT20S)
     fires = {r["key"]: r["fire_ts"] for r in out.collect() if r["rule"] == "reminder"}
     assert fires["2"] == T0 + dt.timedelta(seconds=25)
+    # with a checkpoint dir set, each round's pin is a reliable checkpoint:
+    # same emissions, and the rounds land as files under the dir
+    with checkpoint_dir() as ckpt:
+        reliable = chain_correlate(_events(spark), rules, max_depth=3).collect()
+        assert sorted(map(tuple, reliable)) == sorted(map(tuple, out.collect()))
+        assert any(p.is_file() for p in ckpt.rglob("*"))
 
 
 def test_chain_with_non_default_key(spark):

@@ -94,13 +94,13 @@ class TestShuffleBudget:
         assert "Join" not in plan
 
     def test_keyless_counter_uses_partial_agg(self, spark):
-        from php_ec_spark.engine.relational import compile_keyless_counter
+        from php_ec_spark.engine.relational import compile_counter
         from php_ec_spark.model import load_events
         from php_ec_spark.rules import match_single_continuously
 
         rule = match_single_continuously("c", ["*"], key=None, emit_final=True)
         plan = (
-            compile_keyless_counter(load_events(spark, SF), rule)
+            compile_counter(load_events(spark, SF), rule)
             ._jdf.queryExecution().executedPlan().toString()
         )
         # global agg = partial + final, never a groupBy(lit(1)) state machine
@@ -136,13 +136,13 @@ class TestCounterSkewPlans:
         )
 
     def test_keyed_counter_two_stage_agg_under_hot_key(self, spark):
-        from php_ec_spark.engine.relational import compile_keyed_counter
+        from php_ec_spark.engine.relational import compile_counter
         from php_ec_spark.rules import match_single_continuously
 
         rule = match_single_continuously(
             "cnt", ["*"], key="user_id", emit_final=True
         )
-        df = compile_keyed_counter(self._hot_df(spark), rule)
+        df = compile_counter(self._hot_df(spark), rule)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
         # partial aggregate BEFORE the exchange, final after — the hot key
@@ -155,12 +155,12 @@ class TestCounterSkewPlans:
         assert hot == 10_000 + 20  # 50% hot + its share of id % 1000
 
     def test_keyless_counter_two_stage_agg_under_hot_key(self, spark):
-        from php_ec_spark.engine.relational import compile_keyless_counter
+        from php_ec_spark.engine.relational import compile_counter
         from php_ec_spark.rules import match_single_continuously
 
         rule = match_single_continuously("c", ["*"], key=None, emit_final=True)
         plan = (
-            compile_keyless_counter(self._hot_df(spark), rule)
+            compile_counter(self._hot_df(spark), rule)
             ._jdf.queryExecution().executedPlan().toString()
         )
         n_aggs = plan.count("HashAggregate") + plan.count("SortAggregate")

@@ -201,12 +201,12 @@ class TestPropertyParity:
         """The round-5 keyed-counter compile (two-stage aggregate) must be
         emission-identical to the state machine on adversarial streams —
         duplicate timestamps, interleaved keys, type-filtered subsets."""
-        from php_ec_spark.engine.relational import compile_keyed_counter
+        from php_ec_spark.engine.relational import compile_counter
 
         rule = match_single_continuously(
             "cnt", ["a", "b"], key="user_id", emit_final=True
         )
         df = _df(spark, evs)
-        assert _rows(compile_keyed_counter(df, rule)) == _rows(
+        assert _rows(compile_counter(df, rule)) == _rows(
             correlate_state_machine(df, [rule])
         )
