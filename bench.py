@@ -69,6 +69,14 @@ def _measure_pure_eps(iters: int) -> float:
     return eps_pure
 
 
+def byte_bucket(x: int) -> int:
+    """The log-quantized bucket (``round(256·log2(x+1))``, about 0.27%
+    wide) that ``plan_fingerprint`` digests shuffle bytes as."""
+    import math
+
+    return round(256 * math.log2(x + 1))
+
+
 def plan_fingerprint(metrics: "dict | None") -> "str | None":
     """Load-independent plan fingerprint for the compact headline line
     (round-16 verdict #1): first 12 hex of md5 over the sorted per-query
@@ -101,13 +109,10 @@ def plan_fingerprint(metrics: "dict | None") -> "str | None":
     if not metrics:
         return None
     import hashlib
-    import math
-
-    def qb(x: int) -> int:
-        return round(256 * math.log2(x + 1))
 
     basis = {
-        name: [qb(m["shuffle_read"]), qb(m["shuffle_write"]), m["tasks"]]
+        name: [byte_bucket(m["shuffle_read"]),
+               byte_bucket(m["shuffle_write"]), m["tasks"]]
         for name, m in metrics.items()
         # a PARTIAL block (hand-salvaged legacy artifact, truncated
         # fragment) is skipped rather than crashing the caller — a

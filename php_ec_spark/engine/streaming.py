@@ -19,32 +19,49 @@ Scale: state is partitioned by correlation key exactly like the batch
 path; a micro-batch shuffles only its own rows; state store IO is
 incremental (RocksDB provider recommended on a real cluster).
 
-Live-path cost model (recorded round-6/7 profiles — this CORRECTS round
-5's "~0.5 s per state partition per batch"; ``perfbench/run.py
---workload live_ingest --trace 1`` reports the same breakdown:
-``streaming.add_batch_ms_p50``, ``wal_commit_ms_p50``,
-``query_planning_ms_p50``, ``engine.streaming.state_commit_ms_p50`` and
-``state_update_ms_p50``):
+Live-path cost model (``perfbench/run.py --workload live_ingest --trace
+1`` reports the per-batch breakdown: ``streaming.add_batch_ms_p50``,
+``wal_commit_ms_p50``, ``query_planning_ms_p50``,
+``engine.streaming.state_commit_ms_p50`` and ``state_update_ms_p50``):
 
-- the apparent 0.5 s/partition linear tax was NOT Spark-internal: it
-  was ``ActionDispatcher`` consuming the emission batch with
-  ``toLocalIterator`` on the raw stateful plan, which executes state
-  partitions one job at a time (serially). Fixed by an eager
+- the round-5 "~0.5 s per state partition per batch" tax was NOT
+  Spark-internal: it was ``ActionDispatcher`` consuming the emission
+  batch with ``toLocalIterator`` on the raw stateful plan, which executes
+  state partitions one job at a time (serially). Fixed by an eager
   ``localCheckpoint`` in the dispatcher (streaming/sinks.py) — the
   stateful op itself parallelizes normally;
-- the true per-partition slope is ~40 ms/batch (state store
-  load/commit + task overhead; 100k-event batch addBatch: ~1.3 s at
-  8 partitions, ~1.9 s at 32, trivial-handler floor ~1.4/1.7 s);
-- the dominant per-batch cost is PER-KEY Python handler overhead —
-  profiled ~1.9 ms/key fixed before the round-6 rewrite, ~0.6 ms
-  after (numpy lexsort replaces pandas sort_values, shared
+- the per-batch fixed cost was mostly PySpark worker start-up. At every
+  task start a worker calls ``importlib.invalidate_caches()``, and before
+  Python 3.13 each of its ~16 zip importers (``pyspark.zip``, the py4j
+  zip, the spark-core jar) re-read its archive's whole directory:
+  170–280 ms per task start, measured inside a reused worker. A state
+  task starts two Python runners per batch — the update runner and the
+  timed-out-key runner, which Spark starts even when no key has timed
+  out — so it paid that twice. Importing this package now makes a
+  reused worker re-read an archive only when its stat changed
+  (``php_ec_spark/__init__.py``; ~4 ms per task start). Measured on a 4-vCPU box (``local[4]``,
+  4 state partitions, ~2,000-row micro-batches over 100 keys, seed 1,
+  two traced runs per side), before → after, per-batch p50: state update
+  summed over the 4 state tasks 4,262–4,718 → 1,566–1,687 ms, of it the
+  timed-out-key runners (``allRemovalsTimeMs``) 1,414 → 177 ms;
+  ``addBatch`` 1,986–2,282 → 1,207–1,385 ms; state commit summed
+  339–400 → 436–501 ms (it rose);
+- what remains per batch: the two Python runners per state task; about
+  100 ms of state commit per task, part of it Hadoop local-FS process
+  spawns (libhadoop is not loaded, so the local file system forks
+  ``readlink``/``chmod``: a JFR profile counted 1,154 of them in a 50 s
+  run, 1,162 process starts in all, about 4.5 ms each); and on the
+  driver about 250 ms of action dispatch and 120 ms of memory absorb;
+- the per-KEY Python handler overhead is ~0.6 ms (~1.9 ms before the
+  round-6 rewrite: numpy lexsort replaces pandas sort_values, shared
   empty-emission frame replaces per-call DataFrame construction,
-  one-shot ``tolist`` replaces per-element numpy boxing). Measured
-  catch-up: ~85k events/s end-to-end at 8 partitions for a 400k
-  batch, floor-pinned in tests/test_engine_perf.py.
+  one-shot ``tolist`` replaces per-element numpy boxing). It dominates
+  large catch-up batches: ~85k events/s end-to-end at 8 partitions for a
+  400k batch, floor-pinned in tests/test_engine_perf.py.
 
 ``spark.sql.shuffle.partitions`` still sizes the stateful op: size it
-to live key volume (keys/partition × 0.6 ms bounds addBatch), not the
+to live key volume (each partition is one state task with the fixed
+cost above; keys/partition × 0.6 ms is the handler's share), not the
 batch-path default — and note Spark PINS the state partition count at
 the query's FIRST start; changing it later needs a fresh checkpoint
 (warm-start via snapshot/import to keep state).

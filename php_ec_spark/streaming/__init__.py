@@ -82,9 +82,13 @@ def start_correlation(
     double-dispatching — the reference's errored-action replay + marker
     bookkeeping (W12, Scheduler.php:766-884).
 
-    ``state_partitions`` sizes the stateful operator's partition count
-    (per-partition slope ~40 ms/batch; the dominant live cost is per-KEY
-    handler overhead ~0.6 ms — see engine/streaming.py's cost model).
+    ``state_partitions`` sizes the stateful operator's partition count.
+    Each partition is one state task per micro-batch with two Python
+    runners and ~100 ms of state commit; on a 4-vCPU box at 4 partitions
+    state update sums to ~1.6 s per batch (~4.5 s before reused workers
+    stopped re-reading ``pyspark.zip`` at every task start), and the
+    per-KEY handler cost is ~0.6 ms — see engine/streaming.py's cost
+    model.
     Spark reads ``spark.sql.shuffle.partitions`` when the query plans its
     first batch and PINS it in the checkpoint, so this sets the conf
     around ``start()`` and restores it after — do not plan other queries

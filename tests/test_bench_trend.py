@@ -297,6 +297,39 @@ class TestBenchTrend:
         assert "!" not in rows["4"], "same fp as last same-sf round"
         assert rows["5"].rstrip().endswith("cccccccccccc!")
 
+    def test_one_bucket_fp_flip_is_not_drift(self, tmp_path):
+        """A byte count at a quantization bucket boundary can flip the fp
+        between identical plans; with both rounds' sidecar metrics at
+        hand, a move of one bucket prints no '!', a move of two does."""
+        sys.path.insert(0, os.path.dirname(os.path.dirname(TOOL)))
+        import bench
+
+        def at_bucket(b: int) -> int:
+            x = int(2 ** ((b - 1) / 256))
+            while bench.byte_bucket(x) < b:
+                x += 1
+            return x
+
+        b0 = bench.byte_bucket(1_000_000)
+        rows_in = []
+        for n, b in ((2, b0), (3, b0 + 1), (4, b0 + 3)):
+            m = {"qa": {"shuffle_read": at_bucket(b), "shuffle_write": 0,
+                        "tasks": 8}}
+            fp = bench.plan_fingerprint(m)
+            _write(tmp_path, n, {"value": 10.0, "sf": 0.1,
+                                 "default_parallelism": 4, "plan_fp": fp})
+            rows_in.append({"utc": f"2026-10-1{n}T00:00:00+00:00",
+                            "sf": 0.1, "default_parallelism": 4,
+                            "plan_fp": fp, "metrics": m})
+        with open(os.path.join(tmp_path, "BENCH_METRICS.jsonl"), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in rows_in)
+        out = _run(tmp_path)
+        rows = {ln.split()[0]: ln for ln in out.splitlines()
+                if ln.strip() and ln.split()[0].isdigit()}
+        assert rows_in[0]["plan_fp"] != rows_in[1]["plan_fp"]
+        assert "!" not in rows["3"], "one bucket apart is not drift"
+        assert rows["4"].rstrip().endswith(rows_in[2]["plan_fp"] + "!")
+
     def test_sidecar_limit_zero_shows_no_sidecar_columns(self, tmp_path):
         _fixture(tmp_path)
         m = {"qa": {"shuffle_read": 1, "shuffle_write": 0, "spill_mem": 0,

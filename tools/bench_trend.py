@@ -16,7 +16,12 @@ per-query (shuffle bytes, tasks) — read from the artifact's ``plan_fp``
 field (r17+) or recomputed from legacy inline metrics, with a ``!``
 marking any round whose fingerprint differs from the previous
 fingerprinted round at the same (sf, default_parallelism) — a plan
-change; drill in with ``--metrics``.
+change; drill in with ``--metrics``. When both rounds' per-query
+metrics are at hand (inline, or the sidecar row carrying the round's
+``plan_fp``), a differing fp is flagged only if some query's task count
+changed or a shuffle-byte field moved by more than one quantization
+bucket: a one-bucket flip is codec jitter at a bucket boundary, not a
+plan change.
 
 Sidecar hygiene: BENCH_METRICS.jsonl is append-on-run from every actor
 (builder, driver, judge), so it grows monotonically. Committed policy:
@@ -44,7 +49,7 @@ import sys
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
-from bench import plan_fingerprint  # noqa: E402
+from bench import byte_bucket, plan_fingerprint  # noqa: E402
 
 
 def _flag_val(name: str, default: int) -> int:
@@ -54,6 +59,27 @@ def _flag_val(name: str, default: int) -> int:
         if a.startswith(f"--{name}="):
             return int(a.split("=", 1)[1])
     return default
+
+
+def within_one_bucket(a: dict, b: dict) -> bool:
+    """True when two rounds' per-query plan metrics describe the same
+    plan up to ``plan_fingerprint``'s residual: the same queries, the
+    same task counts, and each shuffle read/write bucket moved by at
+    most one. Partial blocks are skipped, as the fingerprint skips
+    them."""
+    fields = ("shuffle_read", "shuffle_write", "tasks")
+
+    def full(ms: dict) -> dict:
+        return {q: m for q, m in ms.items()
+                if m and all(k in m for k in fields)}
+
+    a, b = full(a), full(b)
+    return a.keys() == b.keys() and all(
+        a[q]["tasks"] == b[q]["tasks"]
+        and all(abs(byte_bucket(a[q][k]) - byte_bucket(b[q][k])) <= 1
+                for k in fields[:2])
+        for q in a
+    )
 
 
 def load_rounds(root: str) -> "list[tuple[int, dict, str]]":
@@ -100,6 +126,8 @@ def main() -> None:
 
     print(f"{'round':>5}  {'raw s':>8}  {'eps':>8}  {'pure eps':>8}  "
           f"{'par':>4}  {'plan fp':>13}")
+    side_by_fp = {fp: ms for *_, ms, fp in load_sidecar_metrics(root)
+                  if fp}
     fp_prev_by_sf: dict = {}
     fp_drifted = False
     for n, p, _ in rounds:
@@ -107,6 +135,7 @@ def main() -> None:
         # can survive a measurement that lost its headline (r15's
         # truncated tail kept 7 metrics blocks but no totals)
         fp = p.get("plan_fp") or plan_fingerprint(p.get("metrics"))
+        ms = p.get("metrics") or side_by_fp.get(fp)
         fp_cell = fp or "-"
         # drift compares PER (sf, default_parallelism): byte metrics
         # from different sf differ by data size alone, and task counts
@@ -115,11 +144,14 @@ def main() -> None:
         # changes against a local[32] history
         par = p.get("default_parallelism")
         scope = (p.get("sf"), par)
-        if fp and fp_prev_by_sf.get(scope) not in (None, fp):
+        prev_fp, prev_ms = fp_prev_by_sf.get(scope, (None, None))
+        if fp and prev_fp not in (None, fp) and not (
+            ms and prev_ms and within_one_bucket(prev_ms, ms)
+        ):
             fp_cell += "!"          # plan drift vs previous fp'd round
             fp_drifted = True
         if fp:
-            fp_prev_by_sf[scope] = fp
+            fp_prev_by_sf[scope] = (fp, ms)
         if p.get("value") is None:
             print(f"{n:>5}  {'-':>8}  {'-':>8}  {'-':>8}  {'-':>4}  "
                   f"{fp_cell:>13}")
@@ -131,8 +163,10 @@ def main() -> None:
               f"{fp_cell:>13}")
     if fp_drifted:
         print("(! = plan fingerprint changed vs the previous "
-              "fingerprinted round at the same sf and parallelism — load "
-              "cannot fake it; diff the bytes with --metrics)")
+              "fingerprinted round at the same sf and parallelism, by "
+              "more than one byte bucket where both rounds' metrics are "
+              "known — load cannot fake it; diff the bytes with "
+              "--metrics)")
 
     if "--queries" in sys.argv:
         # per-query raw min-of-N seconds, one column per round
@@ -183,7 +217,7 @@ def main() -> None:
         side = load_sidecar_metrics(root)
         if side:
             sf_newest, par_newest = side[-1][:2]
-            same_sf = [(lab, ms) for sf, par, lab, ms in side
+            same_sf = [(lab, ms) for sf, par, lab, ms, _fp in side
                        if (sf, par) == (sf_newest, par_newest)]
             if len(same_sf) < len(side):
                 print(f"(sidecar: {len(side) - len(same_sf)} entries at "
@@ -273,11 +307,11 @@ def prune_sidecar(root: str, keep: int) -> None:
 
 def load_sidecar_metrics(
     root: str,
-) -> "list[tuple[object, object, str, dict]]":
+) -> "list[tuple[object, object, str, dict, object]]":
     """BENCH_METRICS.jsonl entries as (sf, default_parallelism, label,
-    metrics) columns, oldest first; labels are the UTC stamp compressed
-    to MMDD.HHMM. Rows written before the sidecar recorded parallelism
-    carry None there."""
+    metrics, plan_fp) columns, oldest first; labels are the UTC stamp
+    compressed to MMDD.HHMM. Rows written before the sidecar recorded
+    parallelism carry None there."""
     cols = []
     path = os.path.join(root, "BENCH_METRICS.jsonl")
     try:
@@ -296,7 +330,7 @@ def load_sidecar_metrics(
                 lab = (utc[5:7] + utc[8:10] + "." + utc[11:13]
                        + utc[14:16]) if len(utc) >= 16 else "side"
                 cols.append((rec.get("sf"), rec.get("default_parallelism"),
-                             lab, rec["metrics"]))
+                             lab, rec["metrics"], rec.get("plan_fp")))
     except OSError:
         pass
     return cols
