@@ -137,15 +137,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         inc_emb = emb.filter(F.col("vec_id") < 50).select(
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )  # re-embeds of stored docs: every one should flag
-        # mode='auto' (default): this toy increment broadcasts; a real
-        # daily increment past the 256 MiB budget probes through the
-        # distributed path with no driver transit (shards='auto'
-        # self-sizes the skew valve from live per-cluster counts when
-        # one cluster dominates). A per-trigger foreachBatch caller would
-        # instead skip the per-call guard jobs explicitly:
-        # mode='broadcast', broadcast_budget_bytes=0 (size known by
-        # construction) + verify_clusters=False (index health checked
-        # out-of-band, not per micro-batch).
+        # the probe cogroups the increment against the pruned clusters
+        # executor-side, so a real daily increment of any size never
+        # transits the driver (shards='auto' self-sizes the skew valve
+        # from live per-cluster counts when one cluster dominates). A
+        # per-trigger foreachBatch caller would pass
+        # verify_clusters=False (index health checked out-of-band, not
+        # per micro-batch).
         probed_emb = embedding_dup_probe(
             spark, idx, inc_emb, threshold=0.999, cluster_col=ccol
         )

@@ -1153,7 +1153,6 @@ def dedup_clusters(
     id_col: str = "doc_id",
     max_iters: int = 20,
     stats: "dict | None" = None,
-    driver_fastpath_max_edges: int = 100_000,
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the similar-pair
     graph, labeled by the minimum doc id in each component.
@@ -1176,10 +1175,6 @@ def dedup_clusters(
     singletons at the end. This is the deliberately non-SQL-shaped
     algorithm of the operator set — the DuckDB oracle uses a recursive CTE
     to derive the same labeling.
-    ``driver_fastpath_max_edges`` passes through to
-    :func:`connected_components` (round 15): a pair graph that counts at
-    or under it is labeled by exact union-find on the driver instead of
-    the star loop; ``0`` forces the distributed loop.
 
     Output: (doc_id, cluster_id) for EVERY document; singletons label
     themselves.
@@ -1187,10 +1182,7 @@ def dedup_clusters(
     pairs = minhash_lsh_pairs(
         df, threshold=threshold, n=n, text_col=text_col, id_col=id_col,
     ).select("doc_a", "doc_b")
-    labels = connected_components(
-        pairs, max_iters=max_iters, stats=stats,
-        driver_fastpath_max_edges=driver_fastpath_max_edges,
-    )
+    labels = connected_components(pairs, max_iters=max_iters, stats=stats)
     # labels holds non-center rows only; component centers and the
     # singletons (the vast majority at scale) never entered it: join the
     # labels back over the full corpus, every other doc labels itself

@@ -9,7 +9,9 @@ Two paths:
   not O(|corpus|·|queries|).
 - :func:`ivf_topk` — IVF-style approximate path: corpus is bucketed by a
   coarse quantizer (nearest of C centroids), queries probe only the
-  ``nprobe`` nearest buckets.
+  ``nprobe`` nearest buckets. Probe rows and corpus rows meet executor-side
+  in a cogroup on the cluster key (:func:`_distributed_candidates`); no
+  query vector transits the driver.
 - :func:`ivf_build` / :func:`ivf_search` — the persistent form of the
   same index: build ONCE (centroid table + corpus written partitioned by
   cluster), search MANY times with partition pruning — each search reads
@@ -89,28 +91,21 @@ def _pad_for(k: int) -> int:
     return max(16, k)
 
 
-def _dedup_ids(pdf, cols: list):
+def _dedup_ids(pdf, id_col: str):
     """Drop physically duplicated rows inside one kernel batch, keyed on
-    ``cols`` (unique-key corpus contract: same key ⇒ same vector, so
+    ``id_col`` (unique-key corpus contract: same id ⇒ same vector, so
     which copy survives is immaterial). Without this, crash-replay
     residue rows each consumed a top-(k+pad) candidate slot — with >pad
     copies above the true k-th, a genuine neighbor could be evicted
-    before the exact re-rank ever saw it (round-12 advice). The key MUST
-    include the cluster column wherever the batch can span clusters
-    (:func:`_ivf_candidates`): the same id filed under two clusters is
-    two legitimate index entries (:func:`ivf_compact`'s documented
-    case), and an id-only dedup there silently dropped one of them
-    whenever a coalesced scan packed both partition files into one
-    Arrow batch (round-13 review catch — results were
-    partitioning-dependent). No-op (zero copy) on the unique fast
-    path: ``cols`` puts the id LAST, and a unique id column implies a
-    unique composite key, so the single-column is_unique probe covers
-    the multi-column case too (second review catch — the first cut
-    paid a two-column hash pass + full batch copy on every batch of
-    the broadcast hot path)."""
-    if pdf[cols[-1]].is_unique:
+    before the exact re-rank ever saw it (round-12 advice). An id-only
+    key is safe because no kernel batch spans clusters: the IVF kernel
+    runs per (cluster, shard) cogroup, so the same id filed under two
+    clusters (two legitimate index entries, :func:`ivf_compact`'s
+    documented case) is scored in two batches. No-op (zero copy) on the
+    unique fast path."""
+    if pdf[id_col].is_unique:
         return pdf
-    return pdf.drop_duplicates(subset=cols)
+    return pdf.drop_duplicates(subset=[id_col])
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -208,6 +203,45 @@ def _collect_matrix(corpus: DataFrame, id_col: str, vec_col: str):
     return ids, M, norms
 
 
+def _gemm_topk(C, nid, Q, qn, qids, k: int, score_block_doubles: int = 1 << 25):
+    """The GEMM candidate kernel :func:`cosine_topk` and the IVF probe
+    (:func:`_distributed_candidates`) share: score corpus block ``C``
+    (ids ``nid``) against queries ``Q`` (norms ``qn``, ids ``qids``) and
+    return ``(query_ids, neighbor_ids)`` arrays of every candidate that
+    survives the per-query top-(k+pad) keep.
+
+    Zero-norm vectors and self-matches score ``-inf`` and are never
+    kept. The keep is TIE-INCLUSIVE: a fixed top-(k+pad) slice would
+    drop arbitrary members of a tie at the boundary (routine in dedup
+    corpora full of duplicate embeddings), making the candidate set —
+    and so the final top-k — partitioning-dependent. Everything scoring
+    >= the (k+pad)-th value is kept instead; the exact re-rank applies
+    the deterministic (cos, id) tie-break over the complete tie class.
+
+    The query axis is chunked so the score block stays <=
+    ``score_block_doubles`` (256 MB of float64 by default) however many
+    queries probe one block; per-query top-(k+pad) is column-independent,
+    so chunking is result-exact."""
+    import numpy as np
+
+    cn = np.sqrt((C * C).sum(axis=1))
+    take = min(k + _pad_for(k), len(nid))
+    chunk = max(16, score_block_doubles // max(len(nid), 1))
+    out_q, out_n = [], []
+    for s in range(0, len(Q), chunk):
+        qs, qns, ids = Q[s : s + chunk], qn[s : s + chunk], qids[s : s + chunk]
+        denom = np.outer(cn, qns)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S = np.where(denom > 0, (C @ qs.T) / denom, -np.inf)
+        S[nid[:, None] == ids[None, :]] = -np.inf  # self-matches out
+        kth = -np.partition(-S, take - 1, axis=0)[take - 1]
+        keep = (S >= kth[None, :]) & np.isfinite(S)
+        ridx, cidx = np.nonzero(keep)
+        out_q.append(ids[cidx])
+        out_n.append(nid[ridx])
+    return np.concatenate(out_q), np.concatenate(out_n)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -224,22 +258,20 @@ def cosine_topk(
 
     Shape: the query matrix is broadcast — this operator's contract is a
     SMALL query side (an eval set, a probe batch); for increment-scale
-    query frames use :func:`ivf_search` with ``mode='distributed'``,
-    which never transits the driver. The contract is ENFORCED, not just
-    documented: a query frame whose raw matrix exceeds
-    ``broadcast_budget_bytes`` (default
+    query frames use :func:`ivf_search`, whose probe never transits the
+    driver. The contract is ENFORCED, not just documented: a query frame
+    whose raw matrix exceeds ``broadcast_budget_bytes`` (default
     :data:`IVF_BROADCAST_BUDGET_BYTES`) raises loudly naming the remedy
-    instead of flooding the driver heap — the same uniform guard as
-    :func:`cosine_dup_pairs` and :func:`ivf_search`'s forced-broadcast
-    path. The guard is one extra Spark job over ``queries``;
-    ``broadcast_budget_bytes=0`` is the explicit trust-me opt-out that
+    instead of flooding the driver heap — the same guard as
+    :func:`cosine_dup_pairs`. The guard is one extra Spark job over
+    ``queries``; ``broadcast_budget_bytes=0`` is the explicit trust-me opt-out that
     skips both the job and the check, for per-batch callers whose query
     frame is tiny by construction but expensive to re-derive.
     The corpus is scanned ONCE with
-    candidates generated per Arrow batch by a dense numpy GEMM (each batch
-    keeps its per-query top k+pad — the global top-k is a subset of the
-    per-batch top-k, and the pad absorbs GEMM-vs-fold float reordering,
-    ~1e-15 ≪ the 6 dp rounding). Candidates (O(batches·|q|·k) rows) are
+    candidates generated per Arrow batch by the dense numpy GEMM kernel
+    :func:`_gemm_topk` (each batch keeps its per-query top k+pad — the
+    global top-k is a subset of the per-batch top-k, and the pad absorbs
+    GEMM-vs-fold float reordering, ~1e-15 ≪ the 6 dp rounding). Candidates (O(batches·|q|·k) rows) are
     then re-scored JVM-side with the sequential-fold dot product, so
     emitted cosines are bit-identical to the oracle arithmetic. Shuffled
     volume is candidates only — never |corpus|·|queries|.
@@ -267,10 +299,10 @@ def cosine_topk(
             f"({n:,} vectors × {d}-d), past the {budget:,}-byte broadcast "
             "budget — collecting it would flood the driver heap. This "
             "operator's contract is a SMALL query side; for "
-            "increment-scale query frames use ivf_search("
-            "mode='distributed') (executor-side probing, no driver "
-            "transit), or raise broadcast_budget_bytes if this driver "
-            "really has the headroom"
+            "increment-scale query frames use ivf_search (distributed "
+            "executor-side probing, no driver transit), or raise "
+            "broadcast_budget_bytes if this driver really has the "
+            "headroom"
         )
     q_pdf = queries.select(id_col, vec_col).toPandas()  # small side, now enforced
     if len(q_pdf) == 0:
@@ -281,35 +313,17 @@ def cosine_topk(
     Q = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf[vec_col]])
     qn = np.sqrt((Q * Q).sum(axis=1))
     bq = spark.sparkContext.broadcast((qids, Q, qn))
-    pad = _pad_for(k)
 
     def gen_candidates(batches):
         q_ids, Qm, q_norms = bq.value
         for pdf in batches:
-            pdf = _dedup_ids(pdf, [id_col])
+            pdf = _dedup_ids(pdf, id_col)
             if len(pdf) == 0:
                 continue
             C = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
             nid = pdf[id_col].to_numpy(dtype=np.int64)
-            cn = np.sqrt((C * C).sum(axis=1))
-            denom = np.outer(cn, q_norms)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom > 0, (C @ Qm.T) / denom, -np.inf)
-            S[nid[:, None] == q_ids[None, :]] = -np.inf  # self-matches out
-            take = min(k + pad, len(nid))
-            # TIE-INCLUSIVE keep: a fixed top-(k+pad) slice would drop
-            # arbitrary members of a tie at the boundary (routine in dedup
-            # corpora full of duplicate embeddings), making the candidate
-            # set — and so the final top-k — partitioning-dependent. Keep
-            # everything scoring >= the take-th value instead; the exact
-            # re-rank applies the deterministic (cos, id) tie-break over
-            # the complete tie class.
-            kth = -np.partition(-S, take - 1, axis=0)[take - 1]
-            keep = (S >= kth[None, :]) & np.isfinite(S)
-            ridx, cidx = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"query_id": q_ids[cidx], "neighbor_id": nid[ridx]}
-            )
+            cq, cn = _gemm_topk(C, nid, Qm, q_norms, q_ids, k)
+            yield pd.DataFrame({"query_id": cq, "neighbor_id": cn})
 
     cand = corpus.select(id_col, vec_col).mapInPandas(
         gen_candidates, schema="query_id long, neighbor_id long"
@@ -437,8 +451,7 @@ def cosine_dup_pairs(
         else broadcast_budget_bytes
     )
     # budget == 0 disables the guard (explicit trust-me, same contract
-    # as cosine_topk — there is no auto/distributed mode here to confuse
-    # it with)
+    # as cosine_topk)
     n, d, est_bytes = (
         (0, 0, 0) if budget == 0 else _estimate_matrix_bytes(corpus, vec_col)
     )
@@ -539,10 +552,10 @@ def _probe_pairs(
     """(query_id, cluster): each query's ``nprobe`` nearest centroids.
     Deterministic — centroid cosines round to 6 dp and ties break on
     cluster id, so probe sets are reproducible across engines/runs.
-    Deliberately does NOT carry the query vector: the pair table is the
-    small driver-crossing side (ids + cluster values only); vectors
-    travel separately as executor-packed bytes (:func:`_collect_probes`)
-    or executor-joined rows (:func:`_probe_vec_rows`).
+    Deliberately does NOT carry the query vector: the pair table is
+    pinned and its distinct clusters collected for the pruning
+    predicate (ids + cluster values only); vectors join back
+    executor-side (:func:`_probe_vec_rows`).
 
     Scale shape: the |q|·C (query × centroid) score rows never shuffle —
     the ``row_number <= nprobe`` filter plans as a PARTIAL
@@ -564,140 +577,12 @@ def _probe_pairs(
     )
 
 
-def _collect_probes(
-    queries: DataFrame,
-    cents: DataFrame,
-    nprobe: int,
-    vec_col: str,
-    id_col: str,
-):
-    """Assemble the probe structure ``(qids, Q, qnorms, by_cluster)`` for
-    :func:`_ivf_candidates` WITHOUT a driver-side pandas round-trip.
-
-    The previous shape collected the full probe table — query_id + the
-    query VECTOR × nprobe — as per-row pandas objects; fine for a small
-    query batch, but pandas-object transit costs ~10× the raw bytes in
-    driver heap. (Whole daily increments no longer come through here at
-    all: above :data:`IVF_BROADCAST_BUDGET_BYTES`, ``mode='auto'`` routes
-    them to the DISTRIBUTED path — :func:`_distributed_candidates` — with
-    no driver transit whatsoever.) Instead:
-
-    - vectors cross once (not ×nprobe) as executor-packed raw bytes via
-      :func:`_collect_matrix`;
-    - the query→cluster probe assignment crosses as ≤C rows of
-      ``(cluster, [query ids])`` — bounded by the centroid count, not the
-      query count, and carrying no vectors.
-
-    Returns ``None`` when there are no queries or no centroids.
-    ``by_cluster`` maps cluster key → sorted row indices into ``Q``."""
-    packed = _collect_matrix(queries.select(id_col, vec_col), id_col, vec_col)
-    if packed is None:
-        return None
-    qids, Q, qn = packed
-    idx_of = {int(q): i for i, q in enumerate(qids)}
-    rows = (
-        _probe_pairs(queries, cents, nprobe, vec_col, id_col)
-        .groupBy("cluster")
-        .agg(F.collect_list("query_id").alias("qids"))
-        .collect()
-    )
-    if not rows:
-        return None
-    # the matrix collect and the probe-pairs collect are two separate
-    # jobs over `queries`; a frame that is not deterministic across jobs
-    # (sample()/limit() without ordering, a path being written
-    # concurrently) yields different row sets and would otherwise
-    # mis-probe or crash obscurely. The check must be SYMMETRIC: an id
-    # only in the pairs job would KeyError below, but an id only in the
-    # matrix job would silently return no rows for that query.
-    probed_ids = {int(q) for r in rows for q in r.qids}
-    if probed_ids != set(idx_of):
-        diff = sorted(probed_ids ^ set(idx_of))[:5]
-        raise ValueError(
-            f"ivf probe: query ids {diff} appear in only one of the two "
-            "collection jobs (vector collect vs centroid probe) — the "
-            "queries DataFrame must be deterministic across jobs (avoid "
-            "un-ordered sample()/limit(); pin it with localCheckpoint() "
-            "before searching)"
-        )
-    by_cluster = {
-        _cluster_key(r.cluster): sorted(idx_of[int(q)] for q in r.qids)
-        for r in rows
-    }
-    return qids, Q, qn, by_cluster
-
-
-def _ivf_candidates(
-    corpus: DataFrame,
-    probes,
-    k: int,
-    cluster_col: str,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """One corpus scan → (query_id, neighbor_id) candidates: per-cluster
-    numpy GEMM restricted to the queries probing that cluster (``probes``
-    is :func:`_collect_probes`' packed structure, broadcast to
-    executors)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    qids, Q, qn, by_cluster = probes
-    bq = spark.sparkContext.broadcast((qids, Q, qn, by_cluster))
-    pad = _pad_for(k)
-
-    def gen_candidates(batches):
-        q_ids, Qm, q_norms, probing = bq.value
-        for pdf in batches:
-            # keyed on (cluster, id): a batch here can span clusters
-            # (coalesced scan of many small partition files), and the
-            # same id in two clusters is two legitimate entries
-            pdf = _dedup_ids(pdf, [cluster_col, id_col])
-            if len(pdf) == 0:
-                continue
-            out_q, out_n = [], []
-            # dropna=False: pandas' default silently drops a NULL cluster
-            # label, making those corpus rows unsearchable even though
-            # build_centroids (Spark groupBy keeps nulls) emits a
-            # probe-able centroid for them
-            for cl, grp in pdf.groupby(cluster_col, sort=False, dropna=False):
-                idxs = probing.get(_cluster_key(cl))
-                if not idxs:
-                    continue  # cluster probed by no query: pruned entirely
-                C = np.stack([np.asarray(v, dtype=np.float64) for v in grp[vec_col]])
-                nid = grp[id_col].to_numpy(dtype=np.int64)
-                cn = np.sqrt((C * C).sum(axis=1))
-                sub_ids, sub_Q, sub_n = q_ids[idxs], Qm[idxs], q_norms[idxs]
-                denom = np.outer(cn, sub_n)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(denom > 0, (C @ sub_Q.T) / denom, -np.inf)
-                S[nid[:, None] == sub_ids[None, :]] = -np.inf
-                take = min(k + pad, len(nid))
-                # tie-inclusive keep — see cosine_topk's kernel
-                kth = -np.partition(-S, take - 1, axis=0)[take - 1]
-                keep = (S >= kth[None, :]) & np.isfinite(S)
-                ridx, cidx = np.nonzero(keep)
-                out_q.append(sub_ids[cidx])
-                out_n.append(nid[ridx])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                    }
-                )
-
-    return corpus.select(id_col, cluster_col, vec_col).mapInPandas(
-        gen_candidates, schema="query_id long, neighbor_id long"
-    )
-
-
-#: Default budget for shipping a query/increment matrix through the driver
-#: as a broadcast (raw bytes: 8·n·(dim+1)). Above this, ``ivf_search``'s
-#: ``mode='auto'`` switches to the distributed probe path instead of
-#: collecting the matrix — ~10 M × 768-d float64 daily-increment vectors
-#: are ~60 GB, far past any driver heap, and must never transit it.
+#: Default budget for shipping a vector matrix through the driver as a
+#: broadcast (raw bytes: 8·n·(dim+1)): :func:`cosine_topk`'s query side
+#: and :func:`cosine_dup_pairs`' corpus raise above it. Increment-scale
+#: query frames go through :func:`ivf_search`, which never collects them
+#: — ~10 M × 768-d float64 daily-increment vectors are ~60 GB, far past
+#: any driver heap.
 IVF_BROADCAST_BUDGET_BYTES = 256 << 20
 
 #: Target raw bytes (8·rows·(dim+1)) of ONE cluster-shard's corpus block
@@ -758,60 +643,13 @@ def _estimate_matrix_bytes(df: DataFrame, vec_col: str):
     return est.n, est.d, est.n * ((est.d or 0) + 1) * 8
 
 
-def _resolve_probe_mode(
-    queries: DataFrame, mode: str, budget: "int | None", vec_col: str
-) -> str:
-    """Pick broadcast vs distributed probing for a query increment.
-
-    ``auto`` estimates the raw broadcast payload (8·n·(dim+1) bytes — the
-    exact size :func:`_collect_matrix` ships) with one count/max-size
-    job over the increment and goes distributed above ``budget``
-    (default :data:`IVF_BROADCAST_BUDGET_BYTES`). Forcing
-    ``mode='broadcast'`` above the budget raises loudly instead of
-    silently flooding the driver — the connected-components guard
-    pattern: the failure names the fix. The one escape hatch:
-    ``mode='broadcast'`` WITH ``budget=0`` skips the estimation job
-    entirely (per-trigger trust-me); under ``auto`` a zero budget keeps
-    meaning "nothing fits" and routes distributed."""
-    if mode == "distributed":
-        return "distributed"
-    if mode not in ("auto", "broadcast"):
-        raise ValueError(
-            f"ivf probe mode must be 'auto', 'broadcast' or 'distributed',"
-            f" got {mode!r}"
-        )
-    budget = IVF_BROADCAST_BUDGET_BYTES if budget is None else budget
-    if mode == "broadcast" and budget == 0:
-        # explicit trust-me opt-out for per-trigger callers: skip the
-        # estimation job entirely. ONLY honored with an explicit
-        # mode='broadcast' — under 'auto' a zero budget keeps meaning
-        # "nothing fits a broadcast" and routes distributed, so the two
-        # spellings can never be confused into an accidental unbounded
-        # driver collect.
-        return "broadcast"
-    n, d, est_bytes = _estimate_matrix_bytes(queries, vec_col)
-    if est_bytes <= budget:
-        return "broadcast"
-    if mode == "broadcast":
-        raise RuntimeError(
-            f"ivf probe: the query increment is ~{est_bytes:,} raw bytes "
-            f"({n:,} vectors × {d}-d), past the "
-            f"{budget:,}-byte broadcast budget — collecting it to the "
-            "driver would flood the driver heap. Use mode='auto' or "
-            "mode='distributed' (executor-side probe assignment, no "
-            "driver transit), or raise broadcast_budget_bytes if this "
-            "driver really has the headroom"
-        )
-    return "distributed"
-
-
 def _probe_vec_rows(
     pairs: DataFrame,
     queries: DataFrame,
     vec_col: str,
     id_col: str,
 ) -> DataFrame:
-    """(query_id, cluster, qv) probe rows for the DISTRIBUTED path: the
+    """(query_id, cluster, qv) probe rows for the IVF probe: the
     caller's :func:`_probe_pairs` frame — the SAME plan object that built
     the pruning predicate, so probe rows and prune cannot be computed
     from two divergent expressions — joined back to the query vectors
@@ -826,8 +664,7 @@ def _probe_vec_rows(
 
 def _prune_predicate(probed, cluster_col: str):
     """Partition-pruning predicate from the ≤C distinct probed cluster
-    values (shared by both probe modes — NULL probes read the default
-    partition back as IS NULL)."""
+    values (NULL probes read the default partition back as IS NULL)."""
     non_null = [c for c in probed if c is not None]
     pred = F.col(cluster_col).isin(non_null) if non_null else F.lit(False)
     if None in probed:
@@ -838,9 +675,9 @@ def _prune_predicate(probed, cluster_col: str):
 def _check_clusters_present(
     expected, present, context: str
 ) -> None:
-    """The ONE lost-cluster presence guard (three call sites: the
-    broadcast branch, the sharded/excluded distributed branch, and the
-    ingest startup health check) — a cluster that should have corpus
+    """The ONE lost-cluster presence guard outside the cogroup kernel
+    (two call sites: :func:`ivf_search`'s sharded/excluded branch and
+    the ingest startup health check) — a cluster that should have corpus
     rows but has none means lost partition files or a label that
     round-tripped through partition-type inference. Both sides are
     normalized through :func:`_cluster_key` so int/float/NULL renderings
@@ -889,10 +726,9 @@ def _distributed_candidates(
     """(query_id, neighbor_id) candidates with NO driver transit: the
     probe rows shuffle by their probed cluster and cogroup against the
     (partition-pruned) corpus on the cluster key; each cogroup runs the
-    same per-cluster GEMM + tie-inclusive top-(k+pad) kernel as
-    :func:`_ivf_candidates`. Shuffled volume is the increment (×nprobe,
-    ×shards) plus the probed nprobe/C slice of the corpus — executor to
-    executor, never through the driver.
+    GEMM + tie-inclusive top-(k+pad) kernel :func:`_gemm_topk`. Shuffled
+    volume is the increment (×nprobe, ×shards) plus the probed nprobe/C
+    slice of the corpus — executor to executor, never through the driver.
 
     ``shards > 1`` splits each corpus cluster into hash shards and
     replicates the probing queries to every shard — the skew valve when a
@@ -902,11 +738,10 @@ def _distributed_candidates(
     is shard-count-invariant (pinned in tests).
 
     Memory inside a cogroup: the corpus axis is bounded by ``shards``
-    (the caller's valve); the QUERY axis is chunked internally so the
-    score block never exceeds ~2^25 doubles (the per-query top-(k+pad)
-    is column-independent, so chunking cannot change the result) — a
-    popular cluster probed by 100k increment queries must not
-    materialize a |cluster|×100k matrix."""
+    (the caller's valve); the QUERY axis is chunked by the kernel so the
+    score block never exceeds ``score_block_doubles`` — a popular cluster
+    probed by 100k increment queries must not materialize a
+    |cluster|×100k matrix."""
     import numpy as np
     import pandas as pd
 
@@ -933,7 +768,6 @@ def _distributed_candidates(
         p = p.withColumn(
             "__sh", F.explode(F.sequence(F.lit(0), F.lit(shards - 1)))
         )
-    pad = _pad_for(k)
     empty = pd.DataFrame(
         {
             "query_id": pd.Series([], dtype="int64"),
@@ -969,39 +803,19 @@ def _distributed_candidates(
                 "string labels round-tripped as numbers through "
                 "partition-type inference (see ivf_build notes)"
             )
-        # a cogroup is one (cluster, shard) — id-only key is safe here
-        left = _dedup_ids(left, ["__nid"])
+        left = _dedup_ids(left, "__nid")
         C = np.stack([np.asarray(v, dtype=np.float64) for v in left["__cv"]])
-        nid = left["__nid"].to_numpy(dtype=np.int64)
         Q = np.stack([np.asarray(v, dtype=np.float64) for v in right["qv"]])
-        qid = right["query_id"].to_numpy(dtype=np.int64)
-        cn = np.sqrt((C * C).sum(axis=1))
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        take = min(k + pad, len(nid))
-        # chunk the query axis so the score block stays <=
-        # score_block_doubles (256 MB of float64 by default) no matter
-        # how many increment queries probe this cluster; per-query
-        # top-(take) is column-independent so chunking is result-exact
-        chunk = max(16, score_block_doubles // max(len(nid), 1))
-        out_q, out_n = [], []
-        for s in range(0, len(Q), chunk):
-            qs, qns, qids = Q[s : s + chunk], qn[s : s + chunk], qid[s : s + chunk]
-            denom = np.outer(cn, qns)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom > 0, (C @ qs.T) / denom, -np.inf)
-            S[nid[:, None] == qids[None, :]] = -np.inf
-            # tie-inclusive keep — see cosine_topk's kernel
-            kth = -np.partition(-S, take - 1, axis=0)[take - 1]
-            keep = (S >= kth[None, :]) & np.isfinite(S)
-            ridx, cidx = np.nonzero(keep)
-            out_q.append(qids[cidx])
-            out_n.append(nid[ridx])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-            }
+        cq, cn = _gemm_topk(
+            C,
+            left["__nid"].to_numpy(dtype=np.int64),
+            Q,
+            np.sqrt((Q * Q).sum(axis=1)),
+            right["query_id"].to_numpy(dtype=np.int64),
+            k,
+            score_block_doubles,
         )
+        return pd.DataFrame({"query_id": cq, "neighbor_id": cn})
 
     return (
         c.groupBy(*keys)
@@ -1022,25 +836,27 @@ def ivf_topk(
     """IVF approximate top-k in one pass: centroids, probes, and scoring
     against an in-memory (unindexed) corpus.
 
-    Scoring inside the probed clusters runs as a per-batch numpy GEMM +
-    JVM exact re-rank (see :func:`cosine_topk`), restricted per row to
-    the queries probing that row's cluster. This single-job form
-    recomputes the centroid table per call and scans the whole corpus
-    once; for the search-many-times contract build the index ONCE with
+    The probe is :func:`ivf_search`'s, minus the index: probe pairs
+    (:func:`_probe_pairs`) join back to their query vectors, cogroup
+    with the corpus on the cluster key for the GEMM kernel
+    (:func:`_distributed_candidates`), and the candidates get the JVM
+    exact re-rank. This single-job form recomputes the centroid table
+    per call and shuffles the whole corpus once; for the
+    search-many-times contract build the index ONCE with
     :func:`ivf_build` and serve queries with :func:`ivf_search`, which
     reads only the probed cluster partitions.
     """
-    spark = corpus.sparkSession
     _require_int_ids(queries, id_col, "ivf_topk")
     _require_int_ids(corpus, id_col, "ivf_topk")
     cents = build_centroids(corpus, cluster_col, vec_col)
-    probes = _collect_probes(queries, cents, nprobe, vec_col, id_col)
-    if probes is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double, rank int"
-        )
-    cand = _ivf_candidates(corpus, probes, k, cluster_col, vec_col, id_col)
-    return _exact_rerank(corpus, queries, cand, k, vec_col, id_col)
+    pairs = _probe_pairs(queries, cents, nprobe, vec_col, id_col)
+    probe_rows = _probe_vec_rows(pairs, queries, vec_col, id_col)
+    cand = _distributed_candidates(
+        corpus, probe_rows, k, cluster_col, vec_col, id_col
+    )
+    return _exact_rerank(
+        corpus, queries, cand, k, vec_col, id_col, distributed=True
+    )
 
 
 def kmeans_centroids(
@@ -1208,7 +1024,6 @@ def semdedup(
     centroids=None,
     sample_size: int = 100_000,
     max_iters: int = 20,
-    driver_fastpath_max_edges: int = 100_000,
 ) -> DataFrame:
     """Semantic deduplication in embedding space (the SemDeDup recipe,
     Abbas et al. 2023, arXiv:2303.09540): k-means-cluster the corpus,
@@ -1240,10 +1055,7 @@ def semdedup(
 
     ``centroids`` accepts a pre-trained matrix (e.g. the quantizer of an
     existing :func:`ivf_build` index) so embedding search and semantic
-    dedup can share one geometry. ``driver_fastpath_max_edges`` passes
-    through to ``connected_components`` (round 15): a dup-pair graph that
-    counts at or under it is labeled by exact union-find on the driver
-    instead of the star loop; ``0`` forces the distributed loop.
+    dedup can share one geometry.
     """
     import numpy as np
 
@@ -1306,7 +1118,6 @@ def semdedup(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         ),
         max_iters=max_iters,
-        driver_fastpath_max_edges=driver_fastpath_max_edges,
         stats=cc_stats,
     )
     # Every group member is ranked, the center included: the labels are
@@ -1388,9 +1199,8 @@ def ivf_build(
     as NULL — those rows stay searchable. Label-type caveat: Spark's
     partition-type INFERENCE re-types directory values on read, so a
     numeric-looking STRING label ('007') reads back as a number (7) and
-    no longer matches its centroid row — searches then miss that cluster
-    (broadcast mode silently, distributed mode loudly via the
-    lost-cluster guard). Use genuinely non-numeric string labels, or set
+    no longer matches its centroid row — searches then raise through
+    the lost-cluster guard instead of finding that cluster. Use genuinely non-numeric string labels, or set
     ``spark.sql.sources.partitionColumnTypeInference.enabled=false``.
 
     With ``n_clusters`` set, ``cluster_col`` is IGNORED and the quantizer
@@ -1554,8 +1364,6 @@ def ivf_search(
     cluster_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    mode: str = "auto",
-    broadcast_budget_bytes: "int | None" = None,
     shards: "int | str" = 1,
     verify_clusters: bool = True,
     exclude_ids: "DataFrame | None" = None,
@@ -1569,40 +1377,19 @@ def ivf_search(
     :func:`ivf_topk`, so the split is output-equivalent for the same
     corpus and parameters.
 
-    Two probe strategies, selected by ``mode``:
+    One probe path, with NO driver-bounded transfer at any increment
+    size (SCALE.md records why it is the only one): probe assignment runs as JVM
+    centroid-broadcast expressions (:func:`_probe_pairs`), the query
+    rows shuffle by probed cluster and cogroup against the pruned corpus
+    partitions (:func:`_distributed_candidates`, ``shards`` is the skew
+    valve), and the exact re-rank joins unhinted. Only the ≤C distinct
+    probed cluster ids ever reach the driver (the pruning predicate
+    needs them). Per-trigger callers (``foreachBatch`` probing each
+    micro-batch) pay no extra per-call job beyond that collect when they
+    pass an explicit int ``shards`` and ``verify_clusters=False``
+    (below).
 
-    - ``broadcast`` — the query matrix is executor-packed, collected once
-      (:func:`_collect_probes`) and broadcast; the corpus is scanned with
-      a per-batch GEMM. Fastest for the search-a-few-queries contract,
-      but the matrix transits the driver: bounded by
-      ``broadcast_budget_bytes`` (default
-      :data:`IVF_BROADCAST_BUDGET_BYTES`) — forcing it past the budget
-      raises rather than flooding the driver heap.
-    - ``distributed`` — the daily-increment shape with NO driver-bounded
-      transfer: probe assignment runs as the same JVM centroid-broadcast
-      expressions, the increment shuffles by probed cluster and cogroups
-      against the pruned corpus partitions (:func:`_distributed_candidates`,
-      ``shards`` is the skew valve), and the exact re-rank joins unhinted.
-      Only the ≤C distinct probed cluster ids ever reach the driver (the
-      pruning predicate needs them).
-    - ``auto`` (default) — one count/max-dim job over the increment picks
-      broadcast below the budget, distributed above it. The budget is a
-      driver-MEMORY guard, not a speed crossover: measured locally
-      (SCALE.md, tools/probe_mode_bench.py) distributed already wins ~5×
-      at a 40k-query increment, far below the byte budget — recurring
-      large-batch probe jobs should pass ``mode='distributed'``
-      explicitly. The estimate is one extra Spark job over ``queries``
-      per call — and ``mode='broadcast'`` alone still pays it (that is
-      what enforces the forced-broadcast budget raise). PER-MICRO-BATCH
-      callers (``foreachBatch`` probing a few hundred rows per trigger,
-      below the budget by construction) skip it with the explicit
-      trust-me spelling ``mode='broadcast', broadcast_budget_bytes=0``;
-      under ``auto`` a zero budget keeps meaning "nothing fits" and
-      routes distributed, so the opt-out cannot be reached by accident.
-      The same callers can drop the per-call lost-cluster presence job
-      with ``verify_clusters=False`` (below).
-
-    ``shards`` (distributed mode only) is the skew valve: it splits each
+    ``shards`` is the skew valve: it splits each
     corpus cluster into hash shards so a popular cluster's vectors fit
     one task. ``shards='auto'`` (round-12 verdict: at 100× the hot
     cluster's size is data-dependent and nobody hand-tunes per batch)
@@ -1634,8 +1421,10 @@ def ivf_search(
     job touching every probed partition's file footers — per-trigger
     hot loops that own their index lifecycle can pass
     ``verify_clusters=False`` and run the check out-of-band instead.
-    The shards=1 distributed kernel keeps its in-kernel guard either
-    way (it is free there).
+    The shards=1 kernel keeps its in-kernel guard either way (it is
+    free there), so a lost cluster still raises without the job; only
+    a sharded or ``exclude_ids`` search with ``verify_clusters=False``
+    goes unchecked.
 
     ``exclude_ids`` (a DataFrame carrying ``id_col``) removes the named
     STORED rows from the search before any scoring — not a post-filter
@@ -1649,21 +1438,13 @@ def ivf_search(
     PRE-exclusion — a cluster emptied by exclusion is legitimate, a
     cluster with no rows at all is still corruption.
 
-    Both modes share cluster selection, kernel arithmetic (GEMM +
-    tie-inclusive top-(k+pad)) and the JVM exact re-rank, so results are
-    mode-invariant (pinned in tests). Like the broadcast path, the
-    distributed path runs multiple Spark jobs over ``queries`` — a frame
-    that is not deterministic across jobs (unordered sample()/limit())
-    must be pinned with localCheckpoint() first.
+    The search runs multiple Spark jobs over ``queries`` — a frame that
+    is not deterministic across jobs (unordered sample()/limit()) must
+    be pinned with localCheckpoint() first.
     """
     cents = spark.read.parquet(f"{path}/centroids")
     _require_int_ids(queries, id_col, "ivf_search")
-    # validate shards AND the block target BEFORE the mode split:
-    # broadcast ignores the valve, and a typo'd value accepted under a
-    # small query frame would only surface months later when the same
-    # call first routes distributed (round-13 review catch, twice: the
-    # first hoist checked type only, so shards=0 — the 0-as-opt-out
-    # typo budget=0 invites — still hid under broadcast routes)
+    # validate shards AND the block target before any Spark job runs
     if shards != "auto" and not (isinstance(shards, int) and shards >= 1):
         raise ValueError(
             f"ivf_search: shards must be an int >= 1 or 'auto', got "
@@ -1675,42 +1456,8 @@ def ivf_search(
             f"{shard_target_block_bytes} — there is no opt-out spelling; "
             "to disable the skew valve pass shards=1 explicitly"
         )
-    mode = _resolve_probe_mode(queries, mode, broadcast_budget_bytes, vec_col)
-    if mode == "broadcast":
-        probes = _collect_probes(queries, cents, nprobe, vec_col, id_col)
-        if probes is None:
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, cos double, rank int"
-            )
-        # the pruning predicate needs only the DISTINCT probed cluster
-        # ids — ≤C values regardless of how large the query increment is
-        probed = set(probes[3])
-        pred = _prune_predicate(probed, cluster_col)
-        corpus = spark.read.parquet(f"{path}/corpus").filter(pred)
-        _require_int_ids(corpus, id_col, "ivf_search (stored corpus)")
-        if verify_clusters:
-            # the same lost-cluster / partition-type-roundtrip corruption
-            # guard the distributed path carries: a probed cluster with
-            # no corpus rows means the index lost that cluster's
-            # partition files (or a numeric-looking STRING label
-            # round-tripped as a number through partition-type
-            # inference). Cost: one distinct over the PARTITION column of
-            # the pruned slice — ≤C result rows and zero data columns
-            # decoded (parquet serves a no-column scan from row-group
-            # counts), but still one Spark job over the probed
-            # partitions' file footers; hot loops opt out via
-            # verify_clusters=False.
-            _check_clusters_present(
-                probed,
-                (r[0] for r in corpus.select(cluster_col).distinct().collect()),
-                "broadcast",
-            )
-        corpus = _apply_exclusion(corpus, exclude_ids, id_col)
-        cand = _ivf_candidates(corpus, probes, k, cluster_col, vec_col, id_col)
-        return _exact_rerank(corpus, queries, cand, k, vec_col, id_col)
-    # distributed: the only driver-crossing payload is the distinct
-    # probed cluster ids (≤C rows), needed for the pruning predicate.
-    # `pairs` is pinned (|q|·nprobe skinny id rows, two consumers — the
+    # the only driver-crossing payload is the distinct probed cluster
+    # ids (≤C rows), needed for the pruning predicate. `pairs` is pinned (|q|·nprobe skinny id rows, two consumers — the
     # pin rule), so the prune collect and the probe rows read the SAME
     # materialized rows: the |q|·C centroid scoring runs once, and a
     # queries frame that is nondeterministic across jobs cannot hand the
@@ -1858,8 +1605,6 @@ def embedding_dup_probe(
     cluster_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    mode: str = "auto",
-    broadcast_budget_bytes: "int | None" = None,
     shards: "int | str" = 1,
     verify_clusters: bool = True,
     exclude_ids: "DataFrame | None" = None,
@@ -1873,15 +1618,10 @@ def embedding_dup_probe(
     :func:`semdedup`.
 
     Cost is one :func:`ivf_search` (centroid probe + partition-pruned
-    scan of nprobe/C of the corpus) — never a corpus rescan; ``mode``/
-    ``broadcast_budget_bytes``/``shards`` pass straight through, so a
-    daily increment past the broadcast budget probes through the
-    distributed path with no driver-bounded transfer. PER-MICRO-BATCH
-    callers (``foreachBatch`` probing each trigger's rows, small by
-    construction) skip the per-call size-estimate job with the explicit
-    trust-me spelling ``mode='broadcast', broadcast_budget_bytes=0``,
-    and the per-call lost-cluster presence job with
-    ``verify_clusters=False`` — see :func:`ivf_search`. Same
+    scan of nprobe/C of the corpus) — never a corpus rescan, and no
+    driver-bounded transfer of the queries at any increment size;
+    ``shards``/``verify_clusters``/``exclude_ids`` pass straight
+    through — see :func:`ivf_search`. Same
     approximation contract as SemDeDup/IVF: a duplicate quantized into a
     cluster the probe misses is not flagged; raise ``nprobe`` to trade
     scan for recall. Output keeps one row per query (left join), so
@@ -1899,7 +1639,6 @@ def embedding_dup_probe(
         ivf_search(
             spark, path, queries, k=1, nprobe=nprobe,
             cluster_col=cluster_col, vec_col=vec_col, id_col=id_col,
-            mode=mode, broadcast_budget_bytes=broadcast_budget_bytes,
             shards=shards, verify_clusters=verify_clusters,
             exclude_ids=exclude_ids,
             shard_target_block_bytes=shard_target_block_bytes,
@@ -1941,8 +1680,6 @@ def streaming_embedding_ingest(
     cluster_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    mode: str = "auto",
-    broadcast_budget_bytes: "int | None" = None,
     drop_dups: bool = True,
     available_now: bool = False,
 ):
@@ -2008,11 +1745,8 @@ def streaming_embedding_ingest(
     corpus) + batch-bounded pair work + one append. The probe runs
     ``verify_clusters=False`` — index health is checked ONCE at stream
     start (the documented out-of-band pattern), not re-paid per trigger.
-    ``mode``/``broadcast_budget_bytes`` pass through; the safe default
-    (``auto``) costs one estimation job per trigger — steady small-batch
-    deployments can pass ``mode='broadcast',
-    broadcast_budget_bytes=0``. Single-writer contract like the text
-    ingest: do not add/compact/rebuild concurrently.
+    Single-writer contract like the text ingest: do not
+    add/compact/rebuild concurrently.
 
     Returns the started StreamingQuery.
     """
@@ -2102,13 +1836,12 @@ def streaming_embedding_ingest(
             )
         # exclude the batch's own ids so the probe decision is identical
         # on first run and replay (see the replay invariant above)
-        # PIN: the probe lineage (estimate job, probe collects,
-        # pruned-corpus GEMM, re-rank joins) feeds both the survivor
+        # PIN: the probe lineage (probe-pairs pin, probed-cluster
+        # collect, cogroup GEMM, re-rank joins) feeds both the survivor
         # funnel and — under drop_dups=False — the landed annotation
         probed = embedding_dup_probe(
             s, path, batch_df, threshold=threshold, nprobe=nprobe,
             cluster_col=cluster_col, vec_col=vec_col, id_col=id_col,
-            mode=mode, broadcast_budget_bytes=broadcast_budget_bytes,
             verify_clusters=False,
             exclude_ids=batch_df.select(id_col),
         ).localCheckpoint(eager=True)
@@ -2117,8 +1850,8 @@ def streaming_embedding_ingest(
         )
         # intra-batch near-dups: stored-quantizer bucketing keeps the
         # pair work at Σ|cluster∩batch|²; min-id per component survives.
-        # PIN: `assigned`'s lineage contains the whole probe (estimate
-        # job, probe collects, pruned-corpus GEMM, re-rank joins) and has
+        # PIN: `assigned`'s lineage contains the whole probe (pairs pin,
+        # probed-cluster collect, cogroup GEMM, re-rank joins) and has
         # three consumers below (both sides of the within-cluster
         # self-join + the survivor projection) — unpinned, the probe
         # would re-execute per consumer (the pin rule; batch-sized rows)

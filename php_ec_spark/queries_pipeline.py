@@ -1217,9 +1217,9 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> str:
                cos, CAST(rank AS INT) AS rank, CAST(NULL AS INT) AS keep
         FROM r WHERE rank <= 5
         UNION ALL
-        -- the distributed probe mode is row-identical to broadcast by
-        -- contract (shared probe selection + kernel arithmetic + exact
-        -- re-rank, pinned in tests) — the oracle is the same rows
+        -- the sharded search is row-identical to shards=1 by contract
+        -- (shard-count-invariant, pinned in tests) — the oracle is the
+        -- same rows
         SELECT 'topk_dist' AS kind, query_id AS id_a, neighbor_id AS id_b,
                cos, CAST(rank AS INT) AS rank, CAST(NULL AS INT) AS keep
         FROM r WHERE rank <= 5
@@ -1267,20 +1267,18 @@ def pipe_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             nullint.alias("keep"),
         )
 
-    topk = _topk("topk", mode="broadcast")
-    # the round-11 scale centerpiece under the HARD gate: the same top-k
-    # through the distributed (cogroup) probe path with the skew valve
-    # engaged — an sf0.01 increment auto-routes broadcast, so without
-    # this row a distributed-kernel regression would only surface in
-    # pytest. The oracle is the broadcast rows' SQL verbatim (the modes
-    # are row-identical by contract, pinned in tests). Since round 13
-    # the valve is the self-sizing shards='auto' (round-12 verdict #3):
-    # the 8 KiB block target makes the live-counts formula resolve ~4
-    # shards on the ~60-row hot label here, so BOTH the auto resolution
-    # and the sharded kernel sit under the driver hash.
+    topk = _topk("topk")
+    # the same top-k with the skew valve engaged: the default search runs
+    # the cogroup kernel at shards=1 (in-kernel lost-cluster guard), so
+    # without this row the sharded kernel and the shards='auto'
+    # resolution would only be checked in pytest. The oracle is the
+    # "topk" rows' SQL verbatim (results are shard-count-invariant,
+    # pinned in tests). The 8 KiB block target makes the live-counts
+    # formula resolve ~4 shards on the ~60-row hot label here, so BOTH
+    # the auto resolution and the sharded kernel sit under the driver
+    # hash.
     topk_dist = _topk(
-        "topk_dist", mode="distributed", shards="auto",
-        shard_target_block_bytes=8 << 10,
+        "topk_dist", shards="auto", shard_target_block_bytes=8 << 10,
     )
     dup = cosine_dup_pairs(emb, threshold=0.4, cluster_col="label").select(
         F.lit("dup").alias("kind"),

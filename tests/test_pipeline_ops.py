@@ -1057,9 +1057,8 @@ class TestSimilarity:
         driver as per-row pandas objects: embedding_dup_probe's 'queries'
         are a whole daily increment, and pandas-object transfer costs
         ~10x the raw bytes in driver heap. Pin by forbidding
-        DataFrame.toPandas for the duration — the packed path
-        (_collect_matrix raw bytes + <=C (cluster, [ids]) rows) must be
-        the only driver crossing."""
+        DataFrame.toPandas for the duration — the <=C distinct probed
+        cluster ids must be the only driver crossing."""
         import numpy as np
         from pyspark.sql import DataFrame as _DF
 
@@ -3130,10 +3129,71 @@ class TestEmbeddingDupProbe:
         assert len(got) == 2
 
 
+def _ivf_reference(spark, idx, queries, cluster_col, k, nprobe):
+    """Pure-Python IVF top-k over a stored index, written from the
+    contract rather than the kernels: each query probes the ``nprobe``
+    centroids with the highest 6-dp cosine (ties → smallest cluster,
+    NULL first, as Spark orders it), then every stored row of the probed
+    clusters is scored with the sequential-fold cosine (the oracle
+    arithmetic), rounded half-up to 6 dp and ranked (cos DESC, id).
+    Self-matches and zero-norm pairs never rank. Returns
+    {(query_id, rank): (neighbor_id, cos)}."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        return math.sqrt(acc)
+
+    def cos6(a, b):
+        na, nb = norm(a), norm(b)
+        if not (na > 0 and nb > 0):
+            return None
+        dot = 0.0
+        for x, y in zip(a, b):
+            dot += x * y
+        return float(
+            Decimal(repr(dot / (na * nb))).quantize(
+                Decimal("1e-6"), ROUND_HALF_UP
+            )
+        )
+
+    cents = [
+        (r.cluster, list(r.centroid))
+        for r in spark.read.parquet(f"{idx}/centroids").collect()
+    ]
+    corpus = [
+        (r[0], list(r[1]), r[2])
+        for r in spark.read.parquet(f"{idx}/corpus")
+        .select("vec_id", "embedding", cluster_col)
+        .collect()
+    ]
+    out = {}
+    for q in queries.select("vec_id", "embedding").collect():
+        qv = list(q.embedding)
+        ranked = sorted(
+            cents,
+            key=lambda c: (-(cos6(qv, c[1]) or 0.0), c[0] is not None, c[0]),
+        )
+        probed = {c[0] for c in ranked[:nprobe]}
+        scored = sorted(
+            (-cs, nid)
+            for nid, v, cl in corpus
+            if cl in probed and nid != q.vec_id
+            for cs in [cos6(qv, v)]
+            if cs is not None
+        )
+        for rank, (ncs, nid) in enumerate(scored[:k], start=1):
+            out[(q.vec_id, rank)] = (nid, -ncs)
+    return out
+
+
 class TestIvfDistributedProbe:
-    """The round-11 scale fix: the increment probe path must have a mode
-    with NO driver-bounded transfer — a daily increment of ~10M × 768-d
-    vectors (~60 GB raw) can never transit the driver as a broadcast."""
+    """The round-11 scale fix: the increment probe path must have NO
+    driver-bounded transfer — a daily increment of ~10M × 768-d vectors
+    (~60 GB raw) can never transit the driver as a broadcast."""
 
     def _index(self, spark, tmp_path, with_null_label=False):
         import numpy as np
@@ -3158,37 +3218,35 @@ class TestIvfDistributedProbe:
         ivf_build(df, idx)
         return df, idx
 
-    def test_distributed_matches_broadcast_incl_null_labels_and_shards(
-        self, spark, tmp_path
-    ):
+    def test_shard_count_invariant_incl_null_labels(self, spark, tmp_path):
+        """shards=3 must return exactly the shards=1 rows, NULL-label
+        cluster included (it cogroups under the NULL sentinel key), and
+        both must match the pure-Python IVF reference."""
         from php_ec_spark.operators.similarity import ivf_search
 
         df, idx = self._index(spark, tmp_path, with_null_label=True)
         queries = df.filter(F.col("vec_id") < 12).select("vec_id", "embedding")
         want = {
             (r.query_id, r.rank): (r.neighbor_id, r.cos)
-            for r in ivf_search(
-                spark, idx, queries, k=4, nprobe=2, mode="broadcast"
-            ).collect()
+            for r in ivf_search(spark, idx, queries, k=4, nprobe=2).collect()
         }
         assert want and {q for q, _ in want} == set(range(12))
-        for shards in (1, 3):
-            got = {
-                (r.query_id, r.rank): (r.neighbor_id, r.cos)
-                for r in ivf_search(
-                    spark, idx, queries, k=4, nprobe=2,
-                    mode="distributed", shards=shards,
-                ).collect()
-            }
-            assert got == want, f"shards={shards}"
+        assert want == _ivf_reference(spark, idx, queries, "label", 4, 2)
+        got = {
+            (r.query_id, r.rank): (r.neighbor_id, r.cos)
+            for r in ivf_search(
+                spark, idx, queries, k=4, nprobe=2, shards=3
+            ).collect()
+        }
+        assert got == want
 
     def test_distributed_path_never_transits_the_driver(
         self, spark, tmp_path, monkeypatch
     ):
         """Monkeypatch BOTH driver-crossing primitives to raise
         (_collect_matrix — the round-10 packed transfer — and
-        DataFrame.toPandas): the distributed mode must complete without
-        either, and auto mode must SELECT it above a tiny budget."""
+        DataFrame.toPandas): the search must complete without either and
+        return the rows it returns unpatched."""
         from pyspark.sql import DataFrame as _DF
 
         from php_ec_spark.operators import similarity as sim
@@ -3198,9 +3256,10 @@ class TestIvfDistributedProbe:
         want = {
             (r.query_id, r.rank): r.neighbor_id
             for r in sim.ivf_search(
-                spark, idx, queries, k=3, nprobe=2, mode="broadcast"
+                spark, idx, queries, k=3, nprobe=2
             ).collect()
         }
+        assert len(want) == 8 * 3
 
         def _no_matrix(*a, **kw):
             raise AssertionError(
@@ -3215,24 +3274,13 @@ class TestIvfDistributedProbe:
         got = {
             (r.query_id, r.rank): r.neighbor_id
             for r in sim.ivf_search(
-                spark, idx, queries, k=3, nprobe=2, mode="distributed"
+                spark, idx, queries, k=3, nprobe=2
             ).collect()
         }
         assert got == want
-        # auto above a tiny budget routes distributed (would raise via the
-        # monkeypatch if it picked broadcast)
-        got_auto = {
-            (r.query_id, r.rank): r.neighbor_id
-            for r in sim.ivf_search(
-                spark, idx, queries, k=3, nprobe=2,
-                mode="auto", broadcast_budget_bytes=64,
-            ).collect()
-        }
-        assert got_auto == want
         # ...and embedding_dup_probe rides the same path end to end
         probed = sim.embedding_dup_probe(
             spark, idx, queries, threshold=0.99, nprobe=2,
-            mode="distributed",
         ).collect()
         assert len(probed) == 8
         assert all(r.dup_of is not None for r in probed)  # tight clusters
@@ -3302,50 +3350,39 @@ class TestIvfDistributedProbe:
             want = sorted(
                 (r.query_id, r.rank, r.neighbor_id, r.cos)
                 for r in ivf_search(
-                    spark, idx, queries, k=3, nprobe=2,
-                    mode="distributed", shards=1, **kw,
+                    spark, idx, queries, k=3, nprobe=2, shards=1, **kw,
                 ).collect()
             )
             for shards in ("auto", expect_shards):
                 got = sorted(
                     (r.query_id, r.rank, r.neighbor_id, r.cos)
                     for r in ivf_search(
-                        spark, idx, queries, k=3, nprobe=2,
-                        mode="distributed", shards=shards,
+                        spark, idx, queries, k=3, nprobe=2, shards=shards,
                         shard_target_block_bytes=target, **kw,
                     ).collect()
                 )
                 assert got == want, f"shards={shards} kw={sorted(kw)}"
 
     def test_auto_shards_rejects_other_strings(self, spark, tmp_path):
-        """Invalid shards values must fail on EVERY mode — validation
-        runs before the mode split (round-13 review: a typo accepted
-        under a small broadcast-routed frame would only surface months
-        later when the same call first routes distributed)."""
+        """Invalid shards values must fail at call time, before any
+        Spark job runs."""
         from php_ec_spark.operators.similarity import _auto_shards, ivf_search
 
         df, idx = self._index(spark, tmp_path)
         queries = df.filter(F.col("vec_id") < 3).select("vec_id", "embedding")
-        for mode in ("distributed", "broadcast", "auto"):
-            with pytest.raises(ValueError, match="int >= 1 or 'auto'"):
-                ivf_search(
-                    spark, idx, queries, k=2, mode=mode, shards="many"
-                )
-            # shards=0 is the 0-as-opt-out typo the budget=0 spelling
-            # invites — it must fail on EVERY mode, not first surface
-            # when the call routes distributed months later
-            with pytest.raises(ValueError, match="int >= 1 or 'auto'"):
-                ivf_search(
-                    spark, idx, queries, k=2, mode=mode, shards=0
-                )
-            # and a zero/negative block target raises instead of
-            # resolving shards = max_cluster_raw_bytes (billions of
-            # replicated probes); also mode-independent
-            with pytest.raises(ValueError, match="must be positive"):
-                ivf_search(
-                    spark, idx, queries, k=2, mode=mode,
-                    shards="auto", shard_target_block_bytes=0,
-                )
+        with pytest.raises(ValueError, match="int >= 1 or 'auto'"):
+            ivf_search(spark, idx, queries, k=2, shards="many")
+        # shards=0 is the 0-as-opt-out typo the budget=0 spelling of the
+        # cosine family invites
+        with pytest.raises(ValueError, match="int >= 1 or 'auto'"):
+            ivf_search(spark, idx, queries, k=2, shards=0)
+        # and a zero/negative block target raises instead of resolving
+        # shards = max_cluster_raw_bytes (billions of replicated probes)
+        with pytest.raises(ValueError, match="must be positive"):
+            ivf_search(
+                spark, idx, queries, k=2,
+                shards="auto", shard_target_block_bytes=0,
+            )
         with pytest.raises(ValueError, match="must be positive"):
             _auto_shards(1000, 16, 0)
 
@@ -3379,19 +3416,17 @@ class TestIvfDistributedProbe:
     def test_same_id_in_two_clusters_survives_coalesced_scan(
         self, spark, tmp_path
     ):
-        """Round-13 review catch on the round-12-advice fix: the
-        in-kernel duplicate-id dedup must key on (cluster, id), not id
-        alone — the same id filed under two clusters is two LEGITIMATE
-        index entries (ivf_compact's documented case), and when a
-        coalesced scan packs both partition files into one Arrow batch
-        an id-only dedup silently dropped one, making broadcast-mode
-        results partitioning-dependent (the exact cos-1.0 match
-        vanished). Small files coalesce into one scan partition by
-        default; minPartitionNum=1 plus a deliberately LARGER cluster-0
-        file (file packing orders by size descending, so the wrong copy
-        is the one an id-only keep='first' dedup keeps) makes the
-        pre-fix failure deterministic — verified: the id-only kernel
-        returns q100 -> 12 here, losing the cos-1.0 match."""
+        """Round-13 review catch on the round-12-advice fix: the same id
+        filed under two clusters is two LEGITIMATE index entries
+        (ivf_compact's documented case), and the in-kernel duplicate-id
+        dedup must never drop one of them. The retired broadcast kernel
+        scored Arrow batches that could span clusters, and there an
+        id-only dedup made results partitioning-dependent (the exact
+        cos-1.0 match vanished). Kept as the regression for the cogroup
+        kernel, whose batches are one (cluster, shard) each: a coalesced
+        scan (minPartitionNum=1 plus a deliberately LARGER cluster-0
+        file, so file packing orders the wrong copy first) must still
+        return q100 -> 5, sharded or not."""
         from php_ec_spark.operators.similarity import ivf_build, ivf_search
 
         rows = [
@@ -3415,14 +3450,14 @@ class TestIvfDistributedProbe:
         old = spark.conf.get("spark.sql.files.minPartitionNum", None)
         try:
             spark.conf.set("spark.sql.files.minPartitionNum", "1")
-            for mode in ("broadcast", "distributed"):
+            for shards in (1, 3):
                 got = {
                     r.query_id: r.neighbor_id
                     for r in ivf_search(
-                        spark, idx, probes, k=1, nprobe=1, mode=mode,
+                        spark, idx, probes, k=1, nprobe=1, shards=shards,
                     ).collect()
                 }
-                assert got[100] == 5, (mode, got)
+                assert got[100] == 5, (shards, got)
         finally:
             if old is None:
                 spark.conf.unset("spark.sql.files.minPartitionNum")
@@ -3434,19 +3469,11 @@ class TestIvfDistributedProbe:
 
         from php_ec_spark.operators import similarity as sim
 
-        df, idx = self._index(spark, tmp_path)
-        queries = df.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
-        with pytest.raises(RuntimeError, match="broadcast budget"):
-            sim.ivf_search(
-                spark, idx, queries, k=3, nprobe=2,
-                mode="broadcast", broadcast_budget_bytes=64,
-            )
-        with pytest.raises(ValueError, match="mode must be"):
-            sim.ivf_search(spark, idx, queries, mode="banana")
-        # the exact all-pairs path carries the same guard (its corpus
-        # matrix broadcast has no distributed fallback — the remedy is
-        # cluster_col's bucketed contract), with the same per-call
-        # override for drivers that really have the headroom
+        df, _ = self._index(spark, tmp_path)
+        # the exact all-pairs path broadcasts its corpus matrix and has
+        # no distributed fallback — past the budget it raises naming
+        # cluster_col's bucketed contract, with a per-call override for
+        # drivers that really have the headroom
         with pytest.raises(RuntimeError, match="cluster_col"):
             sim.cosine_dup_pairs(
                 df.select("vec_id", "embedding"), broadcast_budget_bytes=64
@@ -3495,7 +3522,8 @@ class TestIvfDistributedProbe:
         outcome a dedup pipeline must never get: both the shards=1
         cogroup guard and the shards>1 probed-vs-present check must fail
         loudly — simulate by deleting a probed cluster's partition
-        directory post-build."""
+        directory post-build. The shards=1 in-kernel guard needs no
+        presence job, so it still raises under verify_clusters=False."""
         import shutil
 
         import pytest
@@ -3507,49 +3535,30 @@ class TestIvfDistributedProbe:
         # vec_id 0 sits in cluster 0: nuke that partition's files
         shutil.rmtree(f"{idx}/corpus/label=0")
         with pytest.raises(Exception, match="lost"):
-            ivf_search(
-                spark, idx, queries, k=3, nprobe=1, mode="distributed"
-            ).collect()
+            ivf_search(spark, idx, queries, k=3, nprobe=1).collect()
         with pytest.raises(Exception, match="lost"):
             ivf_search(
-                spark, idx, queries, k=3, nprobe=1,
-                mode="distributed", shards=3,
+                spark, idx, queries, k=3, nprobe=1, shards=3,
             ).collect()
-        # round-12 (ADVICE): the broadcast branch must carry the SAME
-        # guard — silently missing neighbors must never depend on which
-        # probe mode happened to run
+        # verify_clusters=False skips the per-call presence job, but at
+        # shards=1 the cogroup kernel's own guard still fires
         with pytest.raises(Exception, match="lost"):
             ivf_search(
-                spark, idx, queries, k=3, nprobe=1, mode="broadcast"
+                spark, idx, queries, k=3, nprobe=1, verify_clusters=False,
             ).collect()
-        # verify_clusters=False is the documented hot-loop trade: the
-        # per-call presence job is skipped and the search completes with
-        # the lost cluster's queries silently neighbor-less (vec_ids 0
-        # and 5 live in the deleted cluster 0)
-        rows = ivf_search(
-            spark, idx, queries, k=3, nprobe=1,
-            mode="broadcast", verify_clusters=False,
-        ).collect()
-        assert rows and {r.query_id for r in rows} == set(range(8)) - {0, 5}
 
     def test_trust_me_opt_outs_skip_the_per_call_jobs(
         self, spark, tmp_path, monkeypatch
     ):
         """Round-12 review: the docstrings promise per-trigger callers a
-        way to SKIP the size-estimation job — mode='broadcast' +
-        broadcast_budget_bytes=0 must not run _estimate_matrix_bytes at
-        all (and must return the same rows), while mode='auto' + 0 keeps
-        meaning 'nothing fits a broadcast' and routes distributed."""
+        way to SKIP the size-estimation job — cosine_topk and
+        cosine_dup_pairs with broadcast_budget_bytes=0 must not run
+        _estimate_matrix_bytes at all, and ivf_search (which never
+        collects its queries) must not run it on any call."""
         from php_ec_spark.operators import similarity as sim
 
         df, idx = self._index(spark, tmp_path)
         queries = df.filter(F.col("vec_id") < 4).select("vec_id", "embedding")
-        want = {
-            (r.query_id, r.rank): r.neighbor_id
-            for r in sim.ivf_search(
-                spark, idx, queries, k=3, mode="broadcast"
-            ).collect()
-        }
 
         def boom(*a, **kw):
             raise AssertionError(
@@ -3557,17 +3566,9 @@ class TestIvfDistributedProbe:
             )
 
         monkeypatch.setattr(sim, "_estimate_matrix_bytes", boom)
-        got = {
-            (r.query_id, r.rank): r.neighbor_id
-            for r in sim.ivf_search(
-                spark, idx, queries, k=3,
-                mode="broadcast", broadcast_budget_bytes=0,
-            ).collect()
-        }
-        assert got == want
-        # cosine_topk and cosine_dup_pairs ride the same 0-sentinel:
-        # the guard (and its job) is skipped, never inverted into
-        # reject-everything
+        assert sim.ivf_search(spark, idx, queries, k=3).count() == 4 * 3
+        # the 0-sentinel skips the guard (and its job), never inverted
+        # into reject-everything
         assert (
             sim.cosine_topk(
                 df, queries, k=3, broadcast_budget_bytes=0
@@ -3581,20 +3582,6 @@ class TestIvfDistributedProbe:
             ).count()
             > 0
         )
-        monkeypatch.undo()
-        # auto + 0: every increment is over budget -> distributed (the
-        # broadcast-only primitive must never run)
-        monkeypatch.setattr(
-            sim, "_collect_probes",
-            lambda *a, **k: (_ for _ in ()).throw(
-                AssertionError("auto+0 picked the broadcast path")
-            ),
-        )
-        n = sim.ivf_search(
-            spark, idx, queries, k=3,
-            mode="auto", broadcast_budget_bytes=0,
-        ).count()
-        assert n == 4 * 3
 
     def test_string_ids_raise_the_actionable_error(self, spark, tmp_path):
         """The embedding kernels pack ids as int64; a string vec_id must
@@ -3635,17 +3622,15 @@ class TestIvfDistributedProbe:
         with pytest.raises(ValueError, match="integer type"):
             ivf_add(spark, idx, sdf)
         # ...and a HAND-BUILT (or legacy) stored layout with string ids
-        # still fails the same way on BOTH probe branches, even when the
-        # queries are clean
+        # still fails the same way, even when the queries are clean
         sidx = str(tmp_path / "ivf_str_corpus")
         sdf.write.partitionBy("label").parquet(f"{sidx}/corpus")
         build_centroids(df, "label", "embedding").write.parquet(
             f"{sidx}/centroids"
         )
         q_ok = df.filter(F.col("vec_id") < 2).select("vec_id", "embedding")
-        for mode in ("broadcast", "distributed"):
-            with pytest.raises(ValueError, match="integer type"):
-                ivf_search(spark, sidx, q_ok, k=3, mode=mode)
+        with pytest.raises(ValueError, match="integer type"):
+            ivf_search(spark, sidx, q_ok, k=3)
         # the cluster-bucketed (JVM) pair path stays string-safe — same
         # contract as the dedup family
         assert (
@@ -3658,7 +3643,8 @@ class TestIvfDistributedProbe:
     def test_cosine_topk_past_budget_raises_loudly(self, spark, tmp_path):
         """Round-12: cosine_topk was the one remaining unguarded driver
         transit — its query toPandas must now enforce the same broadcast
-        budget as its siblings, naming ivf_search(mode='distributed')."""
+        budget as cosine_dup_pairs, naming ivf_search's distributed
+        probe as the remedy."""
         import pytest
 
         from php_ec_spark.operators.similarity import cosine_topk
@@ -3674,12 +3660,13 @@ class TestIvfDistributedProbe:
         assert got == 8 * 3
 
     @pytest.mark.slow
-    def test_mode_equality_fuzz(self, spark, tmp_path):
+    def test_reference_equality_fuzz(self, spark, tmp_path):
         """Seeded differential fuzz: random cluster counts / dims / NULL
         labels / fresh-and-stored query mixes / zero vectors / shard
-        counts — broadcast and distributed must return identical top-k
-        (they share probe selection and the exact re-rank; the candidate
-        kernels differ, and the pad must absorb their float reordering)."""
+        counts — ivf_search must return exactly the pure-Python IVF
+        reference's top-k (same probe rule, sequential-fold cosines over
+        every probed row; the GEMM kernel's pad must absorb its float
+        reordering), and the sharded search the shards=1 rows."""
         import numpy as np
 
         from php_ec_spark.operators.similarity import ivf_build, ivf_search
@@ -3712,27 +3699,22 @@ class TestIvfDistributedProbe:
                 + [(99_999, [0.0] * dim)],
                 "vec_id long, embedding array<float>",
             )
-            kw = dict(k=4, nprobe=2)
-            want = {
-                (r.query_id, r.rank): (r.neighbor_id, r.cos)
-                for r in ivf_search(
-                    spark, idx, q, mode="broadcast", **kw
-                ).collect()
-            }
-            got = {
-                (r.query_id, r.rank): (r.neighbor_id, r.cos)
-                for r in ivf_search(
-                    spark, idx, q, mode="distributed",
-                    shards=seed % 3 + 1, **kw
-                ).collect()
-            }
-            assert got == want and want, f"seed={seed}"
+            want = _ivf_reference(spark, idx, q, "label", 4, 2)
+            for shards in (1, seed % 3 + 2):
+                got = {
+                    (r.query_id, r.rank): (r.neighbor_id, r.cos)
+                    for r in ivf_search(
+                        spark, idx, q, k=4, nprobe=2, shards=shards
+                    ).collect()
+                }
+                assert got == want and want, f"seed={seed} shards={shards}"
 
     def test_distributed_through_trained_quantizer_index(self, spark, tmp_path):
         """The n_clusters= build path (kmeans-trained quantizer, cluster
-        column named 'cluster', int32 from assign_clusters) must work in
-        distributed mode too — the cogroup key must align the read-back
-        partition type with the probe pairs' centroid-table type."""
+        column named 'cluster', int32 from assign_clusters) must work
+        through the cogroup probe too — the cogroup key must align the
+        read-back partition type with the probe pairs' centroid-table
+        type."""
         import numpy as np
 
         from php_ec_spark.operators.similarity import ivf_build, ivf_search
@@ -3747,38 +3729,16 @@ class TestIvfDistributedProbe:
         idx = str(tmp_path / "ivf_trained")
         ccol = ivf_build(df, idx, n_clusters=4)
         queries = df.filter(F.col("vec_id") < 10)
-        want = {
-            (r.query_id, r.rank): (r.neighbor_id, r.cos)
-            for r in ivf_search(
-                spark, idx, queries, k=3, nprobe=2,
-                cluster_col=ccol, mode="broadcast",
-            ).collect()
-        }
-        got = {
-            (r.query_id, r.rank): (r.neighbor_id, r.cos)
-            for r in ivf_search(
-                spark, idx, queries, k=3, nprobe=2,
-                cluster_col=ccol, mode="distributed", shards=2,
-            ).collect()
-        }
-        assert got == want and len(want) == 30
-
-    def test_auto_below_budget_stays_broadcast(self, spark, tmp_path, monkeypatch):
-        """Small query batches must keep the fast broadcast path: pin by
-        forbidding the cogroup kernel."""
-        from php_ec_spark.operators import similarity as sim
-
-        df, idx = self._index(spark, tmp_path)
-        queries = df.filter(F.col("vec_id") < 4).select("vec_id", "embedding")
-
-        def _no_cogroup(*a, **kw):
-            raise AssertionError(
-                "_distributed_candidates called for an under-budget batch"
-            )
-
-        monkeypatch.setattr(sim, "_distributed_candidates", _no_cogroup)
-        out = sim.ivf_search(spark, idx, queries, k=3, nprobe=2).collect()
-        assert len(out) == 12
+        want = _ivf_reference(spark, idx, queries, ccol, 3, 2)
+        for shards in (1, 2):
+            got = {
+                (r.query_id, r.rank): (r.neighbor_id, r.cos)
+                for r in ivf_search(
+                    spark, idx, queries, k=3, nprobe=2,
+                    cluster_col=ccol, shards=shards,
+                ).collect()
+            }
+            assert got == want and len(want) == 30, f"shards={shards}"
 
 
 class TestStaleArtifactSweep:
@@ -4594,9 +4554,9 @@ class TestStreamingEmbeddingIngest:
             (r.neighbor_id, r.cos) for r in top
         ]
 
-    def test_exclude_ids_is_pre_gemm_and_mode_invariant(self, spark, tmp_path):
-        """exclude_ids must remove stored rows BEFORE scoring on both
-        probe modes — discriminated for real: the excluded wall is
+    def test_exclude_ids_is_pre_gemm_and_shard_invariant(self, spark, tmp_path):
+        """exclude_ids must remove stored rows BEFORE scoring, sharded or
+        not — discriminated for real: the excluded wall is
         LARGER than the kernel's top-(k+pad)=17 keep, so a top-k
         post-filter implementation would return nothing while the
         pre-GEMM anti-join surfaces the genuine match behind it."""
@@ -4617,12 +4577,12 @@ class TestStreamingEmbeddingIngest:
         excl = spark.createDataFrame(
             [(100 + i,) for i in range(25)], "vec_id long"
         )
-        for mode in ("broadcast", "distributed"):
+        for shards in (1, 3):
             top = ivf_search(
-                spark, idx, probe, k=1, nprobe=1, mode=mode,
+                spark, idx, probe, k=1, nprobe=1, shards=shards,
                 exclude_ids=excl,
             ).collect()
-            assert [r.neighbor_id for r in top] == [500], mode
+            assert [r.neighbor_id for r in top] == [500], shards
         # ...and a probed cluster with no rows AT ALL still raises even
         # under exclusion (the presence guard evaluates pre-exclusion —
         # review finding: shards=1 + exclude_ids silently disabled it)
@@ -4631,10 +4591,10 @@ class TestStreamingEmbeddingIngest:
         import pytest
 
         shutil.rmtree(f"{idx}/corpus/label=0")
-        for mode in ("broadcast", "distributed"):
+        for shards in (1, 3):
             with pytest.raises(Exception, match="lost"):
                 ivf_search(
-                    spark, idx, probe, k=1, nprobe=1, mode=mode,
+                    spark, idx, probe, k=1, nprobe=1, shards=shards,
                     exclude_ids=excl,
                 ).collect()
 
@@ -4828,8 +4788,8 @@ class TestStreamingEmbeddingIngest:
         (over the k+pad=18 slots for k=2) in ONE kernel batch, with the
         genuine id 8 just below — in-kernel id dedup must keep 8; the
         pre-fix kernel returned only 7. Pinned on cosine_topk (coalesce(1)
-        forces the copies into one Arrow batch) and both ivf_search
-        modes over a physically duplicated stored corpus."""
+        forces the copies into one Arrow batch) and ivf_search over a
+        physically duplicated stored corpus."""
         from php_ec_spark.operators.similarity import (
             cosine_topk,
             ivf_build,
@@ -4852,17 +4812,14 @@ class TestStreamingEmbeddingIngest:
         ]
         idx = str(tmp_path / "wall_dup_idx")
         ivf_build(df, idx)
-        for mode in ("broadcast", "distributed"):
-            got = ivf_search(
-                spark, idx, probe, k=2, nprobe=1, mode=mode,
-            ).collect()
-            assert [
-                r.neighbor_id for r in sorted(got, key=lambda r: r.rank)
-            ] == [7, 8], mode
+        got = ivf_search(spark, idx, probe, k=2, nprobe=1).collect()
+        assert [
+            r.neighbor_id for r in sorted(got, key=lambda r: r.rank)
+        ] == [7, 8]
         # the shards valve keeps all copies of an id in ONE shard (hash
         # of the id), so the dedup still guards the sharded kernel
         got = ivf_search(
-            spark, idx, probe, k=2, nprobe=1, mode="distributed", shards=3,
+            spark, idx, probe, k=2, nprobe=1, shards=3,
         ).collect()
         assert [
             r.neighbor_id for r in sorted(got, key=lambda r: r.rank)
@@ -4912,17 +4869,16 @@ class TestStreamingEmbeddingIngest:
 
     @pytest.mark.slow
     def test_jobs_per_trigger_is_pinned(self, spark, tmp_path):
-        """Round-12 verdict #4: the per-trigger cost opt-outs (budget-0
-        broadcast, verify_clusters=False inside the door, verify_layout
-        once at stream start) existed but nothing asserted the fixed
+        """Round-12 verdict #4: the per-trigger cost opt-outs
+        (verify_clusters=False inside the door, verify_layout once at
+        stream start) existed but nothing asserted the fixed
         Spark-job count per micro-batch — the streaming analog of the
         batch plan census. Marginal-batch measurement: run the ingest
         over 1, 2 and 3 identically-shaped all-novel batches (fresh
         index each run, same startup) and read the DAGScheduler's job
         counter; the marginal jobs of batch 2 and batch 3 must be EQUAL
         (a per-batch estimate/verify regression adds jobs to every
-        batch) and within a pinned budget. Uses the trust-me spelling
-        per-trigger callers are documented to use.
+        batch) and within a pinned budget.
 
         AQE is disabled for the measurement: with it on, one action
         spawns 1 + materialized-stage jobs and the stage count shifts
@@ -4972,7 +4928,6 @@ class TestStreamingEmbeddingIngest:
             self._run_stream(
                 spark, idx, src, tmp_path / f"jl_{tag}",
                 tmp_path / f"jc_{tag}",
-                mode="broadcast", broadcast_budget_bytes=0,
             )
             return n_jobs() - j0
 
@@ -4987,15 +4942,16 @@ class TestStreamingEmbeddingIngest:
             f"jobs per trigger drifted between batches: {m2} vs {m3} "
             f"(totals {j1}/{j2}/{j3}) — a per-batch cost crept in"
         )
-        # pinned budget (measured 23 actions per trigger, AQE off,
-        # pyspark 4.1.2): journal existence probe, dup/NULL-id agg, the
-        # probe pin's lineage (schema inferences, probe pack+collect,
-        # broadcast-build jobs of the re-rank joins), assign pin, pairs
-        # pin + head, survivor pin, landed write + count, ivf_add
-        # centroid collect + append write, journal write + counts. A
-        # bump past 24 means a new per-batch job — justify it and re-pin
-        # deliberately, never silently.
-        assert m3 <= 24, f"{m3} jobs per trigger, budget 24 (measured 23)"
+        # pinned budget (measured 24 actions per trigger, AQE off,
+        # pyspark 4.1.2, 4 cores): journal existence probe, dup/NULL-id
+        # agg, the probe pin's lineage (schema inferences, probe-pairs
+        # pin + distinct probed-cluster collect + cogroup, broadcast-build
+        # jobs of the re-rank joins), assign pin, pairs pin + head,
+        # survivor pin, landed write + count, ivf_add centroid collect +
+        # append write, journal write + counts. A bump past 24 means a
+        # new per-batch job — justify it and re-pin deliberately, never
+        # silently.
+        assert m3 <= 24, f"{m3} jobs per trigger, budget 24 (measured 24)"
 
     def test_ivf_add_refuses_flat_corpus(self, spark, tmp_path):
         """Round-12 advice: a stored corpus with NO key=value partition

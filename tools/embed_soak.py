@@ -29,7 +29,7 @@ size as the corpus grows. Under it the expected curves are:
   corpus — alpha ~= 1. The baseline the IVF split exists to beat.
 - `ivf_search` (fixed batch, nprobe=2, C grows with N): probed slice =
   nprobe cells of CONSTANT size — alpha ~= 0 (flat), the partition-
-  pruning claim measured rather than plan-pinned. Both probe modes.
+  pruning claim measured rather than plan-pinned (``shards='auto'``).
 - `cosine_dup_pairs` (bucketed by the provided label): Sigma|cell|^2
   with constant cells — alpha ~= 1.
 - `semdedup` (self-trained quantizer): sample-bounded training
@@ -179,12 +179,8 @@ def main() -> None:
             "cosine_topk_exact": lambda: cosine_topk(
                 emb, queries.select("vec_id", "embedding"), k=5
             ),
-            "ivf_search_broadcast": lambda: ivf_search(
-                spark, idx, queries, k=5, nprobe=2, mode="broadcast"
-            ),
-            "ivf_search_distributed": lambda: ivf_search(
-                spark, idx, queries, k=5, nprobe=2, mode="distributed",
-                shards="auto",
+            "ivf_search": lambda: ivf_search(
+                spark, idx, queries, k=5, nprobe=2, shards="auto"
             ),
             "cosine_dup_pairs_bucketed": lambda: cosine_dup_pairs(
                 emb, threshold=0.4, cluster_col="label"

@@ -28,8 +28,8 @@ def audit_one(plan: str) -> dict:
         plan,
     )
     py = re.findall(
-        r"(MapInPandas|FlatMapGroupsInPandas|ArrowEvalPython|"
-        r"BatchEvalPython|FlatMapGroupsInPandasWithState)",
+        r"(MapInPandas|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|"
+        r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandasWithState)",
         plan,
     )
     return {
@@ -74,7 +74,8 @@ def main() -> None:
                 name,
                 str(a["exchanges"]),
                 "+".join(j.replace("Join", "") for j in a["joins"]) or "—",
-                "+".join(p.replace("FlatMapGroupsInPandas", "FMGiP")
+                "+".join(p.replace("FlatMapCoGroupsInPandas", "FMCGiP")
+                         .replace("FlatMapGroupsInPandas", "FMGiP")
                          .replace("MapInPandas", "MiP") for p in a["python"])
                 or "—",
                 " ".join(notes),
