@@ -222,6 +222,31 @@ def _scheduled_emissions(fires: DataFrame, name: str) -> DataFrame:
     )
 
 
+def _parse_cron(frame: DataFrame, expression: str, name: str):
+    """The front half both cron paths share. ``@reboot``/``@shutdown``
+    return ``(emissions, None)``: one fire per lifecycle control message
+    in ``frame``. Any other expression returns ``(None, fields)``: its
+    five cron fields, after expanding a macro token."""
+    from ..model import CONTROL_MSG_RESTORED, CONTROL_MSG_START, CONTROL_MSG_STOP
+
+    expression = expression.strip()
+    if expression in ("@reboot", "@shutdown"):
+        wanted = (
+            [CONTROL_MSG_START, CONTROL_MSG_RESTORED]
+            if expression == "@reboot"  # Cron.php initialAcceptedEvents()
+            else [CONTROL_MSG_STOP]
+        )
+        fires = frame.filter(F.col("event_type").isin(wanted)).select(
+            F.col("ts").alias("fire_ts")
+        )
+        return _scheduled_emissions(fires, name), None
+    expression = CRON_TOKEN_EXPRESSIONS.get(expression, expression)
+    fields = expression.split()
+    if len(fields) != 5:
+        raise ValueError(f"cron expression needs 5 fields, got {expression!r}")
+    return None, fields
+
+
 def cron_expression_fires(
     events: DataFrame,
     expression: str,
@@ -245,23 +270,9 @@ def cron_expression_fires(
     candidate rows, trivially parallel, no driver-side loop. ``tz``
     evaluates the fields in a zone while fire_ts stays UTC (the
     reference's DateTimeZone handling)."""
-    from ..model import CONTROL_MSG_RESTORED, CONTROL_MSG_START, CONTROL_MSG_STOP
-
-    expression = expression.strip()
-    if expression in ("@reboot", "@shutdown"):
-        wanted = (
-            [CONTROL_MSG_START, CONTROL_MSG_RESTORED]
-            if expression == "@reboot"  # Cron.php initialAcceptedEvents()
-            else [CONTROL_MSG_STOP]
-        )
-        fires = events.filter(F.col("event_type").isin(wanted)).select(
-            F.col("ts").alias("fire_ts")
-        )
-        return _scheduled_emissions(fires, name)
-    expression = CRON_TOKEN_EXPRESSIONS.get(expression, expression)
-    fields = expression.split()
-    if len(fields) != 5:
-        raise ValueError(f"cron expression needs 5 fields, got {expression!r}")
+    control, fields = _parse_cron(events, expression, name)
+    if control is not None:
+        return control
     bounds = events.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
     # next-run-AFTER-boot (Rule/Cron.php next-run calc): the truncated
     # sequence start can precede the stream's first event — a fire before
@@ -317,23 +328,9 @@ def cron_stream_fires(
     allow a dedup and an applyInPandasWithState in one query, and the
     reference also runs cron off the scheduler timer, not the correlation
     engine."""
-    from ..model import CONTROL_MSG_RESTORED, CONTROL_MSG_START, CONTROL_MSG_STOP
-
-    expression = expression.strip()
-    if expression in ("@reboot", "@shutdown"):
-        wanted = (
-            [CONTROL_MSG_START, CONTROL_MSG_RESTORED]
-            if expression == "@reboot"
-            else [CONTROL_MSG_STOP]
-        )
-        fires = ticks.filter(F.col("event_type").isin(wanted)).select(
-            F.col("ts").alias("fire_ts")
-        )
-        return _scheduled_emissions(fires, name)
-    expression = CRON_TOKEN_EXPRESSIONS.get(expression, expression)
-    fields = expression.split()
-    if len(fields) != 5:
-        raise ValueError(f"cron expression needs 5 fields, got {expression!r}")
+    control, fields = _parse_cron(ticks, expression, name)
+    if control is not None:
+        return control
     cand = ticks.select(F.date_trunc("minute", F.col("ts")).alias("fire_ts"))
     local = F.from_utc_timestamp(F.col("fire_ts"), tz) if tz else F.col("fire_ts")
     cand = _apply_cron_fields(cand, local, fields)

@@ -966,16 +966,6 @@ def pipe_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_INDEX_CACHE: dict = {}
 
 
-def _pid_alive(pid: int) -> bool:
-    """True when ``pid`` names a live process — canonical definition
-    lives in dedup_index (the orphan-clear liveness guard needs it
-    below queries_pipeline in the import graph); re-exported here for
-    the tmp-dir sweeps."""
-    from .operators.dedup_index import _pid_alive as _impl
-
-    return _impl(pid)
-
-
 def sweep_stale_ivf_dirs() -> int:
     """Remove ``/tmp/php_ec_ivf_<pid>_*`` index dirs whose owning pid is
     dead — the atexit cleanup is best-effort and a crash-killed driver
@@ -987,6 +977,8 @@ def sweep_stale_ivf_dirs() -> int:
     import re
     import shutil
     import tempfile
+
+    from .operators.dedup_index import _pid_alive
 
     swept = 0
     pat = re.compile(r"^php_ec_ivf_(\d+)_")
@@ -1015,6 +1007,7 @@ def sweep_stale_didx_tables(spark: SparkSession) -> int:
     import re
 
     from .operators.dedup_index import (
+        _pid_alive,
         _warehouse_dir,
         dedup_index_drop,
     )

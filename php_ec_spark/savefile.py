@@ -36,11 +36,11 @@ check PHP semantics — the rule_map IS the migration contract); a semantic
 mismatch is visible as a replay yielding zero or >1 live instances for a
 single saved matcher, never as state fabricated for an unrelated rule.
 
-Large savefiles: replay is CPU-bound (one EngineCore run per matcher), so
-above ``distributed_threshold`` matchers the importer ships the chains to
-executors and rebuilds blobs via the same repartition→sort→``mapInPandas``
-pattern as ``snapshot_state`` (parsing the single gzip JSON document is
-inherently driver-side either way; the replay fan-out is what scales).
+Replay runs on the driver, one EngineCore run per matcher. Parsing the
+single gzip JSON document and mapping every consumed event to its envelope
+run on the driver whichever side replays the chains, and shipping the
+chains to executors measured no faster at any size tried (3 to 50k
+matchers on ``local[4]``).
 """
 
 from __future__ import annotations
@@ -186,9 +186,7 @@ class ImportedState:
     #: differ from the PHP class it claims to replace. Tuples of
     #: ``(php_class, rule_name, key, saved_iso, replayed_iso)``;
     #: ``replayed_iso`` is None when replay armed no deadline at all.
-    #: Computed on both the driver fast path and the distributed replay
-    #: path (side-band 'miss' rows, volume bounded by violations);
-    #: inspect before going live.
+    #: Inspect before going live.
     timeout_mismatches: list = field(default_factory=list)
 
 
@@ -250,61 +248,12 @@ def _merge_blob(instances: list[dict]) -> str:
     return json.dumps({"seq": len(instances), "instances": instances})
 
 
-def _make_import_runner(rules_by_name: dict[str, Rule]):
-    """mapInPandas runner for the distributed replay path: rows of one
-    key arrive consecutively (repartition + sortWithinPartitions, same
-    contract as the state-machine runner); each row is one saved matcher's
-    (key, rule, chain, saved timeout, php class) — replayed independently,
-    merged per key. Output rows are tagged: 'blob' = per-key state blob;
-    'miss' = one saved-deadline disagreement (payload JSON), volume
-    bounded by contract violations, not matchers."""
-    import pandas as pd
-
-    def run(batches):
-        cur_key = None
-        acc: list[dict] = []
-        out: list[tuple] = []
-
-        def flush():
-            if cur_key is not None and acc:
-                out.append(("blob", cur_key, _merge_blob(acc)))
-
-        for pdf in batches:
-            for k, rname, chain_json, saved_to, cls in zip(
-                pdf["__k"], pdf["rule"], pdf["chain"],
-                pdf["saved_to"], pdf["cls"],
-            ):
-                if k != cur_key:
-                    flush()
-                    cur_key, acc = k, []
-                rule = rules_by_name.get(rname)
-                if rule is None:
-                    continue
-                chain = [tuple(e) for e in json.loads(chain_json)]
-                insts = _replay_chain(rule, k, chain)
-                acc.extend(insts)
-                bad = _deadline_check(insts, saved_to)
-                if bad is not None:
-                    out.append((
-                        "miss", k,
-                        json.dumps([cls, rname, k, bad[0], bad[1]]),
-                    ))
-        flush()
-        yield pd.DataFrame(out, columns=["tag", "__k", "blob"]).astype(
-            {"tag": object, "__k": object, "blob": object}
-        )
-
-    return run
-
-
 def import_savefile(
     spark: SparkSession,
     path: str,
     rules: Sequence[Rule],
     rule_map: dict[str, str],
     event_mapper: Callable[[str, dict], dict] = default_event_mapper,
-    distributed: Optional[bool] = None,
-    distributed_threshold: int = 5000,
 ) -> ImportedState:
     """Parse a reference save file into warm-start state.
 
@@ -320,12 +269,6 @@ def import_savefile(
     rule without a saved matcher can never fabricate an in-flight
     instance from another matcher's chain. The per-key instance lists are
     then merged into one blob in first-consumed-event arming order.
-
-    ``distributed`` forces the executor-side replay path (None = auto:
-    used when the savefile holds ≥ ``distributed_threshold`` matchers).
-    Both paths produce identical blobs — the distributed one runs the
-    same ``_replay_chain``/``_merge_blob`` via repartition → sort →
-    ``mapInPandas``, bounding driver work to parsing the JSON document.
     """
     doc = load_savefile(path)
     engine_state = doc.get("engine", {}) or {}
@@ -436,15 +379,7 @@ def import_savefile(
             "__all__" if rule.key is None else str(envs[0].get(rule.key))
         )
         matcher_recs.setdefault(rule.key, []).append(
-            (
-                key_val, rule.name, chain,
-                # non-string timeouts (legacy ints/foreign shapes) cannot
-                # cross-check and would break the distributed path's
-                # string schema
-                state.get("timeout")
-                if isinstance(state.get("timeout"), str) else None,
-                cls,
-            )
+            (key_val, rule.name, chain, state.get("timeout"), cls)
         )
 
     #: Spark type of each envelope column a rule may key on — snapshot keys
@@ -453,66 +388,27 @@ def import_savefile(
     #: switches to E-notation at 1e7 where Python doesn't, etc.
     _KEY_TYPES = {"user_id": "bigint", "value": "double"}
 
-    n_matchers = sum(len(v) for v in matcher_recs.values())
-    use_distributed = (
-        distributed
-        if distributed is not None
-        else n_matchers >= distributed_threshold
-    )
-
     from pyspark.sql import functions as F
 
     initial_states: dict[Optional[str], DataFrame] = {}
     timeout_mismatches: list = []
 
     for key_col, recs in matcher_recs.items():
-        if use_distributed:
-            from .session import shuffle_partitions
-
-            rows_df = spark.createDataFrame(
-                [
-                    (k, rname, json.dumps(chain), saved_to, cls,
-                     chain[0][1], chain[0][0])
-                    for k, rname, chain, saved_to, cls in recs
-                ],
-                "__k string, rule string, chain string, saved_to string, "
-                "cls string, first_ts long, first_eid long",
-            )
-            runner = _make_import_runner(
-                {r.name: r for r in rules if r.key == key_col}
-            )
-            tagged = (
-                rows_df.repartition(shuffle_partitions(spark), "__k")
-                # sort matchers of one key by arming order so merge order
-                # (and thus blob bytes) matches the driver path
-                .sortWithinPartitions("__k", "first_ts", "first_eid")
-                .mapInPandas(runner, "tag string, __k string, blob string")
-                # the replay runs ONCE: the mismatch collect below is an
-                # action, and the blob frame re-reads the checkpointed
-                # blocks instead of re-replaying every chain
-                .localCheckpoint(eager=False)
-            )
-            for r in tagged.filter(F.col("tag") == "miss").collect():
-                timeout_mismatches.append(tuple(json.loads(r["blob"])))
-            typed = tagged.filter(F.col("tag") == "blob").select("__k", "blob")
-        else:
-            per_key: dict[str, list[dict]] = {}
-            for key_val, rname, chain, saved_to, cls in recs:
-                insts = _replay_chain(by_name[rname], key_val, chain)
-                per_key.setdefault(key_val, []).extend(insts)
-                bad = _deadline_check(insts, saved_to)
-                if bad is not None:
-                    timeout_mismatches.append(
-                        (cls, rname, key_val, bad[0], bad[1])
-                    )
-            rows = [
-                (key_val, _merge_blob(insts))
-                for key_val, insts in per_key.items()
-                if insts
-            ]
-            if not rows:
-                continue
-            typed = spark.createDataFrame(rows, "__k string, blob string")
+        per_key: dict[str, list[dict]] = {}
+        for key_val, rname, chain, saved_to, cls in recs:
+            insts = _replay_chain(by_name[rname], key_val, chain)
+            per_key.setdefault(key_val, []).extend(insts)
+            bad = _deadline_check(insts, saved_to)
+            if bad is not None:
+                timeout_mismatches.append((cls, rname, key_val, bad[0], bad[1]))
+        rows = [
+            (key_val, _merge_blob(insts))
+            for key_val, insts in per_key.items()
+            if insts
+        ]
+        if not rows:
+            continue
+        typed = spark.createDataFrame(rows, "__k string, blob string")
         # round-trip the key through the native type so the stored __key
         # equals the Spark CAST the live query's grouping uses; keyless
         # rules keep the literal "__all__" sentinel the streaming engines

@@ -55,6 +55,11 @@ def get_spark(
         # (DuckDB-oracle parity; NTZ forbids the double casts our clock
         # arithmetic uses).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Read INT64 TIMESTAMP(NANOS) parquet columns as long (model.
+        # load_events floors them to µs). Set here, not only in load_events,
+        # so every read_parquet of the session sees one conf value and the
+        # schema cache keeps one entry per table.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

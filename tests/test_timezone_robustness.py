@@ -167,3 +167,26 @@ def test_chain_reinjection_unshifted_under_nonutc_driver():
     pre-fix collect()+strftime path shifted it by the UTC offset, breaking
     chain timing and watermark admission)."""
     _run_tz_subprocess(_CHAIN_SCRIPT, "TZ-CHAIN-OK")
+
+
+def test_load_events_keeps_one_schema_cache_entry_per_table(
+    spark, sf_dir, monkeypatch
+):
+    """``load_events`` sets the parquet timestamp confs on the session; a
+    ``get_spark`` session already has the same values, so a table read
+    before and after it keeps ONE schema-cache key. Two keys would make
+    the first read of every table infer its schema again after the first
+    ``load_events``, an extra Spark job per table."""
+    from php_ec_spark import session as S
+    from php_ec_spark.model import load_events
+
+    monkeypatch.setattr(S, "_PARQUET_SCHEMA_CACHE", {})
+    # a new session starts from the confs get_spark built the context with,
+    # not from what earlier tests' load_events calls set on `spark`
+    fresh = spark.newSession()
+    path = f"{sf_dir}/orders.parquet"
+    S.read_parquet(fresh, path)
+    load_events(fresh, sf_dir)
+    S.read_parquet(fresh, path)
+    keys = [k for k in S._PARQUET_SCHEMA_CACHE if k[0] == path]
+    assert len(keys) == 1, keys

@@ -13,8 +13,13 @@ this is the human-readable census of all 50 plans.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+
+# run as ``python tools/plan_audit.py`` sys.path[0] is tools/; the package
+# lives in the repo root, this file's parent directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_text(df) -> str:
