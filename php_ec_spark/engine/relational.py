@@ -250,19 +250,22 @@ def compile_counter(events: DataFrame, rule: Rule) -> DataFrame:
 def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     """Window plan for an N-step sequence A→B→…→Z with per-step timeout.
 
-    ONE shuffle on the key, NO joins, any N: each starter row gets the
-    per-key sorted array of each successor type's (ts, id, value) structs
-    (whole-partition window aggregates — the same single exchange), and the
-    chain is chased with JVM array HOFs: step i+1 = first element of its
-    type's array strictly after step i in (ts, event_id) stream order.
-    The n² successor space never materializes as rows; per-key arrays are
-    bounded by that key's own event count (funnel keys are users/sessions,
-    so small — a hot key degrades this scan exactly as it degrades the
-    window sort it replaced). No Python anywhere; per-step timeout
-    semantics are exactly acceptEventTime (AEventProcessor.php:357-396):
-    step i+1 accepted iff its ts ≤ step_i.ts + timeout; the first failing
-    step times the instance out at step_i.ts + timeout (fired there even
-    past end-of-stream, matching the batch drain).
+    ONE shuffle on the key, ONE sort, NO joins, any N. Step i of an
+    instance is the first step-i-type event strictly after step i-1 in
+    (ts, event_id) stream order (acceptEventTime, AEventProcessor.php:
+    357-396) — a function of step i-1's own row, not of the instance. So
+    every row gets one pointer per step, computed back to front by window
+    functions over the key's rows in reverse stream order: ``__c{i}`` is
+    the first step-i row after this one, carrying that row's own
+    ``__c{i+1}`` as ``c``. A starter then reads its whole chain as
+    ``e1 = __c1``, ``e2 = __c1.c``, … — O(rows) per key after the sort the
+    exchange already needs, whatever the key's size (a hot key costs its
+    share of the sort, not the square of it). No Python anywhere.
+
+    Per-step timeout: step i is accepted iff its ts ≤ step_{i-1}.ts +
+    timeout; the first failing step times the instance out at
+    step_{i-1}.ts + timeout (fired there even past end-of-stream, matching
+    the batch drain).
     """
     # guard against MISUSE of this public export: counter/single-match/gap
     # shapes compile to DIFFERENT plans — feeding one here would silently
@@ -275,78 +278,90 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
         )
     types = [g[0] for g in rule.events]
     n = len(types)
-    succ_types = sorted(set(types[1:]))  # bound ONCE: three uses below
     key = rule.key
     timeout_s = rule.timeout_s
 
     # Every column below is built as ONE SQL string parsed JVM-side
-    # (round 17): the Column-API formulation of these CASE/HOF trees cost
-    # one blocking py4j round-trip per tree NODE -- ~1,600 socket round
-    # trips per correlate() construction, >80% of the driver build wall
-    # in profiles (guide §1.2: the driver must not be the bottleneck).
-    # The SQL parser and the Column API meet in the same unresolved
-    # expression tree, so the analyzed plan -- and the results -- are
-    # identical; oracle parity re-proves it per compiled shape.
+    # (round 17): the Column-API formulation of these CASE trees cost one
+    # blocking py4j round-trip per tree NODE -- ~1,600 socket round trips
+    # per correlate() construction, >80% of the driver build wall in
+    # profiles (guide §1.2: the driver must not be the bottleneck). The SQL
+    # parser and the Column API meet in the same unresolved expression
+    # tree, so the analyzed plan -- and the results -- are identical;
+    # oracle parity re-proves it per compiled shape.
     in_list = ", ".join(_sql_lit(t) for t in types)
-    relevant = events.filter(F.expr(f"event_type IN ({in_list})")).select(
-        key, "event_id", "ts", "event_type", "value"
+    step_no = "CASE event_type " + " ".join(
+        f"WHEN {_sql_lit(t)} THEN {i}" for i, t in enumerate(types)
+    ) + " END"
+    # The windows below walk each key's rows in reverse stream order. They
+    # order by ts alone (a RANGE frame takes one order column); this
+    # explicit sort, on the exchange the key needs anyway, orders the ts
+    # ties for their ROWS frame and satisfies every window, so the plan
+    # keeps one sort. Within equal (ts, event_id) a later step sorts
+    # first, so a row's ROWS frame never holds a next-step row with the
+    # row's own (ts, event_id); rows of one type equal on (ts, event_id)
+    # put the smallest value nearest, as a sorted array would.
+    base = (
+        events.filter(F.expr(f"event_type IN ({in_list})"))
+        .select(key, "event_id", "ts", "event_type", "value")
+        .repartition(key)
+        .sortWithinPartitions(
+            key, F.desc("ts"), F.desc("event_id"), F.expr(step_no), F.desc("value")
+        )
     )
-    # per-key successor arrays: one unordered whole-partition window frame
-    # per distinct successor type, all in the same exchange; ONE batched
-    # withColumns call for all of them (each withColumn is an eager JVM
-    # analysis pass over the whole plan)
-    base = relevant.withColumns(
-        {
-            f"__arr_{t}": F.expr(
-                f"sort_array(collect_list(CASE WHEN event_type = {_sql_lit(t)} "
-                f"THEN struct(ts, event_id, value) END) "
-                f"OVER (PARTITION BY `{key}`))"
-            )
-            for t in succ_types
-        }
-    )
-
-    cur = base.filter(F.expr(f"event_type = {_sql_lit(types[0])}")).selectExpr(
-        f"CAST(`{key}` AS STRING) AS key",
-        "event_id AS e0_id",
-        "ts AS e0_ts",
-        "value AS e0_val",
-        *[f"`__arr_{t}`" for t in succ_types],
-    )
+    # The step after a row is the first later step-i row in stream order,
+    # compared the way SQL compares: ts greater, or ts equal and event_id
+    # greater. A NULL-ts row has none (and is never one); a NULL-event_id
+    # row's is the first with a strictly greater ts (the RANGE frame),
+    # every other row's the nearest earlier row of the sort above (the
+    # ROWS frame). Both frames share one spec, so each step is one Window
+    # operator; __c{i} nests __c{i+1}, so the steps are built back to front.
+    w = f"PARTITION BY `{key}` ORDER BY ts DESC"
+    near = f"{w} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    far = f"{w} RANGE BETWEEN UNBOUNDED PRECEDING AND INTERVAL 1 MICROSECOND PRECEDING"
+    for i in range(n - 1, 0, -1):
+        c = f", 'c', __c{i + 1}" if i < n - 1 else ""
+        pick = (
+            f"CASE WHEN event_type = {_sql_lit(types[i])} THEN named_struct("
+            f"'ts', ts, 'event_id', event_id, 'value', value{c}) END"
+        )
+        base = base.withColumn(
+            f"__c{i}",
+            F.expr(
+                "CASE WHEN ts IS NULL THEN NULL "
+                f"WHEN event_id IS NULL THEN last({pick}, true) OVER ({far}) "
+                f"ELSE last({pick}, true) OVER ({near}) END"
+            ),
+        )
 
     if timeout_s is not None:
         # mirrors F.make_interval(secs=F.lit(float(timeout_s))): the D
         # suffix pins a DOUBLE literal, exactly what F.lit(float) binds
         interval = f"make_interval(0, 0, 0, 0, 0, 0, {float(timeout_s)!r}D)"
 
+    # one starter projection reads every step off the chain; a step is
+    # accepted only if every step before it was, so a failed step nulls
+    # the rest of the chain
+    steps, accepted = [], []
+    s, prev_ts = "__c1", "ts"
     for i in range(1, n):
-        # first array element strictly after (ts, id) in stream order; the
-        # array is sorted, get() returns null past the end (ANSI-safe)
-        succ = (
-            f"get(filter(`__arr_{types[i]}`, x -> x.ts > e{i-1}_ts OR "
-            f"(x.ts = e{i-1}_ts AND x.event_id > e{i-1}_id)), 0)"
-        )
-        # step acceptance folded into a SECOND batched withColumns pass
-        # (it references the just-bound e{i}_ts): a failed step nulls the
-        # rest of the chain
-        cur = cur.withColumns(
-            {
-                f"e{i}_ts": F.expr(f"{succ}.ts"),
-                f"e{i}_id": F.expr(f"{succ}.event_id"),
-                f"e{i}_val": F.expr(f"{succ}.value"),
-            }
-        )
+        ok = f"{s}.ts IS NOT NULL"
         if timeout_s is not None:
-            ok = f"e{i}_ts IS NOT NULL AND e{i}_ts <= e{i-1}_ts + {interval}"
-        else:
-            ok = f"e{i}_ts IS NOT NULL"
-        cur = cur.withColumns(
-            {
-                c: F.expr(f"CASE WHEN {ok} THEN {c} END")
-                for c in (f"e{i}_ts", f"e{i}_id", f"e{i}_val")
-            }
-        )
-    cur = cur.drop(*[f"__arr_{t}" for t in succ_types])
+            ok += f" AND {s}.ts <= {prev_ts} + {interval}"
+        accepted.append(f"({ok})")
+        acc = " AND ".join(accepted)
+        steps += [
+            f"CASE WHEN {acc} THEN {s}.{f} END AS e{i}_{a}"
+            for f, a in (("ts", "ts"), ("event_id", "id"), ("value", "val"))
+        ]
+        s, prev_ts = f"{s}.c", f"{s}.ts"
+    cur = base.filter(F.expr(f"event_type = {_sql_lit(types[0])}")).selectExpr(
+        f"CAST(`{key}` AS STRING) AS key",
+        "event_id AS e0_id",
+        "ts AS e0_ts",
+        "value AS e0_val",
+        *steps,
+    )
 
     # consumed = 1 + number of non-null chain steps
     consumed = "(1" + "".join(

@@ -51,7 +51,12 @@ Live-path cost model (``perfbench/run.py --workload live_ingest --trace
   spawns (libhadoop is not loaded, so the local file system forks
   ``readlink``/``chmod``: a JFR profile counted 1,154 of them in a 50 s
   run, 1,162 process starts in all, about 4.5 ms each); and on the
-  driver about 250 ms of action dispatch and 120 ms of memory absorb;
+  driver about 60 ms of action dispatch and 90–150 ms of memory absorb.
+  Dispatch fetches the pinned emission batch with one ``collect()``
+  (streaming/sinks.py ``COLLECT_BUDGET_BYTES``); iterating it with
+  ``toLocalIterator`` ran one serial job per state partition and cost
+  about 280 ms (4-vCPU box, traced seed 1, 4 state partitions,
+  dispatch p50);
 - the per-KEY Python handler overhead is ~0.6 ms (~1.9 ms before the
   round-6 rewrite: numpy lexsort replaces pandas sort_values, shared
   empty-emission frame replaces per-call DataFrame construction,

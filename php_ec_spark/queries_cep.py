@@ -111,8 +111,8 @@ def cep_seq_two_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cep_funnel_3step",
     headline=True,
     doc="J1 general: 3-step funnel signup→click→purchase, 12 h per step — "
-    "compiled to the zero-join N-step window plan (per-key successor "
-    "arrays, ONE hashpartitioning exchange, no joins, no Python "
+    "compiled to the zero-join N-step window plan (next-of-type window "
+    "pointers, ONE hashpartitioning exchange, no joins, no Python "
     "operators; pinned by tests/test_plans.py::"
     "test_n_step_funnel_single_shuffle_no_joins).",
     oracle="""

@@ -11,10 +11,12 @@ parameter validation (:229-239) and crash-replay of errored actions
   (process actions, S6 — one subprocess per batch, batch-vectorized where
   the reference is request-at-a-time).
 - Two dispatch paths, chosen per action:
-  * **driver** (default): rows stream through ``toLocalIterator`` in
+  * **driver** (default): rows reach the driver and are dispatched in
     bounded chunks — the reference's model (actions are centrally
-    dispatched by the scheduler), safe for normal alert-volume output and
-    never holds more than one chunk in driver memory.
+    dispatched by the scheduler), safe for normal alert-volume output. A
+    pinned batch of at most :data:`COLLECT_BUDGET_BYTES` arrives in one
+    ``collect()``; a larger one streams through ``toLocalIterator``, so
+    the driver never holds more than one partition of it.
   * **distributed** (``distributed=True``): the action runs executor-side
     via ``foreachPartition`` — for high-volume per-event emissions where
     shipping rows to the driver would bottleneck at 100 TB. Requires the
@@ -55,6 +57,14 @@ MAX_REPLAY_ATTEMPTS = 3
 #: transient failure of an action with a datetime param would then fail
 #: validation (or crash the closure) on every replay and 3-strike halt.
 _DT_MARK = "__phpec_dt__"
+
+#: Driver-path fetch bound. A pinned emission batch whose blocks take at
+#: most this many bytes in the block manager is fetched with ONE
+#: ``collect()`` — one Spark job. Above it, or when the size cannot be
+#: read, rows stream through ``toLocalIterator``, which runs one serial
+#: job per partition (about 65 ms each on a 4-vCPU box) but holds only one
+#: partition on the driver at a time.
+COLLECT_BUDGET_BYTES = 16 << 20
 
 
 def _journal_default(o):
@@ -155,6 +165,20 @@ def _utc_naive(v):
     return v
 
 
+def _pinned_bytes(df: DataFrame) -> Optional[int]:
+    """Bytes the block manager holds for ``df``'s pin, read from the RDD
+    storage info (no Spark job). None unless ``df`` is a bare
+    ``localCheckpoint`` frame whose every partition is reported cached."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    rdd_id = plan.rdd().id()
+    for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd_id and info.numCachedPartitions() == info.numPartitions():
+            return info.memSize() + info.diskSize()
+    return None
+
+
 def _run_groups(
     specs_by_rule: dict[str, ActionSpec],
     default: Optional[ActionSpec],
@@ -164,7 +188,7 @@ def _run_groups(
 ) -> tuple[list[tuple[str, int]], list[tuple[str, int, str, list[dict]]]]:
     """Route rows to actions and dispatch in bounded chunks.
 
-    Shared by the driver path (iterating ``toLocalIterator``) and the
+    Shared by the driver path (iterating the fetched batch) and the
     executor path (iterating a partition); timestamps are normalized to
     UTC either way (:func:`_utc_naive`). Returns (completed, failed)
     as (action, n) / (action, n, error, rows) tuples.
@@ -214,7 +238,7 @@ class ActionDispatcher:
     completed: list = field(default_factory=list)  # (batch_id, action, n) log
     failed: list = field(default_factory=list)  # (batch_id, action, n, err)
     checkpoint_dir: Optional[str] = None  # cross-run batch markers + journal
-    chunk_size: int = 10_000  # driver path holds at most this many rows
+    chunk_size: int = 10_000  # rows per action call (and per buffer)
     _done_batches: set = field(default_factory=set)
 
     def register(
@@ -363,7 +387,7 @@ class ActionDispatcher:
             # but was paying sequentially instead of across cores. The
             # eager localCheckpoint executes all partitions concurrently
             # (also satisfying Spark 4's state-store commit validation);
-            # the iterator then streams cached blocks without recompute.
+            # the driver fetch then reads cached blocks without recompute.
             # Emission batches are rule firings, not raw events — small by
             # construction, so the cached copy is cheap and is released in
             # the finally below.
@@ -448,16 +472,23 @@ class ActionDispatcher:
             for name, n in agg_ok.items():
                 self.completed.append((batch_id, name, n))
 
-        # driver path: bounded chunks through toLocalIterator — at most
-        # ``chunk_size`` buffered rows per action, never a full collect.
-        # Only the driver-routed rows cross to the driver: iterating the
-        # unfiltered frame would ship every high-volume distributed-action
-        # row to the driver just to discard it — the exact bottleneck
-        # distributed=True exists to avoid.
+        # driver path: at most ``chunk_size`` buffered rows per action.
+        # A pinned batch within COLLECT_BUDGET_BYTES comes over in one
+        # collect() — one job instead of toLocalIterator's serial job per
+        # partition; same rows, same (partition) order. Only the
+        # driver-routed rows cross to the driver: iterating the unfiltered
+        # frame would ship every high-volume distributed-action row to the
+        # driver just to discard it — the exact bottleneck distributed=True
+        # exists to avoid.
         ran_driver = drv_rules or (default is not None and not default.distributed)
         if ran_driver:
             drv_df = df if cond is None else df.filter(~cond)
-            rows = (r.asDict() for r in drv_df.toLocalIterator())
+            pinned = None if df.isStreaming else _pinned_bytes(df)
+            if pinned is not None and pinned <= COLLECT_BUDGET_BYTES:
+                fetched = drv_df.collect()
+            else:
+                fetched = drv_df.toLocalIterator()
+            rows = (r.asDict() for r in fetched)
             done, failed = _run_groups(specs_by_rule, default, rows, False, chunk)
             for name, n in done:
                 self.completed.append((batch_id, name, n))

@@ -116,6 +116,91 @@ class TestSequenceCompilerParity:
         assert "FlatMapGroupsInPandas" not in plan and "ArrowEvalPython" not in plan
 
 
+class TestSequenceCompilerEdgeRows:
+    """Rows the state machine never sees from ``load_events`` but a caller
+    can hand ``compile_sequence``: NULL ts, NULL event_id, NULL key, ties
+    on ts and one (ts, event_id) shared by two rows. The expected
+    emissions were recorded from the sorted-successor-array kernel this
+    compiler replaced, so they pin its exact semantics: a NULL-ts row
+    never starts a chain nor joins one, a NULL-event_id step is taken but
+    not counted, and a tie joins a chain only with a greater event_id."""
+
+    ROWS = [
+        # (event_id, seconds offset, user, type, value)
+        (0, 0, 1, "a", 1.0), (1, 0, 1, "b", 2.0), (None, 0, 1, "b", 3.0),
+        (2, 5, 1, "a", 4.0), (None, 5, 1, "a", 5.0), (3, 5, 1, "b", 6.0),
+        (None, 7, 1, "b", 7.0), (4, 7, 1, "b", 8.0), (5, 7, 1, "c", 9.0),
+        (6, None, 1, "a", 10.0), (7, None, 1, "b", 11.0),
+        (8, 9, 1, "b", 13.0), (8, 9, 1, "c", 12.0), (None, 9, 1, "c", 14.0),
+        (9, 50, 1, "a", None), (None, 50, 1, "b", None), (10, 51, 1, "c", 2.5),
+        (11, 0, 2, "a", 1.0), (12, 0, 2, "b", 1.0), (13, 0, 2, "c", 1.0),
+        (14, 0, 2, "a", 1.0), (15, 0, 2, "b", 1.0), (16, 0, 2, "c", 1.0),
+        (17, 100, 2, "a", 1.0), (18, 100, 2, "b", 2.0), (19, 200, 2, "c", 3.0),
+        (20, 300, 2, "a", 1.0), (21, 300, 2, "b", 5.0), (21, 300, 2, "b", 2.0),
+        (22, 300, 2, "c", 4.0),
+        (23, 0, None, "a", 1.0), (24, 1, None, "b", 1.0), (25, 2, None, "c", 1.0),
+    ]
+    # (key, outcome, fire offset s, start id, last id, n_events, value_sum)
+    EXPECTED = {
+        ("t2", ("a", "b"), "PT10S"): [
+            ("1", "completed", 0, 0, 1, 2, 3.0),
+            ("1", "completed", 5, 2, 3, 2, 10.0),
+            ("1", "timeout", 15, None, None, 1, 5.0),
+            ("1", "timeout", 60, 9, 9, 1, None),
+            ("1", "timeout", None, 6, 6, 1, 10.0),
+            ("2", "completed", 0, 11, 12, 2, 2.0),
+            ("2", "completed", 0, 14, 15, 2, 2.0),
+            ("2", "completed", 100, 17, 18, 2, 3.0),
+            ("2", "completed", 300, 20, 21, 2, 3.0),
+            (None, "completed", 1, 23, 24, 2, 2.0),
+        ],
+        ("t3", ("a", "b", "c"), "PT30S"): [
+            ("1", "completed", 7, 0, 5, 3, 12.0),
+            ("1", "completed", 7, 2, 5, 3, 19.0),
+            ("1", "timeout", 35, None, None, 1, 5.0),
+            ("1", "timeout", 80, 9, 9, 1, None),
+            ("1", "timeout", None, 6, 6, 1, 10.0),
+            ("2", "completed", 0, 11, 13, 3, 3.0),
+            ("2", "completed", 0, 14, 16, 3, 3.0),
+            ("2", "completed", 300, 20, 22, 3, 7.0),
+            ("2", "timeout", 130, 17, 18, 2, 3.0),
+            (None, "completed", 2, 23, 25, 3, 3.0),
+        ],
+        ("n3", ("a", "b", "c"), None): [
+            ("1", "completed", 7, 0, 5, 3, 12.0),
+            ("1", "completed", 7, 2, 5, 3, 19.0),
+            ("2", "completed", 0, 11, 13, 3, 3.0),
+            ("2", "completed", 0, 14, 16, 3, 3.0),
+            ("2", "completed", 200, 17, 19, 3, 6.0),
+            ("2", "completed", 300, 20, 22, 3, 7.0),
+            (None, "completed", 2, 23, 25, 3, 3.0),
+        ],
+    }
+
+    @pytest.mark.parametrize("case", list(EXPECTED), ids=lambda c: c[0])
+    def test_matches_recorded_emissions(self, spark, case):
+        name, types, timeout = case
+        data = [
+            (e, None if s is None else T0 + dt.timedelta(seconds=s), u, t, v, None)
+            for e, s, u, t, v in self.ROWS
+        ]
+        df = spark.createDataFrame(
+            data,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        )
+        rule = sequence_rule(name, list(types), key="user_id", timeout=timeout)
+        got = [
+            (r["key"], r["outcome"],
+             None if r["fire_ts"] is None
+             else int((r["fire_ts"] - T0).total_seconds()),
+             r["start_event_id"], r["last_event_id"], r["n_events"],
+             r["value_sum"])
+            for r in compile_sequence(df, rule).collect()
+        ]
+        assert sorted(got, key=str) == self.EXPECTED[case]
+
+
 class TestGapSessionParity:
     @pytest.mark.parametrize("rows", [
         [(0, 0, 1, "a", 1), (1, 5, 1, "b", 2), (2, 30, 1, "a", 3),

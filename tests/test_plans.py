@@ -87,7 +87,7 @@ class TestShuffleBudget:
         assert plan.count("Exchange hashpartitioning") == 1
 
     def test_n_step_funnel_single_shuffle_no_joins(self, spark):
-        # the N-way chase is array HOFs over one window exchange — adding
+        # the N-way chase is window pointers over one exchange — adding
         # steps must never add joins or shuffles
         plan = _plan(spark, "cep_funnel_3step")
         assert plan.count("Exchange hashpartitioning") == 1
@@ -106,6 +106,44 @@ class TestShuffleBudget:
         # global agg = partial + final, never a groupBy(lit(1)) state machine
         assert "FlatMapGroupsInPandas" not in plan
         assert plan.count("HashAggregate") >= 2 or "SortAggregate" in plan
+
+
+class TestSequenceKernelPlan:
+    """``compile_sequence`` stays linear in a key's events: one exchange,
+    one sort and one ``Window`` per step after the first, and none of the
+    per-row successor arrays (``collect_list`` + ``sort_array`` + lambda
+    ``filter``) whose work grew with the square of a key's size. Counts
+    operators in the executed plan, so it holds at any load."""
+
+    @pytest.mark.parametrize("n", [2, 3, 4])
+    def test_one_exchange_one_sort_n_minus_1_windows(self, spark, n):
+        import datetime as dt
+        import re
+
+        from php_ec_spark.engine import compile_sequence
+        from php_ec_spark.rules import sequence_rule
+
+        df = spark.createDataFrame(
+            [(1, dt.datetime(2024, 1, 1), 1, "s0", 1.0, None)],
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        )
+        types = [f"s{i}" for i in range(n)]
+        for timeout in ("PT10S", None):
+            rule = sequence_rule("seq", types, key="user_id", timeout=timeout)
+            plan = (
+                compile_sequence(df, rule)
+                ._jdf.queryExecution().executedPlan().toString()
+            )
+            nodes = [
+                m.group(1)
+                for m in re.finditer(r"^[\s:|+-]*([A-Za-z]+)", plan, re.M)
+            ]
+            assert nodes.count("Exchange") == 1, plan
+            assert nodes.count("Sort") == 1, plan
+            assert nodes.count("Window") == n - 1, plan
+            for banned in ("collect_list", "sort_array", "lambdafunction"):
+                assert banned not in plan, plan
 
 
 class TestCounterSkewPlans:

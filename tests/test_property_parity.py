@@ -74,6 +74,40 @@ class TestPropertyParity:
         )
 
     @settings(
+        max_examples=8, deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(evs=EVENTS)
+    def test_no_timeout_sequence_parity(self, spark, evs):
+        # never-times-out: only the outcome = 'completed' rows survive
+        rule = sequence_rule("s", ["a", "b", "c"], key="user_id", timeout=None)
+        df = _df(spark, evs)
+        assert _rows(compile_sequence(df, rule)) == _rows(
+            correlate_state_machine(df, [rule])
+        )
+
+    @settings(
+        max_examples=8, deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(evs=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3),
+            st.integers(min_value=1, max_value=2),
+            st.sampled_from(["a", "b", "c"]),
+        ),
+        min_size=2, max_size=16,
+    ))
+    def test_dense_tie_sequence_parity(self, spark, evs):
+        # four distinct timestamps for up to 16 events: most steps are
+        # ordered by event_id alone, and the 2 s timeout cuts some chains
+        rule = sequence_rule("s", ["a", "b", "c"], key="user_id", timeout="PT2S")
+        df = _df(spark, evs)
+        assert _rows(compile_sequence(df, rule)) == _rows(
+            correlate_state_machine(df, [rule])
+        )
+
+    @settings(
         max_examples=12, deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )

@@ -46,6 +46,72 @@ class TestDriverPath:
         assert len(d.failed) == 1 and d.failed[0][1] == "bad"
 
 
+def _spy_fetches(monkeypatch, cls) -> list[str]:
+    """Record every ``collect``/``toLocalIterator`` call on ``cls`` frames."""
+    fetches: list[str] = []
+    for name in ("collect", "toLocalIterator"):
+        def spy(self, *a, _orig=getattr(cls, name), _name=name, **kw):
+            fetches.append(_name)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+    return fetches
+
+
+class TestPinnedFetch:
+    """A pinned batch within ``COLLECT_BUDGET_BYTES`` reaches the driver in
+    one ``collect()`` (one Spark job); over the budget it streams through
+    ``toLocalIterator`` (one job per partition). Rows, their order and the
+    exactly-once markers are the same either way."""
+
+    @pytest.fixture
+    def pinned(self, spark):
+        # one pin serves every dispatch of a test: a second shuffle could
+        # order the rows of a partition differently
+        df = _emissions(spark, n=40).repartition(4, "key")
+        df = df.localCheckpoint(eager=True)
+        yield df
+        df.unpersist()
+
+    def _dispatch(self, pinned, tmp_path, monkeypatch, budget=None):
+        from php_ec_spark.streaming import sinks
+
+        if budget is not None:
+            monkeypatch.setattr(sinks, "COLLECT_BUDGET_BYTES", budget)
+        fetches = _spy_fetches(monkeypatch, type(pinned))
+        seen: list[dict] = []
+        ckpt = tmp_path / f"budget-{budget}"
+        d = ActionDispatcher(checkpoint_dir=str(ckpt), chunk_size=7)
+        d.register("a", fn=seen.extend, rules=["r1"])
+        d(pinned, batch_id=3, pre_materialized=True)
+        monkeypatch.undo()
+        assert os.path.exists(ckpt / "actions" / "batch_3.done")
+        assert d.completed == [(3, "a", 40)] and d.failed == []
+        return fetches, [r["key"] for r in seen]
+
+    def test_pinned_batch_is_one_collect(self, pinned, tmp_path, monkeypatch):
+        fetches, keys = self._dispatch(pinned, tmp_path, monkeypatch)
+        assert fetches == ["collect"]
+        assert sorted(keys) == sorted(str(i) for i in range(40))
+
+    def test_over_budget_iterates_same_rows_in_same_order(
+        self, pinned, tmp_path, monkeypatch
+    ):
+        _, collected = self._dispatch(pinned, tmp_path, monkeypatch)
+        fetches, iterated = self._dispatch(pinned, tmp_path, monkeypatch, budget=0)
+        assert fetches == ["toLocalIterator"]
+        assert iterated == collected
+
+    def test_dispatcher_pin_is_one_collect(self, spark, monkeypatch):
+        em = _emissions(spark, n=5).repartition(3)
+        fetches = _spy_fetches(monkeypatch, type(em))
+        seen: list[dict] = []
+        d = ActionDispatcher()
+        d.register("a", fn=seen.extend, rules=["r1"])
+        d(em, batch_id=0)
+        assert fetches == ["collect"] and len(seen) == 5
+
+
 class TestDistributedPath:
     def test_runs_on_executors_without_driver_collect(self, spark, tmp_path):
         out = tmp_path / "sink"
