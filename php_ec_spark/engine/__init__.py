@@ -3,7 +3,7 @@ from .chain import chain_correlate, emissions_to_events
 from .relational import (
     compile_gap_sessions,
     compile_sequence,
-    plan_report,
+    strategies,
 )
 from .streaming import snapshot_state
 
@@ -15,6 +15,6 @@ __all__ = [
     "emissions_to_events",
     "compile_gap_sessions",
     "compile_sequence",
-    "plan_report",
+    "strategies",
     "snapshot_state",
 ]

@@ -16,8 +16,8 @@ Faithful re-expression of the reference's event loop
   (CorrelationEngine.php:252-254).
 
 Seven physical strategies, one per rule shape; ``relational.strategies()``
-is the one table that maps each rule to its strategy (``plan_report`` prints
-it):
+(exported as ``engine.strategies``) is the one table that maps each rule
+to its strategy:
 
 - ``keyless-counter`` / ``keyed-counter`` (``relational.compile_counter``) —
   continuous counters as one aggregate with map-side partial combine.
@@ -172,6 +172,20 @@ def _project(
     )
 
 
+def _event_tuples(eids, ts_ns, etypes, values) -> list:
+    """EngineCore's ``(event_id, ts_ns, type, value)`` tuples from one
+    batch's numpy columns (``ts_ns`` as int64 ns) — the one event feed of
+    the batch runner and the live handler. One C-loop ``tolist`` per
+    column, so the event loop never pays numpy per-element boxing. A NULL
+    ``event_id`` (Arrow hands a nullable bigint column with NULLs over as
+    float64 NaN) and a NaN ``value`` become ``None``."""
+    eid_l = eids.tolist()
+    if eids.dtype.kind == "f":
+        eid_l = [None if e != e else int(e) for e in eid_l]
+    val_l = [None if v != v else v for v in values.tolist()]
+    return list(zip(eid_l, ts_ns.tolist(), etypes.tolist(), val_l))
+
+
 def _make_partition_runner(
     rules: Sequence[Rule],
     historical: bool,
@@ -208,13 +222,13 @@ def _make_partition_runner(
         pending: list = []
 
         for pdf in batches:
-            ts_ns = pdf["ts"].astype("int64").to_numpy()
-            eids = pdf["event_id"].to_numpy()
-            etypes = pdf["event_type"].to_numpy()
-            values = pdf["value"].to_numpy()
-            keys = pdf["__key"].to_numpy(dtype=object)
-            for i in range(len(pdf)):
-                k = keys[i]
+            evs = _event_tuples(
+                pdf["event_id"].to_numpy(),
+                pdf["ts"].astype("int64").to_numpy(),
+                pdf["event_type"].to_numpy(),
+                pdf["value"].to_numpy(),
+            )
+            for k, ev in zip(pdf["__key"].tolist(), evs):
                 if core is None or k != cur_key:
                     if core is not None:
                         pending.extend(close(core, cur_key, last_ts))
@@ -222,12 +236,8 @@ def _make_partition_runner(
                         rules, None if keyless else k, historical=historical
                     )
                     cur_key = k
-                t = int(ts_ns[i])
-                last_ts = t
-                v = values[i]
-                core.handle(
-                    (int(eids[i]), t, etypes[i], None if v != v else v)
-                )
+                last_ts = ev[1]
+                core.handle(ev)
             if pending:
                 yield to_pdf(pending)
                 pending = []

@@ -1,25 +1,27 @@
-"""Relational fast path: compile simple sequence rules to window plans.
+"""Relational fast path: compile rule shapes to window and aggregate plans.
 
-A 2-group sequence rule with timeout — the reference's canonical
+:func:`strategies` maps each rule to its plan. Its widest shape is an
+N-step sequence rule with timeout; the reference's canonical
 CheckOrderPayment pattern (examples/online_shop/rules/CheckOrderPayment.php:
 EVENTS [['shop:order:placed'],['shop:order:paid']], TIMEOUT 'PT20S', keyed by
-orderid) — has fully relational semantics:
+orderid) is its 2-step case. Such a rule has fully relational semantics:
 
     for every A event e:  let f = first B event after e (same key)
         f exists and f.ts ≤ e.ts + timeout  → completed, fired at f.ts
         otherwise                            → timeout,   fired at e.ts + timeout
 
+and each further step repeats the test against the step before it.
 ("first B after e" uses stream order (ts, event_id); the acceptEventTime
 check (AEventProcessor.php:357-396) rejects any B after the deadline, and
 since the FIRST B is the earliest one, later Bs can never complete an
 instance the first B couldn't.)
 
-This compiles to ONE window function over ONE shuffle on the key — no join,
+This compiles to window functions over ONE shuffle on the key — no join,
 no Python, whole-stage codegen throughout. At 100 TB this is the plan you
 want: shuffle is proportional to the A/B event subset (type filter is pushed
 to the parquet scan), and the per-key window is streamed, not materialized.
 
-Requires group types to be distinct: for A→A sequences the reference's
+Requires step types to be distinct: for A→A sequences the reference's
 per-class dedup (CorrelationEngine.php:252-254) pairs events disjointly,
 which a window cannot express — those fall back to the state machine.
 """
@@ -34,8 +36,8 @@ from ..rules.base import EVENT_MATCH_ANY, Rule
 
 def strategies(rules, historical: bool = False) -> dict[str, str]:
     """Rule name → the physical strategy it compiles to: the one table
-    :func:`~php_ec_spark.engine.batch.correlate` dispatches on and
-    :func:`plan_report` prints. Values are ``priority-suppress |
+    :func:`~php_ec_spark.engine.batch.correlate` dispatches on (the
+    ``.explain()`` of the rule compiler). Values are ``priority-suppress |
     keyless-counter | keyed-counter | single-match | gap-sessions |
     sequence-window | state-machine``."""
     from .batch import check_unique_rule_names
@@ -45,121 +47,87 @@ def strategies(rules, historical: bool = False) -> dict[str, str]:
     check_unique_rule_names(rules)
     if any(r.suppress for r in rules):
         # suppression makes rule-list order semantic across ALL rules
-        # (CorrelationEngine.php:231-236). Stateless rule sets compile to
-        # priority routing; anything stateful needs one serial pass.
-        strat = (
-            "priority-suppress" if is_priority_suppress_set(rules) else "state-machine"
+        # (CorrelationEngine.php:231-236). A set of stateless single
+        # matches reduces to per-event priority routing: an event is
+        # handled by each matching rule up to and including the FIRST
+        # matching suppressor. Anything stateful needs one serial pass.
+        single = all(_strategy(r, False) == "single-match" for r in rules)
+        return dict.fromkeys(
+            (r.name for r in rules),
+            "priority-suppress" if single else "state-machine",
         )
-        return {r.name: strat for r in rules}
     return {r.name: _strategy(r, historical) for r in rules}
 
 
 def _strategy(rule: Rule, historical: bool) -> str:
-    # historical replay with HISTORICAL_IGNORE_TIMEOUT keeps instances
-    # alive past their deadline (AEventProcessor.php:377-383) — no
-    # relational plan can express that
-    if historical and rule.historical_ignore_timeout and rule.timeout_s is not None:
+    """One rule's shape → strategy, decided in order (``rule.suppress`` is
+    decided by :func:`strategies`)."""
+    # accept predicates and per-event callbacks are Python; historical
+    # replay with HISTORICAL_IGNORE_TIMEOUT keeps instances alive past
+    # their deadline (AEventProcessor.php:377-383). No relational plan
+    # expresses any of them.
+    if (
+        rule.accept is not None
+        or rule.emit_progress
+        or rule.on_complete is not None
+        or rule.on_timeout is not None
+        or (historical and rule.historical_ignore_timeout
+            and rule.timeout_s is not None)
+    ):
         return "state-machine"
-    if is_keyless_counter(rule):
-        return "keyless-counter"
-    if is_keyed_counter(rule):
-        return "keyed-counter"
-    if rule.emit_progress or rule.emit_final or rule.on_complete or rule.on_timeout:
-        return "state-machine"
-    if is_single_match(rule):
-        return "single-match"
-    if is_gap_sessions(rule):
-        return "gap-sessions"
+    n = len(rule.events)
+    if n == 1 and not rule.continuous:
+        # MatchSingle (Rule/MatchSingle.php:22-33): completes on its first
+        # event, so it is a stateless filter — keyless ('*'-style
+        # LogEverything) rules too, which stay a parallel scan instead of
+        # a single-partition state machine. It leaves nothing live for an
+        # end-of-stream 'final' row.
+        return "state-machine" if rule.emit_final else "single-match"
     # chain trimming (trimEventChain, AEventProcessor.php:321-332) changes
-    # n_events/start/value_sum of emissions — state-machine only.
+    # n_events/start/value_sum of emissions — state-machine only
     if rule.chain_limit is not None:
         return "state-machine"
-    if not rule.is_simple_sequence or len(rule.events) < 2:
+    if n == 1:
+        # continuous (Rule/MatchSingleContinuously.php:31-44)
+        if rule.timeout_s is None:
+            # the incrStat counter, reported once at end-of-stream: one
+            # aggregate with map-side partial combine (a hot key shuffles
+            # one partial row per input partition; pinned by
+            # tests/test_plans.py::TestCounterSkewPlans)
+            if rule.emit_final:
+                return "keyless-counter" if rule.key is None else "keyed-counter"
+        elif rule.key is not None and not rule.emit_final:
+            # one timeout emission per session whose chain is the whole
+            # session (J4/W6): lag-gap sessionization
+            return "gap-sessions"
         return "state-machine"
-    # repeated types re-enter per-class dedup (CorrelationEngine.php:252-254):
-    # an event consumed mid-chain must not seed a new instance — only the
-    # state machine models that.
+    # an N-step sequence of single distinct types, keyed. Wildcard and
+    # multi-type steps, continuous rules and 'final' rows need the state
+    # machine; repeated types re-enter per-class dedup
+    # (CorrelationEngine.php:252-254): an event consumed mid-chain must
+    # not seed a new instance.
     types = [g[0] for g in rule.events]
-    return "sequence-window" if len(set(types)) == len(types) else "state-machine"
-
-
-def is_gap_sessions(rule: Rule) -> bool:
-    """Keyed continuous matcher with a timeout = session-gap detection (J4/
-    W6): one timeout emission per session whose chain is the whole session.
-    Relational form: lag-gap → running session id → per-session aggregate."""
-    return (
+    if (
         rule.continuous
-        and rule.timeout_s is not None
-        and rule.key is not None
-        and len(rule.events) == 1
-        and rule.chain_limit is None
-        and rule.accept is None
-        and not rule.suppress
-        and not rule.emit_progress
-        and not rule.emit_final
-        and rule.on_complete is None
-        and rule.on_timeout is None
-    )
+        or rule.emit_final
+        or rule.key is None
+        or any(len(g) != 1 for g in rule.events)
+        or EVENT_MATCH_ANY in types
+        or len(set(types)) != n
+    ):
+        return "state-machine"
+    return "sequence-window"
 
 
-def is_single_match(rule: Rule) -> bool:
-    """MatchSingle (Rule/MatchSingle.php:22-33): one group, completes on the
-    first accepted event — pure stateless filter, one emission per event.
-    Keyless ('*'-style LogEverything) rules compile here too: no state means
-    no partitioning requirement, so they stay an embarrassingly parallel
-    scan instead of a single-partition state machine."""
-    return (
-        len(rule.events) == 1
-        and not rule.continuous
-        and not rule.suppress
-        and rule.accept is None
-    )
-
-
-def _is_counter_shape(rule: Rule) -> bool:
-    """Continuous counter — the incrStat shape: an instance consuming
-    every matching event forever, reported once at end-of-stream. ONE
-    predicate for both the keyed and keyless variants so the admission
-    criteria can never drift apart."""
-    return (
-        rule.continuous
-        and rule.timeout_s is None
-        and rule.chain_limit is None
-        and len(rule.events) == 1
-        and rule.accept is None
-        and not rule.suppress
-        and rule.emit_final
-        and not rule.emit_progress
-        and rule.on_complete is None
-        and rule.on_timeout is None
-    )
-
-
-def is_keyless_counter(rule: Rule) -> bool:
-    """Keyless counter (LogEverything): compiles to a plain
-    ``agg()`` (map-side partial aggregation), NOT the single-partition
-    ordered state machine — the scale fix for un-keyed wildcard rules."""
-    return rule.key is None and _is_counter_shape(rule)
-
-
-def is_keyed_counter(rule: Rule) -> bool:
-    """Keyed counter — per-key incrStat, ``groupBy(key).agg(...)``
-    instead of the per-key state machine. The skew story is the point:
-    every aggregate here (count, sum, min_by, max_by, max) supports
-    MAP-SIDE PARTIAL AGGREGATION, so a 50% hot key shuffles one partial
-    row per input partition, not 50% of the data to one straggler task —
-    Catalyst's two-stage HashAggregate is the salted_agg pattern built in
-    (pinned by tests/test_plans.py::TestCounterSkewPlans). Rules that
-    need ordered per-event state (chain trims, timeouts, callbacks) keep
-    the state machine, where a hot key genuinely serializes and
-    ``metrics.warn_if_skewed`` flags it."""
-    return rule.key is not None and _is_counter_shape(rule)
-
-
-def _key_expr(rule: Rule):
-    if rule.key is None:
-        return F.lit(None).cast("string").alias("key")
-    return F.col(rule.key).cast("string").alias("key")
+def _require(rule: Rule, strategy: str) -> None:
+    """Misuse guard of the public compilers: every shape compiles to its
+    own plan, and feeding another shape to one would silently emit wrong
+    results (e.g. a gap rule's n=1 makes every event 'completed')."""
+    if strategies([rule])[rule.name] != strategy:
+        raise ValueError(
+            f"rule {rule.name!r} does not compile to {strategy!r} — use "
+            "correlate(), which dispatches every rule to its strategy"
+        )
 
 
 # --- SQL-string expression builders (round 17) -----------------------------
@@ -267,15 +235,7 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     step_{i-1}.ts + timeout (fired there even past end-of-stream, matching
     the batch drain).
     """
-    # guard against MISUSE of this public export: counter/single-match/gap
-    # shapes compile to DIFFERENT plans — feeding one here would silently
-    # emit wrong results (e.g. a gap rule's n=1 makes every event
-    # 'completed')
-    if strategies([rule])[rule.name] != "sequence-window":
-        raise ValueError(
-            f"rule {rule.name!r} is not a sequence shape — use "
-            "correlate(), which dispatches every rule to its strategy"
-        )
+    _require(rule, "sequence-window")
     types = [g[0] for g in rule.events]
     n = len(types)
     key = rule.key
@@ -406,30 +366,6 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
     return out
 
 
-def plan_report(rules, historical: bool = False) -> dict[str, str]:
-    """Which physical strategy each rule compiles to — the ``.explain()``
-    of the rule compiler; see :func:`strategies`."""
-    return strategies(rules, historical)
-
-
-def is_priority_suppress_set(rules) -> bool:
-    """A rule list where suppression can be compiled relationally: every
-    rule is a stateless single match (possibly suppressing). Suppression
-    order then reduces to per-event priority routing — an event is handled
-    by each matching rule up to and including the FIRST matching suppressor
-    (CorrelationEngine.php:231-236) — no state machine required."""
-    return len(rules) > 0 and all(
-        len(r.events) == 1
-        and not r.continuous
-        and r.accept is None
-        and not r.emit_progress
-        and not r.emit_final
-        and r.on_complete is None
-        and r.on_timeout is None
-        for r in rules
-    )
-
-
 def compile_priority_suppress(events: DataFrame, rules) -> DataFrame:
     """Relational plan for suppressing single-match rule sets.
 
@@ -471,7 +407,7 @@ def compile_gap_sessions(events: DataFrame, rule: Rule) -> DataFrame:
     (CorrelationEngine batch drain at end of stream). Two shuffles total
     (window on key, agg on key+session), no Python.
     """
-    assert is_gap_sessions(rule), rule
+    _require(rule, "gap-sessions")
     key = rule.key
     # SQL-string columns, same rationale as compile_sequence (round 17):
     # one py4j round-trip per column instead of one per expression node

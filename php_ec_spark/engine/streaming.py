@@ -86,6 +86,7 @@ from ..rules.base import Rule
 from .batch import (
     EMISSION_SCHEMA,
     SNAPSHOT_SCHEMA,  # noqa: F401  (re-exported: warm-start callers' schema)
+    _event_tuples,
     _project,
     _replay,
     check_unique_rule_names,
@@ -182,17 +183,8 @@ def _make_stateful_handler(
                     eids = eids[order]
                     etypes = etypes[order]
                     values = values[order]
-                # one C-loop conversion to Python scalars; the event loop
-                # then never pays numpy per-element boxing
-                ts_l = ts_ns.tolist()
-                eid_l = eids.tolist()
-                et_l = etypes.tolist()
-                val_l = values.tolist()
-                ch = core.handle
-                for i in range(len(ts_l)):
-                    v = val_l[i]
-                    ch((eid_l[i], ts_l[i], et_l[i],
-                        None if v is not None and v != v else v))
+                for ev in _event_tuples(eids, ts_ns, etypes, values):
+                    core.handle(ev)
 
         # re-arm the single earliest-deadline timer for this key
         nxt = core.next_deadline()

@@ -84,16 +84,6 @@ def observe_stream(df: DataFrame, exprs: Optional[Sequence[Column]] = None,
     return df.observe(name, *cols)
 
 
-def partition_row_counts(df: DataFrame) -> DataFrame:
-    """Physical partition → row count (one tiny aggregation job). Run on a
-    repartitioned DataFrame to see how the shuffle actually balanced."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .orderBy(F.col("count").desc())
-    )
-
-
 def key_skew(events: DataFrame, key_col: str, top_n: int = 5) -> dict:
     """Hot-key telemetry for the stateful paths (one aggregation job).
 
@@ -145,8 +135,9 @@ def warn_if_skewed(
             f"({skew['max_share']:.0%}) — a single key never splits across "
             "tasks, so this caps the stateful path's parallelism. Counter-"
             "shaped rules (continuous, no timeout/trim, emit_final) compile "
-            "to skew-neutral two-stage aggregates automatically (engine."
-            "relational.is_keyed_counter); for other commutative aggregates "
+            "to skew-neutral two-stage aggregates automatically (the "
+            "'keyed-counter' strategy of engine.strategies()); for other "
+            "commutative aggregates "
             "use layout.with_salt/salted_agg; for keyed correlation "
             "semantics pick a finer key or split the rule.",
             UserWarning,

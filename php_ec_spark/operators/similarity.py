@@ -151,23 +151,6 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
-def with_unit_vec(df: DataFrame, vec_col: str = "embedding", out_col: str = "unit") -> DataFrame:
-    """Pre-normalize embeddings to unit length (cosine ⇒ plain dot product).
-
-    The norm is computed ONCE into a column (embedding it inside the
-    per-element lambda would re-run the O(d) aggregate d times); zero
-    vectors normalize to zero vectors instead of NaN."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    d = df.withColumn("__norm", _norm(v))
-    return d.withColumn(
-        out_col,
-        F.when(
-            F.col("__norm") > 0,
-            F.transform(v, lambda x: x / F.col("__norm")),
-        ).otherwise(F.transform(v, lambda x: x * 0.0)),
-    ).drop("__norm")
-
-
 def _collect_matrix(corpus: DataFrame, id_col: str, vec_col: str):
     """Assemble (ids, M, norms) for broadcasting WITHOUT a full-corpus
     ``toPandas``: each Arrow batch is packed executor-side into one compact

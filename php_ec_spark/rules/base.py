@@ -6,10 +6,11 @@ src/StateMachine/AEventProcessor.php:122-137: class constants ``EVENTS``,
 callbacks onComplete/onTimeout/onProgress). Here a rule is a picklable
 dataclass that the engine compiles to a Spark plan:
 
-- 2-group sequence + timeout → pure relational plan (window functions, no
-  Python in the hot path) — see ``engine/relational.py``.
-- General N-group / continuous / suppressing rules → per-key vectorized
-  state machine via ``applyInPandas`` (batch) or
+- N-step sequences of distinct types, single matches, counters and gap
+  sessions → pure relational plans (window functions and aggregates, no
+  Python in the hot path); ``engine.relational.strategies()`` decides
+  which shape a rule is.
+- Every other rule → per-key state machine via ``mapInPandas`` (batch) or
   ``applyInPandasWithState`` (streaming) — see ``engine/batch.py``.
 
 Key difference from the reference, by design: the correlation key must be
@@ -180,23 +181,6 @@ class Rule:
     @property
     def timeout_s(self) -> Optional[float]:
         return self._timeout_s
-
-    @property
-    def is_simple_sequence(self) -> bool:
-        """Shape check ONLY: a keyed, non-continuous, non-suppressing,
-        accept-free sequence of single distinct-type groups. This is
-        NECESSARY but not sufficient for the relational fast path — it
-        deliberately ignores callbacks (on_complete/on_timeout),
-        emit_progress/emit_final, and chain_limit, all of which ALSO
-        force the state machine; ``engine.relational.strategies()`` makes
-        the full routing decision."""
-        return (
-            not self.continuous
-            and not self.suppress
-            and self.accept is None
-            and self.key is not None
-            and all(len(g) == 1 and g[0] != EVENT_MATCH_ANY for g in self.events)
-        )
 
 
 def sequence_rule(

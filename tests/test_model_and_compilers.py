@@ -110,6 +110,11 @@ class TestSequenceCompilerParity:
             correlate_state_machine(df, [rule])
         )
 
+    def test_rejects_other_shapes(self, spark):
+        gap = match_single_continuously("g", ["*"], key="user_id", timeout="PT10S")
+        with pytest.raises(ValueError, match="does not compile to 'sequence-window'"):
+            compile_sequence(_mk(spark, self.CASES[0]), gap)
+
     def test_plan_has_no_python(self, spark):
         rule = sequence_rule("f3", ["a", "b", "c"], key="user_id", timeout="PT10S")
         plan = compile_sequence(_mk(spark, self.CASES[0]), rule)._jdf.queryExecution().executedPlan().toString()
@@ -221,6 +226,12 @@ class TestGapSessionParity:
         df = _mk(spark, [(0, 0, 1, "a", 1), (1, 10, 1, "a", 1)])
         rows = _rows(compile_gap_sessions(df, rule))
         assert len(rows) == 1 and rows[0][6] == 2
+
+    def test_rejects_other_shapes(self, spark):
+        # a raised error, not an assert: ``python -O`` strips asserts
+        seq = sequence_rule("s", ["a", "b"], key="user_id", timeout="PT10S")
+        with pytest.raises(ValueError, match="does not compile to 'gap-sessions'"):
+            compile_gap_sessions(_mk(spark, [(0, 0, 1, "a", 1)]), seq)
 
 
 class TestCronExpressions:
@@ -422,7 +433,7 @@ class TestKeyedCounterParity:
 
 class TestPlanReport:
     def test_strategies(self):
-        from php_ec_spark.engine import plan_report
+        from php_ec_spark.engine import strategies
         from php_ec_spark.rules import (
             match_single,
             match_single_continuously,
@@ -437,7 +448,7 @@ class TestPlanReport:
             match_single_continuously("kcnt", ["*"], key="user_id", emit_final=True),
             sequence_rule("dup", ["a", "a"], key="user_id", timeout="PT1M"),
         ]
-        assert plan_report(rules) == {
+        assert strategies(rules) == {
             "seq": "sequence-window",
             "gap": "gap-sessions",
             "one": "single-match",
@@ -448,10 +459,85 @@ class TestPlanReport:
         # historical mode pushes timeout-bearing H_I_T rules off the window plan
         h = sequence_rule("h", ["a", "b"], key="user_id", timeout="PT1M",
                           historical_ignore_timeout=True)
-        assert plan_report([h], historical=True) == {"h": "state-machine"}
+        assert strategies([h], historical=True) == {"h": "state-machine"}
         sup = [match_single("s", ["a"], key="user_id", suppress=True),
                match_single("r", ["*"], key="user_id")]
-        assert plan_report(sup) == {"s": "priority-suppress", "r": "priority-suppress"}
+        assert strategies(sup) == {"s": "priority-suppress", "r": "priority-suppress"}
+
+    def test_boundary_shapes(self):
+        """Each shape sits next to a relational one and differs from it in
+        one flag, so each takes the state machine."""
+        from php_ec_spark.engine import strategies
+        from php_ec_spark.rules import (
+            Rule,
+            match_single,
+            match_single_continuously,
+            sequence_rule,
+        )
+
+        rules = [
+            # gap-sessions, but with an end-of-stream 'final' row
+            match_single_continuously("gap_final", ["*"], key="user_id",
+                                      timeout="PT1M", emit_final=True),
+            # gap-sessions, but keyless
+            match_single_continuously("gap_keyless", ["*"], key=None,
+                                      timeout="PT1M"),
+            # keyed-counter, but nothing reports the count
+            match_single_continuously("cnt_silent", ["*"], key="user_id"),
+            # single-match, but with a 'final' row
+            match_single("one_final", ["a"], key="user_id", emit_final=True),
+            # sequence-window, but one step is a wildcard
+            sequence_rule("seq_any", ["a", "*"], key="user_id", timeout="PT1M"),
+            # sequence-window, but trimmed
+            sequence_rule("seq_trim", ["a", "b"], key="user_id",
+                          timeout="PT1M", chain_limit=1),
+            # sequence-window, but one step accepts two types
+            Rule("seq_multi", [["a"], ["b", "c"]], key="user_id",
+                 timeout="PT1M"),
+        ]
+        assert strategies(rules) == dict.fromkeys(
+            (r.name for r in rules), "state-machine"
+        )
+        # a suppressing set is priority-routed only if every rule in it is
+        # a single match; one continuous rule makes the whole set serial
+        sup = [match_single("s", ["a"], key="user_id", suppress=True),
+               match_single_continuously("c", ["*"], key="user_id",
+                                         emit_final=True)]
+        assert strategies(sup) == {"s": "state-machine", "c": "state-machine"}
+
+
+class TestNullEventId:
+    """A NULL event_id reaches EngineCore as None: the batch runner and
+    the live handler share one event feed (``batch._event_tuples``)."""
+
+    def test_state_machine_takes_null_event_id_step(self, spark):
+        rule = sequence_rule("ab", ["a", "b"], key="user_id", timeout="PT10S")
+        df = _mk(spark, [(0, 0, 1, "a", 1), (None, 2, 1, "b", 2)])
+        assert _rows(correlate_state_machine(df, [rule])) == [
+            ("ab", "1", "completed", T0 + dt.timedelta(seconds=2), 0, None,
+             2, 3.0),
+        ]
+
+    def test_event_tuples_null_id_and_value(self):
+        import numpy as np
+
+        from php_ec_spark.engine.batch import _event_tuples
+
+        evs = _event_tuples(
+            np.array([1.0, np.nan, 3.0]),  # a nullable bigint with a NULL
+            np.array([10, 20, 30], dtype="int64"),
+            np.array(["a", "b", None], dtype=object),
+            np.array([0.5, np.nan, 2.0]),
+        )
+        assert evs == [(1, 10, "a", 0.5), (None, 20, "b", None),
+                       (3, 30, None, 2.0)]
+        assert [type(e[0]) for e in evs] == [int, type(None), int]
+        assert all(type(e[1]) is int for e in evs)
+        # a NULL-free id column stays int64 and passes through as ints
+        (ev,) = _event_tuples(np.array([7], dtype="int64"),
+                              np.array([1], dtype="int64"),
+                              np.array(["a"], dtype=object), np.array([1.0]))
+        assert ev == (7, 1, "a", 1.0) and type(ev[0]) is int
 
 
 class TestErrorQuarantine:

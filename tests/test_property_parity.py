@@ -206,12 +206,12 @@ class TestPropertyParity:
     )
     def test_priority_suppress_parity(self, spark, evs, sup):
         """Random suppression flags over a 3-rule single-match stack (the
-        shape is_priority_suppress_set admits — stateless, non-continuous):
+        shape strategies() priority-routes — stateless, non-continuous):
         the relational plan must equal the serial state machine for every
         flag combination (F8 ordering semantics)."""
         from php_ec_spark.engine.relational import (
             compile_priority_suppress,
-            is_priority_suppress_set,
+            strategies,
         )
         from php_ec_spark.rules import match_single
 
@@ -220,7 +220,10 @@ class TestPropertyParity:
             match_single("r_bc", ["b", "c"], key="user_id", suppress=sup[1]),
             match_single("r_all", ["*"], key="user_id", suppress=sup[2]),
         ]
-        assert is_priority_suppress_set(rules)
+        # without a suppressor the set is three plain single matches
+        assert set(strategies(rules).values()) == (
+            {"priority-suppress"} if any(sup) else {"single-match"}
+        )
         df = _df(spark, evs)
         assert _rows(compile_priority_suppress(df, rules)) == _rows(
             correlate_state_machine(df, rules)
