@@ -310,11 +310,15 @@ def correlate_state_machine(
     return reduce(DataFrame.unionByName, outs)
 
 
-def correlate(events: DataFrame, rules: Sequence[Rule], historical: bool = False) -> DataFrame:
-    """Run rules over a batch event stream, each rule on the physical plan
-    ``relational.strategies()`` picks for it. Relational branches union in
-    rule order; state-machine rules share one pass, unioned last.
-    Emissions share EMISSION_SCHEMA across strategies."""
+def _branches(
+    events: DataFrame, rules: Sequence[Rule], historical: bool
+) -> list[Tuple[str, list[Rule], DataFrame]]:
+    """``(strategy, rules, emissions)`` per branch of :func:`correlate`'s
+    union, in union order: one per relational rule in rule order, then
+    one state-machine pass of the rest. A set routed as
+    ``priority-suppress`` is one branch. ``chain_correlate`` feeds a
+    round's producers from these very frames, so a branch read by two
+    rounds is built once."""
     from .relational import (
         compile_counter,
         compile_gap_sessions,
@@ -325,10 +329,11 @@ def correlate(events: DataFrame, rules: Sequence[Rule], historical: bool = False
     )
 
     if not rules:
-        return events.sparkSession.createDataFrame([], EMISSION_SCHEMA)
+        return []
     strat = strategies(rules, historical)
     if "priority-suppress" in strat.values():
-        return compile_priority_suppress(events, rules)
+        return [("priority-suppress", list(rules),
+                 compile_priority_suppress(events, rules))]
     compilers = {
         "keyless-counter": compile_counter,
         "keyed-counter": compile_counter,
@@ -336,11 +341,23 @@ def correlate(events: DataFrame, rules: Sequence[Rule], historical: bool = False
         "gap-sessions": compile_gap_sessions,
         "sequence-window": compile_sequence,
     }
-    outs = [
-        compilers[strat[r.name]](events, r)
+    out = [
+        (strat[r.name], [r], compilers[strat[r.name]](events, r))
         for r in rules if strat[r.name] != "state-machine"
     ]
     general = [r for r in rules if strat[r.name] == "state-machine"]
     if general:
-        outs.append(correlate_state_machine(events, general, historical=historical))
-    return reduce(DataFrame.unionByName, outs)
+        out.append(("state-machine", general, correlate_state_machine(
+            events, general, historical=historical)))
+    return out
+
+
+def correlate(events: DataFrame, rules: Sequence[Rule], historical: bool = False) -> DataFrame:
+    """Run rules over a batch event stream, each rule on the physical plan
+    ``relational.strategies()`` picks for it. Relational branches union in
+    rule order; state-machine rules share one pass, unioned last.
+    Emissions share EMISSION_SCHEMA across strategies."""
+    branches = _branches(events, rules, historical)
+    if not branches:
+        return events.sparkSession.createDataFrame([], EMISSION_SCHEMA)
+    return reduce(DataFrame.unionByName, (df for _, _, df in branches))

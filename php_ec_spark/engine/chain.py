@@ -7,23 +7,31 @@ CheckOrderPayment times out → emits shop:order:payment:timeout →
 OrderPaymentReminder consumes it (examples/online_shop/rules/
 CheckOrderPayment.php:20-27 → OrderPaymentReminder.php:7-17).
 
-In batch mode this is a fixpoint loop: correlate → turn emissions into
-events → union into the stream → correlate again, until no new emissions or
-the depth cap is hit (php-ec can loop forever too; futureTick just defers).
-Each round's derived stream is tiny relative to the source, so the loop
-cost is ~rounds × (one correlate over new events only).
+In batch mode the rounds are worked out before any Spark job: round 0
+runs every rule over the source stream, and round k+1 runs the rules that
+can consume a type round k can derive, over round k's derived events
+only. When that static pruning ends the chain within the depth cap, the
+whole chain is ONE lazy plan: round k+1 reads the very branch frames of
+round k's producers (the rules that can derive a type round k+1
+consumes), so nothing is built twice and Spark's exchange reuse runs
+each shared shuffle once. A round is pinned and counted only where its
+result would otherwise be computed twice or a runtime stop is needed: a
+producer runs in the Python state machine, the round has a suppressing
+rule, or the static pruning does not end the chain within the cap (a
+cycle, e.g. through a ``'*'`` rule), so only an empty round can end it
+early (php-ec can loop forever too; futureTick just defers).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence
+from functools import reduce
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..rules.base import EVENT_MATCH_ANY, Rule
 from ..session import pin_intermediate
-from .batch import EMISSION_SCHEMA, correlate
+from .batch import EMISSION_SCHEMA, _branches
 
 
 #: Outcome → code for derived-event ids. Every outcome the engine can
@@ -130,6 +138,50 @@ def _derived_events_mapper(
     )
 
 
+def _derivable_types(rules: Sequence[Rule]) -> set:
+    """STATIC superset of the '<rule>:<outcome>' types ``rules`` can
+    emit, decided without a Spark job. A superset is always prune-safe:
+    an over-kept rule runs one cheap round that emits nothing, and an
+    actually emitted type can never fall outside it."""
+    out = set()
+    for r in rules:
+        out.add(f"{r.name}:completed")
+        if r.timeout_s is not None:
+            out.add(f"{r.name}:timeout")
+        if r.emit_progress:
+            out.add(f"{r.name}:progress")
+        if r.emit_final:
+            out.add(f"{r.name}:final")
+        if r.accept or r.on_complete or r.on_timeout:
+            out.add(f"{r.name}:error")  # callback quarantine outcome
+    return out
+
+
+def _round_rules(
+    rules: Sequence[Rule], max_depth: int
+) -> "tuple[list[list[Rule]], bool]":
+    """(the rule set of each round, at most ``max_depth`` of them; whether
+    the static pruning ends the chain by then). Later rounds see only
+    derived events, so a rule that can consume none of the previous
+    round's derivable types cannot start, consume or suppress anything
+    there. An acyclic rule set ends within len(rules) rounds; a cyclic
+    one never does."""
+    if max_depth < 1:
+        return [], True
+    rounds = [list(rules)]
+    while True:
+        derived = _derivable_types(rounds[-1])
+        nxt = [
+            r for r in rules
+            if any(EVENT_MATCH_ANY in g or set(g) & derived for g in r.events)
+        ]
+        if not nxt:
+            return rounds, True
+        if len(rounds) == max_depth:
+            return rounds, False
+        rounds.append(nxt)
+
+
 def chain_correlate(
     events: DataFrame,
     rules: Sequence[Rule],
@@ -144,65 +196,52 @@ def chain_correlate(
     a derived event is a brand-new engine entry). Stops when a round emits
     nothing or after ``max_depth`` rounds. Returns all emissions unioned.
 
-    Each round is pinned (``session.pin_intermediate``) to truncate lineage
-    between rounds — without it the plan doubles per round and the driver,
-    not the data, becomes the bottleneck.
+    The rounds are decided up front (:func:`_round_rules`). Round k+1's
+    input is the derived events of round k's producer branches — the same
+    DataFrame objects round k's output unions — so an acyclic chain of
+    relational producers is one lazy plan: no Spark job runs before the
+    caller's action, and each shared branch is built once. A round read
+    twice is pinned (``session.pin_intermediate``) and counted, which
+    also stops the chain at an empty round, where a producer runs in the
+    state machine (its Python would run twice), the round suppresses
+    (its branches cannot be split per rule), or the static pruning does
+    not end the chain within ``max_depth`` (a cycle), so only an empty
+    round can end it early. Each pin cuts the lineage, so such a chain's
+    plan stays one round deep.
     """
-    spark = events.sparkSession
     to_events = _derived_events_mapper(events, rules)
-
-    def _derivable_types(active_rules: Sequence[Rule]) -> set:
-        # STATIC superset of the '<rule>:<outcome>' types this round can
-        # emit — no Spark job (replaces a per-round distinct().collect();
-        # the job was ~10% of the two-round fixpoint's wall time). A
-        # superset is always prune-safe: an over-kept rule runs one cheap
-        # round that emits nothing and the take(1) break fires; an actual
-        # emitted type can never fall outside it.
-        out = set()
-        for r in active_rules:
-            out.add(f"{r.name}:completed")
-            if r.timeout_s is not None:
-                out.add(f"{r.name}:timeout")
-            if r.emit_progress:
-                out.add(f"{r.name}:progress")
-            if r.emit_final:
-                out.add(f"{r.name}:final")
-            if r.accept or r.on_complete or r.on_timeout:
-                out.add(f"{r.name}:error")  # callback quarantine outcome
-        return out
-
-    all_emissions: Optional[DataFrame] = None
-    current = events
-    active = list(rules)
-    for _ in range(max_depth):
-        emitted = correlate(current, active, historical=historical)
-        # LAZY checkpoint + count() fuses the former eager-materialize +
-        # take(1) pair into ONE job per round (round 17): the count's
-        # job computes the round AND persists the checkpoint blocks as
-        # it goes (the RDD is marked for checkpointing before the
-        # action), and the row count answers the emptiness test the
-        # take used to re-ask of the already-pinned blocks.
-        emitted = pin_intermediate(emitted)
-        if not emitted.count():
+    rounds, ends = _round_rules(rules, max_depth)
+    out: list[DataFrame] = []
+    feed = events
+    for k, active in enumerate(rounds):
+        branches = _branches(feed, active, historical)
+        if not branches:
             break
-        all_emissions = (
-            emitted if all_emissions is None else all_emissions.unionByName(emitted)
-        )
-        current = to_events(emitted)
-        # Round pruning: later rounds see ONLY this round's derived types,
-        # so a rule with no possible type overlap cannot start, consume, or
-        # suppress anything — drop it from the next pass (and stop outright
-        # when no rule overlaps, saving the would-be-empty correlate round).
-        derived_types = _derivable_types(active)
-        active = [
-            r for r in rules
-            if any(
-                EVENT_MATCH_ANY in g or (set(g) & derived_types)
-                for g in r.events
-            )
+        emitted = reduce(DataFrame.unionByName, (df for _, _, df in branches))
+        if k + 1 == len(rounds):
+            out.append(emitted)
+            break
+        wanted = {t for r in rounds[k + 1] for g in r.events for t in g}
+        producers = [
+            (strategy, df) for strategy, rs, df in branches
+            if EVENT_MATCH_ANY in wanted or _derivable_types(rs) & wanted
         ]
-        if not active:
-            break
-    if all_emissions is None:
-        return spark.createDataFrame([], EMISSION_SCHEMA)
-    return all_emissions
+        if (
+            not ends
+            or any(r.suppress for r in active)
+            or any(strategy == "state-machine" for strategy, _ in producers)
+        ):
+            # LAZY checkpoint + count(): one job computes the round,
+            # persists its blocks and answers the emptiness test
+            emitted = pin_intermediate(emitted)
+            if not emitted.count():
+                break
+            feed = to_events(emitted)
+        else:
+            feed = to_events(
+                reduce(DataFrame.unionByName, (df for _, df in producers))
+            )
+        out.append(emitted)
+    if not out:
+        return events.sparkSession.createDataFrame([], EMISSION_SCHEMA)
+    return reduce(DataFrame.unionByName, out)

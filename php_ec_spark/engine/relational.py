@@ -62,17 +62,13 @@ def strategies(rules, historical: bool = False) -> dict[str, str]:
 def _strategy(rule: Rule, historical: bool) -> str:
     """One rule's shape → strategy, decided in order (``rule.suppress`` is
     decided by :func:`strategies`)."""
-    # accept predicates and per-event callbacks are Python; historical
-    # replay with HISTORICAL_IGNORE_TIMEOUT keeps instances alive past
-    # their deadline (AEventProcessor.php:377-383). No relational plan
-    # expresses any of them.
+    # accept predicates and per-event callbacks are Python; no relational
+    # plan expresses them
     if (
         rule.accept is not None
         or rule.emit_progress
         or rule.on_complete is not None
         or rule.on_timeout is not None
-        or (historical and rule.historical_ignore_timeout
-            and rule.timeout_s is not None)
     ):
         return "state-machine"
     n = len(rule.events)
@@ -81,8 +77,14 @@ def _strategy(rule: Rule, historical: bool) -> str:
         # event, so it is a stateless filter — keyless ('*'-style
         # LogEverything) rules too, which stay a parallel scan instead of
         # a single-partition state machine. It leaves nothing live for an
-        # end-of-stream 'final' row.
+        # end-of-stream 'final' row, and never waits on a deadline.
         return "state-machine" if rule.emit_final else "single-match"
+    # every shape below waits on a deadline: historical replay with
+    # HISTORICAL_IGNORE_TIMEOUT keeps instances alive past it
+    # (AEventProcessor.php:377-383), which no relational plan expresses
+    if (historical and rule.historical_ignore_timeout
+            and rule.timeout_s is not None):
+        return "state-machine"
     # chain trimming (trimEventChain, AEventProcessor.php:321-332) changes
     # n_events/start/value_sum of emissions — state-machine only
     if rule.chain_limit is not None:
@@ -254,13 +256,13 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
         f"WHEN {_sql_lit(t)} THEN {i}" for i, t in enumerate(types)
     ) + " END"
     # The windows below walk each key's rows in reverse stream order. They
-    # order by ts alone (a RANGE frame takes one order column); this
-    # explicit sort, on the exchange the key needs anyway, orders the ts
-    # ties for their ROWS frame and satisfies every window, so the plan
-    # keeps one sort. Within equal (ts, event_id) a later step sorts
-    # first, so a row's ROWS frame never holds a next-step row with the
-    # row's own (ts, event_id); rows of one type equal on (ts, event_id)
-    # put the smallest value nearest, as a sorted array would.
+    # order by ts alone; this explicit sort, on the exchange the key needs
+    # anyway, orders the ts ties for their ROWS frame and satisfies every
+    # window, so the plan keeps one sort. Within equal (ts, event_id) a
+    # later step sorts first, so a row's ROWS frame never holds a
+    # next-step row with the row's own (ts, event_id); rows of one type
+    # equal on (ts, event_id) put the smallest value nearest, as a sorted
+    # array would.
     base = (
         events.filter(F.expr(f"event_type IN ({in_list})"))
         .select(key, "event_id", "ts", "event_type", "value")
@@ -269,16 +271,16 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
             key, F.desc("ts"), F.desc("event_id"), F.expr(step_no), F.desc("value")
         )
     )
-    # The step after a row is the first later step-i row in stream order,
-    # compared the way SQL compares: ts greater, or ts equal and event_id
-    # greater. A NULL-ts row has none (and is never one); a NULL-event_id
-    # row's is the first with a strictly greater ts (the RANGE frame),
-    # every other row's the nearest earlier row of the sort above (the
-    # ROWS frame). Both frames share one spec, so each step is one Window
-    # operator; __c{i} nests __c{i+1}, so the steps are built back to front.
-    w = f"PARTITION BY `{key}` ORDER BY ts DESC"
-    near = f"{w} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-    far = f"{w} RANGE BETWEEN UNBOUNDED PRECEDING AND INTERVAL 1 MICROSECOND PRECEDING"
+    # The step after a row is the first later step-i row in the state
+    # machine's stream order, (ts, event_id) ascending with a NULL
+    # event_id first among its ts: the nearest earlier row of the sort
+    # above (event_id DESC puts NULLs last). A NULL-ts row has none (and
+    # is never one). One Window operator per step; __c{i} nests
+    # __c{i+1}, so the steps are built back to front.
+    frame = (
+        f"PARTITION BY `{key}` ORDER BY ts DESC "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    )
     for i in range(n - 1, 0, -1):
         c = f", 'c', __c{i + 1}" if i < n - 1 else ""
         pick = (
@@ -289,8 +291,7 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
             f"__c{i}",
             F.expr(
                 "CASE WHEN ts IS NULL THEN NULL "
-                f"WHEN event_id IS NULL THEN last({pick}, true) OVER ({far}) "
-                f"ELSE last({pick}, true) OVER ({near}) END"
+                f"ELSE last({pick}, true) OVER ({frame}) END"
             ),
         )
 
@@ -323,12 +324,13 @@ def compile_sequence(events: DataFrame, rule: Rule) -> DataFrame:
         *steps,
     )
 
-    # consumed = 1 + number of non-null chain steps
+    # consumed = 1 + number of accepted chain steps; an accepted step has
+    # a ts, while its event_id may be NULL (the state machine takes it too)
     consumed = "(1" + "".join(
-        f" + (CASE WHEN e{i}_id IS NOT NULL THEN 1 ELSE 0 END)"
+        f" + (CASE WHEN e{i}_ts IS NOT NULL THEN 1 ELSE 0 END)"
         for i in range(1, n)
     ) + ")"
-    completed = f"e{n-1}_id IS NOT NULL"
+    completed = f"e{n-1}_ts IS NOT NULL"
 
     def per_fail(expr_fn) -> str:
         """CASE over the failing step: value when `consumed == i` events."""

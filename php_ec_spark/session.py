@@ -187,8 +187,10 @@ def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
 
 def pin_intermediate(df: DataFrame, eager: bool = False) -> DataFrame:
     """Pin a multiply-consumed corpus-scale intermediate, truncating its
-    lineage — the one pin policy of the package's operators and of
-    ``chain_correlate``'s fixpoint rounds.
+    lineage — the one pin policy of the package's operators and of the
+    ``chain_correlate`` rounds that are read twice (a state-machine
+    producer's, a suppressing round's, every non-final round of a chain
+    the static pruning cannot end within its depth cap).
 
     With a checkpoint directory configured (``sc.setCheckpointDir`` —
     standard on any cluster run) the pin is a reliable ``checkpoint()``:
@@ -208,8 +210,8 @@ def release_checkpoint_caches(spark: SparkSession) -> int:
     """Unpersist every RDD pinned in the block manager — primarily the
     ``localCheckpoint()`` lineages the iterative/multi-branch operators
     (``jaccard_pairs`` inverted index, ``dedup_clusters`` label rounds,
-    ``chain_correlate`` fixpoint rounds) leave behind after their action
-    completes. A one-query-per-job deployment never needs this; call it
+    ``chain_correlate``'s pinned rounds; an acyclic chain of relational
+    producers pins none) leave behind after their action completes. A one-query-per-job deployment never needs this; call it
     between queries in a long-lived session (notebook, service, benchmark
     harness) so dead checkpoint blocks don't accumulate into GC pressure.
     Returns the number of RDDs released. Only call AFTER the results built

@@ -127,8 +127,10 @@ class TestSequenceCompilerEdgeRows:
     on ts and one (ts, event_id) shared by two rows. The expected
     emissions were recorded from the sorted-successor-array kernel this
     compiler replaced, so they pin its exact semantics: a NULL-ts row
-    never starts a chain nor joins one, a NULL-event_id step is taken but
-    not counted, and a tie joins a chain only with a greater event_id."""
+    never starts a chain nor joins one, and a tie joins a chain only with
+    a greater event_id. The rows of the NULL-event_id starter (id None at
+    5 s) are what ``correlate_state_machine`` emits for it: a NULL
+    event_id sorts first among its ts, and a NULL-id step counts."""
 
     ROWS = [
         # (event_id, seconds offset, user, type, value)
@@ -150,7 +152,7 @@ class TestSequenceCompilerEdgeRows:
         ("t2", ("a", "b"), "PT10S"): [
             ("1", "completed", 0, 0, 1, 2, 3.0),
             ("1", "completed", 5, 2, 3, 2, 10.0),
-            ("1", "timeout", 15, None, None, 1, 5.0),
+            ("1", "completed", 5, None, 3, 2, 11.0),
             ("1", "timeout", 60, 9, 9, 1, None),
             ("1", "timeout", None, 6, 6, 1, 10.0),
             ("2", "completed", 0, 11, 12, 2, 2.0),
@@ -162,7 +164,7 @@ class TestSequenceCompilerEdgeRows:
         ("t3", ("a", "b", "c"), "PT30S"): [
             ("1", "completed", 7, 0, 5, 3, 12.0),
             ("1", "completed", 7, 2, 5, 3, 19.0),
-            ("1", "timeout", 35, None, None, 1, 5.0),
+            ("1", "completed", 7, None, 5, 3, 20.0),
             ("1", "timeout", 80, 9, 9, 1, None),
             ("1", "timeout", None, 6, 6, 1, 10.0),
             ("2", "completed", 0, 11, 13, 3, 3.0),
@@ -174,6 +176,7 @@ class TestSequenceCompilerEdgeRows:
         ("n3", ("a", "b", "c"), None): [
             ("1", "completed", 7, 0, 5, 3, 12.0),
             ("1", "completed", 7, 2, 5, 3, 19.0),
+            ("1", "completed", 7, None, 5, 3, 20.0),
             ("2", "completed", 0, 11, 13, 3, 3.0),
             ("2", "completed", 0, 14, 16, 3, 3.0),
             ("2", "completed", 200, 17, 19, 3, 6.0),
@@ -505,6 +508,28 @@ class TestPlanReport:
                                          emit_final=True)]
         assert strategies(sup) == {"s": "state-machine", "c": "state-machine"}
 
+    def test_historical_ignore_timeout_single_match(self, spark):
+        """A one-group non-continuous rule completes on its first event and
+        never waits on a deadline, so HISTORICAL_IGNORE_TIMEOUT under
+        historical replay changes nothing it emits: it stays a single
+        match, alone and inside a suppressing set."""
+        from php_ec_spark.engine import strategies
+        from php_ec_spark.rules import Rule, match_single
+
+        hit = Rule("hit", [["a"]], key="user_id", timeout="PT10S",
+                   historical_ignore_timeout=True)
+        assert strategies([hit], historical=True) == {"hit": "single-match"}
+        sup = [match_single("s", ["b"], key="user_id", suppress=True), hit]
+        assert strategies(sup, historical=True) == dict.fromkeys(
+            ("s", "hit"), "priority-suppress"
+        )
+        df = _mk(spark, [(0, 0, 1, "a", 1), (1, 30, 1, "a", 2),
+                         (2, 31, 1, "b", 3), (3, 5, 2, "a", 4)])
+        for rules in ([hit], sup):
+            assert _rows(correlate(df, rules, historical=True)) == _rows(
+                correlate_state_machine(df, rules, historical=True)
+            )
+
 
 class TestNullEventId:
     """A NULL event_id reaches EngineCore as None: the batch runner and
@@ -517,6 +542,15 @@ class TestNullEventId:
             ("ab", "1", "completed", T0 + dt.timedelta(seconds=2), 0, None,
              2, 3.0),
         ]
+
+    def test_sequence_kernel_takes_null_event_id_step(self, spark):
+        """``compile_sequence`` counts an accepted step whatever its id, so
+        it emits what the state machine emits for the same rows."""
+        rule = sequence_rule("ab", ["a", "b"], key="user_id", timeout="PT10S")
+        df = _mk(spark, [(0, 0, 1, "a", 1), (None, 2, 1, "b", 2)])
+        assert _rows(compile_sequence(df, rule)) == _rows(
+            correlate_state_machine(df, [rule])
+        )
 
     def test_event_tuples_null_id_and_value(self):
         import numpy as np

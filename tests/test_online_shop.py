@@ -51,11 +51,32 @@ def test_online_shop_chain(spark, checkpoint_dir):
     # reminder fire time = the pay deadline (placed + PT20S)
     fires = {r["key"]: r["fire_ts"] for r in out.collect() if r["rule"] == "reminder"}
     assert fires["2"] == T0 + dt.timedelta(seconds=25)
-    # with a checkpoint dir set, each round's pin is a reliable checkpoint:
-    # same emissions, and the rounds land as files under the dir
+    # with a checkpoint dir set: same emissions. An acyclic chain of
+    # relational producers is one lazy plan and pins no round, so no
+    # checkpoint file is written
     with checkpoint_dir() as ckpt:
         reliable = chain_correlate(_events(spark), rules, max_depth=3).collect()
         assert sorted(map(tuple, reliable)) == sorted(map(tuple, out.collect()))
+        assert not any(p.is_file() for p in ckpt.rglob("*"))
+
+
+def test_state_machine_producer_round_is_checkpointed(spark, checkpoint_dir):
+    """A producer with an ``accept`` predicate runs in the Python state
+    machine, so its round is pinned rather than computed twice; with a
+    checkpoint dir set the pin is a reliable checkpoint: same emissions,
+    and the round lands as files under the dir."""
+    rules = [
+        sequence_rule(
+            "pay_check", ["shop:order:placed", "shop:order:paid"],
+            key="user_id", timeout="PT20S", accept=lambda ev, chain: True,
+        ),
+        match_single("reminder", ["pay_check:timeout"], key="user_id"),
+    ]
+    out = chain_correlate(_events(spark), rules, max_depth=3).collect()
+    assert sorted(r["key"] for r in out if r["rule"] == "reminder") == ["2", "3"]
+    with checkpoint_dir() as ckpt:
+        reliable = chain_correlate(_events(spark), rules, max_depth=3).collect()
+        assert sorted(map(tuple, reliable)) == sorted(map(tuple, out))
         assert any(p.is_file() for p in ckpt.rglob("*"))
 
 

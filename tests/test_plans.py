@@ -146,6 +146,29 @@ class TestSequenceKernelPlan:
                 assert banned not in plan, plan
 
 
+class TestChainPlan:
+    def test_chained_round_reuses_the_producer_shuffle(self, spark):
+        """``chain_correlate`` feeds the reminder round from the very
+        ``pay_check`` branch frame that round 0 emits, so the chain is one
+        plan: after the action, the final adaptive plan runs the sequence
+        shuffle once and reuses it for the chained round, and scans no
+        pinned round."""
+        import re
+
+        df = all_queries()["cep_chain_reinject"].spark(spark, SF)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, plan
+        nodes = [
+            m.group(1)
+            for m in re.finditer(r"^[\s:|+-]*(?:\*\(\d+\) )?([A-Za-z]+)", final, re.M)
+        ]
+        assert nodes.count("Exchange") == 1, final
+        assert nodes.count("ReusedExchange") == 1, final
+        assert "ExistingRDD" not in final, final
+
+
 class TestCounterSkewPlans:
     """Skew-neutrality of the counter compiles: a 50% hot key must shuffle
     per-partition PARTIALS, not rows — the two-stage HashAggregate
