@@ -44,6 +44,7 @@ from __future__ import annotations
 from functools import reduce
 from typing import Optional, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,8 +58,9 @@ EMISSION_SCHEMA = T.StructType(
     [
         T.StructField("rule", T.StringType()),
         T.StructField("key", T.StringType()),
-        # completed|timeout|progress|final|error ('error' = quarantined
-        # rule callback/accept failure — see core.py)
+        # completed|timeout|progress|final|error|scheduled ('error' =
+        # quarantined rule callback/accept failure — see core.py;
+        # 'scheduled' = a cron fire, functions._scheduled_emissions)
         T.StructField("outcome", T.StringType()),
         T.StructField("fire_ts", T.TimestampType()),
         T.StructField("start_event_id", T.LongType()),
@@ -70,10 +72,21 @@ EMISSION_SCHEMA = T.StructType(
 )
 
 
-_OUT_COLS = [
-    "rule", "key", "outcome", "fire_ts", "start_event_id",
-    "last_event_id", "n_events", "value_sum", "payload",
-]
+_OUT_COLS = EMISSION_SCHEMA.fieldNames()
+_DT64NS = np.dtype("datetime64[ns]")
+
+
+def emission_frame(rows: list) -> pd.DataFrame:
+    """EngineCore emission rows as an EMISSION_SCHEMA frame — the one row
+    builder of the batch runner and the live handler. ``fire_ts`` is
+    int64 ns viewed as datetime64[ns], so the NaT sentinel a NULL-ts
+    event carries (core.NAT_NS) reads as NULL in both. The other columns
+    stay object arrays: Arrow converts them to the schema's types, and
+    skipping pandas' per-column inference measured ~1.5-2x faster."""
+    cols = list(zip(*rows)) if rows else [()] * len(_OUT_COLS)
+    data = {c: np.array(v, dtype=object) for c, v in zip(_OUT_COLS, cols)}
+    data["fire_ts"] = np.asarray(cols[3], dtype="int64").view(_DT64NS)
+    return pd.DataFrame(data, copy=False)
 
 
 def check_unique_rule_names(rules: Sequence[Rule]) -> None:
@@ -86,15 +99,6 @@ def check_unique_rule_names(rules: Sequence[Rule]) -> None:
     if len(set(names)) != len(names):
         dupes = sorted({n for n in names if names.count(n) > 1})
         raise ValueError(f"duplicate rule names: {dupes}")
-
-
-def _rows_to_pdf(rows: list) -> pd.DataFrame:
-    out = pd.DataFrame(rows, columns=_OUT_COLS)
-    if len(out):
-        out["fire_ts"] = pd.to_datetime(out["fire_ts"], unit="ns")
-    else:
-        out["fire_ts"] = pd.Series([], dtype="datetime64[ns]")
-    return out
 
 
 #: Schema of a warm-start snapshot row (what ``snapshot_state`` emits and
@@ -213,7 +217,7 @@ def _make_partition_runner(
             core.finish(last_ts)
             return core.take_rows()
 
-        to_pdf = _rows_to_pdf
+        to_pdf = emission_frame
 
     def run(batches):
         core: Optional[EngineCore] = None

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from ..rules.base import EVENT_MATCH_ANY, Rule
 from ..session import pin_intermediate
 from .batch import EMISSION_SCHEMA, _branches
+from .relational import _sql_lit
 
 
 #: Outcome → code for derived-event ids. Every outcome the engine can
@@ -88,18 +89,15 @@ def emissions_to_events(
     # round-trip per node in Column form; as strings the JVM parses each
     # column in one call, producing the same analyzed expressions (rule
     # names are unique, so the flat CASE order is immaterial)
-    def _q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     ridx = "0"
     if rule_index:
         whens = "".join(
-            f" WHEN rule = {_q(name)} THEN {i}"
+            f" WHEN rule = {_sql_lit(name)} THEN {i}"
             for name, i in rule_index.items()
         )
         ridx = f"(CASE{whens} ELSE 0 END)"
     ocode_whens = "".join(
-        f" WHEN outcome = {_q(name)} THEN {c}"
+        f" WHEN outcome = {_sql_lit(name)} THEN {c}"
         for name, c in OUTCOME_CODES.items()
     )
     ocode = f"(CASE{ocode_whens} ELSE {len(OUTCOME_CODES)} END)"

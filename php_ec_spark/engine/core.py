@@ -20,6 +20,10 @@ from ..rules.base import Rule
 
 _MS = 1_000_000  # 1 ms in ns
 
+#: ts of a NULL-ts event: the int64 NaT sentinel the event feed passes
+#: through (numpy views it as NaT, so an emission at it reads as NULL)
+NAT_NS = -(2**63)
+
 #: fire_due compacts dead instances out of all buckets after this many
 #: heap-fired timeouts (see EngineCore._dead)
 _COMPACT_EVERY = 1024
@@ -63,11 +67,13 @@ class _Instance:
         if not at_last_group:
             self.gi += 1
         timeout_ns = rule._timeout_ns
-        self.deadline_ns = (
-            ev[1] + timeout_ns
-            if timeout_ns is not None and not self.no_timeout
-            else None
-        )
+        if timeout_ns is None or self.no_timeout:
+            self.deadline_ns = None
+        else:
+            # a NULL-ts event arms an instant that stays NULL: sentinel +
+            # timeout would be a real (and Arrow-unrepresentable) 1677 date
+            t = ev[1]
+            self.deadline_ns = t if t == NAT_NS else t + timeout_ns
         return False
 
     def to_state(self) -> dict:

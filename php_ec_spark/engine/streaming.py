@@ -86,21 +86,17 @@ from ..rules.base import Rule
 from .batch import (
     EMISSION_SCHEMA,
     SNAPSHOT_SCHEMA,  # noqa: F401  (re-exported: warm-start callers' schema)
+    _DT64NS,
     _event_tuples,
     _project,
     _replay,
     check_unique_rule_names,
+    emission_frame,
 )
-from .batch import _OUT_COLS as _OUT_COLS_LIST
 from .core import EngineCore
 
 #: State persisted per correlation key: the serialized EngineCore.
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.StringType())])
-
-# one source of truth with the batch engine (both must track
-# EMISSION_SCHEMA's field order)
-_OUT_COLS = tuple(_OUT_COLS_LIST)
-_DT64NS = np.dtype("datetime64[ns]")
 
 
 def _make_stateful_handler(
@@ -117,10 +113,7 @@ def _make_stateful_handler(
     # profiling showed ~1.9 ms/key of it was sort_values/DataFrame.__init__/
     # to_datetime, dwarfing the actual event loop. Everything per-key below
     # is numpy-or-plain-Python on purpose.
-    empty_out = pd.DataFrame({
-        c: pd.Series([], dtype="datetime64[ns]" if c == "fire_ts" else "object")
-        for c in _OUT_COLS
-    })
+    empty_out = emission_frame([])
 
     def handle(
         key: Tuple[Any, ...],
@@ -207,13 +200,7 @@ def _make_stateful_handler(
             state.remove()
 
         rows = core.take_rows()
-        if not rows:
-            yield empty_out
-            return
-        cols = list(zip(*rows))
-        data = dict(zip(_OUT_COLS, cols))
-        data["fire_ts"] = np.asarray(cols[3], dtype="int64").view(_DT64NS)
-        yield pd.DataFrame(data)
+        yield emission_frame(rows) if rows else empty_out
 
     return handle
 

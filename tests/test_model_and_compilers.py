@@ -185,28 +185,55 @@ class TestSequenceCompilerEdgeRows:
         ],
     }
 
-    @pytest.mark.parametrize("case", list(EXPECTED), ids=lambda c: c[0])
-    def test_matches_recorded_emissions(self, spark, case):
-        name, types, timeout = case
+    @staticmethod
+    def _frame(spark, rows):
         data = [
             (e, None if s is None else T0 + dt.timedelta(seconds=s), u, t, v, None)
-            for e, s, u, t, v in self.ROWS
+            for e, s, u, t, v in rows
         ]
-        df = spark.createDataFrame(
+        return spark.createDataFrame(
             data,
             "event_id long, ts timestamp, user_id long, event_type string, "
             "value double, props string",
         )
-        rule = sequence_rule(name, list(types), key="user_id", timeout=timeout)
-        got = [
+
+    @staticmethod
+    def _got(emissions):
+        return sorted((
             (r["key"], r["outcome"],
              None if r["fire_ts"] is None
              else int((r["fire_ts"] - T0).total_seconds()),
              r["start_event_id"], r["last_event_id"], r["n_events"],
              r["value_sum"])
-            for r in compile_sequence(df, rule).collect()
+            for r in emissions.collect()
+        ), key=str)
+
+    @pytest.mark.parametrize("case", list(EXPECTED), ids=lambda c: c[0])
+    def test_matches_recorded_emissions(self, spark, case):
+        name, types, timeout = case
+        rule = sequence_rule(name, list(types), key="user_id", timeout=timeout)
+        got = self._got(compile_sequence(self._frame(spark, self.ROWS), rule))
+        assert got == self.EXPECTED[case]
+
+    def test_null_ts_timeout_is_null_in_both_strategies(self, spark):
+        """A NULL-ts event arms a timeout whose instant is NULL too: the
+        state machine used to arm NaT-sentinel + timeout, a 1677 instant
+        Arrow refused to cast (the whole query failed)."""
+        df = self._frame(spark, [(1, 0, 1, "a", 1.0), (2, None, 1, "a", 2.0)])
+        rule = sequence_rule("ab", ["a", "b"], key="user_id", timeout="PT30S")
+        want = [
+            ("1", "timeout", 30, 1, 1, 1, 1.0),
+            ("1", "timeout", None, 2, 2, 1, 2.0),
         ]
-        assert sorted(got, key=str) == self.EXPECTED[case]
+        assert self._got(compile_sequence(df, rule)) == want
+        assert self._got(correlate_state_machine(df, [rule])) == want
+
+    def test_edge_rows_run_through_the_state_machine(self, spark):
+        rule = sequence_rule("t3", ["a", "b", "c"], key="user_id", timeout="PT30S")
+        got = self._got(
+            correlate_state_machine(self._frame(spark, self.ROWS), [rule])
+        )
+        assert ("1", "completed", 7, 0, 5, 3, 12.0) in got
 
 
 class TestGapSessionParity:

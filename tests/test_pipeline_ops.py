@@ -890,7 +890,7 @@ class TestSimilarity:
         """Round-12 verdict #5: ivf_search quality was pinned only on
         deterministic gate geometry — a kernel change that degrades
         RECALL (not determinism) sailed through. Floor via the
-        tools/ann_recall.py harness on pinned-seed trained-quantizer
+        tools/scale_soak.py recall sweep on pinned-seed trained-quantizer
         geometry (16 Gaussian clusters, noise 0.2× the RMS center norm —
         measured 0.994-0.998 recall@10 at nprobe=4 across seeds 7/23/41,
         1.000 at nprobe=8; SCALE.md carries the wider sweep): recall@10
@@ -903,7 +903,7 @@ class TestSimilarity:
         sys.path.insert(
             0, os.path.join(os.path.dirname(__file__), "..", "tools")
         )
-        from ann_recall import recall_sweep
+        from scale_soak import recall_sweep
 
         rec = recall_sweep(
             spark, seed=7, n=2000, dim=32, n_centers=16, n_queries=48,

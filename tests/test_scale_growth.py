@@ -13,6 +13,9 @@ re-introduced an N² term — the exact class of silent scale-killer the
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -290,3 +293,25 @@ def test_remove_dup_spans_work_tracks_duplicated_content(spark):
     # windows all differ in this regime, so no new dup structure)
     assert 2.4 * a1 <= a3 <= 3.6 * a1, (a1, a3)
     assert 2.4 * t1 <= t3 <= 3.6 * t1, (t1, t3)
+
+
+@pytest.mark.parametrize("synth, name, table", [
+    ("synthesize", "m3x1", "documents"),
+    ("synthesize_events", "ev_x1", "events"),
+    ("synthesize_embeddings", "emb_x1", "embeddings"),
+])
+def test_lens_rebuilds_unfinished_synthesized_dir(spark, tmp_path, synth, name, table):
+    """A write killed mid-way leaves parquet without a _SUCCESS marker;
+    the scale lens (tools/scale_soak.py) must rebuild it, never time the
+    truncated corpus."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import scale_soak
+
+    sf_dir = os.path.dirname(SF_DOCS)
+    half = tmp_path / name / f"{table}.parquet"
+    half.mkdir(parents=True)
+    (half / "part-00000-killed.parquet").write_bytes(b"truncated")
+    getattr(scale_soak, synth)(spark, sf_dir, 1, str(tmp_path))
+    assert (half / "_SUCCESS").exists()
+    want = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).count()
+    assert spark.read.parquet(str(half)).count() == want
