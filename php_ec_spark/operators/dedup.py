@@ -1509,6 +1509,112 @@ def connected_components(
     return edges.select(F.col("u").alias("doc"), F.col("v").alias("label"))
 
 
+def _parquet_path_exists(spark, path: str) -> bool:
+    """True when ``path`` is a readable parquet dataset. The portable
+    existence probe for the ingest journal: schema inference raises
+    PATH_NOT_FOUND on an absent directory, and AnalysisException only —
+    an unreachable store or corrupt footer must propagate, not read as
+    'journal absent' (which would re-apply a possibly-applied batch)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        spark.read.parquet(path)
+        return True
+    except AnalysisException:
+        return False
+
+
+def _ingest_through_index(
+    stream: DataFrame,
+    *,
+    door: str,
+    logger,
+    id_col: str,
+    landed_path: str,
+    checkpoint: str,
+    available_now: bool,
+    decide,
+    pairs,
+    add,
+    journal: "str | None" = None,
+):
+    """The one ingest-through-index door, shared by the text
+    (``streaming_index_ingest``) and embedding
+    (``streaming_embedding_ingest``) indexes: a ``foreachBatch`` stream
+    whose micro-batches are deduped against the index, landed under
+    ``landed_path/batch=<id>/`` (``batch`` reads back as the audit-trail
+    partition column) and appended, so batch N+1 dedups against batch
+    N's survivors with no horizon bound. Returns the started query.
+
+    Each micro-batch runs one fixed sequence:
+
+    1. skip it if ``journal`` already holds ``batch=<id>``;
+    2. ``decide(s, batch_df, batch_id) -> (kept, land)``: the family's
+       drop decision against the index minus this batch;
+    3. ``pairs(kept) -> (pinned kept, (doc_a, doc_b) edges)``: the
+       family's intra-batch pairs (``pairs=None``: none), reduced by
+       :func:`connected_components` to the min id per component;
+    4. pin the survivors; 5. land them (or ``land(losers)``, the
+       family's annotated frame) by OVERWRITING ``batch=<id>``;
+    6. ``add(s, survivors)`` with the index state read at stream start;
+    7. write the journal row (batch id, rows landed, rows added).
+
+    Exactly-once is Structured Streaming's rule: a replayable source
+    plus an idempotent or journaled sink. Every family decision keeps
+    the survivor set a pure function of (index state without this
+    batch, batch content), so a replay reproduces it. A crash before
+    landing reruns plainly; between landing and add the rerun
+    overwrites the landed batch with the same rows; between add and
+    commit an id-idempotent add (text) re-adds nothing, while a blind
+    append (embeddings) is journaled and its rerun appends the batch's
+    survivors once more — duplicate rows that searches tolerate and
+    ``ivf_compact(id_col=)`` sweeps (journaling before the append would
+    instead lose the batch from the index). Single writer: do not add
+    to, compact or rebuild an index a stream is ingesting into.
+    """
+
+    def ingest_batch(batch_df, batch_id):
+        # foreachBatch hands frames bound to a CLONED session: run the
+        # whole cycle through it so every table read resolves against the
+        # catalog state the appends invalidate
+        s = batch_df.sparkSession
+        log = f"{journal}/batch={batch_id}" if journal else None
+        if log and _parquet_path_exists(s, log):
+            return  # journaled: landed and added, a replay is a no-op
+        kept, land = decide(s, batch_df, batch_id)
+        losers = None
+        if pairs is not None:
+            kept, edges = pairs(kept)
+            # CC's edge pin is the pairs' one materialization; a batch
+            # with no intra-batch pairs exits through its fastpath
+            cc_stats: dict = {}
+            losers = connected_components(edges, stats=cc_stats)
+            _log_cc_stats(logger, door, batch_id, cc_stats)
+            kept = kept.select(*batch_df.columns).join(
+                losers.select(F.col("doc").alias("__drop")),
+                F.col(id_col) == F.col("__drop"),
+                "left_anti",
+            )
+        survivors = kept.localCheckpoint(eager=True)
+        landed = survivors if land is None else land(losers)
+        landed.write.mode("overwrite").parquet(
+            f"{landed_path}/batch={batch_id}"
+        )
+        add(s, survivors)
+        if log:
+            s.createDataFrame(
+                [(int(batch_id), landed.count(), survivors.count())],
+                "batch_id long, n_landed long, n_added long",
+            ).write.mode("overwrite").parquet(log)
+
+    writer = stream.writeStream.foreachBatch(ingest_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 #: SimHash width. 60 bits = 15 hex chars of md5: the token hash
 #: (conv(substr(md5(t),1,15),16,10)) computes IDENTICALLY in Spark and
 #: DuckDB, so the whole fingerprint is oracle-reproducible — xxhash64 was

@@ -76,8 +76,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .dedup import (
+    _ingest_through_index,
     dedup_digest,
-    exact_jaccard_verify,
+    minhash_lsh_pairs,
     pin_intermediate,
     with_band_keys,
     with_shingles,
@@ -236,29 +237,6 @@ def _clear_orphan_location(spark: SparkSession, table: str) -> bool:
     return not os.path.isdir(loc)
 
 
-#: (index name, generation) pairs pre-verified for a running STREAM —
-#: consulted by _read_meta but populated ONLY by streaming_index_ingest
-#: at stream start, so per-micro-batch probe/add calls skip the SHOW
-#: TBLPROPERTIES round-trips (up to 3 driver catalog queries each, twice
-#: per batch) while every DIRECT probe/add still verifies on each call.
-#: That scoping matters: a memo populated by any successful read would
-#: re-open the cross-process half-rebuild window (another process
-#: rewrites the tables with a new stamp and dies before meta — meta's
-#: gen is unchanged, so a cached (name, old_gen) entry would skip the
-#: very comparison that catches it). A stream trusting its start-of-run
-#: verification is the documented single-writer contract: do not rebuild
-#: an index a stream is ingesting into. build/compact/drop evict.
-_GEN_VERIFIED: set = set()
-
-
-def _evict_gen(name: str) -> None:
-    """Forget cached generation trust for ``name`` (any writer path that
-    rewrites index tables must call this first)."""
-    _GEN_VERIFIED.difference_update(
-        {e for e in _GEN_VERIFIED if e[0] == name}
-    )
-
-
 def _table_gen(spark: SparkSession, table: str) -> "str | None":
     """The build-generation id stamped on an index table (None if absent)."""
     for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect():
@@ -296,7 +274,7 @@ def _read_meta(spark: SparkSession, name: str) -> dict:
     # check a probe would run NEW signatures against OLD parameters (or
     # vice versa) and return silently wrong annotations. Loud beats wrong.
     gen = meta.get("gen")
-    if gen is not None and (name, gen) not in _GEN_VERIFIED:
+    if gen is not None:
         parts = ("digests",) + (("bands", "docs") if meta["near"] else ())
         for part in parts:
             got = _table_gen(spark, _t(name, part))
@@ -309,8 +287,6 @@ def _read_meta(spark: SparkSession, name: str) -> dict:
                     f"Re-run dedup_index_build, or rebuild under a new "
                     f"name and flip at the orchestration layer."
                 )
-        # deliberately NOT memoized here — see _GEN_VERIFIED: only a
-        # stream's start-of-run verification may prime the cache
     return meta
 
 
@@ -373,9 +349,6 @@ def dedup_index_build(
     if num_hashes % bands:
         raise ValueError("dedup_index_build: bands must divide num_hashes")
     spark = df.sparkSession
-    # a rebuild invalidates any verification this process cached — evict
-    # BEFORE touching tables so a failed rebuild cannot read stale trust
-    _evict_gen(name)
     # crash-residue guard: a killed process can leave this index's table
     # DIRECTORIES in the warehouse with no catalog entry; saveAsTable
     # would then die with LOCATION_ALREADY_EXISTS. Clear only locations
@@ -500,7 +473,18 @@ def dedup_index_probe(
         raise ValueError(
             f"dedup_index_probe: matches must be best|all, got {matches!r}"
         )
-    meta = _read_meta(spark, name)
+    return _probe(
+        spark, name, _read_meta(spark, name), increment,
+        threshold=threshold, text_col=text_col, id_col=id_col,
+        matches=matches, near_layer=near_layer,
+    )
+
+
+def _probe(
+    spark, name, meta, increment, *, threshold, text_col, id_col,
+    matches, near_layer,
+) -> DataFrame:
+    """:func:`dedup_index_probe`'s body over an already-read ``meta``."""
     reserved = {"text_hash", "exact_dup_of", "near_dup_of", "near_jaccard"}
     clash = reserved & set(increment.columns)
     if clash:
@@ -632,7 +616,14 @@ def dedup_index_add(
     single-writer: run one add at a time per index (the anti-join reads
     the store the append then extends).
     """
-    meta = _read_meta(spark, name)
+    _add(
+        spark, name, _read_meta(spark, name), increment,
+        text_col=text_col, id_col=id_col,
+    )
+
+
+def _add(spark, name, meta, increment, *, text_col, id_col) -> None:
+    """:func:`dedup_index_add`'s body over an already-read ``meta``."""
     if meta["near"]:
         known = spark.table(_t(name, "docs")).select(
             F.col("doc_id").alias("__known_id")
@@ -715,7 +706,6 @@ def dedup_index_drop(spark: SparkSession, name: str) -> bool:
     import os
 
     _check_name(name)
-    _evict_gen(name)
     clean = True
     wh = _warehouse_dir(spark)
     for part in _PARTS:
@@ -740,92 +730,59 @@ def streaming_index_ingest(
     id_col: str = "doc_id",
     available_now: bool = False,
 ):
-    """Continuous ingestion THROUGH the index: each micro-batch is probed
-    against corpus history, exact duplicates (and intra-batch digest
-    repeats) are dropped, survivors land under
-    ``landed_path/batch=<id>/`` and are appended to the index — so batch
-    N+1 already dedups against batch N's survivors, with no horizon
-    bound (unlike ``streaming_exact_dedup``, whose state—and therefore
-    memory—is bounded by rate × horizon; this operator's state IS the
-    index, bounded by corpus size on disk).
+    """Continuous ingestion THROUGH the index, through the one door
+    :func:`~php_ec_spark.operators.dedup._ingest_through_index` (its
+    docstring holds the per-batch protocol and the crash windows): each
+    micro-batch is probed against corpus history, exact duplicates and
+    intra-batch digest repeats are dropped, survivors land under
+    ``landed_path/batch=<id>/`` and are appended to the index. Unlike
+    ``streaming_exact_dedup``, whose state is bounded by rate × horizon,
+    this door's state IS the index. :func:`dedup_index_add` is id-level
+    idempotent, so no journal is kept. The meta is read and
+    generation-checked once, at stream start.
 
-    Exactly-once landing by construction, not by trust: a retried batch
-    OVERWRITES its own ``batch=<id>`` directory (idempotent landing) and
-    :func:`dedup_index_add` is id-level idempotent (re-adding survivors
-    is a no-op) — the two halves a ``foreachBatch`` sink needs to make
-    Spark's at-least-once replay exactly-once. Reading ``landed_path``
-    as parquet exposes ``batch`` as a partition column — the free audit
-    trail of which micro-batch landed each document.
+    ``drop_near=True`` also drops verified near-duplicates (J ≥
+    ``threshold``; needs a ``near=True`` index), in two replay-stable
+    layers:
 
-    ``drop_near=True`` additionally drops verified near-duplicates (J ≥
-    ``threshold``) — unlike LSH-flagging at the door, these are
-    exact-verified, so dropping is safe; requires a ``near=True`` index.
-    Two layers, both replay-stable:
-
-    - **vs the stored corpus**: the drop decision is made on the best
-      NON-batch-mate match — probe returns ALL verified matches
-      (``matches='all'``) and rows whose match is in the current batch
-      are excluded BEFORE deciding. Exempting mates after picking the
-      single global best would be replay-unsafe: on a crash-replay a
-      landed batch-mate (now in the index) can outscore the stored match
-      that originally dropped a doc, flipping the exemption and
-      resurrecting a verified near-dup.
-    - **within the micro-batch**: survivors run a bounded band self-join
-      + exact verify (same kernels/parameters as the index, micro-batch
-      cost) and collapse per connected component to the min-id survivor
-      — the same labeling the batch ``dedup_clusters`` sweep would
-      assign, so batch-mates deduplicate at the door instead of both
-      landing. Both layers are pure functions of (index state ∖ this
-      batch, batch content), so a replay reproduces the original
-      survivor set bit-for-bit.
+    - **vs the stored corpus**: the decision uses the best NON-batch-mate
+      match — the probe returns ALL verified matches and batch-mates are
+      excluded BEFORE deciding. Exempting mates after a global best-1
+      pick would be replay-unsafe: on a replay a landed mate (now
+      stored) can outscore the stored match that dropped a doc.
+    - **within the micro-batch**: a band self-join + exact verify over
+      the survivors (the index's kernels and parameters), collapsed per
+      connected component to the min id — the labeling the batch
+      ``dedup_clusters`` sweep would assign.
 
     Returns the started StreamingQuery.
     """
     meta = _read_meta(spark, name)
-    # the start-of-stream verification above is the one that counts:
-    # prime the memo so per-micro-batch probe/add calls skip the catalog
-    # round-trips (single-writer contract — do not rebuild an index a
-    # stream is ingesting into; see _GEN_VERIFIED)
-    if meta.get("gen") is not None:
-        _GEN_VERIFIED.add((name, meta["gen"]))
     if drop_near and not meta["near"]:
         raise ValueError(
             "streaming_index_ingest: drop_near=True needs an index built "
             "with near=True"
         )
 
-    def ingest_batch(batch_df, batch_id):
-        # foreachBatch hands frames bound to a CLONED session with its own
-        # relation cache — run the whole probe/add cycle through it so
-        # every table read resolves against the same catalog state the
-        # appends invalidate
-        s = batch_df.sparkSession
+    def decide(s, batch_df, batch_id):
         # exact-only ingest never consumes near annotations — skip the
         # whole LSH candidate pipeline per micro-batch in that mode
-        probed = dedup_index_probe(
-            s, name, batch_df,
+        probed = _probe(
+            s, name, meta, batch_df,
             threshold=threshold, text_col=text_col, id_col=id_col,
             matches="all" if drop_near else "best",
             near_layer=drop_near,
         )
-        # SELF-matches are kept: on a replay (batch ran fully, driver died
-        # before the streaming checkpoint committed) every survivor now
-        # probes as an exact dup OF ITSELF — filtering those would
-        # overwrite the batch's landed directory with an EMPTY dataset,
-        # destroying the previous run's output. Exempting exact_dup_of ==
-        # doc_id (and batch-mate near matches under drop_near) makes the
-        # replay reproduce the original survivor set bit-for-bit.
-        # Re-crawl corollaries (ids reused from the stored corpus):
-        # a byte-identical re-crawl lands again via the exact
-        # self-exemption (audit via the batch column); under drop_near a
-        # NEAR-self re-crawl — edited text still within threshold of its
-        # own stored copy — is DROPPED like any other verified near-dup
-        # of stored content (the id+text mate rule below does not exempt
-        # it). That is the coherent choice with id-level add idempotence:
-        # the index would keep the OLD text behind that id regardless, so
-        # landing the edit would store a parquet row whose text the index
-        # never indexes. Re-crawl pipelines that want edits to supersede
-        # should key by url and rebuild/compact, not ingest-through.
+        # SELF-matches are kept: on a replay every survivor probes as an
+        # exact dup OF ITSELF, and dropping those would overwrite the
+        # landed batch with an EMPTY dataset. Re-crawl corollaries (ids
+        # reused from the stored corpus): a byte-identical re-crawl lands
+        # again via this self-exemption; under drop_near a NEAR-self
+        # re-crawl (edited text within threshold of its own stored copy)
+        # is DROPPED like any verified near-dup of stored content — the
+        # id-idempotent add would keep the OLD text behind that id
+        # anyway. Pipelines whose edits must supersede should key by url
+        # and rebuild/compact, not ingest-through.
         exact_drop = F.col("exact_dup_of").isNotNull() & (
             F.col("exact_dup_of") != F.col(id_col)
         )
@@ -833,20 +790,14 @@ def streaming_index_ingest(
             # Decide on the best NON-MATE match: with matches='all' every
             # verified match is a row, so excluding batch-mates here (not
             # after a global best-1 pick) means a doc near-matching BOTH
-            # a stored doc and a batch-mate still drops — and on replay,
-            # when its mates are in the index too, the decision inputs
-            # are unchanged.
-            #
-            # "Mate" is id AND text: a match target whose id appears in
-            # the batch counts as a mate only if the stored doc under
-            # that id (if any) carries the SAME normalized text as the
-            # batch row. Id alone would be wrong under id reuse — a
-            # batch that re-crawls a stored doc_id with new text must
-            # not exempt OTHER docs' genuine near-matches to the OLD
-            # stored text behind that id. On a replay the landed mates
-            # are stored with identical text, so they stay exempt and
-            # the decision inputs are unchanged. (Text identity, not the
-            # key_cols digest: the near layer is always text-based.)
+            # a stored doc and a batch-mate still drops, on first run and
+            # replay alike. "Mate" is id AND text: a match target whose
+            # id is in the batch is a mate only if the stored doc under
+            # that id (if any) has the SAME normalized text — a batch
+            # re-crawling a stored id with new text must not exempt
+            # other docs' genuine matches to the OLD stored text. (Text
+            # identity, not the key_cols digest: the near layer is
+            # always text-based.)
             tdg = F.coalesce(dedup_digest(None, text_col), F.lit("-"))
             mates = batch_df.select(
                 F.col(id_col).alias("__mate"), tdg.alias("__mdg")
@@ -912,58 +863,39 @@ def streaming_index_ingest(
             .filter((F.col("__rk") == 1) | F.col("text_hash").isNull())
             .select(*batch_df.columns)
         )
-        if drop_near:
-            # collapse intra-batch NEAR dups too: bounded band self-join
-            # + exact verify over the (micro-batch-sized) survivor set,
-            # same kernels and parameters as the index, then min-id per
-            # connected component — the labeling the batch dedup_clusters
-            # sweep would assign. Without this, near-dup batch-mates both
-            # land and both enter the index.
-            from .dedup import (
-                _log_cc_stats,
-                connected_components,
-                minhash_lsh_pairs,
-            )
+        return survivors, None
 
-            survivors = survivors.localCheckpoint(eager=True)
-            pairs = minhash_lsh_pairs(
-                survivors,
-                threshold=threshold,
-                num_hashes=meta["num_hashes"],
-                bands=meta["bands"],
-                n=meta["n"],
-                text_col=text_col,
-                id_col=id_col,
-            ).select("doc_a", "doc_b")
-            # CC's edge pin is the pairs' one materialization; a batch
-            # with no intra-batch near-dups exits through its fastpath
-            # with an empty mapping
-            cc_stats: dict = {}
-            comp = connected_components(pairs, stats=cc_stats)
-            # round telemetry (round-14 verdict #7): a production stream
-            # creeping toward max_iters must be visible in the driver log
-            # BEFORE a later batch raises on the bound
-            _log_cc_stats(_LOG, "streaming_index_ingest", batch_id, cc_stats)
-            losers = comp.select(F.col("doc").alias("__drop"))
-            survivors = survivors.join(
-                losers, survivors[id_col] == F.col("__drop"), "left_anti"
-            )
-        survivors = survivors.localCheckpoint(
-            eager=True
-        )  # landed write + add both consume
-        survivors.write.mode("overwrite").parquet(
-            f"{landed_path}/batch={batch_id}"
-        )
-        dedup_index_add(
-            s, name, survivors, text_col=text_col, id_col=id_col
-        )
+    def near_pairs(kept):
+        # collapse intra-batch NEAR dups too: bounded band self-join +
+        # exact verify over the (micro-batch-sized) survivor set, same
+        # kernels and parameters as the index — the labeling the batch
+        # dedup_clusters sweep would assign. Without this, near-dup
+        # batch-mates both land and both enter the index.
+        kept = kept.localCheckpoint(eager=True)
+        return kept, minhash_lsh_pairs(
+            kept,
+            threshold=threshold,
+            num_hashes=meta["num_hashes"],
+            bands=meta["bands"],
+            n=meta["n"],
+            text_col=text_col,
+            id_col=id_col,
+        ).select("doc_a", "doc_b")
 
-    writer = stream.writeStream.foreachBatch(ingest_batch).option(
-        "checkpointLocation", checkpoint
+    return _ingest_through_index(
+        stream,
+        door="streaming_index_ingest",
+        logger=_LOG,
+        id_col=id_col,
+        landed_path=landed_path,
+        checkpoint=checkpoint,
+        available_now=available_now,
+        decide=decide,
+        pairs=near_pairs if drop_near else None,
+        add=lambda s, survivors: _add(
+            s, name, meta, survivors, text_col=text_col, id_col=id_col
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_index_compact(spark: SparkSession, name: str) -> dict:
@@ -990,9 +922,6 @@ def dedup_index_compact(spark: SparkSession, name: str) -> dict:
     ``add``, single-writer: do not compact concurrently with appends.
     """
     meta = _read_meta(spark, name)
-    # compact rewrites tables under the SAME generation; drop the cached
-    # verification so the next probe re-checks the rewritten stamps
-    _evict_gen(name)
     parts = [("digests", ["text_hash"])]
     if meta["near"]:
         parts += [("bands", ["band", "bh"]), ("docs", ["doc_id"])]

@@ -1193,7 +1193,8 @@ def ivf_build(
     column — the path for raw unlabeled corpora, which is what real
     pipelines have. Either way the function returns the cluster column
     name actually written; pass it to :func:`ivf_search` as
-    ``cluster_col``.
+    ``cluster_col``. ``mode="overwrite"`` also clears the index's
+    ``ingest_log`` (the :func:`streaming_embedding_ingest` journal).
     """
     # fail at BUILD, not first search: ivf_search is this index's only
     # consumer and its kernels pack ids as int64 — storing string ids
@@ -1205,6 +1206,13 @@ def ivf_build(
         )
         corpus = assign_clusters(corpus, cents_m, vec_col=vec_col, out_col="cluster")
         cluster_col = "cluster"
+    if mode == "overwrite":
+        # a rebuilt index starts a new ingest history: a kept journal
+        # would make a new stream skip every batch id the old index
+        # recorded. A Hadoop FileSystem delete works on any store.
+        sc = corpus.sparkSession.sparkContext
+        log = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/ingest_log")
+        log.getFileSystem(sc._jsc.hadoopConfiguration()).delete(log, True)
     cents = build_centroids(corpus, cluster_col, vec_col)
     cents.write.mode(mode).parquet(f"{path}/centroids")
     corpus.write.mode(mode).partitionBy(cluster_col).parquet(f"{path}/corpus")
@@ -1267,7 +1275,6 @@ def ivf_add(
     cluster_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    verify_layout: bool = True,
 ) -> None:
     """Append a corpus INCREMENT to an existing :func:`ivf_build` index —
     the daily-crawl shape: the quantizer stays fixed (standard IVF
@@ -1285,57 +1292,64 @@ def ivf_add(
     centroid table is NOT re-centered by an append.
     """
     _require_int_ids(increment, id_col, "ivf_add")
-    if verify_layout:
-        # found the hard way: an n_clusters-built index partitions by
-        # 'cluster', and an ivf_add left at the 'label' default
-        # corrupted it. verify_layout=False is for per-trigger callers
-        # that ran _check_corpus_layout once at stream start — the
-        # listing is O(corpus files) and must not be paid per batch.
-        _check_corpus_layout(spark, path, cluster_col)
-    if cluster_col in increment.columns:
-        out = increment
-    else:
-        import numpy as np
-        import pandas as pd
-
-        cent_rows = spark.read.parquet(f"{path}/centroids").collect()
+    # found the hard way: an n_clusters-built index partitions by
+    # 'cluster', and an ivf_add left at the 'label' default corrupted it
+    _check_corpus_layout(spark, path, cluster_col)
+    out = increment
+    if cluster_col not in increment.columns:
+        cents = spark.read.parquet(f"{path}/centroids")
+        cent_rows = cents.collect()
         if not cent_rows:
             raise ValueError(f"ivf_add: no centroids under {path}")
-        cents_df = spark.read.parquet(f"{path}/centroids")
-        ctype = cents_df.schema["cluster"].dataType
-        # deterministic assignment order: by cluster value, NULLs last
-        cent_rows.sort(key=lambda r: (r.cluster is None, r.cluster))
-        vals = [r.cluster for r in cent_rows]
-        C = np.stack([np.asarray(r.centroid, dtype=np.float64) for r in cent_rows])
-        cn = np.linalg.norm(C, axis=1)
-        Cu = np.where(cn[:, None] > 0, C / np.maximum(cn, 1e-300)[:, None], C)
-        bc = spark.sparkContext.broadcast((vals, Cu))
-
-        from pyspark.sql.types import StructField, StructType
-
-        out_fields = increment.schema.fieldNames() + [cluster_col]
-        schema = StructType(
-            list(increment.schema.fields) + [StructField(cluster_col, ctype)]
+        out = _assign_stored(
+            increment, cent_rows, cents.schema["cluster"].dataType,
+            cluster_col, vec_col,
         )
-
-        def assign(batches):
-            values, Cm = bc.value
-            varr = pd.Series(values)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                vn = np.linalg.norm(V, axis=1)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(vn[:, None] > 0, (V @ Cm.T) / vn[:, None], 0.0)
-                pdf = pdf.copy()
-                pdf[cluster_col] = varr.iloc[np.argmax(S, axis=1)].to_numpy()
-                yield pdf[out_fields]
-
-        out = increment.mapInPandas(assign, schema=schema)
     out.write.mode("append").partitionBy(cluster_col).parquet(f"{path}/corpus")
+
+
+def _assign_stored(
+    increment: DataFrame, cent_rows, ctype, cluster_col: str, vec_col: str
+) -> DataFrame:
+    """``increment`` plus ``cluster_col``: the value of its nearest stored
+    centroid among ``cent_rows`` (``ctype`` typed) — :func:`ivf_add`'s
+    assignment, also run by the streaming door with the centroids it read
+    at stream start."""
+    import numpy as np
+    import pandas as pd
+
+    # deterministic assignment order: by cluster value, NULLs last
+    cent_rows = sorted(cent_rows, key=lambda r: (r.cluster is None, r.cluster))
+    vals = [r.cluster for r in cent_rows]
+    C = np.stack([np.asarray(r.centroid, dtype=np.float64) for r in cent_rows])
+    cn = np.linalg.norm(C, axis=1)
+    Cu = np.where(cn[:, None] > 0, C / np.maximum(cn, 1e-300)[:, None], C)
+    bc = increment.sparkSession.sparkContext.broadcast((vals, Cu))
+
+    from pyspark.sql.types import StructField, StructType
+
+    out_fields = increment.schema.fieldNames() + [cluster_col]
+    schema = StructType(
+        list(increment.schema.fields) + [StructField(cluster_col, ctype)]
+    )
+
+    def assign(batches):
+        values, Cm = bc.value
+        varr = pd.Series(values)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            vn = np.linalg.norm(V, axis=1)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                S = np.where(vn[:, None] > 0, (V @ Cm.T) / vn[:, None], 0.0)
+            pdf = pdf.copy()
+            pdf[cluster_col] = varr.iloc[np.argmax(S, axis=1)].to_numpy()
+            yield pdf[out_fields]
+
+    return increment.mapInPandas(assign, schema=schema)
 
 
 def ivf_search(
@@ -1539,6 +1553,8 @@ def ivf_compact(
     index entries (e.g. a label-built row and a re-added quantized row)
     and dropping one would change search results.
     """
+    from .dedup import _parquet_path_exists
+
     cents = spark.read.parquet(f"{src_path}/centroids")
     corpus = spark.read.parquet(f"{src_path}/corpus")
     before = len(corpus.inputFiles())
@@ -1636,21 +1652,6 @@ def embedding_dup_probe(
     return queries.join(hits, id_col, "left")
 
 
-def _parquet_path_exists(spark, path: str) -> bool:
-    """True when ``path`` is a readable parquet dataset. The portable
-    existence probe for the ingest journal: schema inference raises
-    PATH_NOT_FOUND on an absent directory, and AnalysisException only —
-    an unreachable store or corrupt footer must propagate, not read as
-    'journal absent' (which would re-apply a possibly-applied batch)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(path)
-        return True
-    except AnalysisException:
-        return False
-
-
 def streaming_embedding_ingest(
     spark,
     path: str,
@@ -1667,73 +1668,40 @@ def streaming_embedding_ingest(
     available_now: bool = False,
 ):
     """Continuous embedding ingestion THROUGH a persistent
-    :func:`ivf_build` index — the embedding-space counterpart of
-    ``dedup_index.streaming_index_ingest``, completing the incremental
-    triad's streaming story: each micro-batch is probed for semantic
-    duplicates of the stored corpus (:func:`embedding_dup_probe`),
-    intra-batch near-duplicates collapse to one survivor, survivors land
-    under ``landed_path/batch=<id>/`` and are appended to the index
-    (:func:`ivf_add`) — so batch N+1 already dedups against batch N's
-    survivors, with no horizon bound (state IS the index, on disk).
+    :func:`ivf_build` index, through the one door
+    :func:`~php_ec_spark.operators.dedup._ingest_through_index` (its
+    docstring holds the per-batch protocol and the crash windows): each
+    micro-batch is probed for semantic duplicates of the stored corpus
+    (:func:`embedding_dup_probe`), intra-batch near-duplicates collapse
+    to their min id, survivors land under ``landed_path/batch=<id>/``
+    and are appended. The append is blind, so each applied batch is
+    journaled under ``{path}/ingest_log/batch=<id>`` (``batch_id``,
+    ``n_landed``, ``n_added``).
 
-    **Replay invariant** (the property every decision below serves): the
-    survivor set must be a pure function of (index state WITHOUT this
-    batch, batch content), so Spark's at-least-once replay reproduces it
-    bit-for-bit. Achieved by excluding the batch's own ids from the
-    probe (``exclude_ids`` — on a first run they are not stored and the
-    exclusion is a no-op; on a crash-replay the landed mates ARE stored
-    and would otherwise outscore the stored matches that originally
-    decided the drops). Corollary: ids are a corpus-wide namespace — a
-    batch REUSING a stored doc's id hides that stored row from this
-    batch's probe. Re-embedding pipelines that reuse ids should rebuild
-    or compact, not ingest-through (the same id-discipline caveat as the
-    text ingest's re-crawl rule).
+    Replay invariant: the probe excludes the batch's own ids
+    (``exclude_ids``) — a no-op on a first run; on a replay the landed
+    mates ARE stored and would otherwise outscore the stored matches
+    that decided the drops. Corollary: ids are a corpus-wide namespace,
+    and a batch reusing a stored id hides that stored row from its own
+    probe; re-embedding pipelines that reuse ids should rebuild or
+    compact, not ingest-through.
 
-    **Exactly-once landing** is journaled, not trusted: after the landed
-    write and the index append, a ``{path}/ingest_log/batch=<id>``
-    journal row commits the batch; a replayed batch whose journal exists
-    is skipped outright. Crash windows: before the landed write — plain
-    rerun; between landed write and append — the rerun reproduces the
-    same survivors (the invariant above) and overwrites the landed dir
-    byte-for-byte; between append and journal — the rerun re-appends,
-    leaving physically duplicated corpus rows. That residue is the one
-    deliberate trade: searches already tolerate duplicate rows — each
-    GEMM kernel drops duplicate ids inside its batch BEFORE the
-    top-(k+pad) keep (so copies never consume candidate slots, for any
-    k), and the re-rank collapses (query, neighbor) pairs — and
-    ``ivf_compact(id_col=...)`` sweeps them at maintenance time — the
-    alternative (journal before append) converts a crash into silent
-    PERMANENT loss of the batch from the index, strictly worse.
-
-    **Intra-batch dedup** mirrors the batch :func:`semdedup` shape at
-    micro-batch cost: assign survivors to the STORED quantizer
-    (deterministic argmax), within-cluster pairs ≥ ``threshold``
+    Intra-batch dedup is :func:`semdedup` at micro-batch cost: assign to
+    the STORED quantizer, within-cluster pairs ≥ ``threshold``
     (Σ|cluster∩batch|², never batch²), connected components, min-id
-    keeper. Landed rows keep the stream's own columns; the assignment is
-    recomputed by :func:`ivf_add` (same quantizer, same argmax — batch
-    sized, and keeping the operator free of ordinal→label plumbing).
+    keeper. ``drop_dups=False`` lands every row annotated instead:
+    ``dup_of``/``dup_cos`` from the stored probe, and intra-batch losers
+    carry their keeper's id in ``dup_of`` (``dup_cos`` NULL: the
+    component relation is connectivity, not one scored pair). The index
+    receives only the survivors either way.
 
-    ``drop_dups=False`` is the FLAG-don't-drop shape the text door's
-    ``streaming_minhash_dedup`` established: every batch row lands,
-    annotated — ``dup_of``/``dup_cos`` from the stored probe, and
-    intra-batch losers carry their component keeper's id in ``dup_of``
-    (``dup_cos`` NULL there: the component relation is transitive
-    connectivity, not a single scored pair). The INDEX still receives
-    only the deduped survivors either way, so batch N+1's signal never
-    degrades; downstream owns the drop decision. Same journal, same
-    replay invariant (annotations are a pure function of the same
-    inputs).
-
-    Per-trigger cost: one probe (partition-pruned, nprobe/C of the
-    corpus) + batch-bounded pair work + one append. The probe runs
-    ``verify_clusters=False`` — index health is checked ONCE at stream
-    start (the documented out-of-band pattern), not re-paid per trigger.
-    Single-writer contract like the text ingest: do not
-    add/compact/rebuild concurrently.
-
+    Index health (every centroid has corpus rows), the corpus layout and
+    the centroids are read ONCE at stream start; each trigger runs one
+    partition-pruned probe (``verify_clusters=False``), batch-bounded
+    pair work and one append with the start-of-stream centroids.
     Returns the started StreamingQuery.
     """
-    from .dedup import _log_cc_stats, connected_components
+    from .dedup import _ingest_through_index
 
     if cluster_col in stream.columns:
         raise ValueError(
@@ -1752,8 +1720,10 @@ def streaming_embedding_ingest(
         )
     _require_int_ids(stream, id_col, "streaming_embedding_ingest")
     cents = spark.read.parquet(f"{path}/centroids")
-    declared = {r.cluster for r in cents.select("cluster").collect()}
-    if not declared:
+    cent_rows = sorted(
+        cents.collect(), key=lambda r: (r.cluster is None, r.cluster)
+    )
+    if not cent_rows:
         raise ValueError(
             f"streaming_embedding_ingest: no centroids under {path}"
         )
@@ -1761,7 +1731,7 @@ def streaming_embedding_ingest(
     # probes run verify_clusters=False): every declared centroid must
     # still have corpus rows
     _check_clusters_present(
-        declared,
+        {r.cluster for r in cent_rows},
         (
             r[0]
             for r in spark.read.parquet(f"{path}/corpus")
@@ -1771,32 +1741,20 @@ def streaming_embedding_ingest(
         ),
         "ingest startup",
     )
-    # layout check ONCE here too (O(corpus files) listing): the
-    # per-batch appends run ivf_add(verify_layout=False)
+    # layout check ONCE here too (O(corpus files) listing)
     _check_corpus_layout(spark, path, cluster_col)
-    cent_rows = sorted(
-        cents.collect(), key=lambda r: (r.cluster is None, r.cluster)
-    )
+    ctype = cents.schema["cluster"].dataType
     cmat = [list(r.centroid) for r in cent_rows]
 
-    def ingest_batch(batch_df, batch_id):
-        # foreachBatch hands frames bound to a CLONED session — run the
-        # whole cycle through it (the dedup_index lesson: path reads are
-        # re-listed per read, but session-bound ops must agree)
-        s = batch_df.sparkSession
-        log = f"{path}/ingest_log/batch={batch_id}"
-        if _parquet_path_exists(s, log):
-            return  # journaled: landed + appended; a replay is a no-op
+    def decide(s, batch_df, batch_id):
         # ids are the replay/dedup identity — a batch carrying the same
         # id twice (an at-least-once upstream) would land multiple rows
         # under one id, probe with an arbitrary one of the vectors, and
         # poison the unique-id contract the search re-rank depends on.
         # No deterministic collapse exists without ordering vectors, so
         # fail loudly; one batch-bounded agg job. NULL ids counted
-        # separately (round-12 advice): countDistinct ignores NULLs, so a
-        # lone NULL id used to be misdiagnosed as "1 duplicate" — failing
-        # was right, the message sent the operator hunting upstream
-        # repeats that don't exist.
+        # separately: countDistinct ignores NULLs, so a lone NULL id
+        # would otherwise read as "1 duplicate".
         stats = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct(F.col(id_col)).alias("nd"),
@@ -1831,13 +1789,31 @@ def streaming_embedding_ingest(
         kept = probed.filter(F.col("dup_of").isNull()).select(
             *batch_df.columns
         )
-        # intra-batch near-dups: stored-quantizer bucketing keeps the
-        # pair work at Σ|cluster∩batch|²; min-id per component survives.
-        # PIN: `assigned`'s lineage contains the whole probe (pairs pin,
-        # probed-cluster collect, cogroup GEMM, re-rank joins) and has
-        # three consumers below (both sides of the within-cluster
-        # self-join + the survivor projection) — unpinned, the probe
-        # would re-execute per consumer (the pin rule; batch-sized rows)
+        if drop_dups:
+            return kept, None
+
+        def land(losers):
+            # flag shape: every row lands annotated; intra-batch losers
+            # carry their component keeper in dup_of (dup_cos NULL — the
+            # component relation is connectivity, not one scored pair)
+            lmap = losers.select(
+                F.col("doc").alias("__ld"), F.col("label").alias("__lk")
+            )
+            return (
+                probed.join(
+                    F.broadcast(lmap), probed[id_col] == F.col("__ld"), "left"
+                )
+                .withColumn("dup_of", F.coalesce("dup_of", "__lk"))
+                .drop("__ld", "__lk")
+            )
+
+        return kept, land
+
+    def intra_pairs(kept):
+        # stored-quantizer bucketing keeps the pair work at
+        # Σ|cluster∩batch|². PIN: `assigned`'s lineage contains the
+        # whole probe and has three consumers (both sides of the
+        # within-cluster self-join + the survivor projection)
         assigned = assign_clusters(
             kept, cmat, vec_col=vec_col, out_col="__c"
         ).localCheckpoint(eager=True)
@@ -1845,67 +1821,27 @@ def streaming_embedding_ingest(
             assigned, threshold=threshold,
             vec_col=vec_col, id_col=id_col, cluster_col="__c",
         )
-        # CC's edge pin is the pairs' one materialization; a batch with
-        # no intra-batch dups exits through its fastpath with an empty
-        # mapping
-        cc_stats: dict = {}
-        losers = connected_components(
-            pairs.select(
-                F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-            ),
-            stats=cc_stats,
+        return assigned, pairs.select(
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )
-        # round telemetry (round-14 verdict #7): rounds creeping toward
-        # max_iters must show in the driver log before a deeper batch
-        # raises on the bound
-        _log_cc_stats(_LOG, "streaming_embedding_ingest", batch_id, cc_stats)
-        survivors = assigned.select(*batch_df.columns).join(
-            losers.select(F.col("doc").alias("__drop")),
-            F.col(id_col) == F.col("__drop"),
-            "left_anti",
-        )
-        # landed write + index append both consume: pin once so the two
-        # consumers cannot see divergent row sets
-        survivors = survivors.localCheckpoint(eager=True)
-        if drop_dups:
-            landed = survivors
-        else:
-            # flag shape: every row lands annotated; intra-batch losers
-            # carry their component keeper in dup_of (dup_cos NULL — the
-            # component relation is connectivity, not one scored pair)
-            lmap = losers.select(
-                F.col("doc").alias("__ld"), F.col("label").alias("__lk")
-            )
-            landed = (
-                probed.join(
-                    F.broadcast(lmap),
-                    probed[id_col] == F.col("__ld"),
-                    "left",
-                )
-                .withColumn("dup_of", F.coalesce("dup_of", "__lk"))
-                .drop("__ld", "__lk")
-            )
-        landed.write.mode("overwrite").parquet(
-            f"{landed_path}/batch={batch_id}"
-        )
-        ivf_add(
-            s, path, survivors,
-            cluster_col=cluster_col, vec_col=vec_col, id_col=id_col,
-            # layout verified once at stream start — the O(corpus files)
-            # listing must not be paid per trigger
-            verify_layout=False,
-        )
-        # journal LAST: its presence certifies the batch fully applied;
-        # n_landed = rows written (all rows under the flag shape),
-        # n_added = rows appended to the index (always the survivors)
-        s.createDataFrame(
-            [(int(batch_id), landed.count(), survivors.count())],
-            "batch_id long, n_landed long, n_added long",
-        ).write.mode("overwrite").parquet(log)
 
-    writer = stream.writeStream.foreachBatch(ingest_batch).option(
-        "checkpointLocation", checkpoint
+    def add(s, survivors):
+        _assign_stored(
+            survivors, cent_rows, ctype, cluster_col, vec_col
+        ).write.mode("append").partitionBy(cluster_col).parquet(
+            f"{path}/corpus"
+        )
+
+    return _ingest_through_index(
+        stream,
+        door="streaming_embedding_ingest",
+        logger=_LOG,
+        id_col=id_col,
+        landed_path=landed_path,
+        checkpoint=checkpoint,
+        available_now=available_now,
+        decide=decide,
+        pairs=intra_pairs,
+        add=add,
+        journal=f"{path}/ingest_log",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -458,9 +458,12 @@ class TestStreamingIngest:
             f"(totals {j1}/{j2}/{j3}) — a per-batch cost crept in"
         )
         # budget re-pinned deliberately on any justified change, never
-        # silently (measured on pyspark 4.1.2; see git blame for the
-        # measurement provenance)
-        assert m3 <= 13, f"{m3} jobs per trigger, budget 13 (measured 12)"
+        # silently (measured 10 on pyspark 4.1.2, 4 cores): the survivor
+        # pin over the exact probe, the landed write, and the add's
+        # fresh-id pin and bucketed appends. The meta table is read once
+        # at stream start; at 12 jobs each trigger read it twice more
+        # (probe and add).
+        assert m3 <= 10, f"{m3} jobs per trigger, budget 10 (measured 10)"
 
     def test_drop_near_requires_near_index(self, spark, tmp_path):
         from php_ec_spark.operators.dedup_index import streaming_index_ingest
@@ -1129,12 +1132,6 @@ class TestBuildGeneration:
             # simulate the crash window: one data table re-stamped by a
             # rebuild attempt whose meta write never happened
             _stamp_gen(spark, "dgen_bands", "deadbeefcafef00d")
-            # the crash happened in ANOTHER process: this process's cached
-            # generation trust would not exist there — simulate by
-            # clearing the per-process memo
-            from php_ec_spark.operators import dedup_index as _di
-
-            _di._GEN_VERIFIED.clear()
             with pytest.raises(RuntimeError, match="half-rebuilt"):
                 dedup_index_probe(spark, "dgen", inc)
             with pytest.raises(RuntimeError, match="half-rebuilt"):

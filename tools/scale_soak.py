@@ -310,9 +310,13 @@ def _table(head: list, rows: list) -> list:
 
 
 def _timed(spark, fn, iters: int) -> dict:
-    """Min-of-``iters`` wall seconds of ``fn().count()`` and its rows."""
+    """Min-of-``iters`` wall seconds of ``fn().count()`` and its rows,
+    after one untimed run: without it the first case a run measures also
+    pays JVM and codegen warm-up, and its scale's alpha reads negative."""
     from php_ec_spark.session import release_checkpoint_caches
 
+    fn().count()
+    release_checkpoint_caches(spark)
     best, rows = None, 0
     for _ in range(iters):
         t0 = time.perf_counter()
